@@ -250,6 +250,30 @@ def attribute(spans: list[dict[str, Any]], log: dict[str, Any]) -> None:
             spans[i]["counts"]["batches"] += 1
 
 
+# the published name of a layer's inclusive span time; the operator layers
+# publish their self time only
+TIME_METRIC = {
+    "sources": "sources.read_s", "expr": "expr.compile_s",
+    "runner": "runner.build_s", "control": "control.run_s",
+    "parsing": "parsing.parse_s", "streaming": "streaming.run_s",
+    "spark.plan": "spark.plan_s", "spark.action": "spark.action_s",
+}
+
+
+def layer_metrics(totals: dict[str, dict[str, float]]) -> dict[str, float]:
+    """Flatten ``layer_totals`` into published metric names:
+    ``TIME_METRIC`` for inclusive times, ``<layer>.<count>`` and
+    ``<layer>.self_s`` for the rest."""
+    out: dict[str, float] = {}
+    for layer, t in totals.items():
+        if layer in TIME_METRIC:
+            out[TIME_METRIC[layer]] = t["incl_s"]
+        for k, v in t.items():
+            if k != "incl_s":
+                out[f"{layer}.{k}"] = v
+    return out
+
+
 def layer_totals(spans: list[dict[str, Any]], tag: Any) -> dict[str, dict[str, float]]:
     """Per layer, over the spans tagged ``tag``: inclusive time (outermost
     span of the layer only), self time (span minus child spans) and summed

@@ -6,19 +6,20 @@ Usage (from the checkout root):
 
 One run, one process, one Spark session on ``local[<cores>]``:
 
-1. set-up: process start -> session ready -> every input table registered;
-2. the first pass over the workload's pipelines (cold codegen and JIT),
-   with a full collection after each pipeline to read the live heap;
+1. set-up: process start -> imports, inputs and run directory ready ->
+   session ready -> every input table registered, all cold;
+2. the first pass over the workload's pipelines (cold codegen and JIT);
 3. steady passes until the next one would overrun ``--seconds``, and at
-   least two;
-4. two more set-ups (session stop, build, register) for a median set-up time.
+   least one. After them, untimed, repeated full collections read the live
+   heap.
 
 Every pipeline ends in the same digest action (row count plus the sum of
 ``xxhash64`` over all columns), and the digest is compared with the one
 recorded in ``expected.json``. A pipeline that raises or whose digest
 differs is counted as failed and named; it is never left out of the timing
 totals. ``--trace 1`` instead alternates untraced and traced passes and
-reports per-layer self times and counts (see ``layers.json``).
+reports per-layer self times and counts, one metric for each ``per_layer``
+entry of ``BENCHMARK.json``.
 
 The last line of stdout is the result:
 ``{"correct", "attempted", "failed", "metrics"}``. The line before it is the
@@ -43,8 +44,6 @@ import harness  # noqa: E402
 import layertrace  # noqa: E402
 import workloads  # noqa: E402
 from harness import log, now  # noqa: E402
-
-SETUPS = 3
 
 
 def parse_args(argv: list[str]) -> argparse.Namespace:
@@ -78,10 +77,6 @@ class Bench:
         harness.register_sources(self.spark, self.data)
         self.session_start_s = t1 - t0
         return now() - t0
-
-    def restart(self) -> float:
-        self.spark.stop()
-        return self.start()
 
     # -- one pipeline ------------------------------------------------------
 
@@ -130,15 +125,13 @@ class Bench:
         self.samples.append(s)
         return s
 
-    def run_pass(self, pass_no: int, after=None) -> float:
-        """Run every pipeline once; ``after()`` runs after each, untimed."""
+    def run_pass(self, pass_no: int) -> float:
+        """Run every pipeline once."""
         if self.tracer:
             self.tracer.tag = pass_no
         total = 0.0
         for p in self.pipes:
             total += self.run_pipeline(p, pass_no)["wall_s"]
-            if after:
-                after()
         return total
 
     # -- reporting ---------------------------------------------------------
@@ -168,7 +161,7 @@ class Bench:
 
 
 def steady_passes(b: Bench, seconds: float, on_pass=None,
-                  min_passes: int = 2) -> list[float]:
+                  min_passes: int = 1) -> list[float]:
     """Run passes until the next one would overrun ``seconds``, and at
     least ``min_passes``. ``on_pass(i)`` runs before the i-th of them
     (toggles tracing)."""
@@ -194,21 +187,22 @@ def quantile(xs: list[float], q: float) -> float:
     return ys[lo] + (ys[hi] - ys[lo]) * (pos - lo)
 
 
-def end_to_end(b: Bench, t_import: float) -> tuple[dict, dict]:
+def end_to_end(b: Bench) -> tuple[dict, dict]:
     """Gated metrics are CPU seconds of the whole process tree, except
     set-up and the live heap: on a shared host, CPU steal moves wall times
     by 20-40% from run to run, CPU time by about half of that. The
     wall-clock metrics are reported next to them."""
-    setups = [t_import + b.start()]
-    # the largest live heap after any pipeline, so it does not depend on
-    # which pipeline the seed runs last
-    live: list[float] = []
-    b.run_pass(0, after=lambda: live.append(harness.live_heap_mb(b.spark)))
+    # one cold set-up per run: a second one would need another JVM launch
+    # (about 11 s on 4 cores), which the benchmark's time budget cannot hold
+    b.start()
+    setup_s = now() - T_PROCESS
+    b.run_pass(0)
     first = [s for s in b.samples if s["pass"] == 0]
     steady_passes(b, b.args.seconds)
+    # read once every pipeline has run at least twice: settled, what is
+    # left is the session's own state, whichever pipeline the seed ran last
+    live_mb = harness.live_heap_mb(b.spark)
     rss = harness.peak_rss_mb()
-    for _ in range(SETUPS - 1):
-        setups.append(b.restart())
     harness.stop_jvm(b.spark)
 
     steady = [s for s in b.samples if s["pass"] > 0]
@@ -217,11 +211,11 @@ def end_to_end(b: Bench, t_import: float) -> tuple[dict, dict]:
     cpus = [s["host"]["cpu_s"] for s in steady]
     attempted, failed, _ = b.failures()
     metrics = {
-        "setup_s": (statistics.median(setups), "s"),
+        "setup_s": (setup_s, "s"),
         "first_pass_cpu_s": (sum(s["host"]["cpu_s"] for s in first), "s"),
         "rows_per_cpu_s": (rows / sum(cpus), "rows/s"),
         "pipeline_cpu_s_p90": (quantile(cpus, 0.9), "s"),
-        "heap_live_mb": (max(live), "MB"),
+        "heap_live_mb": (live_mb, "MB"),
     }
     # reported, not gated: wall clock, resident memory, and the per-pipeline
     # CPU median, whose spread over ten runs on a 4-core shared VM (0.22)
@@ -238,7 +232,6 @@ def end_to_end(b: Bench, t_import: float) -> tuple[dict, dict]:
     extra = {
         "reported_metrics": {k: {"value": v, "unit": u}
                              for k, (v, u) in reported.items()},
-        "setup_samples_s": setups,
         "steady_passes": max(s["pass"] for s in steady),
         "steady_samples": len(walls),
         "samples_beyond_p90": sum(w > quantile(walls, 0.9) for w in walls),
@@ -252,8 +245,10 @@ def traced(b: Bench) -> tuple[dict, dict]:
     tracer = layertrace.Tracer()
 
     def toggle(i: int) -> None:
-        # untraced, traced, untraced, ...: the untraced passes on both
-        # sides of a traced one cancel the warm-up trend in the overhead
+        # untraced warm-up, traced, untraced, traced, ...: the JIT is still
+        # warming in the first pass after the cold one, so that pass is left
+        # out of the overhead; the traced passes on both sides of an
+        # untraced one cancel the remaining warm-up trend
         if i % 2 == 1:
             b.tracer = tracer
             tracer.install()
@@ -261,7 +256,7 @@ def traced(b: Bench) -> tuple[dict, dict]:
             tracer.uninstall()
             b.tracer = None
 
-    steady_passes(b, b.args.seconds, toggle, min_passes=3)
+    steady_passes(b, b.args.seconds, toggle, min_passes=4)
     if b.tracer is not None:
         tracer.uninstall()
         b.tracer = None
@@ -274,11 +269,13 @@ def traced(b: Bench) -> tuple[dict, dict]:
 
 def per_layer(b: Bench, tracer: layertrace.Tracer,
               log_data: dict) -> tuple[dict, dict]:
+    with open(os.path.join(harness.ROOT, "BENCHMARK.json")) as f:
+        specs = json.load(f)["per_layer"]
     with open(os.path.join(harness.HERE, "layers.json")) as f:
-        layers = json.load(f)
+        moves = json.load(f)["moves"]
     passes = sorted({s["pass"] for s in b.samples if s["traced"]})
     untraced = sorted({s["pass"] for s in b.samples
-                       if not s["traced"] and s["pass"] > 0})
+                       if not s["traced"] and s["pass"] > 1})
     wall = {p: sum(s["wall_s"] for s in b.samples if s["pass"] == p)
             for p in passes + untraced}
     stage_job = log_data["stage_job"]
@@ -306,36 +303,38 @@ def per_layer(b: Bench, tracer: layertrace.Tracer,
             "spark.gc_s": sum(s["host"]["gc_s"] for s in samples),
             "trace.coverage": covered / wall[p],
         }
-        for layer, t in tot.items():
-            for k, v in t.items():
-                m[f"{layer}.{k}"] = v
+        m.update(layertrace.layer_metrics(tot))
         per_pass.append(m)
+        op_self = sum(t["self_s"] for k, t in tot.items() if k.startswith("op."))
         reports.append({"pass": p, "wall_s": wall[p], "coverage": m["trace.coverage"],
                         "jobs": len(jobs),
+                        "eager_job_share": m["spark.eager_job_share"],
+                        "op_self_share": op_self / wall[p],
                         "layers": {k: dict(v) for k, v in sorted(tot.items())}})
 
     overhead = (statistics.median(wall[p] for p in passes)
                 - statistics.median(wall[p] for p in untraced)) if untraced else 0.0
     metrics = {}
-    for spec in layers["metrics"]:
-        if spec["name"] == "trace.overhead_s":
-            metrics[spec["name"]] = (overhead, spec["unit"])
-            continue
-        src = spec.get("from", spec["name"])
-        vals = [m.get(src, 0.0) for m in per_pass]
-        metrics[spec["name"]] = (statistics.median(vals), spec["unit"])
+    for spec in specs:
+        name = spec["name"]
+        value = overhead if name == "trace.overhead_s" else \
+            statistics.median(m.get(name, 0.0) for m in per_pass)
+        metrics[name] = (value, spec["unit"])
     extra = {"traced_passes": reports, "untraced_pass_walls": [wall[p] for p in untraced],
              "traced_pass_walls": [wall[p] for p in passes], "overhead_s": overhead}
-    print_layer_report(b, reports, overhead, layers)
+    print_layer_report(b, reports, overhead, moves)
     return metrics, extra
 
 
 def print_layer_report(b: Bench, reports: list[dict], overhead: float,
-                       layers: dict) -> None:
+                       moves: dict[str, str]) -> None:
     r = reports[-1]
     print(f"# traced pass of {b.args.workload}: wall {r['wall_s']:.3f} s, "
           f"layer spans cover {100 * r['coverage']:.1f}%, "
           f"tracing overhead {overhead:+.3f} s per pass")
+    print(f"# {r['jobs']} jobs, {100 * r['eager_job_share']:.1f}% of them fired "
+          f"while pipelines were built; operator self time is "
+          f"{100 * r['op_self_share']:.1f}% of pass wall time")
     print(f"# {'layer':<22}{'self_s':>9}{'incl_s':>9}{'calls':>7}{'jobs':>6}"
           f"{'stages':>7}{'tasks':>7}")
     for name, t in sorted(r["layers"].items(), key=lambda kv: -kv[1]["self_s"]):
@@ -343,7 +342,7 @@ def print_layer_report(b: Bench, reports: list[dict], overhead: float,
               f"{int(t.get('calls', 0)):>7}{int(t.get('jobs', 0)):>6}"
               f"{int(t.get('stages', 0)):>7}{int(t.get('spark_tasks', 0)):>7}")
     print("# which layer metric should move which end-to-end metric: "
-          + "; ".join(f"{k} -> {v}" for k, v in layers["moves"].items()))
+          + "; ".join(f"{k} -> {v}" for k, v in moves.items()))
 
 
 def main(argv: list[str]) -> int:
@@ -356,9 +355,8 @@ def main(argv: list[str]) -> int:
     import ssis_to_pyspark_agent_spark.queries  # noqa: F401 - part of set-up
     import ssis_to_pyspark_agent_spark.session  # noqa: F401
 
-    t_import = now() - T_PROCESS
     b = Bench(args)
-    metrics, extra = traced(b) if args.trace else end_to_end(b, t_import)
+    metrics, extra = traced(b) if args.trace else end_to_end(b)
     attempted, failed, bad = b.failures()
     out = {k: {"value": v, "unit": u} for k, (v, u) in metrics.items()}
     report = {**b.header(), **extra, "failed_pipelines": bad, "metrics": out,

@@ -219,6 +219,7 @@ _CATALOG = {
     "q08": ("q08_join_theta_range", ("orders", "lineitem")),
     "q09": ("q09_conditional_split_route", ("orders",)),
     "q15": ("q15_topk_per_group", ("orders",)),
+    "q17": ("q17_pivot_unpivot_roundtrip", ("orders",)),
     "q19": ("q19_multilevel_aggregates", ("lineitem",)),
     "q24": ("q24_merge_dml", ("customer", "orders")),
     "q26": ("q26_scd2", ("customer",)),
@@ -233,19 +234,22 @@ _CATALOG = {
     "q44": ("q44_data_hygiene", ("documents",)),
     "q50": ("q50_medium_package_flow", ("customer",)),
     "q57": ("q57_bigjoin_revenue", ("orders", "lineitem")),
+    "q67": ("q67_multimodal_plumbing", ("documents",)),
     "q78": ("q78_stream_stream_join", ("events", "events")),
     "q80": ("q80_embedding_kmeans", ("embeddings",)),
 }
 
 WORKLOADS: dict[str, tuple[str, ...]] = {
     # SSIS dataflows on the read path (lookup chain, conditional split,
-    # multi-level aggregates) and on the write path (stream-stream replay
-    # with state-store commits, and the generated package: parse ->
+    # multi-level aggregates, top-k per group, pivot/unpivot, media column
+    # plumbing) and on the write path (merge upsert/delete, stream-stream
+    # replay with state-store commits, and the generated package: parse ->
     # control flow -> table sink)
-    "etl_dataflow": ("q03", "q09", "q19", "q78", "pkg"),
-    # operator-build heavy curation: n-gram dedup with connected
-    # components, k-means clustering with pruning
-    "llm_curation": ("q31", "q80"),
+    "etl_dataflow": ("q03", "q09", "q15", "q17", "q19", "q24", "q67", "q78",
+                     "pkg"),
+    # curation: n-gram dedup with connected components, text features,
+    # approximate nearest neighbours, k-means clustering with pruning
+    "llm_curation": ("q31", "q34", "q37", "q80"),
 }
 
 
