@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ssis_to_pyspark_agent_spark.operators import operator
+from ssis_to_pyspark_agent_spark.operators.dedup import _local_frame
 
 
 def cents_from_frame(rows, who: str) -> list[list[int]]:
@@ -338,7 +339,8 @@ def cluster_kmeans(spark: SparkSession, inputs, config, context):
         + [f"{cluster_col} int"]
     )
     out = df.mapInPandas(gen, schema=out_schema)
-    cents_df = spark.createDataFrame(
+    cents_df = _local_frame(
+        spark,
         [(c, d, int(cents[c][d])) for c in range(k) for d in range(dim)],
         "cluster int, dim int, val long",
     )

@@ -189,17 +189,53 @@ def _jaccard(a: Column, b: Column) -> Column:
     return inter / (F.size(a) + F.size(b) - inter)
 
 
-def _spread(spark, df: DataFrame) -> DataFrame:
-    """Repartition up to cluster parallelism before a CPU-heavy narrow pass.
+def _spread(spark, df: DataFrame, by_bytes: bool = False) -> DataFrame:
+    """Spread a narrow input before a CPU-heavy narrow pass.
 
     A small/single parquet split would otherwise pin the whole signature
     computation to one core (observed 11s -> ~1s on 32 threads). On a real
     cluster wide inputs already have enough splits and this is a no-op.
+
+    The default repartitions to cluster parallelism: right for JVM
+    expression passes (shingling, minhash/simhash signatures), whose
+    per-row cost is high (4.0 -> 0.6 s at sf0.1 for 5,000 documents).
+    ``by_bytes=True`` is for passes whose only consumer is a numpy vector
+    kernel (``mapInPandas``): there every task is a Python task with a
+    fixed start-up cost (0.16-0.25 CPU-s each on a 4-core host), so an
+    AQE rebalance lets the coalescer pick the task count from the bytes
+    actually shuffled (1 MB ``minPartitionSize``, parallelism first) —
+    one task for 500 vectors, every core for 100 MB.
     """
     target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+    if df.rdd.getNumPartitions() >= target:
+        return df
+    return df.hint("rebalance") if by_bytes else df.repartition(target)
+
+
+def _local_frame(spark, rows, schema) -> DataFrame:
+    """Driver-side rows (tuples in ``schema`` order; ``schema`` a
+    StructType or DDL string) as a frame with no Python task behind it.
+
+    ``createDataFrame(list, schema)`` ships the rows as a Python RDD cut
+    into defaultParallelism slices, so every scan of the frame starts one
+    Python worker per slice. The same rows as an Arrow table become a
+    ``LocalRelation`` (a ``LocalTableScan`` held by the driver) below
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
+    default); every caller passes capped driver rows well under it (the
+    largest, the 100k-pair union-find labels, is ~1.6 MB).
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 #: hard bound on the hot-bucket keys collected to the driver — above it
@@ -378,7 +414,8 @@ def _bucket_pairs_plan(tagged, agg, bucket_cols, cap, hot, _self_join,
         return result
     # hot buckets: distributed self-join (see docstring)
     hot_df = F.broadcast(
-        tagged.sparkSession.createDataFrame(
+        _local_frame(
+            tagged.sparkSession,
             [tuple(r[c] for c in bucket_cols) for r in hot],
             tagged.select(*bucket_cols).schema,
         )
@@ -753,8 +790,8 @@ def _driver_cc_labels(spark, rows, id_field) -> DataFrame:
         StructField("x", id_field.dataType),
         StructField("comp", id_field.dataType),
     ])
-    return spark.createDataFrame(
-        [(x, comp_min[find(x)]) for x in parent], schema
+    return _local_frame(
+        spark, [(x, comp_min[find(x)]) for x in parent], schema
     )
 
 
@@ -2977,18 +3014,19 @@ def dedup_semantic(spark: SparkSession, inputs, config, context):
         # empty corpus: no centroids exist, so short-circuit with empty
         # ports of the documented shapes (the assignment kernel cannot
         # run against a 0-row centroid matrix)
-        empty_pairs = spark.createDataFrame(
-            [], f"a {id_type}, b {id_type}, cosine double, cluster int"
+        empty_pairs = _local_frame(
+            spark, [], f"a {id_type}, b {id_type}, cosine double, cluster int"
         )
         result = {"out": df}
         if config.get("return_pairs"):
             result["pairs"] = empty_pairs
         if config.get("return_assignments"):
-            result["assignments"] = spark.createDataFrame(
-                [], f"{id_col} {id_type}, cluster int"
+            result["assignments"] = _local_frame(
+                spark, [], f"{id_col} {id_type}, cluster int"
             )
         return result if len(result) > 1 else df
-    base = _spread(spark, df).select(
+    # the quantized assignment is a numpy kernel: spread by bytes
+    base = _spread(spark, df, by_bytes=bool(quantize)).select(
         F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
     )
     if len(inputs) > 1:

@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ssis_to_pyspark_agent_spark.operators import operator
+from ssis_to_pyspark_agent_spark.operators.dedup import _local_frame
 
 
 @operator("maintenance.compact")
@@ -145,7 +146,8 @@ def vacuum(spark: SparkSession, inputs, config, context) -> DataFrame:
                 ))
             elif st.isDirectory() and depth < max_depth:
                 frontier.append((p, depth + 1))
-    return spark.createDataFrame(
+    return _local_frame(
+        spark,
         rows,
         "path string, size_bytes bigint, modified_ts bigint, "
         "deleted boolean",

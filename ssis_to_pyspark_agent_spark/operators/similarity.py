@@ -255,11 +255,12 @@ def topk_bruteforce(spark: SparkSession, inputs, config, context) -> DataFrame:
     qid = config.get("query_id_col", "query_id")
     qv = config.get("query_vec_col", config["vec_col"])
     k = config.get("k", 10)
-    c = _spread(spark, corpus).select(
+    pandas = config.get("method", "expr") == "pandas"
+    c = _spread(spark, corpus, by_bytes=pandas).select(
         F.col(config["id_col"]).alias("corpus_id"), F.col(config["vec_col"]).alias("_cv")
     )
 
-    if config.get("method", "expr") == "pandas":
+    if pandas:
         import numpy as np
         import pandas as pd
 
@@ -359,14 +360,15 @@ def topk_lsh(spark: SparkSession, inputs, config, context) -> DataFrame:
 
     from ssis_to_pyspark_agent_spark.operators.dedup import _spread
 
-    c_named = _spread(spark, corpus).select(
+    numpy_buckets = config.get("bucket_impl", "numpy") == "numpy"
+    c_named = _spread(spark, corpus, by_bytes=numpy_buckets).select(
         F.col(config["id_col"]).alias("corpus_id"),
         F.col(config["vec_col"]).alias("_cv"),
     )
     q_named = queries.select(
         F.col(qid).alias("query_id"), F.col(qv).alias("_qv")
     )
-    if config.get("bucket_impl", "numpy") == "numpy":
+    if numpy_buckets:
         c = _bucket_frame(
             c_named, "corpus_id", "_cv", dim, n_tables, n_bits, seed,
             keep_vec=True, planes=planes, quantize=plane_quant,
@@ -625,8 +627,12 @@ def topk_ivf(spark: SparkSession, inputs, config, context) -> DataFrame:
     qv = config.get("query_vec_col", config["vec_col"])
     n_cent = config.get("centroids", 16)
     nprobe = config.get("nprobe", 4)
+    quantize = config.get("quantize")
+    numpy_assign = bool(quantize) and (
+        config.get("assign_impl", "numpy") == "numpy"
+    )
 
-    c = _spread(spark, corpus).select(
+    c = _spread(spark, corpus, by_bytes=numpy_assign).select(
         F.col(config["id_col"]).alias("corpus_id"), F.col(config["vec_col"]).alias("_cv")
     )
     if config.get("kmeans"):
@@ -650,11 +656,10 @@ def topk_ivf(spark: SparkSession, inputs, config, context) -> DataFrame:
             .select(F.col("_cv").alias("_centv"))
         )
         cent_rows = cent.collect()  # n_cent rows of dim floats: driver-safe
-    quantize = config.get("quantize")
     q_named = queries.select(
         F.col(qid).alias("query_id"), F.col(qv).alias("_qv")
     )
-    if quantize and config.get("assign_impl", "numpy") == "numpy":
+    if numpy_assign:
         cents = [list(r["_centv"]) for r in cent_rows]
         c_assigned = _ivf_assign_frame(
             c, "corpus_id", "_cv", cents, quantize, 1

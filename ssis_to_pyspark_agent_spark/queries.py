@@ -22,7 +22,7 @@ from typing import Any, Optional
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ssis_to_pyspark_agent_spark.operators.dedup import _lambda_bind
+from ssis_to_pyspark_agent_spark.operators.dedup import _lambda_bind, _local_frame
 from ssis_to_pyspark_agent_spark.operators.dedup import _words as _words_fn
 from ssis_to_pyspark_agent_spark.plans import Pipeline, run_pipeline
 
@@ -2869,8 +2869,8 @@ def q44(spark: SparkSession, sf_dir: str) -> DataFrame:
     fun_rows = _q44_funnel(
         spark, r.df("ftok").select("doc_id", "text", "source", "ws_tokens")
     )
-    fun = spark.createDataFrame(
-        fun_rows, "kind string, key string, n_docs long, n_toks long"
+    fun = _local_frame(
+        spark, fun_rows, "kind string, key string, n_docs long, n_toks long"
     ).select(
         "kind",
         *[F.lit(None).cast(null_of[c]).alias(c) for c in doc_cols],
@@ -2993,7 +2993,8 @@ def q47(spark: SparkSession, sf_dir: str) -> DataFrame:
         .step("rc_big", "row_count", "big", into="n_big", eager=True)
     )
     ctx = run_pipeline(spark, p).context
-    return spark.createDataFrame(
+    return _local_frame(
+        spark,
         [(ctx["n_open"], ctx["n_big"], ctx["n_total"])],
         "n_open bigint, n_big bigint, n_total bigint",
     )
@@ -3355,7 +3356,8 @@ def q50(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql("DROP TABLE IF EXISTS q50_final")
     wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
     shutil.rmtree(os.path.join(wh, "q50_final"), ignore_errors=True)
-    sentinels = spark.createDataFrame(
+    sentinels = _local_frame(
+        spark,
         [(-1, "N/A", 0.0), (-2, "N/A", 0.0)],
         "c_custkey bigint, c_mktsegment string, c_acctbal double",
     )
@@ -3520,7 +3522,8 @@ def _dtsx_medium_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(CASE WHEN c_custkey % 11 = 0 THEN 1 ELSE 0 END AS INT)"
         " AS DeletedFlag",
     ).unionByName(
-        spark.createDataFrame(
+        _local_frame(
+            spark,
             [(-1, -10, 0, 0, 0), (-2, -20, 0, 0, 0)],
             "CountryID int, CategoryID int, LocalCategoryID int, "
             "ETLCheckSum int, DeletedFlag int",
@@ -3737,8 +3740,8 @@ def q52(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q53(spark: SparkSession, sf_dir: str) -> DataFrame:
-    terms = spark.createDataFrame(
-        [("data",), ("query",), ("stream",), ("vector",)], "term string"
+    terms = _local_frame(
+        spark, [("data",), ("query",), ("stream",), ("vector",)], "term string"
     )
     p = (
         _p("q53", sf_dir, "documents")
@@ -3919,7 +3922,8 @@ def q60(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q61(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range (interval) join via bucketed candidate generation — equi join
     on (bucket) + residual bound filter instead of a cross join."""
-    bands = spark.createDataFrame(
+    bands = _local_frame(
+        spark,
         [("budget", 0.0, 20000.0), ("mid", 20000.0, 60000.0),
          ("high", 60000.0, 90000.0), ("lux", 90000.0, 1000000.0)],
         "band string, lo double, hi double",

@@ -30,3 +30,12 @@ def rows(df, *cols):
         (tuple(r) for r in df.collect()),
         key=lambda t: tuple((v is None, str(v)) for v in t),
     )
+
+
+def assert_local_scan(df):
+    """``df`` runs from driver-held rows: a ``LocalTableScan``, with no
+    Python RDD (``Scan ExistingRDD``/``PythonRDD``) behind it."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan, plan
+    assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan

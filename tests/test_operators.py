@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ssis_to_pyspark_agent_spark.operators import get_operator
-from tests.conftest import rows
+from tests.conftest import assert_local_scan, rows
 
 
 def run(op, spark, inputs, **config):
@@ -3182,6 +3182,7 @@ class TestSampleModes:
         assert sorted((r.x, r.comp) for r in lbl_null.collect()) == [
             (0, 0), (1, 0)
         ]
+        assert_local_scan(lbl_null)
 
     def test_cluster_checkpoint_dir_identical(self, spark, tmp_path):
         """checkpoint_dir cuts the cc loops onto RELIABLE parquet
@@ -4387,6 +4388,7 @@ class TestClusterKmeans:
         a2 = sorted((r.vec_id, r.cluster) for r in r2["out"].collect())
         assert a1 == a2
         assert r1["out"].columns == ["vec_id", "embedding", "cluster"]
+        assert_local_scan(r1["centroids"])
 
     def test_kmeans_empty_cluster_keeps_centroid(self, spark):
         # two seed rows identical -> one cluster immediately starves;
