@@ -81,11 +81,12 @@ def stream_parquet_sink(spark: SparkSession, inputs, config, context) -> DataFra
     """Production-shaped streaming sink: foreachBatch writing parquet with
     a checkpoint dir (exactly-once via batch-id idempotence; on Delta the
     same foreachBatch does MERGE). Runs the bounded stream to completion
-    and returns the written data. `state_partitions` (int or 'auto' with
-    `expected_live_keys`) scopes the stateful shuffle-partition count for
-    this query's START only (see streaming.runner._state_partitions)."""
+    and returns the written data. The state width is derived from the
+    sources' listed bytes at the query's first START and frozen into the
+    checkpoint; set `state_partitions` (int) only when a checkpoint must
+    keep a given width (see streaming.runner.state_width)."""
     from ssis_to_pyspark_agent_spark.streaming.runner import (
-        _state_partitions,
+        drive_stream,
         resolve_state_partitions,
     )
 
@@ -96,18 +97,14 @@ def stream_parquet_sink(spark: SparkSession, inputs, config, context) -> DataFra
     def write_batch(batch_df, batch_id: int) -> None:
         batch_df.write.mode(mode).parquet(path)
 
-    with _state_partitions(spark, resolve_state_partitions(config)):
-        q = (
-            inputs[0]
-            .writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint)
-            .outputMode(config.get("output_mode", "append"))
-            .start()
-        )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drive_stream(
+        inputs[0],
+        lambda w: w.foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint)
+        .outputMode(config.get("output_mode", "append"))
+        .start(),
+        resolve_state_partitions(config),
+    )
     return spark.read.parquet(path)
 
 
@@ -116,11 +113,11 @@ def memory_stream_sink(spark: SparkSession, inputs, config, context) -> DataFram
     """Drive the streaming plan to completion into an in-memory table and
     return the (batch) result. For production use foreachBatch/parquet
     sinks with checkpointing; this is the synchronous test/demo sink.
-    `state_partitions` (int or 'auto' with `expected_live_keys`) scopes
-    the stateful shuffle-partition count around query START only — the
-    synchronous drain runs with the session conf restored, so batch jobs
-    planned meanwhile (another thread, a foreachBatch body) don't
-    inherit the streaming override (round-8 ADVICE item)."""
+    The state width is derived from the sources' listed bytes, or is
+    `state_partitions` (int) when set, and is scoped around query START
+    only — the synchronous drain runs with the session conf restored, so
+    batch jobs planned meanwhile (another thread, a foreachBatch body)
+    don't inherit the streaming width."""
     from ssis_to_pyspark_agent_spark.streaming import run_stream_to_memory
     from ssis_to_pyspark_agent_spark.streaming.runner import (
         resolve_state_partitions,

@@ -16,8 +16,11 @@ a static dim, union) works unchanged on a streaming DataFrame.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ssis_to_pyspark_agent_spark.operators.agg import build_aggs
 from ssis_to_pyspark_agent_spark.operators.sources_sinks import normalize_event_time
@@ -33,9 +36,13 @@ def stream_events(
     """readStream over a parquet directory (file source: the bounded-input
     test stand-in for kafka). Handles TIMESTAMP(NANOS) parquet columns the
     same way as the batch source (long nanos -> micros)."""
+    from ssis_to_pyspark_agent_spark.sources.catalog import read_parquet
+
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if schema is None:
-        schema = spark.read.parquet(path).schema  # one cheap footer read
+        # the session schema memo: one footer-inference job per path and
+        # session, not one per stream source per run
+        schema = read_parquet(spark, path, nanos_as_long=True).schema
     r = spark.readStream.schema(schema).option(
         "maxFilesPerTrigger", max_files_per_trigger
     )
@@ -137,14 +144,13 @@ class _state_partitions:
     WAL/commit/maintenance overhead every batch regardless of rows — at
     the cluster default of 32+ partitions a 59-row join spends its whole
     wall time on store bookkeeping (measured 16.4s -> 2.9s at 4
-    partitions, identical output). Size to expected KEYS PER WATERMARK
-    WINDOW, not to the batch-side cluster default; the setting is
-    captured into the query's checkpoint at first start, so it is also
-    the one knob that CANNOT be changed later without a new checkpoint.
-    Restoring after start is safe — StreamExecution clones the session
-    conf when the query starts. ONLY ``.start()`` belongs inside the
-    scope: holding it across the synchronous drain would leak the
-    override to every batch job another thread plans meanwhile."""
+    partitions, identical output). The setting is captured into the
+    query's checkpoint at first start, so it is also the one knob that
+    CANNOT be changed later without a new checkpoint. Restoring after
+    start is safe — StreamExecution clones the session conf when the
+    query starts. ONLY ``.start()`` belongs inside the scope: holding it
+    across the synchronous drain would leak the override to every batch
+    job another thread plans meanwhile."""
 
     def __init__(self, spark: SparkSession, n):
         self.spark, self.n, self.old = spark, n, None
@@ -160,54 +166,107 @@ class _state_partitions:
             self.spark.conf.set("spark.sql.shuffle.partitions", self.old)
 
 
-#: 'auto' sizing constant — the K x P sweep (PLANS.md round-9) measured
-#: state-store cost ~linear in P (~25-40 ms WAL/commit per store per
-#: micro-batch) with the more-partitions crossover NOT reached even at
-#: 200k live keys on local[32]: a partition comfortably holds ~1M keys
-#: of small per-key state before memory pressure argues for more.
-_KEYS_PER_STATE_PARTITION = 1_000_000
-
-
 def resolve_state_partitions(config: dict):
-    """Resolve a sink's ``state_partitions`` config: an int passes
-    through, ``'auto'`` applies the sweep-pinned rule
-    ``max(ceil(expected_live_keys / ~1M), min_parallelism)`` — size to
-    live keys per watermark horizon, never to cluster width. 'auto'
-    REQUIRES ``expected_live_keys`` (explicit beats guessing: the
-    engine cannot know the key cardinality of an unbounded source);
-    ``min_parallelism`` (default 1) floors at the cores a batch's CPU
-    actually needs."""
+    """Validate a sink's ``state_partitions`` config: None (derive the
+    width, see `state_width`) or an int >= 1."""
     n = config.get("state_partitions")
-    if n != "auto":
-        # validate HERE, with the config key named — deferring to the
-        # int() inside _state_partitions raises a bare "invalid literal"
-        # at query-start time, far from the config mistake ('Auto', 2.7,
-        # ... — round-10 self-review). bool is an int subclass; reject.
-        if n is None:
+    if n is None:
+        return None
+    # validate HERE, with the config key named — deferring to the int()
+    # inside _state_partitions raises a bare "invalid literal" at
+    # query-start time, far from the config mistake. bool is an int
+    # subclass; reject it.
+    if isinstance(n, bool) or not isinstance(n, int):
+        raise ValueError(f"state_partitions must be an int, got {n!r}")
+    if n < 1:
+        raise ValueError(f"state_partitions must be >= 1, got {n}")
+    return n
+
+
+#: Logical nodes whose state a Python function keeps. Their cost is
+#: per-group Python work that wants every core, not per-store
+#: bookkeeping: over sf0.1 events (2 MB, local[4]) q43's
+#: applyInPandasWithState counter drains in 2.2 s at 4 state partitions
+#: and in 4.2-5.4 s at 1, while its JVM-state replays and q78 are
+#: fastest at 1-2.
+_PYTHON_STATE_OPS = frozenset(
+    {"FlatMapGroupsInPandasWithState", "TransformWithStateInPySpark"})
+
+
+def _state_bytes(df: DataFrame) -> int | None:
+    """Bytes the file sources of streaming plan `df` list right now, or
+    None when the plan keeps the session width: a streaming leaf that is
+    not a file source (rate, socket, memory, ...), or state kept by a
+    Python function. Each `StreamingRelation` leaf is reloaded as a
+    batch relation with the leaf's own schema and options, so the size
+    is a driver-side file listing: no Spark job, no schema inference."""
+    spark = df.sparkSession
+    file_format = spark._jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.execution.datasources.FileFormat")
+    total, stack = 0, [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name in _PYTHON_STATE_OPS:
             return None
-        if isinstance(n, bool) or not isinstance(n, int):
-            raise ValueError(
-                f"state_partitions must be an int or 'auto', got {n!r}"
-            )
-        if n < 1:
-            raise ValueError(
-                f"state_partitions must be >= 1, got {n}"
-            )
-        return n
-    keys = config.get("expected_live_keys")
-    if keys is None:
-        raise ValueError(
-            "state_partitions='auto' requires expected_live_keys (the "
-            "key cardinality per watermark horizon) — pass an integer "
-            "state_partitions to size by hand"
-        )
-    keys = int(keys)
-    if keys < 0:
-        raise ValueError(f"expected_live_keys must be >= 0, got {keys}")
-    floor = int(config.get("min_parallelism", 1))
-    if floor < 1:
-        raise ValueError(f"min_parallelism must be >= 1, got {floor}")
-    return max(-(-keys // _KEYS_PER_STATE_PARTITION), floor)
+        kids = node.children()
+        if kids.size():
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+            continue
+        if not node.isStreaming():
+            continue  # a static side (stream-static join) holds no state
+        if name != "StreamingRelation":
+            return None
+        ds = node.dataSource()
+        if not file_format.isAssignableFrom(ds.providingClass()):
+            return None
+        options, it = {}, ds.options().iterator()
+        while it.hasNext():
+            kv = it.next()
+            options[kv._1()] = kv._2()
+        batch = (spark.read.format(ds.className()).options(**options)
+                 .schema(node.schema().toDDL()).load())
+        total += int(
+            batch._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return total
+
+
+def state_width(df: DataFrame, state_partitions: int | None = None):
+    """The state-store width for starting streaming query `df`: an
+    explicit `state_partitions` wins; otherwise the replay's listed bytes
+    over `spark.sql.adaptive.advisoryPartitionSizeInBytes`, capped at
+    `spark.sql.shuffle.partitions` — the rule AQE uses to coalesce a
+    batch shuffle, which micro-batches do not get. None (keep the
+    session width) when a source is not a file source or a Python
+    function keeps the state (see `_state_bytes`)."""
+    if state_partitions is not None:
+        return state_partitions
+    nbytes = _state_bytes(df)
+    if nbytes is None:
+        return None
+    spark = df.sparkSession
+    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, min(cap, -(-nbytes // advisory)))
+
+
+def drive_stream(
+    df: DataFrame,
+    start: Callable[[DataStreamWriter], StreamingQuery],
+    state_partitions: int | None = None,
+) -> None:
+    """Start `df`'s streaming query with ``start(df.writeStream)``, drain
+    it synchronously and stop it. The state width (see `state_width`) is
+    scoped around ``start`` ONLY (see _state_partitions) — the drain
+    runs with the session conf restored."""
+    n = state_width(df, state_partitions)
+    with _state_partitions(df.sparkSession, n):
+        q = start(df.writeStream)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
 
 
 def run_stream_to_memory(
@@ -217,21 +276,15 @@ def run_stream_to_memory(
     state_partitions: int | None = None,
 ) -> None:
     """Drive a (bounded-source) streaming DataFrame to completion into an
-    in-memory table `name` — synchronous, for tests/smoke.
-    ``state_partitions`` scopes the stateful shuffle-partition count
-    around ``.start()`` ONLY (see _state_partitions) — the drain runs
-    with the session conf restored."""
-    with _state_partitions(df.sparkSession, state_partitions):
-        q = (
-            df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    in-memory table `name` — synchronous, for tests/smoke. The state
+    width is `state_partitions` when given, else derived from the
+    sources' listed bytes (see `drive_stream`)."""
+    drive_stream(
+        df,
+        lambda w: w.outputMode(output_mode).format("memory")
+        .queryName(name).start(),
+        state_partitions,
+    )
 
 
 def stateful_counter(

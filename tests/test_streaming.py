@@ -27,6 +27,42 @@ def batch_events(spark):
     return normalize_event_time(spark.read.parquet(EVENTS), ["ts"])
 
 
+def _views_buys(df):
+    views = df.filter(F.col("event_type") == "view").select(
+        "user_id", F.col("ts").alias("v_ts"), F.col("event_id").alias("v_id"),
+    )
+    buys = df.filter(F.col("event_type") == "purchase").select(
+        "user_id", F.col("ts").alias("b_ts"), F.col("event_id").alias("b_id"),
+    )
+    return views, buys
+
+
+def _stream_join(spark):
+    from ssis_to_pyspark_agent_spark.streaming.runner import stream_stream_join
+
+    sv, sb = _views_buys(stream_events(spark, EVENTS, max_files_per_trigger=1))
+    return stream_stream_join(
+        sv, sb, keys=["user_id"], left_ts="v_ts", right_ts="b_ts",
+        watermark="5 minutes", time_bound="10 minutes",
+    )
+
+
+def _batch_pairs(batch_events):
+    """(view, purchase) id pairs of the batch join the stream join must
+    reproduce: same user, purchase within 10 minutes after the view."""
+    bv, bb = _views_buys(batch_events)
+    return {
+        (r.v_id, r.b_id)
+        for r in bv.join(bb, "user_id")
+        .filter(
+            (F.col("b_ts") >= F.col("v_ts"))
+            & (F.col("b_ts") <= F.col("v_ts") + F.expr("INTERVAL 10 minutes"))
+        )
+        .select("v_id", "b_id")
+        .collect()
+    }
+
+
 def test_tumbling_stream_matches_batch(spark, batch_events):
     ev = stream_events(spark, EVENTS)
     agg = windowed_agg(ev, "ts", "1 hour", {"n": ("count", "*")},
@@ -170,41 +206,12 @@ def test_stream_stream_join_matches_batch(spark, batch_events):
     """views joined to purchases by the same user within 10 minutes —
     stream-stream inner join with watermark + time-range state eviction
     must produce exactly the batch join's pairs."""
-    from ssis_to_pyspark_agent_spark.streaming.runner import stream_stream_join
-
-    def split(df):
-        views = df.filter(F.col("event_type") == "view").select(
-            "user_id", F.col("ts").alias("v_ts"),
-            F.col("event_id").alias("v_id"),
-        )
-        buys = df.filter(F.col("event_type") == "purchase").select(
-            "user_id", F.col("ts").alias("b_ts"),
-            F.col("event_id").alias("b_id"),
-        )
-        return views, buys
-
-    sv, sb = split(stream_events(spark, EVENTS, max_files_per_trigger=1))
-    joined = stream_stream_join(
-        sv, sb, keys=["user_id"], left_ts="v_ts", right_ts="b_ts",
-        watermark="5 minutes", time_bound="10 minutes",
-    )
-    run_stream_to_memory(joined, "t_ssj", output_mode="append")
+    run_stream_to_memory(_stream_join(spark), "t_ssj", output_mode="append")
     got = {
         (r["v_id"], r["b_id"])
         for r in spark.table("t_ssj").select("v_id", "b_id").collect()
     }
-
-    bv, bb = split(batch_events)
-    expected = {
-        (r["v_id"], r["b_id"])
-        for r in bv.join(bb, "user_id")
-        .filter(
-            (F.col("b_ts") >= F.col("v_ts"))
-            & (F.col("b_ts") <= F.col("v_ts") + F.expr("INTERVAL 10 minutes"))
-        )
-        .select("v_id", "b_id")
-        .collect()
-    }
+    expected = _batch_pairs(batch_events)
     assert len(expected) > 0
     assert got == expected
 
@@ -213,52 +220,21 @@ def test_state_partitions_scoped_and_restored(spark, batch_events):
     """round-7 verdict item 4: `state_partitions` on a streaming sink
     scopes spark.sql.shuffle.partitions around query start (captured
     into the query's checkpoint = the state-store count), restores the
-    session conf, and changes NOTHING about the result. The knob is the
-    q78 variance fix — 4 state stores per partition per micro-batch
-    each pay fixed WAL/commit cost, so store count ∝ wall time on
-    small-state joins."""
+    session conf, and changes NOTHING about the result — 4 state stores
+    per partition per micro-batch each pay fixed WAL/commit cost, so
+    store count ∝ wall time on small-state joins."""
     from ssis_to_pyspark_agent_spark.operators import get_operator
-    from ssis_to_pyspark_agent_spark.streaming.runner import (
-        stream_events,
-        stream_stream_join,
-    )
-
-    def split(df):
-        views = df.filter(F.col("event_type") == "view").select(
-            "user_id", F.col("ts").alias("v_ts"),
-            F.col("event_id").alias("v_id"),
-        )
-        buys = df.filter(F.col("event_type") == "purchase").select(
-            "user_id", F.col("ts").alias("b_ts"),
-            F.col("event_id").alias("b_id"),
-        )
-        return views, buys
 
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    sv, sb = split(stream_events(spark, EVENTS, max_files_per_trigger=1))
-    joined = stream_stream_join(
-        sv, sb, keys=["user_id"], left_ts="v_ts", right_ts="b_ts",
-        watermark="5 minutes", time_bound="10 minutes",
-    )
     out = get_operator("sink.memory_stream")(
-        spark, [joined],
+        spark, [_stream_join(spark)],
         {"table": "t_ssj_sp", "state_partitions": 2}, {},
     )
     got = {(r["v_id"], r["b_id"])
            for r in out.select("v_id", "b_id").collect()}
     # conf restored after the query started
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
-
-    bv, bb = split(batch_events)
-    expected = {
-        (r["v_id"], r["b_id"])
-        for r in bv.join(bb, "user_id")
-        .filter(
-            (F.col("b_ts") >= F.col("v_ts"))
-            & (F.col("b_ts") <= F.col("v_ts") + F.expr("INTERVAL 10 minutes"))
-        )
-        .collect()
-    }
+    expected = _batch_pairs(batch_events)
     assert len(expected) > 0 and got == expected
 
 
@@ -344,75 +320,97 @@ def test_state_partitions_scoped_to_start_only(spark, monkeypatch):
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
-def test_resolve_state_partitions_auto():
-    """round-9 verdict item 6: state_partitions='auto' applies the
-    sweep-pinned rule ceil(expected_live_keys / ~1M) floored at
-    min_parallelism; ints pass through untouched; 'auto' without the
-    declared cardinality is a config error (explicit beats guessing)."""
+def test_resolve_state_partitions_rejects_junk():
+    """Non-int, non-None values are config errors named at the key — not
+    a bare int() ValueError at query-start (round-10 self-review). The
+    removed 'auto' mode is one of them."""
     from ssis_to_pyspark_agent_spark.streaming.runner import (
         resolve_state_partitions,
     )
 
-    # int/None pass-through (q43/q78 configs unchanged)
     assert resolve_state_partitions({"state_partitions": 8}) == 8
     assert resolve_state_partitions({}) is None
-    # the sweep's shapes: every measured K (100 / 10k / 200k live keys)
-    # lands on the table's winning small-P answer
-    for keys in (100, 10_000, 200_000):
-        assert resolve_state_partitions(
-            {"state_partitions": "auto", "expected_live_keys": keys}) == 1
-    assert resolve_state_partitions(
-        {"state_partitions": "auto", "expected_live_keys": 1_000_000}) == 1
-    assert resolve_state_partitions(
-        {"state_partitions": "auto", "expected_live_keys": 1_000_001}) == 2
-    assert resolve_state_partitions(
-        {"state_partitions": "auto", "expected_live_keys": 3_500_000}) == 4
-    # floored at the cores the batch CPU needs, never below
-    assert resolve_state_partitions(
-        {"state_partitions": "auto", "expected_live_keys": 100,
-         "min_parallelism": 8}) == 8
-    with pytest.raises(ValueError, match="expected_live_keys"):
-        resolve_state_partitions({"state_partitions": "auto"})
-    with pytest.raises(ValueError, match=">= 0"):
-        resolve_state_partitions(
-            {"state_partitions": "auto", "expected_live_keys": -1})
-    with pytest.raises(ValueError, match="min_parallelism"):
-        resolve_state_partitions(
-            {"state_partitions": "auto", "expected_live_keys": 5,
-             "min_parallelism": 0})
-
-
-def test_state_partitions_auto_end_to_end(spark, batch_events):
-    """'auto' on a real sink: declared 50 live users -> 1 partition;
-    results identical to the batch oracle."""
-    from ssis_to_pyspark_agent_spark.operators import get_operator
-
-    agg = windowed_agg(
-        stream_events(spark, EVENTS, max_files_per_trigger=1),
-        ts_col="ts", window="10 minutes", aggs={"n": ("count", "*")},
-    )
-    out = get_operator("sink.memory_stream")(
-        spark, [agg],
-        {"table": "t_auto_sp", "state_partitions": "auto",
-         "expected_live_keys": 50, "output_mode": "complete"}, {},
-    )
-    batch = windowed_agg(
-        batch_events, ts_col="ts", window="10 minutes",
-        aggs={"n": ("count", "*")},
-    )
-    got = {(r.window_start, r.n) for r in out.collect()}
-    expect = {(r.window_start, r.n) for r in batch.collect()}
-    assert got == expect
-
-
-def test_resolve_state_partitions_rejects_junk():
-    """Non-int, non-None, non-'auto' values are config errors named at
-    the key — not a bare int() ValueError at query-start (round-10
-    self-review)."""
-    from ssis_to_pyspark_agent_spark.streaming.runner import (
-        resolve_state_partitions,
-    )
-
-    for bad in ("Auto", "atuo", 2.7, True, 0, -3):
+    for bad in ("auto", "Auto", "atuo", 2.7, True, 0, -3):
         with pytest.raises(ValueError, match="state_partitions"):
             resolve_state_partitions({"state_partitions": bad})
+
+
+def test_derived_width_parquet_sink(spark, tmp_path, batch_events):
+    """With state_partitions unset, the stream-stream join over the ~27 KB
+    fixture starts at ONE state partition (listed bytes far below the
+    advisory partition size) and still produces exactly the batch join."""
+    from ssis_to_pyspark_agent_spark.operators import get_operator
+
+    out = get_operator("sink.stream_parquet")(
+        spark, [_stream_join(spark)],
+        {"path": str(tmp_path / "out"), "checkpoint": str(tmp_path / "ckpt")},
+        {},
+    )
+    state0 = tmp_path / "ckpt" / "state" / "0"
+    assert [p.name for p in state0.iterdir() if p.name.isdigit()] == ["0"]
+    got = {(r.v_id, r.b_id) for r in out.select("v_id", "b_id").collect()}
+    expected = _batch_pairs(batch_events)
+    assert len(expected) > 0 and got == expected
+
+
+def test_derived_width_follows_state_bytes(spark):
+    """An advisory partition size below a third of the listed bytes asks
+    for more than one partition; the shuffle width still caps it, and an
+    explicit width still wins."""
+    from ssis_to_pyspark_agent_spark.streaming.runner import (
+        _state_bytes,
+        state_width,
+    )
+
+    joined = _stream_join(spark)
+    assert state_width(joined) == 1
+    nbytes = _state_bytes(joined)
+    assert nbytes > 0
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(nbytes // 3 - 1))
+    try:
+        width = state_width(joined)
+        assert state_width(joined, 3) == 3
+    finally:
+        spark.conf.set(key, old)
+    assert 1 < width <= int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+def test_session_width_kept(spark):
+    """A non-file source, or state kept by a Python function (per-group
+    Python work wants the cores), keeps the session width."""
+    from ssis_to_pyspark_agent_spark.streaming import stateful_counter
+    from ssis_to_pyspark_agent_spark.streaming.runner import state_width
+
+    rate = spark.readStream.format("rate").load()
+    assert state_width(rate.groupBy("value").count()) is None
+    counter = stateful_counter(stream_events(spark, EVENTS), keys=["user_id"])
+    assert state_width(counter) is None
+    assert state_width(counter, 2) == 2
+
+
+def test_derived_width_submits_no_job(spark):
+    """The width comes from a driver-side file listing: no Spark job, no
+    schema inference."""
+    from ssis_to_pyspark_agent_spark.streaming.runner import state_width
+
+    joined = _stream_join(spark)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    assert state_width(joined) == 1
+    assert set(tracker.getJobIdsForGroup(None)) == before
+
+
+def test_no_query_sets_state_partitions():
+    """Catalog queries leave the state width to the sinks' derivation;
+    a hand-set width freezes into every new checkpoint."""
+    import inspect
+    import sys
+
+    from ssis_to_pyspark_agent_spark.queries import QUERIES
+
+    for name, fn in QUERIES.items():
+        assert "state_partitions" not in inspect.getsource(fn), name
+    for mod in {fn.__module__ for fn in QUERIES.values()}:
+        assert "state_partitions" not in inspect.getsource(sys.modules[mod])
