@@ -632,9 +632,9 @@ def topk_ivf(spark: SparkSession, inputs, config, context) -> DataFrame:
         config.get("assign_impl", "numpy") == "numpy"
     )
 
-    c = _spread(spark, corpus, by_bytes=numpy_assign).select(
-        F.col(config["id_col"]).alias("corpus_id"), F.col(config["vec_col"]).alias("_cv")
-    )
+    named = (F.col(config["id_col"]).alias("corpus_id"),
+             F.col(config["vec_col"]).alias("_cv"))
+    c = _spread(spark, corpus, by_bytes=numpy_assign).select(*named)
     if config.get("kmeans"):
         cent_rows = _kmeans_centroids(
             c, n_cent,
@@ -650,8 +650,11 @@ def topk_ivf(spark: SparkSession, inputs, config, context) -> DataFrame:
             key = F.md5(F.col("corpus_id").cast("string"))
         else:
             key = F.xxhash64(F.col("corpus_id").cast("string"))
+        # sampled from the unspread corpus: a top-n needs no shuffle, and
+        # the spread's rebalance would put one under it
         cent = (
-            c.orderBy(key)
+            corpus.select(*named)
+            .orderBy(key)
             .limit(n_cent)
             .select(F.col("_cv").alias("_centv"))
         )

@@ -3964,6 +3964,37 @@ class TestIvfKmeans:
         top1 = {r.query_id: r.corpus_id for r in ivf.collect()}
         assert top1 == {0: 0, 1: 1}  # self found even probing 1 list
 
+    def test_centroid_sample_takes_no_shuffle(self, spark, monkeypatch):
+        # the hash-sampled centroids are a top-n over the corpus: it must
+        # read the corpus as given, not through the spread (a rebalance
+        # here) that feeds the assignment kernel
+        import random
+
+        rng = random.Random(12)
+        data = [(i, [rng.gauss(0, 1) for _ in range(8)]) for i in range(200)]
+        df = spark.createDataFrame(
+            data, "vec_id long, embedding array<float>"
+        ).coalesce(1)  # narrower than the cores, so the corpus is spread
+        q = df.filter("vec_id < 3")
+        plans = []
+        frame = type(df)  # the session's concrete DataFrame class
+        collect = frame.collect
+
+        def recording_collect(self):
+            out = collect(self)
+            plans.append(self._jdf.queryExecution().executedPlan().toString())
+            return out
+
+        monkeypatch.setattr(frame, "collect", recording_collect)
+        run("similarity.topk_ivf", spark, [df, q], id_col="vec_id",
+            vec_col="embedding", query_id_col="vec_id",
+            query_vec_col="embedding", k=2, centroids=4, nprobe=2,
+            quantize=10000)
+        monkeypatch.undo()
+        samples = [p for p in plans if "TakeOrderedAndProject" in p]
+        assert len(samples) == 1, plans
+        assert "Exchange" not in samples[0], samples[0]
+
 
 class TestProfileProperty:
     from hypothesis import given, settings
