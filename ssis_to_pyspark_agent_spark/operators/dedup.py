@@ -87,47 +87,6 @@ def _shingles(c: Column, k: int) -> Column:
     )
 
 
-def _minhash_band_hashes(base_hashes: Column, bands: int, rows: int) -> Column:
-    """array<bigint> of LSH band hashes, computed straight from the
-    per-shingle hash column in ONE expression.
-
-    `base_hashes` must be a column of an already-materialized (persisted)
-    relation — a bound reference, not an expression tree. Referencing an
-    expression here instead would let Catalyst's CollapseProject inline it
-    into every one of the bands*rows minhash lambdas, exploding the
-    codegen tree multiplicatively (observed: >10x runtime).
-
-    Each of the bands*rows minhash functions (min over xxhash64(h, i)) is
-    computed exactly once; each band hash consumes its own `rows` values.
-    """
-    def minhash(i: int) -> Column:
-        # aggregate fold, NOT array_min(transform(...)): the transform
-        # allocates an intermediate array per (row x hash function) —
-        # 65M arrays at 500k docs x 128 fns, all GC pressure. The fold
-        # keeps one accumulator.
-        return F.aggregate(
-            base_hashes,
-            F.lit((1 << 63) - 1).cast("long"),
-            lambda acc, h: F.least(acc, F.xxhash64(h, F.lit(i))),
-        )
-
-    return F.array(
-        *[
-            F.xxhash64(
-                F.concat_ws(
-                    ",",
-                    *[
-                        minhash(b * rows + j).cast("string")
-                        for j in range(rows)
-                    ],
-                ),
-                F.lit(b),
-            )
-            for b in range(bands)
-        ]
-    )
-
-
 def _numpy_band_frame(
     base: DataFrame, bands: int, rows: int, seed: int
 ) -> DataFrame:
@@ -138,16 +97,14 @@ def _numpy_band_frame(
     xxhash64) transfer to Python as int64 arrays; each doc's full
     bands*rows signature is ONE vectorized broadcast
     (shingles x num_hashes universal hashes, column-min), then rows-fold
-    into band hashes. Replaces the bands*rows Catalyst aggregate folds of
-    `_minhash_band_hashes` — same LSH semantics, different hash family
-    (multiply-add mod 2^64 instead of seeded xxhash64), so candidate sets
-    differ slightly pre-verification; the exact-Jaccard verify stage makes
-    the final output family-insensitive.
+    into band hashes (multiply-add mod 2^64 universal hashes).
 
-    Scale note: this is the Arrow-vectorized path (NOT a row-at-a-time
-    UDF); per 10k-row batch the Python cost is one numpy kernel per doc.
-    An array-accumulator Catalyst fold was tried and rejected — see
-    NOTES.md (copy-on-write array per fold step, 19x slower).
+    The one MinHash kernel: a pure-Catalyst formulation (bands*rows
+    aggregate folds, each re-walking the shingle array) measured ~2x
+    slower at every size tried (174s vs 97s at 510k docs), and an
+    array-accumulator fold 19x slower (copy-on-write array per fold
+    step, NOTES.md). Arrow-vectorized, NOT a row-at-a-time UDF: per
+    10k-row batch the Python cost is one numpy kernel per doc.
     """
     import numpy as np
     import pandas as pd
@@ -448,23 +405,11 @@ def _signature_bands(
     bands: int,
     rows: int,
     seed: int,
-    sig_impl: str,
-    persist_base: bool,
 ):
     """The shared MinHash stage 1+2 (dedup.minhash AND
-    dedup.minhash_incremental — ONE definition so the CollapseProject
-    workaround and seed handling cannot drift between them): shingle +
-    per-shingle xxhash64, then the band-hash frame.
-
-    Two band implementations: 'numpy' (default) — Arrow-batched
-    vectorized signatures via mapInPandas, measured ~2x faster at every
-    size tried (97s vs 174s at 510k docs) because 128 universal hashes
-    per shingle collapse into one broadcast-multiply numpy kernel per
-    doc instead of 128 Catalyst folds re-walking the shingle array;
-    'expr' — pure-JVM Catalyst folds, kept for Python-worker-free
-    deployments. The expr path REQUIRES persist_base=True: without the
-    cache barrier CollapseProject inlines the _hs expression into all
-    128 minhash lambdas (>10x blowup, NOTES invariant 2). Returns
+    dedup.minhash_incremental — ONE definition so seed handling cannot
+    drift between them): shingle + per-shingle xxhash64, then the
+    numpy band-hash frame (`_numpy_band_frame`). Returns
     (base, band_frame); base carries (_id, _sh, _hs)."""
     base = src.select(
         F.col(id_col).alias("_id"),
@@ -472,15 +417,7 @@ def _signature_bands(
     ).withColumn(
         "_hs", F.transform(F.col("_sh"), lambda s: F.xxhash64(s, F.lit(seed)))
     )
-    if persist_base:
-        base = base.persist()
-    if sig_impl == "numpy":
-        band_frame = _numpy_band_frame(base, bands, rows, seed)
-    else:
-        band_frame = base.select(
-            "_id", _minhash_band_hashes(F.col("_hs"), bands, rows).alias("_bh")
-        )
-    return base, band_frame
+    return base, _numpy_band_frame(base, bands, rows, seed)
 
 
 def _dominated_ids(pairs: DataFrame, id_col: str) -> DataFrame:
@@ -592,7 +529,7 @@ class _CCCheckpointer:
 
     def abort(self) -> None:
         """Delete this invocation's entire scratch subdir — called on
-        the error paths (lp non-convergence, star non-convergence),
+        the error paths (star non-convergence, a mid-loop error),
         where ``finish`` never runs and repeated failed runs would
         otherwise accumulate dup-volume-sized parquet dirs (round-9
         ADVICE item). Only THIS invocation's namespace is touched."""
@@ -607,10 +544,8 @@ class _CCCheckpointer:
     def finish(self, df: DataFrame) -> DataFrame:
         """Land the final frame in one ``final`` parquet dir and prune
         every per-round file — the returned frame reads only the final
-        file (round files may be in its lineage otherwise, e.g. when the
-        last rounds carried lineage under every>1), so the steady-state
-        footprint is a single dup-volume-sized dataset. No-op without a
-        checkpoint_dir."""
+        file, so the steady-state footprint is a single dup-volume-sized
+        dataset. No-op without a checkpoint_dir."""
         if self.root is None:
             return df
         from ssis_to_pyspark_agent_spark.fs import hadoop_fs
@@ -639,7 +574,7 @@ def _star_components(
     chained through shared boilerplate) can push the diameter past any
     fixed round bound — star contraction converges in O(log^2 n) rounds
     regardless of shape, so it is the deep-graph fallback of
-    dedup.cluster / sample.holdout's cc_impl='auto'. Per round: two
+    dedup.cluster / sample.holdout (`_propagate_labels`). Per round: two
     group-by-min shuffles over the dup-volume-sized edge set plus a
     set-stability check; each round localCheckpoints so round N never
     replays rounds 1..N-1.
@@ -735,14 +670,14 @@ def _star_components(
     return leaves.unionByName(roots)
 
 
-#: rounds the 'auto' impl gives min-label propagation before falling
+#: rounds `_propagate_labels` gives min-label propagation before falling
 #: back to star contraction — real near-dup graphs are clique-ish
 #: (diameter 2-4), so lp converges here almost always; only an
 #: adversarial chain pays the bounded wasted rounds and reroutes.
 _AUTO_LP_ROUNDS = 8
 
 
-#: default bound on the pair rows the 'auto' cc path may collect for the
+#: default bound on the pair rows `_propagate_labels` may collect for the
 #: driver-side union-find (two ids/row — a few MB at the cap). The same
 #: driver-boundedness discipline as _MAX_HOT_KEYS / brute_force_cap: a
 #: bounded limit(cap+1) probe decides, never a full count.
@@ -798,7 +733,6 @@ def _driver_cc_labels(spark, rows, id_field) -> DataFrame:
 def _propagate_labels(
     pairs: DataFrame,
     max_rounds: int,
-    impl: str = "auto",
     checkpoint_dir: str | None = None,
     driver_cap: int = _DRIVER_CC_CAP,
 ) -> DataFrame:
@@ -808,30 +742,24 @@ def _propagate_labels(
     re-attach them with comp = own id). Shared by dedup.cluster and
     sample.holdout.
 
-    impl='auto' (default): min-label propagation for up to
-    _AUTO_LP_ROUNDS rounds (the cheap path — one shuffle per round, and
-    real dup graphs are shallow), then automatic fallback to star
-    contraction if labels are still moving — so the operator NEVER
-    fails or returns partial labels on a deep graph, and never pays
-    star's heavier rounds on a shallow one. impl='star': alternating
-    large/small-star contraction — O(log^2 n) rounds regardless of
-    component diameter. impl='lp': propagation only; FAILS FAST on
-    non-convergence rather than returning partial labels.
+    The route is decided by the data: a pair graph under ``driver_cap``
+    rows runs exact union-find on the driver; above it, min-label
+    propagation for up to _AUTO_LP_ROUNDS rounds (the cheap path — one
+    shuffle per round, and real dup graphs are shallow), then automatic
+    fallback to star contraction if labels are still moving — so the
+    operator NEVER fails or returns partial labels on a deep graph, and
+    never pays star's heavier rounds on a shallow one.
     ``localCheckpoint`` cuts the lineage so round N doesn't replay
     rounds 1..N-1; pass ``checkpoint_dir`` to cut onto RELIABLE parquet
     instead — localCheckpoint blocks live on executor-local disk and die
     with the executor, which at cluster scale restarts the whole loop
-    (round-8 verdict item 5)."""
-    if impl not in ("auto", "star", "lp"):
-        raise ValueError(
-            f"cc impl must be 'auto', 'star' or 'lp', got {impl!r}"
-        )
+    (round-8 verdict item 5). ``driver_cap`` is a test seam (0 disables
+    the driver route); operators always pass the default."""
     if max_rounds < 1:
         # a zero-iteration loop would read as "converged" with every
-        # node its own component — the silent leaky-split outcome the
-        # fail-fast paths exist to prevent
+        # node its own component — a silent leaky split
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
-    if impl == "auto" and checkpoint_dir is None and driver_cap > 0:
+    if checkpoint_dir is None and driver_cap > 0:
         # r12 (guide §1.2): at real dup rates the pair graph is tiny
         # relative to the corpus, and the distributed loop's cost is
         # almost entirely per-round fixed overhead (lineage cuts +
@@ -840,48 +768,30 @@ def _propagate_labels(
         # once and run exact union-find instead — same min-label
         # contract, zero rounds. The probe is limit(cap+1), never a
         # count; above the cap (or with a checkpoint_dir, whose
-        # durable per-round artifacts are the point, or a forced
-        # 'lp'/'star') the distributed path is untouched.
+        # durable per-round artifacts are the point) the distributed
+        # path is untouched.
         head = pairs.select("a", "b").limit(driver_cap + 1).collect()
         if len(head) <= driver_cap:
             return _driver_cc_labels(
                 pairs.sparkSession, head, pairs.schema["a"]
             )
     ckpt = _CCCheckpointer(pairs.sparkSession, checkpoint_dir)
-    # on ANY failure path (lp/star non-convergence, a mid-loop error)
+    # on ANY failure path (star non-convergence, a mid-loop error)
     # finish() never runs — drop this invocation's round scratch before
     # re-raising so repeated failed runs don't accumulate
     # dup-volume-sized parquet dirs (round-9 ADVICE item)
     try:
-        if impl == "star":
-            return ckpt.finish(_star_components(pairs, max_rounds, ckpt))
-        lp_rounds = (
-            min(max_rounds, _AUTO_LP_ROUNDS) if impl == "auto" else max_rounds
+        labels, converged = _lp_labels(
+            pairs, min(max_rounds, _AUTO_LP_ROUNDS), ckpt
         )
-        labels, converged = _lp_labels(pairs, lp_rounds, ckpt)
         if converged:
             return ckpt.finish(labels)
-        if impl == "auto":
-            # deep component: reroute to the diameter-independent
-            # algorithm. The caller's max_rounds was sized for
-            # propagation (~diameter); star needs ~log2(component size)
-            # rounds, so floor the bound at 32 — enough for any
-            # physically possible component.
-            return ckpt.finish(
-                _star_components(pairs, max(max_rounds, 32), ckpt)
-            )
-        # labels are still moving: some component has diameter >
-        # max_rounds and its far nodes hold INTERMEDIATE labels.
-        # Returning them silently would hand dedup.cluster wrong
-        # components and break sample.holdout's no-straddle guarantee
-        # (two linked docs with different labels can land on different
-        # sides) — fail fast instead.
-        raise ValueError(
-            f"label propagation did not converge within max_rounds="
-            f"{max_rounds}: a near-dup component has a chain diameter "
-            f"above that. Raise max_rounds to >= the component diameter "
-            f"(longest pair-chain hops; the quiet confirmation round is "
-            f"free), or use cc_impl='auto'/'star'."
+        # deep component: reroute to the diameter-independent algorithm.
+        # The caller's max_rounds was sized for propagation (~diameter);
+        # star needs ~log2(component size) rounds, so floor the bound at
+        # 32 — enough for any physically possible component.
+        return ckpt.finish(
+            _star_components(pairs, max(max_rounds, 32), ckpt)
         )
     except BaseException:
         ckpt.abort()
@@ -897,10 +807,9 @@ def _lp_labels(
     observed by one further quiet round, so the loop runs max_rounds+1
     times and a component of diameter exactly max_rounds still
     converges (a review pass caught the boundary: labels complete on
-    the last allowed round read as "not converged", spuriously failing
-    'lp' and making 'auto' redo finished work in star contraction).
-    Returns (labels, converged) — the caller decides whether a
-    non-converged run falls back (auto) or fails (lp)."""
+    the last allowed round read as "not converged", making the caller
+    redo finished work in star contraction). Returns (labels,
+    converged) — a non-converged run falls back to star contraction."""
     if ckpt is None:
         ckpt = _CCCheckpointer(None, None)
     edges = (
@@ -943,16 +852,16 @@ def dedup_cluster(spark: SparkSession, inputs, config, context):
     closure the keep-min-neighbor heuristic skips. inputs: [ids, pairs]
     where ids has `id_col` and pairs has columns (a, b).
 
-    cc_impl='auto' (default): min-label propagation (one cheap shuffle
-    per round; real dup graphs are clique-ish, diameter 2-4) with
-    automatic fallback to star contraction (Kiveris et al. 2014,
-    O(log^2 n) rounds regardless of DIAMETER) if labels are still
-    moving after a bounded number of rounds — a chain-shaped dup graph
-    can't outrun it, and a shallow graph never pays star's heavier
-    rounds. cc_impl='star'/'lp' force one algorithm; 'lp' fails fast on
-    non-convergence rather than returning partial labels.
-    `localCheckpoint` cuts the lineage so round N doesn't replay
-    rounds 1..N-1.
+    One data-driven path (`_propagate_labels`): a pair graph under
+    100k rows runs exact union-find on the driver; a larger one runs
+    min-label propagation (one cheap shuffle per round; real dup graphs
+    are clique-ish, diameter 2-4) with automatic fallback to star
+    contraction (Kiveris et al. 2014, O(log^2 n) rounds regardless of
+    DIAMETER) if labels are still moving after a bounded number of
+    rounds — a chain-shaped dup graph can't outrun it, and a shallow
+    graph never pays star's heavier rounds. ``max_rounds`` (default 20)
+    bounds the rounds; `localCheckpoint` cuts the lineage so round N
+    doesn't replay rounds 1..N-1.
 
     ``checkpoint_dir``: cut each round onto RELIABLE parquet under this
     directory instead of localCheckpoint (which writes executor-LOCAL
@@ -987,9 +896,7 @@ def dedup_cluster(spark: SparkSession, inputs, config, context):
     max_rounds = config.get("max_rounds", 20)
 
     labels = _propagate_labels(
-        pairs, max_rounds, config.get("cc_impl", "auto"),
-        checkpoint_dir=config.get("checkpoint_dir"),
-        driver_cap=int(config.get("driver_cc_cap", _DRIVER_CC_CAP)),
+        pairs, max_rounds, checkpoint_dir=config.get("checkpoint_dir")
     )
 
     # Re-attach isolated nodes (comp = own id) with one left join; the
@@ -1327,28 +1234,18 @@ def dedup_minhash(spark: SparkSession, inputs, config, context):
     rows = num_hashes // bands
     seed = config.get("seed", 42)
 
-    # Stage 1: shingle + hash every shingle string. Whether to persist this
-    # corpus-sized frame depends on the signature impl:
-    # - 'expr': persist is load-bearing twice over — (a) the banded
-    #   self-join side would recompute the narrow pipeline, (b) it stops
-    #   Catalyst CollapseProject from inlining the _hs expression into the
-    #   128 minhash lambdas (>10x blowup, see NOTES.md).
-    # - 'numpy' (default): do NOT persist. _hs feeds mapInPandas exactly
-    #   once (no inlining hazard), the candidate frame downstream is
-    #   persisted anyway, and the only re-reader is the verify join, which
-    #   recomputes shingles for the (tiny, semi-filtered) candidate set
-    #   from a second pruned scan. Measured at sf0.1: 4.1-5.8s -> 2.5s
-    #   steady-state, and it removes the memory-∝-corpus cache that was
-    #   the listed 100TB risk (PLANS.md known-costs).
+    # Stage 1: shingle + hash every shingle string. NOT persisted: _hs
+    # feeds mapInPandas exactly once, the candidate frame downstream is
+    # persisted anyway, and the only re-reader is the verify join, which
+    # recomputes shingles for the (tiny, semi-filtered) candidate set
+    # from a second pruned scan. Measured at sf0.1: 4.1-5.8s -> 2.5s
+    # steady-state, and it removes the memory-∝-corpus cache that was
+    # the listed 100TB risk (PLANS.md known-costs).
     # Signature compute is CPU-bound: spread it across the cluster even when
     # the input is a handful of parquet splits.
     src = _spread(spark, df)
-    cache_base = config.get(
-        "cache_base", config.get("sig_impl", "numpy") != "numpy"
-    )
     base, band_frame = _signature_bands(
-        src, id_col, text_col, k, bands, rows, seed,
-        config.get("sig_impl", "numpy"), cache_base,
+        src, id_col, text_col, k, bands, rows, seed
     )
     banded = band_frame.select(
         "_id", F.posexplode("_bh").alias("_band", "_bh")
@@ -1378,22 +1275,19 @@ def dedup_minhash(spark: SparkSession, inputs, config, context):
             .unionByName(cand.select(F.col("b").alias("_id")))
             .distinct()
         )
-        if cache_base:
-            sh = sh.join(F.broadcast(cand_ids), "_id", "left_semi")
-        else:
-            # Uncached base: semi-filter the RAW source by candidate id
-            # BEFORE shingling. Catalyst will not hoist the semi-join
-            # above the shingle Project on its own (verified in the
-            # physical plan), so spelling it out is the difference between
-            # an O(|candidates|) and an O(corpus) recompute.
-            pruned = src.join(
-                F.broadcast(cand_ids.select(F.col("_id").alias(id_col))),
-                id_col, "left_semi",
-            )
-            sh = pruned.select(
-                F.col(id_col).alias("_id"),
-                _shingles(F.col(text_col), k).alias("_sh"),
-            )
+        # semi-filter the RAW source by candidate id BEFORE shingling.
+        # Catalyst will not hoist the semi-join above the shingle
+        # Project on its own (verified in the physical plan), so
+        # spelling it out is the difference between an O(|candidates|)
+        # and an O(corpus) recompute.
+        pruned = src.join(
+            F.broadcast(cand_ids.select(F.col("_id").alias(id_col))),
+            id_col, "left_semi",
+        )
+        sh = pruned.select(
+            F.col(id_col).alias("_id"),
+            _shingles(F.col(text_col), k).alias("_sh"),
+        )
         cand = F.broadcast(cand)
         # sh feeds BOTH sides of the verify join; unpersisted, the plan
         # duplicates the whole subtree — the corpus-wide semi-probe, the
@@ -1465,66 +1359,33 @@ def dedup_simhash(spark: SparkSession, inputs, config, context):
             # higher-order functions (F.transform) directly
             return F.xxhash64(t)
 
-    if config.get("sig_impl", "numpy") == "numpy":
-        # Arrow-batched fingerprints: hash each token ONCE JVM-side, then
-        # one (tokens x 60) bit-matrix vote per doc in numpy. Bit-identical
-        # to the expr path (same xxhash64 values, same >0 sign rule) —
-        # pinned by test_simhash_sig_impls_agree. The expr formulation is
-        # the copy-on-write array-accumulator trap (a fresh 60-elem vote
-        # array per token) plus 60 per-bit re-evaluations of xxhash64 per
-        # token; measured 4.1s -> ~2s for q33 at sf0.1.
-        import numpy as np
-        import pandas as pd
+    # Arrow-batched fingerprints: hash each token ONCE JVM-side, then one
+    # (tokens x 60) bit-matrix vote per doc in numpy. A Catalyst
+    # formulation is the copy-on-write array-accumulator trap (a fresh
+    # 60-elem vote array per token) plus 60 per-bit re-evaluations of the
+    # token hash; measured 4.1s -> ~2s for q33 at sf0.1.
+    import numpy as np
+    import pandas as pd
 
-        shifts = np.arange(n_bits, dtype=np.uint64)
-        id_type = df.schema[id_col].dataType.simpleString()
-        tok = df.select(
-            F.col(id_col).alias("_id"),
-            F.transform(tokens, _tok_hash).alias("_hs"),
-        )
+    shifts = np.arange(n_bits, dtype=np.uint64)
+    id_type = df.schema[id_col].dataType.simpleString()
+    tok = df.select(
+        F.col(id_col).alias("_id"),
+        F.transform(tokens, _tok_hash).alias("_hs"),
+    )
 
-        def gen(batches):
-            for pdf in batches:
-                fps = []
-                for hs in pdf["_hs"]:
-                    h = np.asarray(hs, dtype=np.int64).view(np.uint64)
-                    bits = ((h[:, None] >> shifts[None, :]) & np.uint64(1))
-                    votes = (2 * bits.astype(np.int64) - 1).sum(axis=0)
-                    fp = ((votes > 0).astype(np.uint64) << shifts).sum()
-                    fps.append(np.int64(fp))
-                yield pd.DataFrame({"_id": pdf["_id"], "_sh": fps})
+    def gen(batches):
+        for pdf in batches:
+            fps = []
+            for hs in pdf["_hs"]:
+                h = np.asarray(hs, dtype=np.int64).view(np.uint64)
+                bits = ((h[:, None] >> shifts[None, :]) & np.uint64(1))
+                votes = (2 * bits.astype(np.int64) - 1).sum(axis=0)
+                fp = ((votes > 0).astype(np.uint64) << shifts).sum()
+                fps.append(np.int64(fp))
+            yield pd.DataFrame({"_id": pdf["_id"], "_sh": fps})
 
-        base = tok.mapInPandas(gen, schema=f"_id {id_type}, _sh bigint")
-    else:
-        # per-bit vote: sum over tokens of (+1 / -1) for each bit position.
-        # Bit positions are compile-time literals (shift amounts must be
-        # ints), so the per-token bit array is an unrolled F.array — one
-        # narrow JVM pass, but a wide codegen expression.
-        votes = F.aggregate(
-            tokens,
-            F.array_repeat(F.lit(0).cast("long"), n_bits),
-            lambda acc, t: F.zip_with(
-                acc,
-                F.array(
-                    *[
-                        F.when(
-                            F.shiftright(_tok_hash(t), j).bitwiseAND(F.lit(1)) == 1,
-                            F.lit(1),
-                        ).otherwise(F.lit(-1))
-                        for j in range(n_bits)
-                    ]
-                ),
-                lambda a, b: a + b.cast("long"),
-            ),
-        )
-        base = df.select(F.col(id_col).alias("_id"), votes.alias("_votes"))
-        simhash = None
-        for j in range(n_bits):
-            bit = F.when(
-                F.col("_votes").getItem(j) > 0, F.lit(1 << j).cast("long")
-            ).otherwise(F.lit(0).cast("long"))
-            simhash = bit if simhash is None else simhash.bitwiseOR(bit)
-        base = base.withColumn("_sh", simhash).drop("_votes")
+    base = tok.mapInPandas(gen, schema=f"_id {id_type}, _sh bigint")
 
     chunk_bits = n_bits // n_chunks
     chunks = F.array(
@@ -1553,8 +1414,13 @@ def dedup_simhash(spark: SparkSession, inputs, config, context):
             F.bit_count(F.col("fa").bitwiseXOR(F.col("fb"))).alias("hamming"),
         )
         .filter(F.col("hamming") <= max_d)
-        .persist()
+        .persist()  # consumed by the survivor anti-join AND the pairs port
     )
+    # materialize the verified pairs once, then release the fingerprint
+    # and candidate caches, as dedup.minhash does (NOTES invariant 13)
+    pairs.count()
+    cand.unpersist()
+    base.unpersist()
     out = _keep_min_survivors(df, id_col, pairs)
     if config.get("return_pairs"):
         return {"out": out, "pairs": pairs}
@@ -1951,11 +1817,6 @@ def dedup_embedding(spark: SparkSession, inputs, config, context):
     exact cosine (F.zip_with dot product — JVM-side). `brute_force=True`
     skips LSH (baseline / small inputs).
     """
-    from ssis_to_pyspark_agent_spark.operators.similarity import (
-        _cosine,
-        _hyperplane_bucket,
-    )
-
     df: DataFrame = inputs[0]
     id_col, vec_col = config["id_col"], config["vec_col"]
     threshold = config.get("threshold", 0.95)
@@ -2075,107 +1936,15 @@ def dedup_embedding(spark: SparkSession, inputs, config, context):
             n_tables = n_tables if n_tables is not None else auto_tables
         base = base.persist()  # bucket explode + vector verify both read it
         caches.append(base)
-        if config.get("bucket_impl", "numpy") == "numpy":
-            from ssis_to_pyspark_agent_spark.operators.similarity import (
-                _bucket_frame,
-            )
+        from ssis_to_pyspark_agent_spark.operators.similarity import (
+            _bucket_frame,
+        )
 
-            bucketed = _bucket_frame(
-                base, "_id", "_v", dim, n_tables, n_bits,
-                config.get("seed", 42),
-            )
-        else:
-            bucketed = base.select(
-                "_id",
-                F.posexplode(
-                    _hyperplane_bucket(
-                        F.col("_v"), dim, n_tables, n_bits,
-                        seed=config.get("seed", 42),
-                    )
-                ).alias("_table", "_bucket"),
-            )
-        cap = config.get("bucket_cap", 200)
-        quantize = config.get("quantize")
-        if (
-            quantize
-            and config.get("bucket_impl", "numpy") == "numpy"
-            and config.get("verify_impl", "join") == "bucket"
-        ):
-            # OPTIONAL in-bucket verify: one applyInPandas group per
-            # (table, bucket) scores its cohabitants with a single
-            # quantized matmul and emits ONLY pairs above threshold —
-            # vectors cross the shuffle once per table instead of once
-            # per candidate pair. NOT the default: with auto-sized bits
-            # buckets hold ~8 rows, so the per-group pandas overhead
-            # outweighs the transfer saved (measured 47s vs 36s on a
-            # 202k corpus / 230k groups). It pays off when buckets are
-            # fat — cap-sized boilerplate clusters — where the join path
-            # would ship cap^2 vector pairs per bucket. Same pair set:
-            # cohabitant candidates, sorted-id cap, exact quantized
-            # cosine (equality pinned by test).
-            bucketed_v = _bucket_frame(
-                base, "_id", "_v", dim, n_tables, n_bits,
-                config.get("seed", 42), keep_vec=True,
-            )
-            import numpy as np
-            import pandas as pd
-
-            from ssis_to_pyspark_agent_spark.operators.similarity import (
-                _half_up,
-                _vecmat,
-            )
-
-            id_t = base.schema["_id"].dataType.simpleString()
-            thr = threshold
-
-            def ver(key, pdf):
-                if len(pdf) < 2:
-                    return pd.DataFrame({"a": [], "b": [],
-                                         "cosine": pd.Series(dtype="float64")})
-                if len(pdf) > cap:
-                    # head(cap) here used to TRUNCATE — the same silent
-                    # recall loss _bucket_pairs had (round-5 find); the
-                    # |B|^2 kernel matrix is a worker-memory hazard, so
-                    # a fat bucket fails LOUDLY instead (the exact
-                    # default verify_impl='join' handles it)
-                    raise ValueError(
-                        f"dedup.embedding: bucket {key} holds {len(pdf)}"
-                        f" rows (> bucket_cap {cap}); use the default "
-                        "verify_impl='join' (exact at any bucket size) "
-                        "or raise bucket_cap"
-                    )
-                pdf = pdf.sort_values("_id")
-                v = _half_up(_vecmat(pdf["_v"]), quantize)
-                n = np.sqrt((v * v).sum(axis=1))
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = (v @ v.T) / (n[:, None] * n[None, :])
-                iu, ju = np.triu_indices(len(pdf), k=1)
-                keep = cos[iu, ju] >= thr
-                ids_arr = pdf["_id"].to_numpy()
-                return pd.DataFrame({
-                    "a": ids_arr[iu[keep]],
-                    "b": ids_arr[ju[keep]],
-                    "cosine": cos[iu[keep], ju[keep]],
-                })
-
-            pairs = (
-                bucketed_v.groupBy("_table", "_bucket")
-                .applyInPandas(ver, schema=f"a {id_t}, b {id_t}, cosine double")
-                .dropDuplicates(["a", "b"])
-            )
-            # materialize once (survivor anti-join + optional pairs port
-            # both consume it), then release the corpus cache — the same
-            # hygiene as ngram_jaccard; without it every invocation
-            # leaked a corpus-sized cached relation
-            pairs = pairs.persist()
-            pairs.count()
-            base.unpersist()
-            out = _keep_min_survivors(df, id_col, pairs)
-            if config.get("return_pairs"):
-                return {"out": out, "pairs": pairs}
-            return out
+        bucketed = _bucket_frame(
+            base, "_id", "_v", dim, n_tables, n_bits, config.get("seed", 42)
+        )
         ids = _bucket_pairs(
-            bucketed, ["_table", "_bucket"], cap
+            bucketed, ["_table", "_bucket"], config.get("bucket_cap", 200)
         ).persist()
         caches.append(ids)
         cand = ids.join(
@@ -2550,22 +2319,14 @@ def dedup_minhash_incremental(spark: SparkSession, inputs, config, context):
         bands = _auto_bands(num_hashes, threshold)
     rows = num_hashes // bands
     seed = config.get("seed", 42)
-    sig_impl = config.get("sig_impl", "numpy")
     bucket_cap = config.get("bucket_cap", 200)
     cand_cap = config.get("cand_cap", 1000)
-    caches = []
 
     def band_rows(src: DataFrame) -> DataFrame:
-        base, bf = _signature_bands(
-            src, id_col, text_col, k, bands, rows, seed, sig_impl,
-            persist_base=sig_impl != "numpy",
-        )
-        if sig_impl != "numpy":
-            caches.append(base)
+        _, bf = _signature_bands(src, id_col, text_col, k, bands, rows, seed)
         return bf.select("_id", F.posexplode("_bh").alias("_band", "_bh"))
 
     b_banded = band_rows(_spread(spark, batch)).persist()
-    caches.append(b_banded)
     h_banded = (
         hist_bands_in.select("_id", "_band", "_bh")
         if hist_bands_in is not None
@@ -2664,11 +2425,9 @@ def dedup_minhash_incremental(spark: SparkSession, inputs, config, context):
     if config.get("return_pairs"):
         result["pairs"] = pairs
     if config.get("return_bands"):
-        result["bands"] = b_banded
-    for c in caches:
-        if config.get("return_bands") and c is b_banded:
-            continue  # the returned bands port stays materialized
-        c.unpersist()
+        result["bands"] = b_banded  # the returned port stays materialized
+    else:
+        b_banded.unpersist()
     if len(result) == 1:
         return out
     return result

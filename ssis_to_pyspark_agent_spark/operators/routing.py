@@ -138,11 +138,12 @@ def sample_holdout(spark: SparkSession, inputs, config, context):
     clustered the pairs does NOT run label propagation twice.
     config: id_col, test_frac (0..1), salt (vary to re-draw the split),
     side_col (default 'side'), comp_col (default 'comp', '' to drop),
-    cc_impl ('auto' default — min-label propagation with automatic
-    fallback to diameter-independent star contraction on a deep graph;
-    'star'/'lp' force one algorithm), max_rounds (round bound, default
-    20; 'lp' FAILS FAST on non-convergence — partial labels would
-    silently break the no-straddle guarantee).
+    max_rounds (round bound, default 20). Components come from the one
+    data-driven path `_propagate_labels` shares with dedup.cluster:
+    driver union-find under its pair cap, else min-label propagation
+    with automatic fallback to diameter-independent star contraction on
+    a deep graph — never partial labels, which would silently break the
+    no-straddle guarantee.
     Output ports: 'out' (df + comp + side), 'train', 'test'.
 
     Scale plan: min-label propagation runs only over nodes that appear
@@ -156,7 +157,6 @@ def sample_holdout(spark: SparkSession, inputs, config, context):
     Reference has no counterpart (nearest: Percentage Sampling,
     data_engineering_parser.py:1096) — NEW per SURVEY §2.12."""
     from ssis_to_pyspark_agent_spark.operators.dedup import (
-        _DRIVER_CC_CAP,
         _md5_60bit,
         _propagate_labels,
     )
@@ -175,11 +175,9 @@ def sample_holdout(spark: SparkSession, inputs, config, context):
     else:
         prop = _propagate_labels(
             second, config.get("max_rounds", 20),
-            config.get("cc_impl", "auto"),
             # reliable per-round checkpoints for cluster-scale runs —
             # same contract as dedup.cluster's checkpoint_dir
             checkpoint_dir=config.get("checkpoint_dir"),
-            driver_cap=int(config.get("driver_cc_cap", _DRIVER_CC_CAP)),
         )
     lbl = prop.select(F.col("x").alias(id_col), F.col("comp").alias("_hc"))
     if config.get("broadcast_components", True):  # off for degenerate pair sets

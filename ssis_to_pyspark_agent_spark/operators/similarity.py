@@ -104,32 +104,6 @@ def _md5_int_planes(dim: int, n_tables: int, n_bits: int, seed: int) -> list[lis
     ]
 
 
-def _hyperplane_bucket(
-    vec: Column,
-    dim: int,
-    n_tables: int,
-    n_bits: int,
-    seed: int = 42,
-    planes: list | None = None,
-    quantize: int | None = None,
-) -> Column:
-    """array<bigint> of bucket ids, one per table: sign-bit signature of the
-    vector against each table's hyperplanes. With integer `planes` +
-    `quantize`, the dot is exact integer arithmetic (oracle-reproducible)."""
-    if planes is None:
-        planes = _hyperplanes(dim, n_tables, n_bits, seed)
-    v = F.transform(vec, lambda x: _q(x, quantize)) if quantize else vec
-    buckets = []
-    for t in range(n_tables):
-        bucket = F.lit(0).cast("long")
-        for j in range(n_bits):
-            plane = F.array(*[F.lit(w) for w in planes[t][j]])
-            bit = F.when(_dot(v, plane) >= 0, F.lit(1)).otherwise(F.lit(0))
-            bucket = bucket + (bit.cast("long") * F.lit(1 << j))
-        buckets.append(bucket)
-    return F.array(*buckets)
-
-
 def _bucket_frame(
     df: DataFrame,
     id_name: str,
@@ -144,13 +118,12 @@ def _bucket_frame(
 ) -> DataFrame:
     """Exploded LSH bucket rows (id[, vec], _table, _bucket) via one BLAS
     matmul per Arrow batch: (batch x dim) @ (dim x tables*bits) -> sign
-    bits -> bucket ids. Replaces the expr formulation (tables*bits
-    zip_with/aggregate dot folds per row, each allocating an intermediate
-    array) — measured 4.8s -> 0.8s at 200k x dim64 x 8x10. Sign rule
-    (dot >= 0, NaN -> 0) matches `_hyperplane_bucket`; bucket ids can
-    differ from the expr path only for dots within float-sum ulp of 0 —
-    candidate-set recall, not correctness, both paths verify with exact
-    cosine."""
+    bits (dot >= 0, NaN -> 0) -> bucket ids. The one hyperplane-bucket
+    kernel: a Catalyst formulation (tables*bits zip_with/aggregate dot
+    folds per row, each allocating an intermediate array) measured
+    4.8s -> 0.8s at 200k x dim64 x 8x10 against this one. With integer
+    `planes` + `quantize` the dots are exact integer arithmetic
+    (oracle-reproducible)."""
     import numpy as np
     import pandas as pd
 
@@ -360,40 +333,21 @@ def topk_lsh(spark: SparkSession, inputs, config, context) -> DataFrame:
 
     from ssis_to_pyspark_agent_spark.operators.dedup import _spread
 
-    numpy_buckets = config.get("bucket_impl", "numpy") == "numpy"
-    c_named = _spread(spark, corpus, by_bytes=numpy_buckets).select(
+    c_named = _spread(spark, corpus, by_bytes=True).select(
         F.col(config["id_col"]).alias("corpus_id"),
         F.col(config["vec_col"]).alias("_cv"),
     )
     q_named = queries.select(
         F.col(qid).alias("query_id"), F.col(qv).alias("_qv")
     )
-    if numpy_buckets:
-        c = _bucket_frame(
-            c_named, "corpus_id", "_cv", dim, n_tables, n_bits, seed,
-            keep_vec=True, planes=planes, quantize=plane_quant,
-        )
-        q = _bucket_frame(
-            q_named, "query_id", "_qv", dim, n_tables, n_bits, seed,
-            keep_vec=True, planes=planes, quantize=plane_quant,
-        )
-    else:
-        c = c_named.select(
-            "corpus_id",
-            "_cv",
-            F.posexplode(
-                _hyperplane_bucket(F.col("_cv"), dim, n_tables, n_bits,
-                                   seed, planes, plane_quant)
-            ).alias("_table", "_bucket"),
-        )
-        q = q_named.select(
-            "query_id",
-            "_qv",
-            F.posexplode(
-                _hyperplane_bucket(F.col("_qv"), dim, n_tables, n_bits,
-                                   seed, planes, plane_quant)
-            ).alias("_table", "_bucket"),
-        )
+    c = _bucket_frame(
+        c_named, "corpus_id", "_cv", dim, n_tables, n_bits, seed,
+        keep_vec=True, planes=planes, quantize=plane_quant,
+    )
+    q = _bucket_frame(
+        q_named, "query_id", "_qv", dim, n_tables, n_bits, seed,
+        keep_vec=True, planes=planes, quantize=plane_quant,
+    )
     cand = (
         c.join(F.broadcast(q), ["_table", "_bucket"])
         .select("query_id", "corpus_id", "_cv", "_qv")
@@ -627,14 +581,13 @@ def topk_ivf(spark: SparkSession, inputs, config, context) -> DataFrame:
     qv = config.get("query_vec_col", config["vec_col"])
     n_cent = config.get("centroids", 16)
     nprobe = config.get("nprobe", 4)
+    # quantized: the numpy assign/score kernels (exact integer cosine);
+    # unquantized: the float expression path below
     quantize = config.get("quantize")
-    numpy_assign = bool(quantize) and (
-        config.get("assign_impl", "numpy") == "numpy"
-    )
 
     named = (F.col(config["id_col"]).alias("corpus_id"),
              F.col(config["vec_col"]).alias("_cv"))
-    c = _spread(spark, corpus, by_bytes=numpy_assign).select(*named)
+    c = _spread(spark, corpus, by_bytes=bool(quantize)).select(*named)
     if config.get("kmeans"):
         cent_rows = _kmeans_centroids(
             c, n_cent,
@@ -662,7 +615,7 @@ def topk_ivf(spark: SparkSession, inputs, config, context) -> DataFrame:
     q_named = queries.select(
         F.col(qid).alias("query_id"), F.col(qv).alias("_qv")
     )
-    if numpy_assign:
+    if quantize:
         cents = [list(r["_centv"]) for r in cent_rows]
         c_assigned = _ivf_assign_frame(
             c, "corpus_id", "_cv", cents, quantize, 1
@@ -682,42 +635,40 @@ def topk_ivf(spark: SparkSession, inputs, config, context) -> DataFrame:
         return _topk(scored, "query_id", config.get("k", 10)).select(
             "query_id", "corpus_id", "cosine", "rank"
         )
-    else:
-        cent_arr = F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("cid"),
-                    F.array(*[F.lit(float(x)) for x in r["_centv"]]).alias("v"),
-                )
-                for i, r in enumerate(cent_rows)
-            ]
-        )
 
-        def nearest(vec: Column, n: int) -> Column:
-            # quantized cosine here too: list assignment must be
-            # reproducible by the oracle, not just the final re-rank
-            scored = F.transform(
-                cent_arr,
-                lambda s: F.struct(
-                    (-_cosine(vec, s["v"], quantize)).alias("neg"),
-                    s["cid"].alias("cid"),
-                ),
+    cent_arr = F.array(
+        *[
+            F.struct(
+                F.lit(i).alias("cid"),
+                F.array(*[F.lit(float(x)) for x in r["_centv"]]).alias("v"),
             )
-            return F.slice(F.array_sort(scored), 1, n)
+            for i, r in enumerate(cent_rows)
+        ]
+    )
 
-        c_assigned = c.withColumn("_cid", nearest(F.col("_cv"), 1)[0]["cid"])
-        q = q_named.select(
-            "query_id",
-            "_qv",
-            F.explode(
-                F.transform(nearest(F.col("_qv"), nprobe), lambda s: s["cid"])
-            ).alias("_cid"),
+    def nearest(vec: Column, n: int) -> Column:
+        scored = F.transform(
+            cent_arr,
+            lambda s: F.struct(
+                (-_cosine(vec, s["v"])).alias("neg"),
+                s["cid"].alias("cid"),
+            ),
         )
+        return F.slice(F.array_sort(scored), 1, n)
+
+    c_assigned = c.withColumn("_cid", nearest(F.col("_cv"), 1)[0]["cid"])
+    q = q_named.select(
+        "query_id",
+        "_qv",
+        F.explode(
+            F.transform(nearest(F.col("_qv"), nprobe), lambda s: s["cid"])
+        ).alias("_cid"),
+    )
     scored = _pair_cosine_frame(
         c_assigned.join(F.broadcast(q), "_cid")
         .select("query_id", "corpus_id", "_cv", "_qv")
         .dropDuplicates(["query_id", "corpus_id"]),
-        "_cv", "_qv", ["query_id", "corpus_id"], quantize,
+        "_cv", "_qv", ["query_id", "corpus_id"], None,
     )
     return _topk(scored, "query_id", config.get("k", 10)).select(
         "query_id", "corpus_id", "cosine", "rank"

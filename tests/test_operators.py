@@ -296,20 +296,37 @@ class TestDedup:
         assert bc_anti and all("BroadcastHashJoin" in ln for ln in bc_anti)
         assert any("LeftAnti" in ln for ln in plans[False].splitlines())
 
-    def test_minhash_sig_impls_agree(self, spark):
-        """numpy (Arrow/mapInPandas) and expr (Catalyst folds) signature
-        paths use different hash families, but after exact-Jaccard
-        verification the surviving pair sets must be identical on the
-        driver's planted near-dups."""
+    def test_minhash_pairs_match_exact_jaccard(self, spark):
+        """Checked against every (a < b) whose word-3-shingle sets have
+        Jaccard >= 0.7, computed here over all pairs of the driver's
+        documents. The exact-Jaccard verify admits no false positive;
+        banding is probabilistic near the threshold (16 bands x 8 rows
+        finds a J = 0.7 pair with p ~ 0.61), so full recall is asserted
+        only on pairs at J >= 0.9, which it misses with p ~ 1e-4."""
+        from itertools import combinations
+
+        from ssis_to_pyspark_agent_spark.operators.dedup import _shingles
+
         df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        got = {}
-        for impl in ("numpy", "expr"):
-            out = run("dedup.minhash", spark, [df], id_col="doc_id",
-                      text_col="text", threshold=0.7, num_hashes=128,
-                      bands=16, return_pairs=True, sig_impl=impl)
-            got[impl] = {(r.a, r.b) for r in out["pairs"].collect()}
-            spark.catalog.clearCache()
-        assert got["numpy"] and got["numpy"] == got["expr"]
+        out = run("dedup.minhash", spark, [df], id_col="doc_id",
+                  text_col="text", threshold=0.7, num_hashes=128,
+                  bands=16, return_pairs=True)
+        got = {(r.a, r.b) for r in out["pairs"].collect()}
+        sh = {
+            r.doc_id: set(r.sh)
+            for r in df.select("doc_id", _shingles(F.col("text"), 3)
+                               .alias("sh")).collect()
+        }
+        want, sure = set(), set()
+        for a, b in combinations(sorted(sh), 2):
+            inter = len(sh[a] & sh[b])
+            j = inter / (len(sh[a]) + len(sh[b]) - inter)
+            if j >= 0.7:
+                want.add((a, b))
+            if j >= 0.9:
+                sure.add((a, b))
+        spark.catalog.clearCache()
+        assert sure and sure <= got <= want
 
     def test_minhash_incremental_hand_case(self, spark):
         # history: A(10), B(11). batch: 20 ~ A (dropped, history wins),
@@ -539,19 +556,53 @@ class TestDedup:
         pairs = [(r.a, r.b) for r in out["pairs"].collect()]
         assert (1, 2) in pairs
 
-    def test_simhash_sig_impls_agree(self, spark):
-        """numpy and expr simhash paths must produce BIT-IDENTICAL
-        fingerprints (same xxhash64 token hashes, same sign rule), hence
-        identical verified pair sets."""
+    def test_simhash_fingerprints_match_python(self, spark):
+        """The verified pair set must equal the one derived here from the
+        definition: xxhash64 per token (taken from Spark), 60-bit
+        fingerprint = per-bit majority vote (bit set iff votes > 0),
+        then every pair (a < b) within hamming distance 3. Bit-identical
+        fingerprints are the only way the (a, b, hamming) sets match."""
+        from itertools import combinations
+
+        from ssis_to_pyspark_agent_spark.operators.dedup import _words
+
         df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        got = {}
-        for impl in ("numpy", "expr"):
-            out = run("dedup.simhash", spark, [df], id_col="doc_id",
-                      text_col="text", max_distance=3, return_pairs=True,
-                      sig_impl=impl)
-            got[impl] = sorted(map(tuple, out["pairs"].collect()))
-            spark.catalog.clearCache()
-        assert got["numpy"] and got["numpy"] == got["expr"]
+        out = run("dedup.simhash", spark, [df], id_col="doc_id",
+                  text_col="text", max_distance=3, return_pairs=True)
+        got = sorted(map(tuple, out["pairs"].collect()))
+        fps = {}
+        for r in df.select(
+            "doc_id", F.transform(_words(F.col("text")), lambda t: F.xxhash64(t))
+            .alias("hs")
+        ).collect():
+            fp = 0
+            for j in range(60):
+                votes = sum(1 if (h >> j) & 1 else -1 for h in r.hs)
+                if votes > 0:
+                    fp |= 1 << j
+            fps[r.doc_id] = fp
+        want = sorted(
+            (a, b, bin(fps[a] ^ fps[b]).count("1"))
+            for a, b in combinations(sorted(fps), 2)
+            if bin(fps[a] ^ fps[b]).count("1") <= 3
+        )
+        spark.catalog.clearCache()
+        assert want and got == want
+
+    def test_simhash_releases_caches(self, spark, sf_dir):
+        """One call may leave at most the verified pairs persisted (the
+        survivor anti-join and the pairs port share it): the fingerprint
+        base and the candidate frame are released (NOTES invariant 13)."""
+        spark.catalog.clearCache()
+        df = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        jsc = spark.sparkContext._jsc.sc()
+        before = jsc.getPersistentRDDs().size()
+        out = run("dedup.simhash", spark, [df], id_col="doc_id",
+                  text_col="text", max_distance=3, return_pairs=True)
+        out["out"].count()
+        out["pairs"].count()
+        assert jsc.getPersistentRDDs().size() - before <= 1
+        spark.catalog.clearCache()
 
 
 class TestSimilarity:
@@ -597,20 +648,19 @@ class TestSimilarity:
         for out in (mh, sh, ed):
             assert out["pairs"].count() == 0 and out["out"].count() == 0
 
-    def test_embedding_bucket_impls_agree(self, spark):
-        """numpy (BLAS matmul) and expr hyperplane buckets yield the same
-        verified pair set on the driver's embeddings (bucket ids can only
-        diverge for dots within float-sum ulp of 0; exact-cosine verify
-        makes the output candidate-insensitive on this data)."""
+    def test_embedding_lsh_pairs_subset_of_bruteforce(self, spark):
+        """Hyperplane-LSH candidates verified with exact quantized cosine
+        can only miss pairs, never invent them: the pair set (with its
+        cosines) is a non-empty subset of the brute-force pairs."""
         emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
         got = {}
-        for impl in ("numpy", "expr"):
+        for brute in (False, True):
             out = run("dedup.embedding", spark, [emb], id_col="vec_id",
                       vec_col="embedding", threshold=0.35, quantize=10000,
-                      return_pairs=True, bucket_impl=impl)
-            got[impl] = sorted(map(tuple, out["pairs"].collect()))
+                      return_pairs=True, brute_force=brute)
+            got[brute] = set(map(tuple, out["pairs"].collect()))
             spark.catalog.clearCache()
-        assert got["numpy"] and got["numpy"] == got["expr"]
+        assert got[False] and got[False] <= got[True]
 
     def test_ngram_prefix_filter_preserves_pairs(self, spark):
         """PPJoin prefix filtering must be exact-preserving: the verified
@@ -743,20 +793,25 @@ class TestSimilarity:
         assert ctx4["_ngram_prefix_order"] == "hash"
         spark.catalog.clearCache()
 
-    def test_embedding_verify_impls_agree(self, spark):
-        """in-bucket applyInPandas verify (default for quantized LSH) and
-        the candidate-join + pair-scorer verify must emit the identical
-        (a, b, cosine) set — same cohabitant candidates, same sorted-id
-        bucket cap, same exact quantized cosine."""
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    def test_embedding_lsh_finds_planted_copies(self, spark):
+        """Exact copies share every bucket, so on random vectors plus
+        planted copies at threshold 0.99 the LSH pair set must equal the
+        brute-force set, which is exactly the planted pairs."""
+        import random
+
+        rng = random.Random(5)
+        data = [(i, [rng.gauss(0, 1) for _ in range(16)]) for i in range(200)]
+        data += [(1000 + i, data[i][1]) for i in range(0, 200, 10)]
+        df = spark.createDataFrame(data, "vec_id long, embedding array<float>")
         got = {}
-        for impl in ("bucket", "join"):
-            out = run("dedup.embedding", spark, [emb], id_col="vec_id",
-                      vec_col="embedding", threshold=0.35, quantize=10000,
-                      return_pairs=True, verify_impl=impl)
-            got[impl] = sorted(map(tuple, out["pairs"].collect()))
+        for brute in (False, True):
+            out = run("dedup.embedding", spark, [df], id_col="vec_id",
+                      vec_col="embedding", threshold=0.99, quantize=10000,
+                      return_pairs=True, brute_force=brute)
+            got[brute] = {(r.a, r.b) for r in out["pairs"].collect()}
             spark.catalog.clearCache()
-        assert got["bucket"] and got["bucket"] == got["join"]
+        planted = {(i, 1000 + i) for i in range(0, 200, 10)}
+        assert got[False] == got[True] == planted
 
     def test_lsh_recall_vs_bruteforce(self, spark):
         import random
@@ -3038,36 +3093,39 @@ class TestSampleModes:
             run("sample.holdout", spark, [docs, pairs], id_col="id",
                 test_frac=1.5)
 
-    def test_holdout_fails_fast_on_unconverged_propagation(self, spark):
-        # a 26-doc chain has diameter 25 > max_rounds=20: with cc_impl=
-        # 'lp', partial labels would silently put linked docs on
-        # different sides, so the operator must REFUSE rather than
-        # return a leaky split. The DEFAULT ('auto') reroutes the deep
-        # graph to diameter-independent star contraction and converges
-        # within the default round bound — and matches lp given enough
-        # rounds (labels_input reuse from dedup.cluster is equivalent,
-        # also checked).
+    def test_holdout_reroutes_unconverged_propagation(self, spark):
+        # a 26-doc chain has diameter 25 > max_rounds=20: propagation
+        # alone reports it has NOT converged (partial labels would
+        # silently put linked docs on different sides), so the operator
+        # reroutes the deep graph to diameter-independent star
+        # contraction and converges within the default round bound —
+        # through the distributed loop (driver route off) and the
+        # default driver route alike (labels_input reuse from
+        # dedup.cluster is equivalent, also checked).
+        from ssis_to_pyspark_agent_spark.operators.dedup import (
+            _lp_labels,
+            _propagate_labels,
+        )
+
         docs = spark.createDataFrame([(i,) for i in range(26)], "id long")
         chain = spark.createDataFrame(
             [(i, i + 1) for i in range(25)], "a long, b long"
         )
-        with pytest.raises(ValueError, match="max_rounds"):
-            run("sample.holdout", spark, [docs, chain], id_col="id",
-                test_frac=0.5, cc_impl="lp")["out"].collect()
+        assert _lp_labels(chain, 20)[1] is False
         ok = run("sample.holdout", spark, [docs, chain], id_col="id",
                  test_frac=0.5)["out"].collect()
         assert len({r.side for r in ok}) == 1 and all(
             r.comp == 0 for r in ok
         )
-        via_lp = run("sample.holdout", spark, [docs, chain], id_col="id",
-                     test_frac=0.5, cc_impl="lp",
-                     max_rounds=30)["out"].collect()
+        dist = _propagate_labels(chain, 20, driver_cap=0)
+        via_dist = run("sample.holdout", spark, [docs, dist], id_col="id",
+                       test_frac=0.5, labels_input=True)["out"].collect()
         cc = run("dedup.cluster", spark, [docs, chain], id_col="id")
         via_labels = run("sample.holdout", spark, [docs, cc["labels"]],
                          id_col="id", test_frac=0.5,
                          labels_input=True)["out"].collect()
         want = sorted((r.id, r.comp, r.side) for r in ok)
-        assert sorted((r.id, r.comp, r.side) for r in via_lp) == want
+        assert sorted((r.id, r.comp, r.side) for r in via_dist) == want
         assert sorted((r.id, r.comp, r.side) for r in via_labels) == want
 
     def test_lp_converges_at_exact_diameter_bound(self, spark):
@@ -3075,63 +3133,65 @@ class TestSampleModes:
         # round is free. A 26-doc chain (diameter 25) must converge with
         # max_rounds=25 — the first cut needed 26 because the last
         # updating round read as "not converged" (review finding)
-        docs = spark.createDataFrame([(i,) for i in range(26)], "id long")
+        from ssis_to_pyspark_agent_spark.operators.dedup import _lp_labels
+
         chain = spark.createDataFrame(
             [(i, i + 1) for i in range(25)], "a long, b long"
         )
-        out = run("sample.holdout", spark, [docs, chain], id_col="id",
-                  test_frac=0.5, cc_impl="lp",
-                  max_rounds=25)["out"].collect()
-        assert all(r.comp == 0 for r in out)
+        labels, converged = _lp_labels(chain, 25)
+        assert converged
+        assert {r.comp for r in labels.collect()} == {0}
 
     def test_cc_max_rounds_zero_is_config_error(self, spark):
-        # max_rounds=0 must be rejected up front: a zero-iteration lp
-        # loop would read as "converged" with every node its own
-        # component — the silent leaky split the fail-fast paths exist
-        # to prevent (review finding, r5)
+        # max_rounds=0 must be rejected up front: a zero-iteration loop
+        # would read as "converged" with every node its own component —
+        # a silent leaky split (review finding, r5)
         docs = spark.createDataFrame([(0,), (1,)], "id long")
         pairs = spark.createDataFrame([(0, 1)], "a long, b long")
-        for impl in ("auto", "lp", "star"):
-            with pytest.raises(ValueError, match="max_rounds"):
-                run("sample.holdout", spark, [docs, pairs], id_col="id",
-                    test_frac=0.5, cc_impl=impl, max_rounds=0)
+        with pytest.raises(ValueError, match="max_rounds"):
+            run("sample.holdout", spark, [docs, pairs], id_col="id",
+                test_frac=0.5, max_rounds=0)
 
     def test_cluster_star_matches_lp_on_random_graph(self, spark):
         # star contraction and min-label propagation must agree on
         # component labels for an arbitrary graph mixing cliques,
         # chains, stars and isolated nodes — seeded random edges so the
-        # shape isn't hand-picked (the default 'auto' rides lp here, so
-        # 'star' is forced explicitly to exercise the fallback path)
+        # shape isn't hand-picked (the operator rides the driver route
+        # here, so both distributed kernels are called directly)
         import random
+
+        from ssis_to_pyspark_agent_spark.operators.dedup import (
+            _lp_labels,
+            _star_components,
+        )
 
         rng = random.Random(7)
         n = 400
         edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(300)]
         edges = [(a, b) for a, b in edges if a != b]
-        docs = spark.createDataFrame([(i,) for i in range(n)], "id long")
         pairs = spark.createDataFrame(edges, "a long, b long")
-        star = run("dedup.cluster", spark, [docs, pairs], id_col="id",
-                   cc_impl="star")
-        lp = run("dedup.cluster", spark, [docs, pairs], id_col="id",
-                 cc_impl="lp", max_rounds=50)
-        s = sorted((r.id, r.comp) for r in star["components"].collect())
-        l = sorted((r.id, r.comp) for r in lp["components"].collect())
-        assert s == l
-        # survivors are the component minima under both
-        assert sorted(r.id for r in star["out"].collect()) == \
-            sorted(r.id for r in lp["out"].collect())
+        star = _star_components(pairs, 50)
+        lp, converged = _lp_labels(pairs, 50)
+        assert converged
+        s = sorted((r.x, r.comp) for r in star.collect())
+        assert s == sorted((r.x, r.comp) for r in lp.collect())
+        edge_nodes = {a for a, _ in edges} | {b for _, b in edges}
+        assert {x for x, _ in s} == edge_nodes
 
     def test_cluster_driver_cc_matches_distributed(self, spark):
-        # r12: under 'auto' a driver-bounded pair graph rides union-find
-        # on the driver (zero iterative shuffles). Components must be
-        # IDENTICAL to both distributed impls on a seeded random graph
+        # r12: a driver-bounded pair graph rides union-find on the
+        # driver (zero iterative shuffles). Components must be
+        # IDENTICAL to both distributed kernels on a seeded random graph
         # (cliques/chains/isolated mix), the cap must route oversized
-        # graphs to the distributed loop, and driver_cc_cap=0 must
+        # graphs to the distributed loop, and driver_cap=0 must
         # disable the driver path outright.
         import random
 
         from ssis_to_pyspark_agent_spark.operators.dedup import (
             _driver_cc_labels,
+            _lp_labels,
+            _propagate_labels,
+            _star_components,
         )
 
         rng = random.Random(11)
@@ -3141,17 +3201,18 @@ class TestSampleModes:
         docs = spark.createDataFrame([(i,) for i in range(n)], "id long")
         pairs = spark.createDataFrame(edges, "a long, b long")
         auto = run("dedup.cluster", spark, [docs, pairs], id_col="id")
-        lp = run("dedup.cluster", spark, [docs, pairs], id_col="id",
-                 cc_impl="lp", max_rounds=50)
-        star = run("dedup.cluster", spark, [docs, pairs], id_col="id",
-                   cc_impl="star")
-        want = sorted((r.id, r.comp) for r in lp["components"].collect())
+        lp, converged = _lp_labels(pairs, 50)
+        assert converged
+        want = sorted((r.x, r.comp) for r in lp.collect())
+        assert sorted((r.x, r.comp) for r in auto["labels"].collect()) == want
+        assert sorted(
+            (r.x, r.comp) for r in _star_components(pairs, 50).collect()
+        ) == want
+        # isolated nodes are their own component in the operator output
+        comp = dict(want)
         assert sorted(
             (r.id, r.comp) for r in auto["components"].collect()
-        ) == want
-        assert sorted(
-            (r.id, r.comp) for r in star["components"].collect()
-        ) == want
+        ) == [(i, comp.get(i, i)) for i in range(n)]
         # labels frame shape contract: (x, comp), id-typed, edge nodes only
         lbl = auto["labels"]
         assert lbl.columns == ["x", "comp"]
@@ -3160,18 +3221,12 @@ class TestSampleModes:
         }
         edge_nodes = {a for a, _ in edges} | {b for _, b in edges}
         assert {r.x for r in lbl.collect()} == edge_nodes
-        # a graph over the cap routes to the distributed loop — same labels
-        capped = run("dedup.cluster", spark, [docs, pairs], id_col="id",
-                     driver_cc_cap=10)
-        assert sorted(
-            (r.id, r.comp) for r in capped["components"].collect()
-        ) == want
-        # driver_cc_cap=0 disables the driver path (distributed again)
-        off = run("dedup.cluster", spark, [docs, pairs], id_col="id",
-                  driver_cc_cap=0)
-        assert sorted(
-            (r.id, r.comp) for r in off["components"].collect()
-        ) == want
+        # a graph over the cap routes to the distributed loop — same
+        # labels; driver_cap=0 disables the driver path (distributed
+        # again)
+        for cap in (10, 0):
+            got = _propagate_labels(pairs, 20, driver_cap=cap)
+            assert sorted((r.x, r.comp) for r in got.collect()) == want, cap
         # null endpoints are skipped exactly like the joins drop them
         null_pairs = spark.createDataFrame(
             [(0, 1), (None, 2), (3, None)], "a long, b long"
@@ -3187,9 +3242,10 @@ class TestSampleModes:
     def test_cluster_checkpoint_dir_identical(self, spark, tmp_path):
         """checkpoint_dir cuts the cc loops onto RELIABLE parquet
         (round-8 verdict item 5): components must be IDENTICAL to the
-        default localCheckpoint path for every impl, scratch must be
-        pruned to the one 'final' dataset, and the default behavior
-        must write nothing."""
+        default path, scratch must be pruned to the one 'final'
+        dataset, and the default behavior must write nothing. A spliced
+        30-node chain makes propagation reroute to star contraction, so
+        both kernels cut onto the directory."""
         import os
         import random
 
@@ -3197,7 +3253,6 @@ class TestSampleModes:
         n = 300
         edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(220)]
         edges = [(a, b) for a, b in edges if a != b]
-        # splice in a 30-node chain so 'auto' actually reroutes to star
         edges += [(1000 + i, 1001 + i) for i in range(30)]
         docs = spark.createDataFrame(
             [(i,) for i in range(n)] + [(1000 + i,) for i in range(31)],
@@ -3205,24 +3260,22 @@ class TestSampleModes:
         pairs = spark.createDataFrame(edges, "a long, b long")
         base = run("dedup.cluster", spark, [docs, pairs], id_col="id")
         want = sorted((r.id, r.comp) for r in base["components"].collect())
-        for impl in ("auto", "star", "lp"):
-            d = str(tmp_path / f"ck_{impl}")
-            out = run("dedup.cluster", spark, [docs, pairs], id_col="id",
-                      cc_impl=impl, max_rounds=50, checkpoint_dir=d)
-            got = sorted(
-                (r.id, r.comp) for r in out["components"].collect())
-            assert got == want, impl
-            # scratch pruned: the invocation namespace holds exactly the
-            # final dataset + its atomic claim marker (r9 ADVICE:
-            # scratch is per-invocation; r10 self-review: claimed
-            # eagerly via createNewFile so concurrent invocations can't
-            # pick the same index)
-            assert os.listdir(os.path.join(d, "cc_rounds")) == ["i0001"]
-            # ignore the local ChecksumFileSystem's .crc sidecars
-            assert sorted(
-                n for n in os.listdir(os.path.join(d, "cc_rounds", "i0001"))
-                if not n.endswith(".crc")
-            ) == [".claim", "final"]
+        d = str(tmp_path / "ck")
+        out = run("dedup.cluster", spark, [docs, pairs], id_col="id",
+                  max_rounds=50, checkpoint_dir=d)
+        got = sorted((r.id, r.comp) for r in out["components"].collect())
+        assert got == want
+        # scratch pruned: the invocation namespace holds exactly the
+        # final dataset + its atomic claim marker (r9 ADVICE: scratch
+        # is per-invocation; r10 self-review: claimed eagerly via
+        # createNewFile so concurrent invocations can't pick the same
+        # index)
+        assert os.listdir(os.path.join(d, "cc_rounds")) == ["i0001"]
+        # ignore the local ChecksumFileSystem's .crc sidecars
+        assert sorted(
+            n for n in os.listdir(os.path.join(d, "cc_rounds", "i0001"))
+            if not n.endswith(".crc")
+        ) == [".claim", "final"]
         # default path never touches a checkpoint directory
         assert not os.path.exists(str(tmp_path / "never"))
 
@@ -3257,14 +3310,18 @@ class TestSampleModes:
         assert sorted(os.listdir(os.path.join(d, "cc_rounds"))) == \
             ["i0001", "i0002"]
 
-    def test_cc_failure_prunes_checkpoint_scratch(self, spark, tmp_path):
-        """When the cc loop FAILS (lp non-convergence here), finish()
-        never runs — the invocation's round scratch must be deleted
-        before the raise, so repeated failed runs don't accumulate
-        dup-volume-sized parquet dirs (round-9 ADVICE item). Only the
-        failed invocation's namespace goes; a prior successful one
-        stays."""
+    def test_cc_failure_prunes_checkpoint_scratch(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """When the cc loop FAILS (star contraction raising here, after
+        propagation has written its round cuts), finish() never runs —
+        the invocation's round scratch must be deleted before the raise,
+        so repeated failed runs don't accumulate dup-volume-sized
+        parquet dirs (round-9 ADVICE item). Only the failed
+        invocation's namespace goes; a prior successful one stays."""
         import os
+
+        from ssis_to_pyspark_agent_spark.operators import dedup
 
         d = str(tmp_path / "failck")
         docs = spark.createDataFrame([(i,) for i in range(12)], "id long")
@@ -3272,11 +3329,17 @@ class TestSampleModes:
         kept = run("dedup.cluster", spark, [docs, ok_pairs], id_col="id",
                    checkpoint_dir=d)
         kept["components"].collect()
+
+        def fail(*_a, **_k):
+            raise ValueError("star contraction did not converge")
+
+        monkeypatch.setattr(dedup, "_star_components", fail)
+        # diameter 11 > the 8 propagation rounds: reroutes to star
         chain = spark.createDataFrame(
             [(i, i + 1) for i in range(11)], "a long, b long")
         with pytest.raises(ValueError, match="did not converge"):
             run("dedup.cluster", spark, [docs, chain], id_col="id",
-                cc_impl="lp", max_rounds=2, checkpoint_dir=d)
+                checkpoint_dir=d)
         # i0002 (the failed run) pruned entirely; i0001 intact
         assert sorted(os.listdir(os.path.join(d, "cc_rounds"))) == ["i0001"]
 
@@ -3921,30 +3984,82 @@ class TestIvfKmeans:
         assert gb == gi  # full probe == exact
 
     def test_numpy_assignment_matches_expr(self, spark):
-        # the quantized numpy assign path (default) must place every
-        # vector in the same list, probe the same lists, and emit the
-        # same ranked rows as the Catalyst-expression path — the oracle
-        # re-derives assignment from the expr formula, so any divergence
-        # here is a silent correctness hole
+        # the quantized numpy assign kernel must place every vector in
+        # the same top-n lists as the Catalyst quantized-cosine ranking
+        # (array_sort of (-cosine, cid)) the oracle re-derives, and
+        # topk_ivf must probe, score and rank exactly as that ranking
+        # plus the Catalyst quantized cosine do — any divergence here is
+        # a silent correctness hole
         import random
+
+        from ssis_to_pyspark_agent_spark.operators.similarity import (
+            _cosine,
+            _ivf_assign_frame,
+        )
 
         rng = random.Random(11)
         data = [
             (i, [rng.gauss(0, 1) for _ in range(16)]) for i in range(300)
         ]
         df = spark.createDataFrame(data, "vec_id long, embedding array<float>")
+        cents = [
+            list(r.embedding)
+            for r in df.orderBy(F.md5(F.col("vec_id").cast("string")))
+            .limit(8).collect()
+        ]
+        got = {
+            r.vec_id: list(r._cids)
+            for r in _ivf_assign_frame(
+                df, "vec_id", "embedding", cents, 10000, 3
+            ).collect()
+        }
+        cent_arr = F.array(*[
+            F.struct(F.lit(i).alias("cid"),
+                     F.array(*[F.lit(float(x)) for x in c]).alias("v"))
+            for i, c in enumerate(cents)
+        ])
+        scored = F.transform(cent_arr, lambda s: F.struct(
+            (-_cosine(F.col("embedding"), s["v"], 10000)).alias("neg"),
+            s["cid"].alias("cid"),
+        ))
+        top = F.transform(F.slice(F.array_sort(scored), 1, 3),
+                          lambda s: s["cid"])
+        want = {
+            r.vec_id: list(r.c)
+            for r in df.select("vec_id", top.alias("c")).collect()
+        }
+        assert got == want
+
+        # end to end with a partial probe (3 of 8 lists): each query's
+        # candidates are the corpus rows whose nearest list is one of
+        # its 3 nearest, scored by the Catalyst quantized cosine
         q = df.filter("vec_id < 6")
-        cfg = dict(id_col="vec_id", vec_col="embedding",
-                   query_id_col="vec_id", query_vec_col="embedding",
-                   k=4, centroids=8, nprobe=3,
-                   centroid_order="md5", quantize=10000)
-        a = run("similarity.topk_ivf", spark, [df, q],
-                assign_impl="numpy", **cfg)
-        b = run("similarity.topk_ivf", spark, [df, q],
-                assign_impl="expr", **cfg)
-        ra = sorted(map(tuple, a.collect()))
-        rb = sorted(map(tuple, b.collect()))
-        assert ra == rb
+        ivf = run("similarity.topk_ivf", spark, [df, q], id_col="vec_id",
+                  vec_col="embedding", query_id_col="vec_id",
+                  query_vec_col="embedding", k=4, centroids=8, nprobe=3,
+                  centroid_order="md5", quantize=10000)
+        pairs = spark.createDataFrame(
+            [(qi, ci) for qi in range(6) for ci in want
+             if want[ci][0] in want[qi]],
+            "query_id long, corpus_id long",
+        )
+        vecs = df.select("vec_id", "embedding")
+        scored = (
+            pairs.join(vecs.toDF("query_id", "_qv"), "query_id")
+            .join(vecs.toDF("corpus_id", "_cv"), "corpus_id")
+            .select("query_id", "corpus_id",
+                    _cosine(F.col("_cv"), F.col("_qv"), 10000)
+                    .alias("cosine"))
+            .collect()
+        )
+        ref = []
+        for qi in range(6):
+            ranked = sorted((r for r in scored if r.query_id == qi),
+                            key=lambda r: (-r.cosine, r.corpus_id))
+            ref += [(qi, r.corpus_id, r.cosine, i + 1)
+                    for i, r in enumerate(ranked[:4])]
+        assert len(ref) == 24
+        assert sorted(map(tuple, ivf.collect())) == sorted(ref)
 
     def test_single_probe_recall_on_clustered_data(self, spark):
         import random
@@ -4016,6 +4131,36 @@ class TestProfileProperty:
             assert row["mean"] == sum(nn) / len(nn)
         else:
             assert row["min_num"] is None and row["mean"] is None
+
+
+#: the only operator config keys allowed to pick an alternate
+#: implementation: (module, operator function, key). dedup.semantic's
+#: 'join' verify is the reference its tests check the bucket verify
+#: against. A new ``*_impl`` key needs a deliberate entry here.
+_IMPL_KEYS_ALLOWED = {("dedup.py", "dedup_semantic", "verify_impl")}
+
+
+def test_no_new_alternate_implementation_keys():
+    """Every ``*_impl`` string key read under operators/ must be on the
+    allow-list: each alternate kernel behind a user-set flag is a
+    second implementation to keep in sync with the default."""
+    import ast
+    import re
+    from pathlib import Path
+
+    import ssis_to_pyspark_agent_spark
+
+    pkg = Path(ssis_to_pyspark_agent_spark.__file__).parent / "operators"
+    found = set()
+    for path in sorted(pkg.glob("*.py")):
+        for top in ast.parse(path.read_text()).body:
+            for node in ast.walk(top):
+                if (isinstance(node, ast.Constant)
+                        and isinstance(node.value, str)
+                        and re.fullmatch(r"\w+_impl", node.value)):
+                    found.add((path.name, getattr(top, "name", None),
+                               node.value))
+    assert found == _IMPL_KEYS_ALLOWED
 
 
 def test_minhash_auto_band_selection():

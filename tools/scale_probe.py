@@ -193,8 +193,6 @@ def probe_embdedup(spark, n_vec=200_000, dim=64):
     for label, extra in (
         ("float/join-verify", {}),
         ("quantized/join-verify", {"quantize": 10000}),
-        ("quantized/bucket-verify", {"quantize": 10000,
-                                     "verify_impl": "bucket"}),
     ):
         t0 = time.perf_counter()
         n = get_operator("dedup.embedding")(
@@ -1453,19 +1451,22 @@ def probe_spans_skew(spark, n_docs=2_000_000, words_per_doc=80):
 
 
 def probe_cc(spark, n_clique=2_000_000, n_chain=200_000):
-    """dedup.cluster's cc_impl paths at dup-graph scale.
+    """dedup.cluster's connected components at dup-graph scale.
 
     (a) realistic graph: n_clique nodes in all-pairs cliques of 4 — the
     shape real near-dup pair lists take (6 edges per clique, 3M edges
-    at 2M nodes). lp vs star wall time; 'auto' must ride the lp path
-    (converges in ~3 rounds, never reroutes).
+    at 2M nodes). Above the driver cap, so it rides min-label
+    propagation (converges in ~3 rounds, never reroutes).
     (b) adversarial graph: one n_chain-node path — diameter n_chain-1.
-    lp is infeasible by construction (rounds ~ diameter); 'auto'
-    reroutes to star contraction, which needs ~log2(n_chain) rounds.
+    Propagation is infeasible by construction (rounds ~ diameter); the
+    operator reroutes to star contraction, which needs ~log2(n_chain)
+    rounds; `_star_components` alone is timed next to it, so the ratio
+    is the cost of the bounded propagation rounds spent first.
     Exactness: every clique labels to its minimum (aggregate check, no
     collect), the chain labels entirely to node 0.
     """
     from ssis_to_pyspark_agent_spark.operators import get_operator
+    from ssis_to_pyspark_agent_spark.operators.dedup import _star_components
 
     op = get_operator("dedup.cluster")
 
@@ -1488,17 +1489,8 @@ def probe_cc(spark, n_clique=2_000_000, n_chain=200_000):
     pairs.count()
     ids = spark.range(n_clique).select(F.col("id").alias("doc_id"))
 
-    def run_impl(tag, impl, p, idf, n_ok, comp_expr, max_rounds=20):
-        t0 = time.perf_counter()
-        out = op(
-            spark, [idf, p],
-            {"id_col": "doc_id", "cc_impl": impl, "max_rounds": max_rounds,
-             "broadcast_components": False},
-            {},
-        )
-        bad = out["components"].filter(
-            F.col("comp") != comp_expr
-        ).count()
+    def report(tag, t0, comps, comp_expr, n_ok):
+        bad = comps.filter(F.col("comp") != comp_expr).count()
         dt = time.perf_counter() - t0
         print(
             f"PROBE cc {tag}: {dt:.1f}s  mislabeled={bad} "
@@ -1506,17 +1498,19 @@ def probe_cc(spark, n_clique=2_000_000, n_chain=200_000):
         )
         return dt
 
+    def run_op(tag, p, idf, n_ok, comp_expr):
+        t0 = time.perf_counter()
+        out = op(
+            spark, [idf, p],
+            {"id_col": "doc_id", "broadcast_components": False}, {},
+        )
+        return report(tag, t0, out["components"], comp_expr, n_ok)
+
     comp_cliq = (F.col("doc_id") - F.pmod("doc_id", 4)).cast("long")
-    t_lp = run_impl("clique-lp", "lp", pairs, ids, n_clique, comp_cliq)
-    t_star = run_impl("clique-star", "star", pairs, ids, n_clique, comp_cliq)
-    t_auto = run_impl("clique-auto", "auto", pairs, ids, n_clique, comp_cliq)
-    print(
-        f"PROBE cc clique ratios: star/lp={t_star/t_lp:.2f} "
-        f"auto/lp={t_auto/t_lp:.2f}"
-    )
+    run_op("clique", pairs, ids, n_clique, comp_cliq)
     pairs.unpersist()
 
-    # (b) chain graph — lp would need n_chain rounds, not attempted
+    # (b) chain graph
     chain = (
         spark.range(n_chain - 1)
         .repartition(32)
@@ -1526,8 +1520,12 @@ def probe_cc(spark, n_clique=2_000_000, n_chain=200_000):
     chain.count()
     cids = spark.range(n_chain).select(F.col("id").alias("doc_id"))
     zero = F.lit(0).cast("long")
-    run_impl("chain-auto(default rounds)", "auto", chain, cids, n_chain, zero)
-    run_impl("chain-star", "star", chain, cids, n_chain, zero)
+    t_op = run_op("chain", chain, cids, n_chain, zero)
+    t0 = time.perf_counter()
+    t_star = report(
+        "chain-star-only", t0, _star_components(chain, 32), zero, n_chain
+    )
+    print(f"PROBE cc chain ratio operator/star-only={t_op/t_star:.2f}")
     chain.unpersist()
 
 
