@@ -195,8 +195,13 @@ def _local_frame(spark, rows, schema) -> DataFrame:
     return spark.createDataFrame(table, schema)
 
 
+#: bucket size above which `_bucket_pairs` switches a bucket from the
+#: collected id-list explode to the distributed self-join (a plan switch,
+#: never a recall cut) — shared by every LSH dedup operator.
+_BUCKET_CAP = 200
+
 #: hard bound on the hot-bucket keys collected to the driver — above it
-#: (a degenerate corpus where most buckets exceed bucket_cap) the whole
+#: (a degenerate corpus where most buckets exceed _BUCKET_CAP) the whole
 #: input routes through the distributed self-join instead of a broadcast
 #: hot-key table (ADVICE round 5: the unbounded collect risked driver
 #: OOM at up to rows/cap keys).
@@ -243,6 +248,11 @@ def _bucket_pairs(tagged: DataFrame, bucket_cols: list[str], cap: int,
     is a cheap narrow derivation of an ALREADY-persisted parent pass
     ``auto_persist=False`` (dedup.simhash's chunk slices) so the data
     is not double-stored for a recompute that costs almost nothing.
+    Cache ownership: when the auto-persist applied, the returned frame
+    is ALREADY persisted and counted, and the caller owns that cache
+    (it must unpersist it, and must not persist it again); with
+    ``auto_persist=False`` (or a caller-persisted input) the result
+    comes back lazy and the caller persists it if it re-reads it.
     The driver only ever holds <= _MAX_HOT_KEYS hot keys; a degenerate
     corpus beyond that routes WHOLESALE through the distributed
     self-join (correct at any bucket size, no broadcast table at all).
@@ -315,7 +325,7 @@ def _bucket_pairs_plan(tagged, agg, bucket_cols, cap, hot, _self_join,
             F.col("_n") > cap,
             F.raise_error(
                 F.lit(
-                    "_bucket_pairs: a bucket crossed bucket_cap between "
+                    "_bucket_pairs: a bucket crossed the cap between "
                     "the planning probe and the action — the input "
                     "lineage is non-deterministic; persist or seed it"
                 )
@@ -562,7 +572,7 @@ class _CCCheckpointer:
 
 
 def _star_components(
-    pairs: DataFrame, max_rounds: int, ckpt: _CCCheckpointer | None = None
+    pairs: DataFrame, ckpt: _CCCheckpointer | None = None
 ) -> DataFrame:
     """Alternating large-star / small-star contraction (Kiveris et al.
     2014, "Connected Components in MapReduce and Beyond" — the public
@@ -577,7 +587,9 @@ def _star_components(
     dedup.cluster / sample.holdout (`_propagate_labels`). Per round: two
     group-by-min shuffles over the dup-volume-sized edge set plus a
     set-stability check; each round localCheckpoints so round N never
-    replays rounds 1..N-1.
+    replays rounds 1..N-1. The round bound comes from the edge count the
+    first probe already takes: a component has at most n_edges + 1
+    nodes, so ``max(32, ceil(log2(n_edges + 1))**2)`` rounds cover it.
 
     Invariant per round (both ops): edges always point larger -> smaller
     (h > l), connectivity is preserved. At the fixed point the edge set
@@ -601,6 +613,7 @@ def _star_components(
     empty = e.select(F.col("h").alias("x"), F.col("l").alias("comp")).limit(0)
     if n_edges == 0:
         return empty
+    max_rounds = max(32, n_edges.bit_length() ** 2)
     sig = (n_edges, e_sig)
     stable = False
     for _ in range(max_rounds):
@@ -645,9 +658,9 @@ def _star_components(
         e, n_edges = new_e, new_n
     if not stable:
         raise ValueError(
-            f"star contraction did not converge within max_rounds="
-            f"{max_rounds} (needs ~log^2 of the largest component size; "
-            f"raise max_rounds)."
+            f"star contraction did not converge within {max_rounds} "
+            f"rounds, the bound max(32, ceil(log2(n_edges + 1))**2) "
+            f"derived from the input's edge count."
         )
     # structural proof of the star decomposition: every non-root has
     # exactly ONE outgoing edge and no root is itself a leaf — with
@@ -732,7 +745,6 @@ def _driver_cc_labels(spark, rows, id_field) -> DataFrame:
 
 def _propagate_labels(
     pairs: DataFrame,
-    max_rounds: int,
     checkpoint_dir: str | None = None,
     driver_cap: int = _DRIVER_CC_CAP,
 ) -> DataFrame:
@@ -755,10 +767,6 @@ def _propagate_labels(
     with the executor, which at cluster scale restarts the whole loop
     (round-8 verdict item 5). ``driver_cap`` is a test seam (0 disables
     the driver route); operators always pass the default."""
-    if max_rounds < 1:
-        # a zero-iteration loop would read as "converged" with every
-        # node its own component — a silent leaky split
-        raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
     if checkpoint_dir is None and driver_cap > 0:
         # r12 (guide §1.2): at real dup rates the pair graph is tiny
         # relative to the corpus, and the distributed loop's cost is
@@ -781,18 +789,12 @@ def _propagate_labels(
     # re-raising so repeated failed runs don't accumulate
     # dup-volume-sized parquet dirs (round-9 ADVICE item)
     try:
-        labels, converged = _lp_labels(
-            pairs, min(max_rounds, _AUTO_LP_ROUNDS), ckpt
-        )
+        labels, converged = _lp_labels(pairs, _AUTO_LP_ROUNDS, ckpt)
         if converged:
             return ckpt.finish(labels)
-        # deep component: reroute to the diameter-independent algorithm.
-        # The caller's max_rounds was sized for propagation (~diameter);
-        # star needs ~log2(component size) rounds, so floor the bound at
-        # 32 — enough for any physically possible component.
-        return ckpt.finish(
-            _star_components(pairs, max(max_rounds, 32), ckpt)
-        )
+        # deep component: reroute to the diameter-independent algorithm,
+        # which bounds its own rounds from the edge count
+        return ckpt.finish(_star_components(pairs, ckpt))
     except BaseException:
         ckpt.abort()
         raise
@@ -859,9 +861,10 @@ def dedup_cluster(spark: SparkSession, inputs, config, context):
     contraction (Kiveris et al. 2014, O(log^2 n) rounds regardless of
     DIAMETER) if labels are still moving after a bounded number of
     rounds — a chain-shaped dup graph can't outrun it, and a shallow
-    graph never pays star's heavier rounds. ``max_rounds`` (default 20)
-    bounds the rounds; `localCheckpoint` cuts the lineage so round N
-    doesn't replay rounds 1..N-1.
+    graph never pays star's heavier rounds. Neither loop takes a round
+    option: propagation runs 8 rounds, and star contraction bounds its
+    own rounds from the edge count; `localCheckpoint` cuts the lineage
+    so round N doesn't replay rounds 1..N-1.
 
     ``checkpoint_dir``: cut each round onto RELIABLE parquet under this
     directory instead of localCheckpoint (which writes executor-LOCAL
@@ -893,10 +896,9 @@ def dedup_cluster(spark: SparkSession, inputs, config, context):
     """
     ids_df, pairs = inputs[0], inputs[1]
     id_col = config["id_col"]
-    max_rounds = config.get("max_rounds", 20)
 
     labels = _propagate_labels(
-        pairs, max_rounds, checkpoint_dir=config.get("checkpoint_dir")
+        pairs, checkpoint_dir=config.get("checkpoint_dir")
     )
 
     # Re-attach isolated nodes (comp = own id) with one left join; the
@@ -1254,13 +1256,13 @@ def dedup_minhash(spark: SparkSession, inputs, config, context):
     # Candidate pairs via bucket grouping, NOT a self-join: ONE shuffle on
     # (band, hash) + a narrow combination explode, vs the self-join's two
     # full shuffles + sort of the banded table (measured 52s -> seconds at
-    # 8M banded rows). `bucket_cap` guards the quadratic blowup of a
+    # 8M banded rows). _BUCKET_CAP guards the quadratic blowup of a
     # degenerate hot bucket (boilerplate-heavy corpora).
-    bucket_cap = config.get("bucket_cap", 200)
-    # persist: the candidate set is consumed by cand_ids, the broadcast,
-    # the verify join and the survivor anti-join — without a cache each
-    # consumer re-runs the whole signature+bucket pipeline
-    cand = _bucket_pairs(banded, ["_band", "_bh"], bucket_cap).persist()
+    # The candidate set is consumed by cand_ids, the broadcast, the
+    # verify join and the survivor anti-join; `_bucket_pairs` returns it
+    # persisted and counted (banded is uncached, so it auto-persists),
+    # and this operator owns and releases that cache.
+    cand = _bucket_pairs(banded, ["_band", "_bh"], _BUCKET_CAP)
 
     # Verification joins the shingle arrays to the (small) candidate set
     # via broadcast — the arrays never shuffle. Assumption: candidates fit
@@ -1402,8 +1404,7 @@ def dedup_simhash(spark: SparkSession, inputs, config, context):
     # ALREADY-persisted fingerprint base — caching it again would
     # double-store (review finding, round 6)
     cand = _bucket_pairs(
-        banded, ["_chunk", "_cv"], config.get("bucket_cap", 200),
-        auto_persist=False,
+        banded, ["_chunk", "_cv"], _BUCKET_CAP, auto_persist=False,
     ).persist()
     fp = base.select("_id", "_sh")
     pairs = (
@@ -1427,6 +1428,15 @@ def dedup_simhash(spark: SparkSession, inputs, config, context):
     return out
 
 
+#: dedup.ngram_jaccard prefix_order='auto' runs its skew probe only at
+#: or above this many docs (below it every order is fast; round 8 lowered
+#: it from 400k after the q31 sf1 rig ran 2x slower on 'hash').
+_NGRAM_DF_MIN_DOCS = 20_000
+#: top-shingle document frequency (sampled) at which 'auto' picks the
+#: DF prefix order: uniform corpora measure ~1e-4, Zipf+boilerplate ~1.0.
+_NGRAM_HOT_DF = 0.01
+
+
 @operator("dedup.ngram_jaccard")
 def dedup_ngram_jaccard(spark: SparkSession, inputs, config, context):
     """Exact n-gram Jaccard near-dedup with single-permutation MinHash
@@ -1443,11 +1453,11 @@ def dedup_ngram_jaccard(spark: SparkSession, inputs, config, context):
     enumeration key (measured 277s -> 94s at 1M skewed docs, PLANS.md).
     'auto' probes corpus size + top-shingle document frequency off the
     persisted shingle pass and picks 'df' only when the corpus is
-    non-tiny (>= `auto_min_docs`, default 20k — below it everything is
-    fast and the probe can't pay for itself) AND skewed (uniform
-    corpora measure the DF pass as a net loss at any size);
-    `auto_min_docs` / `auto_hot_df` tune the probe, explicit
-    'hash'/'df' override it. Probe cost caveat: the probe counts and
+    non-tiny (>= 20k docs, `_NGRAM_DF_MIN_DOCS` — below it everything
+    is fast and the probe can't pay for itself) AND skewed (top shingle
+    in >= 1% of sampled docs, `_NGRAM_HOT_DF`; uniform corpora measure
+    the DF pass as a net loss at any size); explicit 'hash'/'df'
+    override it. Probe cost caveat: the probe counts and
     samples the RAW INPUT, which is metadata-cheap only when that input
     is a source scan — fed from an expensive uncached subplan (joins,
     transforms), the count and the sample each re-run that subplan
@@ -1570,7 +1580,7 @@ def dedup_ngram_jaccard(spark: SparkSession, inputs, config, context):
             #     r5) while the count itself was only 5s. (A
             #     limit-probe on base was 3.8x worse still: CollectLimit
             #     runs the shingle pass on few partitions serially and
-            #     leaves the cache partial.) Under `auto_min_docs` the
+            #     leaves the cache partial.) Under _NGRAM_DF_MIN_DOCS the
             #     probe (and the DF pass) can't pay for itself — tiny
             #     corpora are fast either way: 'hash'. The floor was
             #     400k through round 7, which silently forced 'hash' on
@@ -1588,7 +1598,7 @@ def dedup_ngram_jaccard(spark: SparkSession, inputs, config, context):
             #     the DF pass off uniform corpora of any size.)
             #   2. else, estimate the hottest shingle's document
             #      frequency on a deterministic md5 doc-sample; if the
-            #      top shingle reaches `auto_hot_df` of sampled docs,
+            #      top shingle reaches _NGRAM_HOT_DF of sampled docs,
             #      hash-order prefixes would admit it into ~plen/|sh|
             #      of all prefixes, each a quadratic (block, token)
             #      enumeration key: 'df'. Uniform corpora measure
@@ -1598,12 +1608,11 @@ def dedup_ngram_jaccard(spark: SparkSession, inputs, config, context):
             # Either choice yields the IDENTICAL pair set (the prefix
             # bound holds under any fixed total order); only the plan
             # changes, so oracles are unaffected.
-            min_docs = int(config.get("auto_min_docs", 20_000))
             n_docs = df.count()
-            # n_docs == 0 short-circuits regardless of auto_min_docs
-            # (an auto_min_docs <= 0 config would otherwise divide by
-            # zero in the sample fraction; the pair set is empty anyway)
-            if n_docs < min_docs or n_docs == 0:
+            # n_docs == 0 short-circuits regardless of the floor (a
+            # floor <= 0 would otherwise divide by zero in the sample
+            # fraction; the pair set is empty anyway)
+            if n_docs < _NGRAM_DF_MIN_DOCS or n_docs == 0:
                 prefix_order = "hash"
             else:
                 frac = min(1.0, 200_000 / n_docs)
@@ -1627,8 +1636,9 @@ def dedup_ngram_jaccard(spark: SparkSession, inputs, config, context):
                     .collect()[0][0]
                 ) or 0
                 n_samp = max(frac * n_docs, 1.0)
-                hot = float(config.get("auto_hot_df", 0.01))
-                prefix_order = "df" if top_df / n_samp >= hot else "hash"
+                prefix_order = (
+                    "df" if top_df / n_samp >= _NGRAM_HOT_DF else "hash"
+                )
         # record the EFFECTIVE order (auto-chosen or explicit); bare key
         # is last-writer-wins, so inside a pipeline the runner's
         # `_current_step` also namespaces it — same pattern as the pack
@@ -1913,7 +1923,7 @@ def dedup_embedding(spark: SparkSession, inputs, config, context):
         if n_bits is None or n_tables is None:
             # Auto-size to the corpus: fixed bits are a silent recall/cost
             # trap — 8 bits over 200k vectors put ~780 rows in each of 256
-            # buckets, so bucket_cap truncated candidate generation to
+            # buckets, so the bucket cap truncated candidate generation to
             # 4/2000 planted dups found in 69s; 16 bits / 8 tables found
             # 2000/2000 in 13s on the same data. bits targets ~8
             # rows/bucket; tables from the standard hyperplane-LSH recall
@@ -1943,9 +1953,9 @@ def dedup_embedding(spark: SparkSession, inputs, config, context):
         bucketed = _bucket_frame(
             base, "_id", "_v", dim, n_tables, n_bits, config.get("seed", 42)
         )
-        ids = _bucket_pairs(
-            bucketed, ["_table", "_bucket"], config.get("bucket_cap", 200)
-        ).persist()
+        # returned persisted and counted (bucketed is uncached, so
+        # `_bucket_pairs` auto-persists); released with `caches`
+        ids = _bucket_pairs(bucketed, ["_table", "_bucket"], _BUCKET_CAP)
         caches.append(ids)
         cand = ids.join(
             base.select(F.col("_id").alias("a"), F.col("_v").alias("va")), "a"
@@ -1970,6 +1980,15 @@ def dedup_embedding(spark: SparkSession, inputs, config, context):
     return out
 
 
+#: dedup.spans 'auto' goes eager (persist + count the dup-gram set and
+#: the per-doc aggregate) only at or above this many input docs (see
+#: the size-gate comment in the operator).
+_SPANS_EAGER_MIN_DOCS = 200_000
+#: row bound under which eager dedup.spans broadcasts the dup-gram set
+#: and the per-doc aggregate explicitly.
+_SPANS_BCAST_ROWS = 8_000_000
+
+
 @operator("dedup.spans")
 def dedup_spans(spark: SparkSession, inputs, config, context):
     """Exact duplicated-substring-span dedup (the ExactSubstr method of
@@ -1992,7 +2011,7 @@ def dedup_spans(spark: SparkSession, inputs, config, context):
     computes the corpus frequency (map-side combine collapses every
     in-partition repeat of a hot gram before the shuffle), the
     dup-gram set — only hashes that cleared ``min_count`` — is
-    persisted, counted, and (under ``dup_broadcast_rows``, default 8M)
+    persisted, counted, and (under ``_SPANS_BCAST_ROWS``, 8M rows)
     BROADCAST into a left-semi probe of the gram stream, so the
     corpus-sized stream never shuffles on the gram hash; only the
     flagged positions shuffle per doc for the span merge, and the
@@ -2122,24 +2141,23 @@ def dedup_spans(spark: SparkSession, inputs, config, context):
     # share the document scan across all its legs and AQE handle the
     # (tiny) exchanges (q30 sf0.1: 1.45s lazy vs ~4.8s always-eager).
     # 'auto' probes the RAW input count (metadata-cheap on a parquet
-    # scan; invariant 18) and stays lazy under eager_min_docs — at that
-    # size the gram exchange is seconds at worst, and AQE's runtime
-    # stats still broadcast the small sides.
+    # scan; invariant 18) and stays lazy under _SPANS_EAGER_MIN_DOCS —
+    # at that size the gram exchange is seconds at worst, and AQE's
+    # runtime stats still broadcast the small sides.
     eager = config.get("eager", "auto")
     if eager not in ("auto", True, False):
-        # loud, like the funnel's materialize and lm_score's
-        # stats_broadcast: a stringly 'false' must not select eager
+        # loud, like the funnel's materialize: a stringly 'false' must
+        # not select eager
         raise ValueError(
             f"dedup.spans: eager must be 'auto', True or False, got "
             f"{eager!r}")
     if eager == "auto":
-        eager = df.count() >= int(config.get("eager_min_docs", 200_000))
-    bcast_rows = int(config.get("dup_broadcast_rows", 8_000_000))
+        eager = df.count() >= _SPANS_EAGER_MIN_DOCS
     if eager:
         dup_grams = dup_grams.persist()
         dup_probe = (
             F.broadcast(dup_grams)
-            if dup_grams.count() <= bcast_rows
+            if dup_grams.count() <= _SPANS_BCAST_ROWS
             else dup_grams
         )
     else:
@@ -2207,11 +2225,11 @@ def dedup_spans(spark: SparkSession, inputs, config, context):
                 F.sum("n_dup_spans").alias("_sp"),
             ).first()
             n_flagged = stats["_n"] or 0
-            force = (n_flagged <= bcast_rows
+            force = (n_flagged <= _SPANS_BCAST_ROWS
                      and (stats["_sp"] or 0) <= 64_000_000)
         else:
             n_flagged = agg.count()
-            force = n_flagged <= bcast_rows
+            force = n_flagged <= _SPANS_BCAST_ROWS
         dup_grams.unpersist()
         tab = F.broadcast(agg) if force else agg
     else:
@@ -2293,7 +2311,7 @@ def dedup_minhash_incremental(spark: SparkSession, inputs, config, context):
     band table is exactly what the design avoids. Candidate pairs (ids only) are the
     only other shuffle; shingle arrays join back candidate-pruned, as in
     dedup.minhash. Two caps guard degenerate boilerplate buckets: the
-    batch band table is capped at `bucket_cap` rows per (band, hash)
+    batch band table is capped at 200 rows per (band, hash)
     BEFORE the cross join (so join output is linear in history, never a
     bucket cross product), and `cand_cap` bounds surviving candidates
     per batch doc (a window over the candidate frame only — history is
@@ -2319,7 +2337,6 @@ def dedup_minhash_incremental(spark: SparkSession, inputs, config, context):
         bands = _auto_bands(num_hashes, threshold)
     rows = num_hashes // bands
     seed = config.get("seed", 42)
-    bucket_cap = config.get("bucket_cap", 200)
     cand_cap = config.get("cand_cap", 1000)
 
     def band_rows(src: DataFrame) -> DataFrame:
@@ -2334,20 +2351,20 @@ def dedup_minhash_incremental(spark: SparkSession, inputs, config, context):
     )
 
     # within-batch candidates: one bucket-groupBy shuffle (a < b)
-    cand_bb = _bucket_pairs(b_banded, ["_band", "_bh"], bucket_cap)
+    cand_bb = _bucket_pairs(b_banded, ["_band", "_bh"], _BUCKET_CAP)
     # cross candidates: history streams against the (broadcast) batch
     # band table — zero shuffle of history when the batch is small.
     # Cap the BATCH side per (band, hash) BEFORE the join: a degenerate
     # shared band value (boilerplate / empty docs on both sides) would
     # otherwise materialize |h_bucket| x |b_bucket| join rows before any
     # downstream dedup/cap could bound them; with the pre-cap the join
-    # output is <= bucket_cap rows per history band row — linear in
+    # output is <= _BUCKET_CAP rows per history band row — linear in
     # history, never a cross product. (The window shuffles only the
     # batch band table.)
     wbb = Window.partitionBy("_band", "_bh").orderBy("_id")
     bb = (
         b_banded.withColumn("_rn", F.row_number().over(wbb))
-        .filter(F.col("_rn") <= bucket_cap)
+        .filter(F.col("_rn") <= _BUCKET_CAP)
         .drop("_rn")
         .select(F.col("_id").alias("b"), "_band", "_bh")
     )

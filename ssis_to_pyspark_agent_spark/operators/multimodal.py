@@ -20,9 +20,9 @@ fake whose output an engine-neutral SQL oracle can re-derive (q67
 runs it over synthetic payloads so the Arrow chain stays
 hash-checked).
 
-Scale notes: binary payloads blow past `spark.sql.files.maxPartitionBytes`
-assumptions — repartition by count, not bytes (`rows_per_partition`), so an
-Arrow batch of decoded frames fits executor memory. Metadata-only
+Scale notes: the decoders stream Arrow batches one at a time, so Python
+memory per task is bounded by `spark.sql.execution.arrow.maxRecordsPerBatch`
+rows, not by how many rows a partition holds. Metadata-only
 transformations must never deserialize the payload column (column pruning
 does this for free as long as ops stay declarative).
 """
@@ -314,8 +314,9 @@ def decode_png_pixels(payload: bytes) -> dict[str, Any]:
 def decode(spark: SparkSession, inputs, config, context) -> DataFrame:
     """Decode payloads via mapInPandas (Arrow batches). Output adds
     decoded_format/decoded_width/decoded_height/decoded_duration_ms/
-    decode_ok. `rows_per_partition` guards executor memory against wide
-    binary rows.
+    decode_ok. Payloads stream one Arrow batch at a time, so
+    `spark.sql.execution.arrow.maxRecordsPerBatch` bounds Python memory
+    against wide binary rows.
 
     `decoder`: 'headers' (default) — REAL stdlib container-header parse
     (see :func:`parse_media_header`); unrecognized payloads come back
@@ -349,12 +350,6 @@ def decode(spark: SparkSession, inputs, config, context) -> DataFrame:
         else _decode_image_stub if mode == "stub"
         else parse_media_header
     )
-    if n := config.get("rows_per_partition"):
-        import math
-
-        total = df.count()
-        df = df.repartition(max(1, math.ceil(total / n)))
-
     if pixel_mode:
         extra_cols = ["decoded_format string", "decoded_width int",
                       "decoded_height int", "decoded_channels int"]

@@ -137,13 +137,13 @@ def sample_holdout(spark: SparkSession, inputs, config, context):
     dedup.cluster's 'labels' port — so a pipeline that already
     clustered the pairs does NOT run label propagation twice.
     config: id_col, test_frac (0..1), salt (vary to re-draw the split),
-    side_col (default 'side'), comp_col (default 'comp', '' to drop),
-    max_rounds (round bound, default 20). Components come from the one
-    data-driven path `_propagate_labels` shares with dedup.cluster:
-    driver union-find under its pair cap, else min-label propagation
-    with automatic fallback to diameter-independent star contraction on
-    a deep graph — never partial labels, which would silently break the
-    no-straddle guarantee.
+    side_col (default 'side'), comp_col (default 'comp', '' to drop).
+    Components come from the one data-driven path `_propagate_labels`
+    shares with dedup.cluster: driver union-find under its pair cap,
+    else min-label propagation with automatic fallback to
+    diameter-independent star contraction on a deep graph — never
+    partial labels, which would silently break the no-straddle
+    guarantee.
     Output ports: 'out' (df + comp + side), 'train', 'test'.
 
     Scale plan: min-label propagation runs only over nodes that appear
@@ -174,7 +174,7 @@ def sample_holdout(spark: SparkSession, inputs, config, context):
         prop = second  # dedup.cluster's 'labels' port: (x, comp)
     else:
         prop = _propagate_labels(
-            second, config.get("max_rounds", 20),
+            second,
             # reliable per-round checkpoints for cluster-scale runs —
             # same contract as dedup.cluster's checkpoint_dir
             checkpoint_dir=config.get("checkpoint_dir"),

@@ -215,14 +215,9 @@ def per_row_command(spark: SparkSession, inputs, config, context) -> DataFrame:
         # UPDATE only touches existing keys (an SSIS UPDATE of a missing
         # key affects 0 rows) — the left join below already guarantees
         # that: a command row whose key has no target row matches nothing.
-        # Command batches are per-row-rewrite sized -> broadcast, so the
-        # target is probed in place, never shuffled.
-        updates = projected
-        if config.get("broadcast_delta", False):
-            updates = F.broadcast(updates)
-        # columns not named in the mapping keep their target values
+        # Columns not named in the mapping keep their target values.
         merged = target.alias("t").join(
-            updates.alias("u"), keys, "left"
+            projected.alias("u"), keys, "left"
         ).select(
             *[
                 F.coalesce(F.col(f"u.{c}"), F.col(f"t.{c}")).alias(c)

@@ -44,18 +44,12 @@ def merge_upsert(spark: SparkSession, inputs, config, context) -> DataFrame:
     inputs: [target, updates]
     config: keys, when_matched (optional SQL condition on t./u. — e.g.
     'u.checksum != t.checksum'); columns updated = all shared columns.
-    broadcast_delta (default False): AQE already converts these joins to
-    broadcast at runtime from TRUE post-shuffle sizes, and the explicit
-    hint inserts a serial driver-side broadcast barrier (measured ~0.7s
-    slower for q50 at sf0.1, same plan quality). Set True on a real
-    cluster when the target is huge and you want to skip even its
-    shuffle-map write — the one case where the static hint beats AQE.
+    No broadcast hint: AQE converts these joins to broadcast at runtime
+    from the true post-shuffle sizes.
     """
     target, updates = inputs[0], inputs[1]
     keys = config["keys"]
     updates = updates.dropDuplicates(keys)  # one update per key, like MERGE requires
-    if config.get("broadcast_delta", False):
-        updates = F.broadcast(updates)
 
     t, u = target.alias("t"), updates.alias("u")
     cond = _key_cond(keys)
@@ -95,8 +89,6 @@ def merge_delete(spark: SparkSession, inputs, config, context) -> DataFrame:
     target, deletes = inputs[0], inputs[1]
     keys = config["keys"]
     del_keys = deletes.select(*keys).distinct()
-    if config.get("broadcast_delta", False):  # see merge_upsert docstring
-        del_keys = F.broadcast(del_keys)
     if flag := config.get("soft"):
         marked = target.join(del_keys, keys, "left_semi")
         kept = target.join(del_keys, keys, "left_anti")
@@ -135,8 +127,6 @@ def scd2(spark: SparkSession, inputs, config, context) -> DataFrame:
         else F.current_timestamp()
     )
     upd = upd.dropDuplicates(keys)
-    if config.get("broadcast_delta", False):  # see merge_upsert docstring
-        upd = F.broadcast(upd)
 
     cur = dim.filter(F.col(f_cur))
     hist = dim.filter(~F.col(f_cur))
@@ -165,10 +155,6 @@ def scd2(spark: SparkSession, inputs, config, context) -> DataFrame:
     )
     # keys whose current version differs from the incoming row
     changed_keys = hits.filter("_chg").drop("_chg")
-    if config.get("broadcast_delta", False):
-        # bounded by |upd| — broadcast so the three consumers below probe
-        # the dimension without shuffling it
-        changed_keys = F.broadcast(changed_keys)
     # close-out: current rows for changed keys get end-dated
     closed = (
         cur.join(changed_keys, keys, "left_semi")

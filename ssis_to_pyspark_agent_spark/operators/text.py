@@ -786,6 +786,12 @@ def _record_bucket_rows(context, hist: dict) -> None:
         context[f"_pack_bucket_rows:{step}"] = hist
 
 
+#: text.pack's quantile re-bucketing: fine histogram buckets per
+#: partition at each zoom level, and the most zoom levels it descends.
+_PACK_FAN = 256
+_PACK_MAX_DEPTH = 6
+
+
 @operator("text.pack")
 def text_pack(spark: SparkSession, inputs, config, context) -> DataFrame:
     """Sequence packing for pretraining (the concat-and-chunk scheme:
@@ -806,7 +812,7 @@ def text_pack(spark: SparkSession, inputs, config, context) -> DataFrame:
     balance, never correctness — and when the phase-1 aggregate shows a
     bucket holding > 4/n_part of the rows, the operator automatically
     re-buckets on exact-histogram quantiles (`rebalance`, default True;
-    `rebalance_fan` fine buckets per partition, default 256) so
+    256 fine buckets per partition, zoomed at most 6 levels) so
     snowflake-style sparse ids still pack in parallel.
 
     config: id_col, count_col (precomputed token count — chain
@@ -908,7 +914,7 @@ def text_pack(spark: SparkSession, inputs, config, context) -> DataFrame:
         # Re-bucket on QUANTILES, still deterministic (quantiles come
         # from exact histogram aggregates, never sampling — invariant
         # 14 stays moot): a fine equal-width histogram counts rows per
-        # `rebalance_fan * n_part` buckets, and any bucket still
+        # `_PACK_FAN * n_part` buckets, and any bucket still
         # holding more than a partition's share zooms — level by level,
         # ONE aggregate per zoom level covering ALL still-overfull
         # buckets at once (a per-bucket recursion would launch up to
@@ -924,8 +930,6 @@ def text_pack(spark: SparkSession, inputs, config, context) -> DataFrame:
         # re-tokenize the corpus; for plain numeric counts the narrow
         # recompute is cheaper than materializing a 2-column cache
         # (measured 47s vs 33s at 20M rows), so no cache is taken.
-        fan = int(config.get("rebalance_fan", 256))
-        max_depth = int(config.get("rebalance_depth", 6))
         target = total_rows / n_part
 
         def _wb(lo: float, hi: float, k: int):
@@ -941,7 +945,7 @@ def text_pack(spark: SparkSession, inputs, config, context) -> DataFrame:
         if plan_cached:
             plan_src = plan_src.persist()
         try:
-            k0 = n_part * fan
+            k0 = n_part * _PACK_FAN
             root = {"lo": float(mn), "hi": float(mx + 1), "k": k0,
                     "filt": None, "children": None}
             frontier = [root]
@@ -990,14 +994,14 @@ def text_pack(spark: SparkSession, inputs, config, context) -> DataFrame:
                     w = (nd["hi"] - nd["lo"]) / nd["k"]
                     for b in range(1, nd["k"] + 1):
                         n_b, s_b = hd.get((i, b), (0, 0))
-                        if n_b > target and depth < max_depth:
+                        if n_b > target and depth < _PACK_MAX_DEPTH:
                             sub_f = _wb(nd["lo"], nd["hi"], nd["k"]) == b
                             if nd["filt"] is not None:
                                 sub_f = nd["filt"] & sub_f
                             child = {
                                 "lo": nd["lo"] + (b - 1) * w,
                                 "hi": nd["lo"] + b * w,
-                                "k": fan,
+                                "k": _PACK_FAN,
                                 "filt": sub_f,
                                 "children": None,
                             }
@@ -1346,10 +1350,8 @@ def lm_score(spark: SparkSession, inputs, config, context) -> DataFrame:
     per-doc aggregate is the floor and the fused stats build re-shuffles
     the gram-sized counts on the skewed _ctx; tools/lm_decomp.py
     ext_old/ext_new keeps the harness (PLANS.md round-10).
-    stats_broadcast='auto' runs ONE counts-sized probe job at
-    invocation and broadcasts the (pruned) stats table explicitly —
-    the belt-and-suspenders cluster option where AQE statistics are
-    unavailable; default 'off' keeps the fully-lazy zero-job plan. A
+    The plan is fully lazy (zero jobs at invocation): AQE broadcasts
+    the pruned stats table at runtime from its post-shuffle size. A
     first-cut formulation hashed ctx and nxt separately per position on
     BOTH sides — the double hashing alone was ~2x the single-hash
     stream (measured 46.2s vs 21.4s for the 31.6M-gram count pass) and
@@ -1357,8 +1359,7 @@ def lm_score(spark: SparkSession, inputs, config, context) -> DataFrame:
     table; this shape removes both.
 
     config: id_col, text_col, n (default 2), train_text_col (column in
-    the train input; default text_col), stats_broadcast ('off' default
-    | 'auto'), stats_broadcast_rows (broadcast row bound, default 8M).
+    the train input; default text_col).
     Reference has no counterpart — NEW per SURVEY §2.12.
     """
     df: DataFrame = inputs[0]
@@ -1458,28 +1459,6 @@ def lm_score(spark: SparkSession, inputs, config, context) -> DataFrame:
         vocab = tw.agg(
             F.count_distinct(F.xxhash64(F.col("_w"))).alias("_v"))
 
-    # stats_broadcast='auto': probe the (pruned) stats table's row count
-    # (ONE counts-sized job at invocation) and BROADCAST it explicitly
-    # into the doc stream when it fits. Since the round-9 quantization-
-    # floor prune, AQE usually reaches the same broadcast plan lazily at
-    # runtime from the post-shuffle size, so the default 'off' stays the
-    # zero-job plan; 'auto' remains the belt-and-suspenders option for
-    # deployments where adaptive stats are unavailable (external-train
-    # mode, where no prune applies, still benefits the old way).
-    # Measured, not assumed: tools/scale_probe.py lm / tools/lm_decomp.py.
-    stats_bcast = config.get("stats_broadcast", "off")
-    if stats_bcast not in ("auto", "off"):
-        raise ValueError(
-            "text.lm_score: stats_broadcast must be auto|off, "
-            f"got {stats_bcast!r}"
-        )
-    bcast_rows = int(config.get("stats_broadcast_rows", 8_000_000))
-
-    def maybe_broadcast(stats: DataFrame) -> DataFrame:
-        if stats_bcast == "auto" and stats.count() <= bcast_rows:
-            return F.broadcast(stats)
-        return stats
-
     # quantized score as a Column; needs _v in scope (crossJoin vocab)
     def _q_col(num_sql: str) -> Column:
         return F.least(
@@ -1516,7 +1495,7 @@ def lm_score(spark: SparkSession, inputs, config, context) -> DataFrame:
                 ).otherwise(F.lit(True))
             )
         )
-        qtab = maybe_broadcast(
+        qtab = (
             hot.join(ctx_tab, "_ctx")
             .withColumn("_q", q_row)
             .filter(F.col("_q") != q_fb)
@@ -1539,17 +1518,10 @@ def lm_score(spark: SparkSession, inputs, config, context) -> DataFrame:
             F.col(id_col).alias("_id"),
             F.explode(gram_ctx_pairs(text_col)).alias("_p"),
         ).select("_id", "_p._g", "_p._ctx")
-        # ONE probe job (the docstring contract): |ctx_tab| <= |counts|
-        # by construction (it is a groupBy OVER counts), so the counts
-        # probe decides broadcastability for both tables — probing each
-        # separately would re-run the train-side lineage twice
-        c_tab, x_tab = counts.select("_g", "_c"), ctx_tab
-        if stats_bcast == "auto" and counts.count() <= bcast_rows:
-            c_tab, x_tab = F.broadcast(c_tab), F.broadcast(x_tab)
         joined = (
-            dg.join(c_tab, "_g", "left")
+            dg.join(counts.select("_g", "_c"), "_g", "left")
             .withColumn("_c", F.coalesce(F.col("_c"), F.lit(0)))
-            .join(x_tab, "_ctx", "left")
+            .join(ctx_tab, "_ctx", "left")
             .withColumn("_cc", F.coalesce(F.col("_cc"), F.lit(0)))
         )
         scored = (

@@ -41,10 +41,9 @@ def get_spark(
     # relation, so a 256-row pairs cache occupies 32 partitions and every
     # downstream scan pays 32 tasks; on, the cache fill coalesces to the
     # data's actual size and downstream stages follow. Partitioning only —
-    # values unchanged (oracle-gated). Env-parameterised for A/Bs; at
-    # cluster scale the same setting right-sizes cached TB-frames instead
-    # of inheriting a too-small static width.
-    cached_plan_aqe = os.environ.get("SPARK_GRAFT_CACHED_PLAN_AQE", "true")
+    # values unchanged (oracle-gated). At cluster scale the same setting
+    # right-sizes cached TB-frames instead of inheriting a too-small
+    # static width.
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -53,8 +52,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            cached_plan_aqe,
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -710,22 +710,26 @@ class TestSimilarity:
             spark.catalog.clearCache()
         assert got["hash"] == got["df"] and got["hash"]
 
-    def test_ngram_prefix_order_auto_selects(self, spark):
+    def test_ngram_prefix_order_auto_selects(self, spark, monkeypatch):
         """'auto' (the round-5 default, per the round-4 verdict) must
         pick 'hash' on small or uniform corpora and 'df' on big+skewed
         ones — with the identical pair set either way (the probe only
         changes the plan, never the output)."""
         # skewed: one boilerplate phrase in EVERY doc -> top-shingle
-        # document frequency ~1.0 >> the 0.01 auto_hot_df default
+        # document frequency ~1.0 >> the 0.01 _NGRAM_HOT_DF threshold
+        from ssis_to_pyspark_agent_spark.operators import dedup
+
         skew = spark.createDataFrame(
             [(i, f"alpha beta gamma delta u{i}a u{i}b u{i}c u{i}d")
              for i in range(300)],
             "doc_id long, text string",
         )
         ctx = {}
-        out = run("dedup.ngram_jaccard", spark, [skew], _context=ctx,
-                  id_col="doc_id", text_col="text", shingle_k=3,
-                  threshold=0.5, return_pairs=True, auto_min_docs=100)
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "_NGRAM_DF_MIN_DOCS", 100)
+            out = run("dedup.ngram_jaccard", spark, [skew], _context=ctx,
+                      id_col="doc_id", text_col="text", shingle_k=3,
+                      threshold=0.5, return_pairs=True)
         auto_pairs = sorted(map(tuple, out["pairs"].collect()))
         assert ctx["_ngram_prefix_order"] == "df"
         spark.catalog.clearCache()
@@ -742,12 +746,14 @@ class TestSimilarity:
             "doc_id long, text string",
         )
         ctx2 = {}
-        run("dedup.ngram_jaccard", spark, [uni], _context=ctx2,
-            id_col="doc_id", text_col="text", shingle_k=3,
-            threshold=0.5, auto_min_docs=100)
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "_NGRAM_DF_MIN_DOCS", 100)
+            run("dedup.ngram_jaccard", spark, [uni], _context=ctx2,
+                id_col="doc_id", text_col="text", shingle_k=3,
+                threshold=0.5)
         assert ctx2["_ngram_prefix_order"] == "hash"
         spark.catalog.clearCache()
-        # under auto_min_docs the limit-probe short-circuits to 'hash'
+        # under _NGRAM_DF_MIN_DOCS the limit-probe short-circuits to 'hash'
         # even on the skewed corpus (tiny corpora are fast either way
         # and the probe can't pay for itself)
         ctx3 = {}
@@ -782,13 +788,15 @@ class TestSimilarity:
             id_col="doc_id", text_col="text", shingle_k=3, threshold=0.5)
         assert ctx6["_ngram_prefix_order"] == "hash"
         spark.catalog.clearCache()
-        # empty input + auto_min_docs=0 must short-circuit to 'hash',
+        # empty input + a zero doc floor must short-circuit to 'hash',
         # not divide by zero in the sample fraction (review finding)
         empty = spark.createDataFrame([], "doc_id long, text string")
         ctx4 = {}
-        out4 = run("dedup.ngram_jaccard", spark, [empty], _context=ctx4,
-                   id_col="doc_id", text_col="text", shingle_k=3,
-                   threshold=0.5, auto_min_docs=0, return_pairs=True)
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "_NGRAM_DF_MIN_DOCS", 0)
+            out4 = run("dedup.ngram_jaccard", spark, [empty], _context=ctx4,
+                       id_col="doc_id", text_col="text", shingle_k=3,
+                       threshold=0.5, return_pairs=True)
         assert out4["out"].count() == 0 and out4["pairs"].count() == 0
         assert ctx4["_ngram_prefix_order"] == "hash"
         spark.catalog.clearCache()
@@ -924,7 +932,7 @@ class TestTextOps:
     def test_dedup_spans_eager_lazy_identical(self, spark):
         # the eager (persist+count+broadcast, the 2M-doc plan) and lazy
         # (single-action, AQE-decided — what 'auto' picks under
-        # eager_min_docs) paths must be output-identical; 'auto' on a
+        # _SPANS_EAGER_MIN_DOCS) paths must be output-identical; 'auto' on a
         # small corpus must take the lazy path (no persists leaked:
         # eager mode leaves its bounded agg persisted, lazy leaves none)
         df = spark.createDataFrame(
@@ -1396,27 +1404,26 @@ class TestTextOps:
         with pytest.raises(ValueError, match="n must be >= 2"):
             run("text.lm_score", spark, [df], id_col="doc_id",
                 text_col="text", n=1)
-        with pytest.raises(ValueError, match="stats_broadcast"):
-            run("text.lm_score", spark, [df], id_col="doc_id",
-                text_col="text", stats_broadcast="maybe")
 
-    def test_lm_score_stats_broadcast_value_equality(self, spark):
-        # the broadcast plan variant must be a pure plan change: same
-        # values as the default lazy SMJ plan, self-trained AND external
+    def test_lm_score_pinned_values(self, spark):
+        # self-trained and external-train values on a 60-doc corpus,
+        # pinned per doc suffix (doc_id % 7): (lm_ngrams, lm_oov,
+        # lm_bits_fp). The (c, cc, V) arithmetic is exact, so any plan
+        # change must reproduce these to the bit.
         docs = spark.createDataFrame(
             [(i, "the cat sat on the mat and the cat ran " + str(i % 7))
              for i in range(60)],
             "doc_id long, text string",
         )
         train = docs.filter("doc_id % 3 = 0")
-        for inputs in ([docs], [docs, train]):
-            off = run("text.lm_score", spark, inputs, id_col="doc_id",
-                      text_col="text", stats_broadcast="off")
-            auto = run("text.lm_score", spark, inputs, id_col="doc_id",
-                       text_col="text", stats_broadcast="auto")
-            key = lambda r: (r.doc_id, r.lm_ngrams, r.lm_oov, r.lm_bits_fp)
-            assert sorted(map(key, off.collect())) == \
-                sorted(map(key, auto.collect()))
+        self_bits = [9538] * 4 + [9690] * 3
+        ext_bits = [12418] * 4 + [12843] + [12418] * 2
+        for inputs, bits in (([docs], self_bits), ([docs, train], ext_bits)):
+            out = run("text.lm_score", spark, inputs, id_col="doc_id",
+                      text_col="text")
+            got = sorted((r.doc_id, r.lm_ngrams, r.lm_oov, r.lm_bits_fp)
+                         for r in out.collect())
+            assert got == [(i, 10, 0, bits[i % 7]) for i in range(60)]
 
     def test_dedup_url_canonicalization(self, spark):
         df = spark.createDataFrame(
@@ -3094,7 +3101,7 @@ class TestSampleModes:
                 test_frac=1.5)
 
     def test_holdout_reroutes_unconverged_propagation(self, spark):
-        # a 26-doc chain has diameter 25 > max_rounds=20: propagation
+        # a 26-doc chain has diameter 25 > 20 rounds: propagation
         # alone reports it has NOT converged (partial labels would
         # silently put linked docs on different sides), so the operator
         # reroutes the deep graph to diameter-independent star
@@ -3117,7 +3124,7 @@ class TestSampleModes:
         assert len({r.side for r in ok}) == 1 and all(
             r.comp == 0 for r in ok
         )
-        dist = _propagate_labels(chain, 20, driver_cap=0)
+        dist = _propagate_labels(chain, driver_cap=0)
         via_dist = run("sample.holdout", spark, [docs, dist], id_col="id",
                        test_frac=0.5, labels_input=True)["out"].collect()
         cc = run("dedup.cluster", spark, [docs, chain], id_col="id")
@@ -3142,16 +3149,6 @@ class TestSampleModes:
         assert converged
         assert {r.comp for r in labels.collect()} == {0}
 
-    def test_cc_max_rounds_zero_is_config_error(self, spark):
-        # max_rounds=0 must be rejected up front: a zero-iteration loop
-        # would read as "converged" with every node its own component —
-        # a silent leaky split (review finding, r5)
-        docs = spark.createDataFrame([(0,), (1,)], "id long")
-        pairs = spark.createDataFrame([(0, 1)], "a long, b long")
-        with pytest.raises(ValueError, match="max_rounds"):
-            run("sample.holdout", spark, [docs, pairs], id_col="id",
-                test_frac=0.5, max_rounds=0)
-
     def test_cluster_star_matches_lp_on_random_graph(self, spark):
         # star contraction and min-label propagation must agree on
         # component labels for an arbitrary graph mixing cliques,
@@ -3170,7 +3167,7 @@ class TestSampleModes:
         edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(300)]
         edges = [(a, b) for a, b in edges if a != b]
         pairs = spark.createDataFrame(edges, "a long, b long")
-        star = _star_components(pairs, 50)
+        star = _star_components(pairs)
         lp, converged = _lp_labels(pairs, 50)
         assert converged
         s = sorted((r.x, r.comp) for r in star.collect())
@@ -3206,7 +3203,7 @@ class TestSampleModes:
         want = sorted((r.x, r.comp) for r in lp.collect())
         assert sorted((r.x, r.comp) for r in auto["labels"].collect()) == want
         assert sorted(
-            (r.x, r.comp) for r in _star_components(pairs, 50).collect()
+            (r.x, r.comp) for r in _star_components(pairs).collect()
         ) == want
         # isolated nodes are their own component in the operator output
         comp = dict(want)
@@ -3225,7 +3222,7 @@ class TestSampleModes:
         # labels; driver_cap=0 disables the driver path (distributed
         # again)
         for cap in (10, 0):
-            got = _propagate_labels(pairs, 20, driver_cap=cap)
+            got = _propagate_labels(pairs, driver_cap=cap)
             assert sorted((r.x, r.comp) for r in got.collect()) == want, cap
         # null endpoints are skipped exactly like the joins drop them
         null_pairs = spark.createDataFrame(
@@ -3262,7 +3259,7 @@ class TestSampleModes:
         want = sorted((r.id, r.comp) for r in base["components"].collect())
         d = str(tmp_path / "ck")
         out = run("dedup.cluster", spark, [docs, pairs], id_col="id",
-                  max_rounds=50, checkpoint_dir=d)
+                  checkpoint_dir=d)
         got = sorted((r.id, r.comp) for r in out["components"].collect())
         assert got == want
         # scratch pruned: the invocation namespace holds exactly the
@@ -4140,20 +4137,27 @@ class TestProfileProperty:
 _IMPL_KEYS_ALLOWED = {("dedup.py", "dedup_semantic", "verify_impl")}
 
 
+def _package_trees(subdir=""):
+    import ast
+    from pathlib import Path
+
+    import ssis_to_pyspark_agent_spark
+
+    root = Path(ssis_to_pyspark_agent_spark.__file__).parent / subdir
+    for path in sorted(root.rglob("*.py")):
+        yield path, ast.parse(path.read_text())
+
+
 def test_no_new_alternate_implementation_keys():
     """Every ``*_impl`` string key read under operators/ must be on the
     allow-list: each alternate kernel behind a user-set flag is a
     second implementation to keep in sync with the default."""
     import ast
     import re
-    from pathlib import Path
 
-    import ssis_to_pyspark_agent_spark
-
-    pkg = Path(ssis_to_pyspark_agent_spark.__file__).parent / "operators"
     found = set()
-    for path in sorted(pkg.glob("*.py")):
-        for top in ast.parse(path.read_text()).body:
+    for path, tree in _package_trees("operators"):
+        for top in tree.body:
             for node in ast.walk(top):
                 if (isinstance(node, ast.Constant)
                         and isinstance(node.value, str)
@@ -4161,6 +4165,111 @@ def test_no_new_alternate_implementation_keys():
                     found.add((path.name, getattr(top, "name", None),
                                node.value))
     assert found == _IMPL_KEYS_ALLOWED
+
+
+#: the only operator config keys whose names mention ``broadcast``: the
+#: explicit side hint of join/range_join, and the three switches that
+#: turn a broadcast OFF for inputs too large to ship to every executor.
+#: A hint AQE already places at runtime needs no key.
+_BROADCAST_KEYS_ALLOWED = {
+    "broadcast", "verify_broadcast", "broadcast_components", "broadcast_batch",
+}
+
+#: the only environment variables the package reads: deployment settings.
+_ENV_VARS_ALLOWED = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"}
+
+
+def test_no_new_broadcast_config_keys():
+    """Every config key read under operators/ (``config.get("k")`` or
+    ``config["k"]``) whose name contains ``broadcast`` must be on the
+    allow-list."""
+    import ast
+
+    found = set()
+    for _path, tree in _package_trees("operators"):
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "get" and node.args):
+                holder, key = node.func.value, node.args[0]
+            elif isinstance(node, ast.Subscript):
+                holder, key = node.value, node.slice
+            else:
+                continue
+            if (isinstance(holder, ast.Name)
+                    and holder.id in ("config", "cfg")
+                    and isinstance(key, ast.Constant)
+                    and isinstance(key.value, str)
+                    and "broadcast" in key.value):
+                found.add(key.value)
+    assert found <= _BROADCAST_KEYS_ALLOWED, found - _BROADCAST_KEYS_ALLOWED
+
+
+def test_env_reads_are_deployment_settings():
+    """Every ``os.environ``/``os.getenv`` read in the package names a
+    literal variable on the allow-list; any other use of ``environ``
+    (a computed key, iteration) fails too."""
+    import ast
+
+    found, uses, reads = set(), 0, 0
+    for path, tree in _package_trees():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and node.attr == "environ":
+                uses += 1
+            key = None
+            if (isinstance(node, ast.Call) and node.args
+                    and isinstance(node.func, ast.Attribute)):
+                f = node.func
+                if (isinstance(f.value, ast.Attribute)
+                        and f.value.attr == "environ"):
+                    key, reads = node.args[0], reads + 1
+                elif f.attr == "getenv":
+                    key = node.args[0]
+            elif (isinstance(node, ast.Subscript)
+                    and isinstance(node.value, ast.Attribute)
+                    and node.value.attr == "environ"):
+                key, reads = node.slice, reads + 1
+            if key is not None:
+                found.add(key.value if isinstance(key, ast.Constant)
+                          else f"<computed key in {path.name}>")
+    assert uses == reads, "environ used other than as a literal-key read"
+    assert found <= _ENV_VARS_ALLOWED, found - _ENV_VARS_ALLOWED
+
+
+def test_lsh_dedup_never_repersists_a_cached_frame(spark, sf_dir,
+                                                   monkeypatch):
+    """`_bucket_pairs` returns its candidate frame already persisted and
+    counted; dedup.minhash and dedup.embedding own that cache and must
+    not persist it again (Spark warns "Asked to cache already cached
+    data" and the second call hides which function owns the cache)."""
+    from pyspark import StorageLevel
+
+    spark.catalog.clearCache()
+    # the session's concrete DataFrame class (pyspark.sql.DataFrame is
+    # only its abstract base)
+    cls = type(spark.range(1))
+    orig = cls.persist
+    again = []
+
+    def persist(self, *a, **k):
+        if self.storageLevel != StorageLevel.NONE:
+            again.append(self)
+        return orig(self, *a, **k)
+
+    monkeypatch.setattr(cls, "persist", persist)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    try:
+        mh = run("dedup.minhash", spark, [docs], id_col="doc_id",
+                 text_col="text", threshold=0.7, return_pairs=True)
+        assert mh["pairs"].count() > 0
+        ed = run("dedup.embedding", spark, [emb], id_col="vec_id",
+                 vec_col="embedding", threshold=0.35, quantize=10000,
+                 brute_force=False, return_pairs=True)
+        assert ed["pairs"].count() > 0
+    finally:
+        spark.catalog.clearCache()
+    assert not again, f"{len(again)} frame(s) persisted twice"
 
 
 def test_minhash_auto_band_selection():
@@ -4885,24 +4994,28 @@ class TestTextSegment:
 
 
 class TestBucketPairsHotBucket:
-    def test_simhash_recall_survives_bucket_cap(self, spark):
-        # 30 identical docs share every chunk bucket; bucket_cap=4 used
-        # to TRUNCATE the collected id list and silently drop most of
-        # the 435 pairs (the sf0.1 q33 regression class). The cap is now
-        # a plan switch: all pairs must surface regardless of cap.
+    def test_simhash_recall_survives_bucket_cap(self, spark, monkeypatch):
+        # 30 identical docs share every chunk bucket; a bucket cap of 4
+        # used to TRUNCATE the collected id list and silently drop most
+        # of the 435 pairs (the sf0.1 q33 regression class). The cap is
+        # now a plan switch: all pairs must surface regardless of cap.
+        from ssis_to_pyspark_agent_spark.operators import dedup as dd
+
         df = spark.createDataFrame(
             [(i, "alpha beta gamma delta epsilon zeta") for i in range(30)],
             "doc_id long, text string",
         )
+        monkeypatch.setattr(dd, "_BUCKET_CAP", 4)
         res = run("dedup.simhash", spark, [df], id_col="doc_id",
                   text_col="text", max_distance=3, hash_fn="md5",
-                  bucket_cap=4, return_pairs=True)
+                  return_pairs=True)
         assert res["pairs"].count() == 30 * 29 // 2
         assert res["out"].count() == 1  # min-id survivor
         # and the cold path (cap not hit) returns the same set
+        monkeypatch.setattr(dd, "_BUCKET_CAP", 1000)
         big = run("dedup.simhash", spark, [df], id_col="doc_id",
                   text_col="text", max_distance=3, hash_fn="md5",
-                  bucket_cap=1000, return_pairs=True)
+                  return_pairs=True)
         key = lambda r: (r.a, r.b)
         assert sorted(map(key, res["pairs"].collect())) == \
             sorted(map(key, big["pairs"].collect()))
