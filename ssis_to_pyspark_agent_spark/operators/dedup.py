@@ -1824,156 +1824,109 @@ def dedup_embedding(spark: SparkSession, inputs, config, context):
 
     Candidate stage: random-hyperplane LSH signs (seeded, driver-generated
     constants) bucket the vectors; pairs sharing a bucket are verified with
-    exact cosine (F.zip_with dot product — JVM-side). `brute_force=True`
-    skips LSH (baseline / small inputs).
+    exact cosine (`_pair_cosine_frame`). `brute_force=True` skips LSH
+    (baseline / small inputs, capped at `brute_force_cap` rows): every
+    pair is scored by the numpy cosine kernel against the collected
+    input. With `quantize` the cosines are exact and equal on both paths.
     """
     df: DataFrame = inputs[0]
     id_col, vec_col = config["id_col"], config["vec_col"]
     threshold = config.get("threshold", 0.95)
 
     base = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-    caches: list[DataFrame] = []  # persisted frames released after verify
     if config.get("brute_force"):
-        # Brute force is the small-input exact baseline: the pandas path
-        # collects the full id+vector matrix to the driver, the expr path
-        # is a broadcast crossJoin — both are O(n^2) and driver/broadcast
-        # bounded. Enforce the bound instead of trusting the docstring: a
-        # bounded limit(cap+1) probe (never a full count of an unbounded
-        # input) fails fast with a pointer to the LSH path.
-        cap = config.get("brute_force_cap", 100_000)
-        cap_err = (
-            f"dedup.embedding brute_force is the exact small-input "
-            f"baseline and is capped at {cap} rows (override with "
-            f"brute_force_cap). For larger corpora drop brute_force "
-            f"and use the hyperplane-LSH candidate path, which "
-            f"bucket-joins instead of materializing all pairs."
-        )
-        if config.get("method", "expr") != "pandas":
-            # expr path never collects — a bounded count probe suffices
-            if base.limit(cap + 1).count() > cap:
-                raise ValueError(cap_err)
-        if config.get("method", "expr") == "pandas":
-            # Vectorized all-pairs: broadcast the (bounded — see the cap
-            # probe above) quantized matrix, one numpy matmul per Arrow
-            # batch instead of a per-pair Catalyst cosine fold chain.
-            # With `quantize` set (same default as the expr path below:
-            # unset -> unquantized float cosine), values are identical to
-            # the expr path: int64 quantized dot/norms are exact, and the
-            # final dot/(sqrt*sqrt) runs the same IEEE ops. Unquantized,
-            # numpy's pairwise summation may differ from Catalyst's
-            # left-to-right fold in the last ulp — set quantize when
-            # cross-path or cross-engine identity matters.
-            import numpy as np
-            import pandas as pd
+        # Brute force is the small-input exact baseline: it collects the
+        # id+vector matrix to the driver and scores every Arrow batch of
+        # the input against it (`_cos_pairs`, one numpy matmul per
+        # block), O(n^2). The bounded collect is also the cap probe: it
+        # fails fast with a pointer to the LSH path instead of pulling
+        # an unbounded input onto the driver.
+        import numpy as np
 
-            quant = config.get("quantize")
-            # the bounded collect IS the cap probe — one job, not two
-            rows = base.limit(cap + 1).collect()
-            if len(rows) > cap:
-                raise ValueError(cap_err)
-            all_ids = np.array([r["_id"] for r in rows])
-            from ssis_to_pyspark_agent_spark.operators.similarity import (
-                _half_up as _hu,
-            )
-
-            m = np.array([list(r["_v"]) for r in rows], dtype=np.float64)
-            mi = _hu(m, quant).astype(np.int64) if quant else m
-            norms = np.sqrt((mi * mi).sum(axis=1).astype(np.float64))
-
-            def gen(it):
-                for pdf in it:
-                    bm = np.array(list(map(list, pdf["_v"])), dtype=np.float64)
-                    bi = _hu(bm, quant).astype(np.int64) if quant else bm
-                    bn = np.sqrt((bi * bi).sum(axis=1).astype(np.float64))
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        sims = (bi @ mi.T).astype(np.float64) / (
-                            bn[:, None] * norms[None, :]
-                        )
-                    bids = pdf["_id"].values
-                    keep = (sims >= threshold) & (
-                        bids[:, None] < all_ids[None, :]
-                    )
-                    li, ri = np.nonzero(keep)
-                    yield pd.DataFrame(
-                        {
-                            "a": bids[li],
-                            "b": all_ids[ri],
-                            "cosine": sims[li, ri],
-                        }
-                    )
-
-            id_t = base.schema["_id"].dataType.simpleString()
-            pairs = base.mapInPandas(
-                gen, schema=f"a {id_t}, b {id_t}, cosine double"
-            ).filter(F.col("cosine") >= threshold)
-            out = _keep_min_survivors(df, id_col, pairs)
-            if config.get("return_pairs"):
-                return {"out": out, "pairs": pairs}
-            return out
-        l, r = base.alias("l"), base.alias("r")
-        cand = l.join(r, F.col("l._id") < F.col("r._id")).select(
-            F.col("l._id").alias("a"),
-            F.col("r._id").alias("b"),
-            F.col("l._v").alias("va"),
-            F.col("r._v").alias("vb"),
-        )
-    else:
-        dim = config.get("dim") or len(base.select("_v").first()["_v"])
-        n_bits, n_tables = config.get("lsh_bits"), config.get("lsh_tables")
-        if n_bits is None or n_tables is None:
-            # Auto-size to the corpus: fixed bits are a silent recall/cost
-            # trap — 8 bits over 200k vectors put ~780 rows in each of 256
-            # buckets, so the bucket cap truncated candidate generation to
-            # 4/2000 planted dups found in 69s; 16 bits / 8 tables found
-            # 2000/2000 in 13s on the same data. bits targets ~8
-            # rows/bucket; tables from the standard hyperplane-LSH recall
-            # bound (p = 1 - acos(threshold)/pi per bit) for a pair AT the
-            # threshold. Costs one count() of the input — parameter
-            # choice, not plan replay, so the adaptive-count objection to
-            # impl switching (NOTES.md) doesn't apply.
-            import math
-
-            n = df.count()
-            p = 1 - math.acos(max(-1.0, min(1.0, threshold))) / math.pi
-            auto_bits = min(18, max(8, math.ceil(math.log2(max(n, 16) / 8))))
-            pt = p ** auto_bits
-            auto_tables = (
-                1 if pt >= 1.0
-                else min(config.get("max_tables", 8),
-                         max(1, math.ceil(math.log(0.05) / math.log(1 - pt))))
-            )
-            n_bits = n_bits if n_bits is not None else auto_bits
-            n_tables = n_tables if n_tables is not None else auto_tables
-        base = base.persist()  # bucket explode + vector verify both read it
-        caches.append(base)
         from ssis_to_pyspark_agent_spark.operators.similarity import (
-            _bucket_frame,
+            _cos_pairs,
+            _vecnorm,
         )
 
-        bucketed = _bucket_frame(
-            base, "_id", "_v", dim, n_tables, n_bits, config.get("seed", 42)
-        )
-        # returned persisted and counted (bucketed is uncached, so
-        # `_bucket_pairs` auto-persists); released with `caches`
-        ids = _bucket_pairs(bucketed, ["_table", "_bucket"], _BUCKET_CAP)
-        caches.append(ids)
-        cand = ids.join(
-            base.select(F.col("_id").alias("a"), F.col("_v").alias("va")), "a"
-        ).join(base.select(F.col("_id").alias("b"), F.col("_v").alias("vb")), "b")
+        cap = config.get("brute_force_cap", 100_000)
+        rows = base.limit(cap + 1).collect()
+        if len(rows) > cap:
+            raise ValueError(
+                f"dedup.embedding brute_force is the exact small-input "
+                f"baseline and is capped at {cap} rows (override with "
+                f"brute_force_cap). For larger corpora drop brute_force "
+                f"and use the hyperplane-LSH candidate path, which "
+                f"bucket-joins instead of materializing all pairs."
+            )
+        quant = config.get("quantize")
+        all_ids = np.asarray([r["_id"] for r in rows])
+        full = _vecnorm([r["_v"] for r in rows], quant) if rows else None
+
+        def gen(batches):
+            for pdf in batches:
+                if len(pdf):
+                    yield _cos_pairs(
+                        pdf["_id"].to_numpy(), _vecnorm(pdf["_v"], quant),
+                        all_ids, full, threshold,
+                    )
+
+        id_t = base.schema["_id"].dataType.simpleString()
+        pairs = base.mapInPandas(gen, schema=f"a {id_t}, b {id_t}, cosine double")
+        out = _keep_min_survivors(df, id_col, pairs)
+        if config.get("return_pairs"):
+            return {"out": out, "pairs": pairs}
+        return out
+
     from ssis_to_pyspark_agent_spark.operators.similarity import (
+        _bucket_frame,
         _pair_cosine_frame,
     )
 
+    dim = config.get("dim") or len(base.select("_v").first()["_v"])
+    n_bits, n_tables = config.get("lsh_bits"), config.get("lsh_tables")
+    if n_bits is None or n_tables is None:
+        # Auto-size to the corpus: fixed bits are a silent recall/cost
+        # trap — 8 bits over 200k vectors put ~780 rows in each of 256
+        # buckets, so the bucket cap truncated candidate generation to
+        # 4/2000 planted dups found in 69s; 16 bits / 8 tables found
+        # 2000/2000 in 13s on the same data. bits targets ~8
+        # rows/bucket; tables from the standard hyperplane-LSH recall
+        # bound (p = 1 - acos(threshold)/pi per bit) for a pair AT the
+        # threshold. Costs one count() of the input — parameter
+        # choice, not plan replay, so the adaptive-count objection to
+        # impl switching (NOTES.md) doesn't apply.
+        import math
+
+        n = df.count()
+        p = 1 - math.acos(max(-1.0, min(1.0, threshold))) / math.pi
+        auto_bits = min(18, max(8, math.ceil(math.log2(max(n, 16) / 8))))
+        pt = p ** auto_bits
+        auto_tables = (
+            1 if pt >= 1.0
+            else min(config.get("max_tables", 8),
+                     max(1, math.ceil(math.log(0.05) / math.log(1 - pt))))
+        )
+        n_bits = n_bits if n_bits is not None else auto_bits
+        n_tables = n_tables if n_tables is not None else auto_tables
+    base = base.persist()  # bucket explode + vector verify both read it
+    bucketed = _bucket_frame(
+        base, "_id", "_v", dim, n_tables, n_bits, config.get("seed", 42)
+    )
+    # returned persisted and counted (bucketed is uncached, so
+    # `_bucket_pairs` auto-persists); released after the verify
+    ids = _bucket_pairs(bucketed, ["_table", "_bucket"], _BUCKET_CAP)
+    cand = ids.join(
+        base.select(F.col("_id").alias("a"), F.col("_v").alias("va")), "a"
+    ).join(base.select(F.col("_id").alias("b"), F.col("_v").alias("vb")), "b")
     pairs = _pair_cosine_frame(
         cand, "va", "vb", ["a", "b"], config.get("quantize")
     ).filter(F.col("cosine") >= threshold)
     # materialize the verified pairs once (two consumers), then release
-    # the LSH branch's corpus-sized caches — previously `base` and `ids`
-    # stayed cached after every invocation
+    # the corpus-sized caches
     pairs = pairs.persist()
     pairs.count()
-    for cached in caches:
-        cached.unpersist()
+    base.unpersist()
+    ids.unpersist()
     out = _keep_min_survivors(df, id_col, pairs)
     if config.get("return_pairs"):
         return {"out": out, "pairs": pairs}
@@ -2751,11 +2704,12 @@ def dedup_semantic(spark: SparkSession, inputs, config, context):
 
     Scale plan: assignment is one numpy matmul per Arrow batch
     (_ivf_assign_frame); the only shuffles move (id, vector) rows into
-    their cluster for the self-join — payload vectors shuffle ONCE, and
-    at 100 TB the assigned corpus would be written partitioned by
-    cluster and amortized. ``cluster_cap`` (default 200k) fails fast on
-    a degenerate cluster whose self-join would explode; re-cluster with
-    more centroids instead of silently burning a quadratic.
+    their cluster for the verify — blocked numpy cosine per cluster
+    (`_cos_pairs`). Payload vectors shuffle ONCE, and at 100 TB the assigned
+    corpus would be written partitioned by cluster and amortized.
+    ``cluster_cap`` (default 200k) fails fast on a degenerate cluster
+    whose verify would be quadratic; re-cluster with more centroids
+    instead of silently burning a quadratic.
 
     Output: survivors (+ 'pairs' (a, b, cosine, cluster) and
     'assignments' (id, cluster) ports when requested).
@@ -2764,12 +2718,11 @@ def dedup_semantic(spark: SparkSession, inputs, config, context):
     data_engineering_parser.py:1114) — NEW per SURVEY §2.12.
     """
     from ssis_to_pyspark_agent_spark.operators.similarity import (
+        _cos_pairs,
         _cosine,
         _ivf_assign_frame,
         _kmeans_centroids,
-    )
-    from ssis_to_pyspark_agent_spark.operators.similarity import (
-        _pair_cosine_frame,
+        _vecnorm,
     )
 
     df: DataFrame = inputs[0]
@@ -2914,101 +2867,22 @@ def dedup_semantic(spark: SparkSession, inputs, config, context):
             f"raise cluster_cap explicitly."
         )
 
-    # within-cluster pairs. Default ('bucket', quantized): groupBy
-    # cluster + applyInPandas — each vector ships into its cluster ONCE
-    # and the |c| x |c| cosine matrix runs as blocked BLAS, emitting
-    # only over-threshold pairs. The 'join' impl self-joins on cluster
-    # id: it materializes every candidate pair ROW (two vectors each)
-    # before scoring, which measured 3x slower at 505k x 512-cluster
-    # scale — kept for cross-checks and for clusters too fat to score
-    # blockwise. Values are identical: both round through _half_up and
-    # run the same IEEE dot/(sqrt*sqrt).
-    verify_impl = config.get(
-        "verify_impl", "bucket" if quantize else "join"
+    # within-cluster pairs: groupBy cluster + applyInPandas — each vector
+    # ships into its cluster ONCE and `_cos_pairs` scores the |c| x |c|
+    # cosine matrix as blocked BLAS, emitting only over-threshold pairs
+    # (a pair self-join materializes every candidate pair ROW with two
+    # vectors each: measured 3x slower at 505k x 512-cluster scale)
+    def cluster_pairs(key, pdf):
+        ids = pdf["_id"].to_numpy()
+        m = _vecnorm(pdf["_v"], quantize)
+        out = _cos_pairs(ids, m, ids, m, threshold)
+        out["cluster"] = key[0]
+        return out
+
+    pairs = ver.groupBy("_cid").applyInPandas(
+        cluster_pairs,
+        schema=f"a {id_type}, b {id_type}, cosine double, cluster int",
     )
-    if verify_impl == "bucket" and not quantize:
-        # the blocked kernel claims value-identity with the expr cosine,
-        # which only holds in quantized integer space — fail fast
-        # instead of silently running the 3x-slower join
-        raise ValueError(
-            "dedup.semantic verify_impl='bucket' requires `quantize` "
-            "(unquantized float summation order differs between numpy "
-            "and Catalyst in the last ulp) — set quantize, or use "
-            "verify_impl='join'"
-        )
-    if verify_impl == "bucket":
-        import numpy as np
-        import pandas as pd
-
-        from ssis_to_pyspark_agent_spark.operators.similarity import (
-            _half_up,
-            _vecmat,
-        )
-
-        def cluster_pairs(key, pdf):
-            n = len(pdf)
-            if n < 2:
-                return pd.DataFrame(
-                    {"a": [], "b": [], "cosine": [], "cluster": []}
-                )
-            ids = pdf["_id"].to_numpy()
-            m = _half_up(_vecmat(pdf["_v"]), quantize)
-            norms = np.sqrt((m * m).sum(axis=1))
-            outs = []
-            block = 2048
-            for s in range(0, n, block):
-                e = min(s + block, n)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = (m[s:e] @ m.T) / (
-                        norms[s:e, None] * norms[None, :]
-                    )
-                bi, bj = np.nonzero(cos >= threshold)
-                gi = bi + s
-                # upper triangle in row order, AND distinct ids: a
-                # duplicated id would otherwise emit a self-pair
-                # (a == b) that the survivor anti-join interprets as
-                # "drop this id entirely" — the join impl's a < b
-                # filter excludes those, and the two impls must agree
-                keep_m = (gi < bj) & (ids[gi] != ids[bj])
-                gi, bj = gi[keep_m], bj[keep_m]
-                if len(gi):
-                    ia, ib = ids[gi], ids[bj]
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "a": np.minimum(ia, ib),
-                                "b": np.maximum(ia, ib),
-                                "cosine": cos[bi[keep_m], bj],
-                                "cluster": key[0],
-                            }
-                        )
-                    )
-            if not outs:
-                return pd.DataFrame(
-                    {"a": [], "b": [], "cosine": [], "cluster": []}
-                )
-            return pd.concat(outs, ignore_index=True)
-
-        pairs = ver.groupBy("_cid").applyInPandas(
-            cluster_pairs,
-            schema=f"a {id_type}, b {id_type}, cosine double, cluster int",
-        )
-    else:
-        left = ver.select(
-            F.col("_cid"), F.col("_id").alias("a"), F.col("_v").alias("_va")
-        )
-        right = ver.select(
-            F.col("_cid"), F.col("_id").alias("b"), F.col("_v").alias("_vb")
-        )
-        cand = left.join(right, "_cid").filter(F.col("a") < F.col("b"))
-        pairs = (
-            _pair_cosine_frame(
-                cand, "_va", "_vb", ["_cid", "a", "b"], quantize
-            )
-            .filter(F.col("cosine") >= threshold)
-            .withColumnRenamed("_cid", "cluster")
-            .select("a", "b", "cosine", "cluster")
-        )
     if nprobe > 1:
         # a pair sharing BOTH of its nprobe clusters is found twice with
         # the identical quantized cosine — collapse deterministically

@@ -1,18 +1,22 @@
 """Similarity search over embedding columns (SURVEY §2.12 — NEW).
 
 Approximate-nearest-neighbor over ``array<float>``:
-- ``similarity.topk_bruteforce`` — exact cosine top-k (broadcast the query
-  set, one pass over the corpus, per-group heap via window). The baseline
-  and the verifier for the approximate paths.
+- ``similarity.topk_bruteforce`` — exact cosine top-k (collect the query
+  batch, one pass over the corpus, per-group heap via window). The
+  baseline and the verifier for the approximate paths.
 - ``similarity.topk_lsh`` — random-hyperplane LSH buckets (the scale path:
   probes only matching buckets; recall tuned by tables x bits).
 - ``similarity.topk_ivf`` — IVF-style coarse quantizer: corpus assigned to
   nearest of C centroids (one broadcast pass), queries probe the nprobe
   nearest centroid lists only.
 
-All dot products are ``F.zip_with`` + ``F.aggregate`` — JVM-side, codegen,
-no Python in the loop. The reference has no vector surface at all; its
-nearest concept is Fuzzy Lookup (data_engineering_parser.py:1204-1207).
+Every numpy cosine (these operators, dedup.embedding's brute force and
+dedup.semantic's cluster verify) is scored by one kernel: `_vecnorm`
+reads and quantizes the vectors, `_cos` finishes dot/(|a|*|b|) with the
+IEEE ops of the `_cosine` expression, which remains for the unquantized
+float paths and the oracle-side rank keys. The reference has no vector
+surface at all; its nearest concept is Fuzzy Lookup
+(data_engineering_parser.py:1204-1207).
 """
 
 from __future__ import annotations
@@ -212,89 +216,49 @@ def _topk(scored: DataFrame, query_id: str, k: int) -> DataFrame:
 @operator("similarity.topk_bruteforce")
 def topk_bruteforce(spark: SparkSession, inputs, config, context) -> DataFrame:
     """inputs: [corpus, queries]; config: id_col, vec_col, query_id_col,
-    query_vec_col, k. Queries are broadcast (a query batch is dimension-
-    sized); corpus streams through once — the right exact plan at any scale.
-    Output: (query_id, corpus_id, cosine, rank).
+    query_vec_col, k, quantize. The query batch is collected (it is
+    dimension-sized by construction); the corpus streams through once in
+    Arrow batches, each scored against the whole query matrix by one
+    BLAS matmul (`_cos`) — measured ~2.4x a per-pair Catalyst cosine
+    fold at 50k x 64 x 50. With `quantize` the values are bit-identical
+    to the `_cosine` expression (oracle-exact). A zero vector scores
+    null and ranks last. Output: (query_id, corpus_id, cosine, rank)."""
+    import numpy as np
+    import pandas as pd
 
-    method='expr' (default): JVM-side zip_with/aggregate dot products —
-    codegen'd, oracle-exact with `quantize`.
-    method='pandas': numpy matmul per Arrow batch (corpus-batch x query
-    matrix) — one BLAS call scores a whole batch against all queries;
-    wins once |queries| x dim is non-trivial (measured ~3x at 2k x 64 x 50,
-    growing with batch size)."""
     from ssis_to_pyspark_agent_spark.operators.dedup import _spread
 
     corpus, queries = inputs[0], inputs[1]
     qid = config.get("query_id_col", "query_id")
     qv = config.get("query_vec_col", config["vec_col"])
-    k = config.get("k", 10)
-    pandas = config.get("method", "expr") == "pandas"
-    c = _spread(spark, corpus, by_bytes=pandas).select(
+    quant = config.get("quantize")
+    c = _spread(spark, corpus, by_bytes=True).select(
         F.col(config["id_col"]).alias("corpus_id"), F.col(config["vec_col"]).alias("_cv")
     )
+    q = queries.select(F.col(qid).alias("query_id"), F.col(qv).alias("_qv"))
+    q_rows = q.collect()
+    q_ids = np.asarray([r.query_id for r in q_rows])
+    qm = _vecnorm([r._qv for r in q_rows], quant) if q_rows else None
 
-    if pandas:
-        import numpy as np
-        import pandas as pd
+    def score(batches):
+        for pdf in batches:
+            if qm is None or not len(pdf):
+                continue
+            yield pd.DataFrame(
+                {
+                    "corpus_id": np.repeat(pdf["corpus_id"].values, len(q_ids)),
+                    "query_id": np.tile(q_ids, len(pdf)),
+                    "cosine": _cos(_vecnorm(pdf["_cv"], quant), qm).ravel(),
+                }
+            )
 
-        quant = config.get("quantize")
-        q_rows = queries.select(
-            F.col(qid).alias("query_id"), F.col(qv).alias("_qv")
-        ).collect()  # a query batch is small by construction
-        q_ids = [r.query_id for r in q_rows]
-        qm = np.array([list(r._qv) for r in q_rows], dtype=np.float64)
-
-        def _qint(m):
-            # bit-equality with the expr path is pinned by
-            # test_pandas_quantized_matches_expr on the driver's actual
-            # embeddings tables (see _half_up for the rounding contract)
-            return _half_up(m, quant).astype(np.int64)
-
-        if quant:
-            qmi = _qint(qm)  # int64: dot/norm sums are exact, like the oracle
-            q_norm = np.sqrt((qmi * qmi).sum(axis=1).astype(np.float64))
-        else:
-            qm_n = qm / np.linalg.norm(qm, axis=1, keepdims=True)
-
-        def score(it):
-            for pdf in it:
-                cm = np.array(list(map(list, pdf["_cv"])), dtype=np.float64)
-                if quant:
-                    cmi = _qint(cm)
-                    c_norm = np.sqrt((cmi * cmi).sum(axis=1).astype(np.float64))
-                    dots = (cmi @ qmi.T).astype(np.float64)
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        # same IEEE ops in the same order as the expr path
-                        # (dot / (sqrt(na)*sqrt(nb))) — no epsilon guard, so
-                        # zero vectors give the identical Inf/NaN
-                        sims = dots / (c_norm[:, None] * q_norm[None, :])
-                else:
-                    cm_n = cm / np.maximum(
-                        np.linalg.norm(cm, axis=1, keepdims=True), 1e-12
-                    )
-                    sims = cm_n @ qm_n.T  # |batch| x |queries|, one BLAS call
-                out = pd.DataFrame(
-                    {
-                        "corpus_id": np.repeat(pdf["corpus_id"].values, len(q_ids)),
-                        "query_id": np.tile(q_ids, len(pdf)),
-                        "cosine": sims.ravel(),
-                    }
-                )
-                yield out
-
-        scored = c.mapInPandas(
-            score, schema="corpus_id long, query_id long, cosine double"
-        )
-    else:
-        q = F.broadcast(
-            queries.select(F.col(qid).alias("query_id"), F.col(qv).alias("_qv"))
-        )
-        scored = c.crossJoin(q).select(
-            "query_id",
-            "corpus_id",
-            _cosine(F.col("_cv"), F.col("_qv"), config.get("quantize")).alias("cosine"),
-        )
-    return _topk(scored, "query_id", k).select(
+    types = {f.name: f.dataType.simpleString() for f in (*c.schema, *q.schema)}
+    scored = c.mapInPandas(
+        score,
+        schema=f"corpus_id {types['corpus_id']}, query_id {types['query_id']}, "
+        "cosine double",
+    )
+    return _topk(scored, "query_id", config.get("k", 10)).select(
         "query_id", "corpus_id", "cosine", "rank"
     )
 
@@ -369,13 +333,12 @@ def _pair_cosine_frame(
     quantize: int | None,
 ) -> DataFrame:
     """Project `keep` columns plus a rowwise `cosine` between two vector
-    columns. With `quantize`, runs as Arrow batches (one einsum per batch
-    instead of an interpreted 3-fold Catalyst expression per row) —
-    value-identical to `_cosine(a, b, quantize)`: quantized dots/norms
-    are exact integer arithmetic in float64 (< 2^53, so summation order
-    is irrelevant) and the final dot/(sqrt*sqrt) is the same IEEE ops;
-    zero vectors give the identical NaN. Without quantize, falls back to
-    the expression (float fold order would differ in the last ulp).
+    columns. With `quantize`, runs as Arrow batches (a rowwise numpy
+    dot over `_vecnorm` outputs instead of an interpreted 3-fold
+    Catalyst expression per row) — value-identical to
+    `_cosine(a, b, quantize)`. Without quantize,
+    falls back to the expression (float fold order would differ in the
+    last ulp).
 
     Candidate-verify stages are where ANN/dedup time actually goes at
     scale (candidates >> rows); measured 37s -> 11s on a 500k-vector IVF
@@ -391,9 +354,6 @@ def _pair_cosine_frame(
         f"{c} {df.schema[c].dataType.simpleString()}" for c in keep
     )
 
-    def _qm(col):
-        return _half_up(_vecmat(col), quantize)
-
     def gen(batches):
         for pdf in batches:
             out = pdf[list(keep)].copy()
@@ -401,12 +361,12 @@ def _pair_cosine_frame(
                 out["cosine"] = pd.Series(dtype="float64")
                 yield out
                 continue
-            a, b = _qm(pdf[vec_a]), _qm(pdf[vec_b])
-            dots = np.einsum("ij,ij->i", a, b)
-            na = np.sqrt(np.einsum("ij,ij->i", a, a))
-            nb = np.sqrt(np.einsum("ij,ij->i", b, b))
+            (ma, na), (mb, nb) = (
+                _vecnorm(pdf[vec_a], quantize), _vecnorm(pdf[vec_b], quantize)
+            )
+            # rowwise finish with `_cos`'s IEEE ops (a zero vector -> null)
             with np.errstate(divide="ignore", invalid="ignore"):
-                out["cosine"] = dots / (na * nb)
+                out["cosine"] = np.einsum("ij,ij->i", ma, mb) / (na * nb)
             yield out
 
     return df.mapInPandas(gen, schema=f"{fields}, cosine double")
@@ -425,16 +385,65 @@ def _half_up(m, quantize: int):
 
 
 def _vecmat(col) -> "object":
-    """pandas Series of Arrow list cells -> (n, dim) float64 matrix.
-    Cells arrive as numpy arrays from Arrow — np.stack avoids the
-    per-element Python list conversion (the measured bottleneck on
-    multi-million-row scoring batches)."""
+    """Vector cells (a pandas Series of Arrow list cells, or collected
+    lists) -> (n, dim) float64 matrix. Arrow cells arrive as numpy
+    arrays — np.stack avoids the per-element Python list conversion
+    (the measured bottleneck on multi-million-row scoring batches)."""
     import numpy as np
 
     try:
-        return np.stack(col.to_numpy()).astype(np.float64)
+        return np.stack(list(col)).astype(np.float64)
     except ValueError:  # ragged / object cells — slow path
         return np.array(list(map(list, col)), dtype=np.float64)
+
+
+def _vecnorm(col, quantize: int | None):
+    """(matrix, row norms) of vector cells: the input of `_cos`, the one
+    numpy cosine kernel. With `quantize` the matrix is `_half_up`-rounded,
+    so dots and squared norms are exact integer sums in float64 (< 2^53:
+    BLAS summation order cannot change them)."""
+    import numpy as np
+
+    m = _vecmat(col)
+    if quantize:
+        m = _half_up(m, quantize)
+    return m, np.sqrt((m * m).sum(axis=1))
+
+
+def _cos(a, b):
+    """|a| x |b| cosine matrix of `_vecnorm` outputs (one BLAS matmul).
+    The finish is dot / (sqrt(na) * sqrt(nb)), the IEEE ops of
+    `_cosine(..., quantize)`, so quantized values are bit-identical to
+    the expression. A zero vector scores NaN, which leaves Arrow as
+    null: it ranks last and passes no threshold."""
+    import numpy as np
+
+    (ma, na), (mb, nb) = a, b
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return (ma @ mb.T) / (na[:, None] * nb[None, :])
+
+
+def _cos_pairs(ids, a, all_ids, b, threshold: float):
+    """(a, b, cosine) pandas frame of every row pair of `a` x `b` with
+    id a < id b and cosine >= threshold — each unordered pair of
+    distinct ids once when the rows of `a` are rows of `b`; a
+    duplicated id never pairs with itself (the survivor anti-join would
+    read (x, x) as "drop x"). `a`, `b` are `_vecnorm`
+    outputs; scored in blocks of 2048 rows of `a`, so the score matrix
+    stays bounded. Shared by dedup.embedding's brute force and
+    dedup.semantic's cluster verify."""
+    import numpy as np
+    import pandas as pd
+
+    (ma, na), outs = a, []
+    for s in range(0, len(ids), 2048):
+        blk = ids[s:s + 2048]
+        cos = _cos((ma[s:s + 2048], na[s:s + 2048]), b)
+        i, j = np.nonzero((cos >= threshold) & (blk[:, None] < all_ids[None, :]))
+        outs.append(pd.DataFrame({"a": blk[i], "b": all_ids[j], "cosine": cos[i, j]}))
+    if not outs:
+        return pd.DataFrame({"a": ids, "b": ids, "cosine": np.zeros(0)})
+    return pd.concat(outs, ignore_index=True)
 
 
 def _ivf_score_frame(
@@ -452,9 +461,8 @@ def _ivf_score_frame(
     is one BLAS matmul. Replaces a candidate join whose per-pair vector
     transfer dominated (measured 47s -> ~4s on 6.3M candidate pairs).
 
-    `q_rows`: collected (query_id, _qv, _cids array) rows. Quantized
-    cosine values are identical to `_cosine(...)` (exact ints + same
-    IEEE finish)."""
+    `q_rows`: collected (query_id, _qv, _cids array) rows. Scored by
+    `_cos`: values identical to `_cosine(..., quantize)`."""
     import numpy as np
     import pandas as pd
 
@@ -462,14 +470,11 @@ def _ivf_score_frame(
     for r in q_rows:
         for cid in r["_cids"]:
             qmap.setdefault(int(cid), []).append(r)
-    packed = {}
-    for cid, rows in qmap.items():
-        qm = _half_up([list(r["_qv"]) for r in rows], quantize)
-        packed[cid] = (
-            np.asarray([r["query_id"] for r in rows]),
-            qm,
-            np.sqrt((qm * qm).sum(axis=1)),
-        )
+    packed = {
+        cid: (np.asarray([r["query_id"] for r in rows]),
+              _vecnorm([r["_qv"] for r in rows], quantize))
+        for cid, rows in qmap.items()
+    }
 
     def gen(batches):
         for pdf in batches:
@@ -480,8 +485,7 @@ def _ivf_score_frame(
                      "cosine": pd.Series(dtype="float64")}
                 )
                 continue
-            v = _half_up(_vecmat(pdf["_cv"]), quantize)
-            vnorm = np.sqrt((v * v).sum(axis=1))
+            v, vnorm = _vecnorm(pdf["_cv"], quantize)
             ids = pdf["corpus_id"].to_numpy()
             cids = pdf["_cid"].to_numpy()
             outs = []
@@ -489,11 +493,9 @@ def _ivf_score_frame(
                 hit = packed.get(int(cid))
                 if hit is None:
                     continue
-                qids, qm, qnorm = hit
+                qids, qm = hit
                 idx = np.nonzero(cids == cid)[0]
-                dots = v[idx] @ qm.T
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = dots / (vnorm[idx, None] * qnorm[None, :])
+                cos = _cos((v[idx], vnorm[idx]), qm)
                 outs.append(pd.DataFrame({
                     "query_id": np.tile(qids, len(idx)),
                     "corpus_id": np.repeat(ids[idx], len(qids)),
@@ -524,18 +526,15 @@ def _ivf_assign_frame(
     quantized cosine, ties broken by ascending centroid id. Arrow-batched
     numpy: one matmul per batch against the (C x dim) centroid matrix.
 
-    Value-identical to the `_cosine(vec, cent, quantize)` expr ranking:
-    quantized dots/norms are exact integer arithmetic in float64 (< 2^53),
-    and the final dot/(sqrt*sqrt) runs the same IEEE ops; NaN (zero
-    vector) sorts last in both np.argsort and array_sort-on-negated
-    struct. Replaces a per-row interpreted expression that re-quantized
+    Scored by `_cos`, so the ranking equals the `_cosine(vec, cent,
+    quantize)` expression's; NaN (zero vector) sorts last in both
+    np.argsort and array_sort-on-negated struct. Replaces a per-row interpreted expression that re-quantized
     the vector and recomputed its norm once PER CENTROID (measured 4.1s
     -> 0.4s warm on 2k rows x 16 centroids, identical assignment)."""
     import numpy as np
     import pandas as pd
 
-    cm = _half_up(cents, quantize)
-    cent_norm = np.sqrt((cm * cm).sum(axis=1))
+    cm = _vecnorm(cents, quantize)
     id_type = df.schema[id_name].dataType.simpleString()
     vec_type = df.schema[vec_name].dataType.simpleString()
 
@@ -547,10 +546,7 @@ def _ivf_assign_frame(
                      "_cids": []}
                 )
                 continue
-            vq = _half_up(_vecmat(pdf[vec_name]), quantize)
-            vnorm = np.sqrt((vq * vq).sum(axis=1))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = (vq @ cm.T) / (vnorm[:, None] * cent_norm[None, :])
+            cos = _cos(_vecnorm(pdf[vec_name], quantize), cm)
             order = np.argsort(-cos, axis=1, kind="stable")[:, :n]
             yield pd.DataFrame(
                 {id_name: pdf[id_name], vec_name: pdf[vec_name],

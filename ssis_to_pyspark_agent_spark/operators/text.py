@@ -553,13 +553,12 @@ def repetition(spark: SparkSession, inputs, config, context) -> DataFrame:
       covered by occurrences of n-grams appearing >= 2 times, over the
       normalized text length
 
-    Scale design: line stats are pure array expressions (no shuffle).
-    N-gram stats explode (id, n, gram) ONCE across all n values and run
-    one groupBy chain — shuffle volume is tokens x |ns|, the same class
-    as text.decontaminate. Most-frequent-gram ties don't matter: only
-    count*len(gram) aggregates leave the groupBy. Denominator is the
-    normalized text length, so the fractions are engine-reproducible with
-    one integer division per column (exact-oracle-friendly: no float
+    Scale design: zero shuffle. Line stats are pure array expressions;
+    n-gram stats sort each document's gram array and fold over the runs
+    of equal grams. Most-frequent-gram ties don't matter: only
+    count*len(gram) masses leave the fold. Denominator is the normalized
+    text length, so the fractions are engine-reproducible with one
+    integer division per column (exact-oracle-friendly: no float
     accumulation anywhere).
 
     Definitions follow the Gopher paper's intent but are pinned exactly
@@ -567,7 +566,6 @@ def repetition(spark: SparkSession, inputs, config, context) -> DataFrame:
     here count chars multiplicatively, overlaps uncollapsed).
     """
     df: DataFrame = inputs[0]
-    id_col = config["id_col"]
     text_col = config["text_col"]
     top_ns = list(config.get("top_ns", [2, 3, 4]))
     dup_ns = list(config.get("dup_ns", [5, 10]))
@@ -595,9 +593,6 @@ def repetition(spark: SparkSession, inputs, config, context) -> DataFrame:
         }
     )
 
-    ns = sorted(set(top_ns) | set(dup_ns))
-    if not ns:
-        return out
     norm_len = F.length(_norm_text(c))
     den = F.greatest(norm_len, F.lit(1)).cast("double")
 
@@ -615,100 +610,48 @@ def repetition(spark: SparkSession, inputs, config, context) -> DataFrame:
             ),
         )
 
-    if config.get("impl", "fold") == "fold":
-        # ---- default: ZERO-shuffle per-doc sorted-run fold. Sorting the
-        # gram multiset groups equal grams into adjacent runs; one
-        # aggregate fold walks the runs and keeps (current-run length,
-        # best mass, duplicate mass). The explode implementation below
-        # shuffles every token of the corpus ((id, n, gram) rows through
-        # two groupBys) — measured 443s for 2M x 80-word docs vs 119s
-        # for this fold (and the fold's work scales per-executor with no
-        # shuffle at all); identical values (equality pinned by test).
-        def run_fold(garr: Column, kind: str) -> Column:
-            sg = F.array_sort(garr)
-            init = F.struct(
-                F.lit(None).cast("string").alias("prev"),
-                F.lit(0).cast("long").alias("run"),
-                F.lit(0).cast("long").alias("acc"),
+    # ---- ZERO-shuffle per-doc sorted-run fold. Sorting the gram
+    # multiset groups equal grams into adjacent runs; one aggregate fold
+    # walks the runs and keeps (current-run length, best mass, duplicate
+    # mass). An explode + two-groupBy formulation shuffles every token of
+    # the corpus: measured 443s for 2M x 80-word docs vs 119s for this
+    # fold, which scales per-executor with no shuffle at all.
+    def run_fold(garr: Column, kind: str) -> Column:
+        sg = F.array_sort(garr)
+        init = F.struct(
+            F.lit(None).cast("string").alias("prev"),
+            F.lit(0).cast("long").alias("run"),
+            F.lit(0).cast("long").alias("acc"),
+        )
+
+        def flush(a: Column) -> Column:
+            mass = a["run"] * F.length(a["prev"])
+            if kind == "top":
+                return F.greatest(a["acc"], mass)  # greatest skips null
+            return a["acc"] + F.when(a["run"] >= 2, mass).otherwise(0)
+
+        def step(a: Column, x: Column) -> Column:
+            same = F.coalesce(a["prev"] == x, F.lit(False))
+            return F.struct(
+                x.alias("prev"),
+                F.when(same, a["run"] + 1).otherwise(F.lit(1)).alias("run"),
+                F.when(same, a["acc"]).otherwise(flush(a)).alias("acc"),
             )
 
-            def flush(a: Column) -> Column:
-                mass = a["run"] * F.length(a["prev"])
-                if kind == "top":
-                    return F.greatest(a["acc"], mass)  # greatest skips null
-                return a["acc"] + F.when(a["run"] >= 2, mass).otherwise(0)
+        return F.aggregate(sg, init, step, flush)
 
-            def step(a: Column, x: Column) -> Column:
-                same = F.coalesce(a["prev"] == x, F.lit(False))
-                return F.struct(
-                    x.alias("prev"),
-                    F.when(same, a["run"] + 1).otherwise(F.lit(1)).alias("run"),
-                    F.when(same, a["acc"]).otherwise(flush(a)).alias("acc"),
-                )
-
-            return F.aggregate(sg, init, step, flush)
-
-        fracs = {}
-        for n in top_ns:
-            fracs[f"top_{n}gram_char_frac"] = (
-                F.coalesce(run_fold(grams_arr(n), "top"), F.lit(0)).cast("double")
-                / den
-            )
-        for n in dup_ns:
-            fracs[f"dup_{n}gram_char_frac"] = (
-                F.coalesce(run_fold(grams_arr(n), "dup"), F.lit(0)).cast("double")
-                / den
-            )
-        return out.withColumns(fracs)
-
-    # ---- impl='explode': one explode over all n, one groupBy chain.
-    # Kept as the cross-check implementation (mirrors the oracle SQL
-    # shape 1:1) — not the scale path.
-    def _tag(n: int):
-        # NOT `lambda g, n=n: ...` — a two-parameter lambda makes
-        # F.transform pass the element INDEX as the second argument,
-        # silently overriding the default (measured: every gram tagged
-        # with its position instead of its n)
-        def f(g: Column) -> Column:
-            return F.struct(F.lit(n).alias("n"), g.alias("g"))
-
-        return f
-
-    ex = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(
-            F.flatten(F.array(*[F.transform(grams_arr(n), _tag(n)) for n in ns]))
-        ).alias("_g"),
-    ).select("_id", F.col("_g.n").alias("_n"), F.col("_g.g").alias("_gram"))
-    cnt = ex.groupBy("_id", "_n", "_gram").agg(F.count(F.lit(1)).alias("_c"))
-    mass = F.col("_c") * F.length("_gram")
-    stats = cnt.groupBy("_id").agg(
-        *[
-            F.max(F.when(F.col("_n") == n, mass)).alias(f"_top{n}")
-            for n in top_ns
-        ],
-        *[
-            F.sum(
-                F.when((F.col("_n") == n) & (F.col("_c") >= 2), mass).otherwise(0)
-            ).alias(f"_dup{n}")
-            for n in dup_ns
-        ],
-    )
-    out = out.join(
-        stats.withColumnRenamed("_id", id_col), id_col, "left"
-    )
     fracs = {}
     for n in top_ns:
         fracs[f"top_{n}gram_char_frac"] = (
-            F.coalesce(F.col(f"_top{n}"), F.lit(0)).cast("double") / den
+            F.coalesce(run_fold(grams_arr(n), "top"), F.lit(0)).cast("double")
+            / den
         )
     for n in dup_ns:
         fracs[f"dup_{n}gram_char_frac"] = (
-            F.coalesce(F.col(f"_dup{n}"), F.lit(0)).cast("double") / den
+            F.coalesce(run_fold(grams_arr(n), "dup"), F.lit(0)).cast("double")
+            / den
         )
-    return out.withColumns(fracs).drop(
-        *[f"_top{n}" for n in top_ns], *[f"_dup{n}" for n in dup_ns]
-    )
+    return out.withColumns(fracs)
 
 
 @operator("text.line_dedup")

@@ -13,9 +13,10 @@ topo-sort over step input edges, with:
   default port (``"out"`` or its only port);
 - **fan-out persistence** (Multicast semantics): when a step's output feeds
   >1 downstream *actions*, the reference emits ``df.cache()``
-  (``enhanced_json_mapper.py:270-277``). We persist only when the plan fans
-  out AND more than one sink/action consumes it, and unpersist at the end of
-  the run — at 100 TB an unneeded cache is a regression, not an optimization.
+  (``enhanced_json_mapper.py:270-277``). We persist each distinct frame of a
+  step with more than one consumer once, into the run's one cache ledger
+  (context ``'_op_persists'``), which ``RunResult.release_caches()`` frees —
+  at 100 TB an unneeded cache is a regression, not an optimization.
 
 Everything between sources and sinks stays a lazy Catalyst plan; the runner
 never calls an action unless an operator explicitly asks (row_count uses
@@ -25,9 +26,10 @@ never calls an action unless an operator explicitly asks (row_count uses
 from __future__ import annotations
 
 from collections import defaultdict, deque
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 from ssis_to_pyspark_agent_spark.operators import get_operator
@@ -45,21 +47,23 @@ class RunResult:
         step, _, port = ref.partition(".")
         ports = self.outputs[step]
         if port:
+            if port not in ports:
+                raise KeyError(f"step {step!r} has no port {port!r} (has {sorted(ports)})")
             return ports[port]
         if "out" in ports:
             return ports["out"]
         if len(ports) == 1:
             return next(iter(ports.values()))
-        raise KeyError(f"step {step!r} has ports {sorted(ports)}; qualify the ref")
+        raise KeyError(f"ambiguous ref {ref!r}: ports {sorted(ports)}")
 
     def release_caches(self) -> None:
-        """Unpersist operator-registered caches (context '_op_persists',
-        e.g. a persisted conditional-split route frame). Call once the
-        run's outputs are materialized or recomputable-cheaply — the
-        lazy port frames stay CORRECT afterwards (a cache is only a
-        cache), they just recompute on the next action. NOTES invariant
-        13: nothing should leave an untracked corpus-sized persist
-        behind."""
+        """Unpersist the run's caches (context '_op_persists'): the
+        runner's fan-out persists and operator-registered ones, e.g. a
+        persisted conditional-split route frame. Call once the run's
+        outputs are materialized or recomputable-cheaply — the lazy port
+        frames stay CORRECT afterwards (a cache is only a cache), they
+        just recompute on the next action. NOTES invariant 13: nothing
+        should leave an untracked corpus-sized persist behind."""
         for frame in self.context.pop("_op_persists", []):
             frame.unpersist()
 
@@ -78,20 +82,18 @@ class RunResult:
 @dataclass
 class Runner:
     spark: SparkSession
-    persist_fanout: bool = True
-    _persisted: list[DataFrame] = field(default_factory=list)
 
     def run(self, pipeline: Pipeline) -> RunResult:
         pipeline.validate()
         steps = {s.name: s for s in pipeline.steps if s.enabled}
         order = self._topo_order(steps)
         context: dict[str, Any] = dict(pipeline.variables)
-        outputs: dict[str, dict[str, DataFrame]] = {}
+        res = RunResult(outputs={}, context=context)
         fanout = self._fanout_counts(steps)
 
         for name in order:
             step = steps[name]
-            ins = [self._resolve(outputs, ref) for ref in step.inputs]
+            ins = [res.df(ref) for ref in step.inputs]
             op = get_operator(step.op)
             # operators that record per-step diagnostics into the shared
             # context (text.pack's planner histogram) namespace their
@@ -101,12 +103,14 @@ class Runner:
             result = op(self.spark, ins, dict(step.config), context)
             if isinstance(result, DataFrame):
                 result = {"out": result}
-            if self.persist_fanout and fanout[name] > 1:
-                for port, df in result.items():
-                    result[port] = df.persist()
-                    self._persisted.append(result[port])
-            outputs[name] = result
-        return RunResult(outputs=outputs, context=context)
+            if fanout[name] > 1:
+                for df in result.values():
+                    # skips a frame already cached — multicast returns
+                    # one frame on every port
+                    if df.storageLevel == StorageLevel.NONE:
+                        context.setdefault("_op_persists", []).append(df.persist())
+            res.outputs[name] = result
+        return res
 
     def explain(self, pipeline: Pipeline, ref: str, mode: str = "formatted") -> str:
         """Run the pipeline (lazily) and return the physical plan of one
@@ -118,26 +122,7 @@ class Runner:
             self.spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
         )
 
-    def unpersist_all(self) -> None:
-        for df in self._persisted:
-            df.unpersist()
-        self._persisted.clear()
-
     # -- internals -----------------------------------------------------------
-
-    @staticmethod
-    def _resolve(outputs: dict[str, dict[str, DataFrame]], ref: str) -> DataFrame:
-        step, _, port = ref.partition(".")
-        ports = outputs[step]
-        if port:
-            if port not in ports:
-                raise KeyError(f"step {step!r} has no port {port!r} (has {sorted(ports)})")
-            return ports[port]
-        if "out" in ports:
-            return ports["out"]
-        if len(ports) == 1:
-            return next(iter(ports.values()))
-        raise KeyError(f"ambiguous ref {ref!r}: ports {sorted(ports)}")
 
     @staticmethod
     def _fanout_counts(steps: dict[str, Step]) -> dict[str, int]:

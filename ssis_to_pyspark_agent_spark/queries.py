@@ -1850,7 +1850,6 @@ def q40(spark: SparkSession, sf_dir: str) -> DataFrame:
         .step("sub", "filter", "embeddings", predicate="[vec_id] % 5 == 0")
         .step("dd", "dedup.embedding", "sub", id_col="vec_id",
               vec_col="embedding", threshold=0.35, brute_force=True,
-              method="pandas",  # vectorized matmul; values identical to expr
               quantize=10000, return_pairs=True)
         .step("sem", "dedup.semantic", "sub", id_col="vec_id",
               vec_col="embedding", threshold=0.35, n_clusters=4,
@@ -2789,8 +2788,8 @@ def q44(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "\n",
             )
         })
-        .step("rep", "text.repetition", "lin", id_col="doc_id",
-              text_col="text_l", top_ns=[2], dup_ns=[5])
+        .step("rep", "text.repetition", "lin", text_col="text_l",
+              top_ns=[2], dup_ns=[5])
         # corpus-level boilerplate line removal over the same derived
         # lines (153 of the 3434 distinct 8-word lines at sf0.01 occur
         # in >= 2 docs, so min_df=2 fires on natural data)

@@ -116,6 +116,26 @@ def test_foreach_pipeline_accumulates(spark):
     assert ctx["last_count"] == 9  # last iteration cut=9
 
 
+def test_foreach_releases_fanout_caches(spark):
+    # the body's filter feeds two row counts, so the runner persists it
+    # each iteration; the run's cache ledger must free it when the body
+    # ends — the session holds no more cached RDDs after the loop
+    jsc = spark.sparkContext._jsc
+    body = Pipeline("fan")
+    body.step("src", "source.dataframe",
+              df=spark.range(100).selectExpr("id", "'fanout' AS tag"))
+    body.step("f", "filter", "src", predicate="[id] < @[User::cut]")
+    body.step("all", "row_count", "f", into="n_all", eager=True)
+    body.step("ev", "filter", "f", predicate="[id] % 2 == 0")
+    body.step("rc", "row_count", "ev", into="n_even", eager=True)
+    g = TaskGraph("pkg")
+    g.task("loop", "foreach", Foreach(var="cut", items=[10, 20, 30], body=body))
+    before = jsc.getPersistentRDDs().size()
+    _, ctx = run_task_graph(spark, g)
+    assert (ctx["n_all"], ctx["n_even"]) == (30, 15)
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_disabled_task_skipped_entirely(spark):
     g = TaskGraph("pkg")
     g.task("a", "sql", "SELECT 1")

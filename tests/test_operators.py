@@ -16,6 +16,40 @@ def run(op, spark, inputs, **config):
     return get_operator(op)(spark, inputs, config, ctx)
 
 
+def qcos(x, y, quantize=10000):
+    """Quantized cosine by its definition: coordinates scaled and
+    HALF_UP-rounded (away from zero, Spark's round) to integers, exact
+    integer dot and squared norms, then dot / (sqrt(na) * sqrt(nb));
+    None for a zero vector. Without `quantize`, the float cosine."""
+    import math
+
+    def q(v):
+        if not quantize:
+            return list(v)
+        return [math.copysign(math.floor(abs(e) * quantize + 0.5), e) for e in v]
+
+    qx, qy = q(x), q(y)
+    d = sum(a * b for a, b in zip(qx, qy))
+    na, nb = sum(a * a for a in qx), sum(b * b for b in qy)
+    if not na or not nb:
+        return None
+    return d / (math.sqrt(na) * math.sqrt(nb))
+
+
+def topk_reference(corpus, queries, k, quantize=10000):
+    """{(query_id, rank): (corpus_id, cosine)} by `qcos`, ranked by
+    cosine descending (null last), ties by ascending corpus id."""
+    out = {}
+    for qid, qv in queries.items():
+        scored = sorted(
+            ((cid, qcos(cv, qv, quantize)) for cid, cv in corpus.items()),
+            key=lambda t: (t[1] is None, -(t[1] or 0.0), t[0]),
+        )
+        for rank, hit in enumerate(scored[:k], 1):
+            out[(qid, rank)] = hit
+    return out
+
+
 class TestConditionalSplit:
     def test_first_match_wins_and_default(self, spark):
         df = spark.createDataFrame(
@@ -620,19 +654,41 @@ class TestSimilarity:
         assert top1 == {0: 0, 1: 1, 2: 2}  # self-similarity = 1.0
 
     def test_pandas_quantized_matches_expr(self, spark):
-        """method='pandas' with quantize must be BIT-identical to the
-        oracle-exact expr path (int64 dot/norm sums; HALF_UP quantization
-        emulated with floor(v+0.5)) — on the driver's real embeddings."""
+        """Quantized top-5 per query must be BIT-identical to the
+        quantized cosine definition (`qcos`: HALF_UP integers, exact
+        integer sums, dot/(sqrt*sqrt)) — on the driver's real
+        embeddings."""
         emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
         qs = emb.filter("vec_id in (0, 7, 21)")
-        got = {}
-        for method in ("expr", "pandas"):
-            out = run("similarity.topk_bruteforce", spark, [emb, qs],
+        out = run("similarity.topk_bruteforce", spark, [emb, qs],
+                  id_col="vec_id", vec_col="embedding",
+                  query_id_col="vec_id", query_vec_col="embedding",
+                  k=5, quantize=10000)
+        corpus = {r.vec_id: r.embedding for r in emb.collect()}
+        expect = topk_reference(
+            corpus, {i: corpus[i] for i in (0, 7, 21)}, k=5
+        )
+        got = {(r.query_id, r.rank): (r.corpus_id, r.cosine)
+               for r in out.collect()}
+        assert got == expect
+
+    def test_bruteforce_zero_vector_scores_null_last(self, spark):
+        # an all-zero vector has no direction: in either quantize mode
+        # it scores null (no ANSI divide-by-zero error), ranks last as a
+        # corpus row, and gives a query nothing but nulls
+        rows_ = [(1, [1.0, 0.0]), (2, [0.6, 0.8]), (3, [0.0, 0.0])]
+        df = spark.createDataFrame(rows_, "vec_id long, embedding array<float>")
+        for quantize in (None, 10000):
+            out = run("similarity.topk_bruteforce", spark,
+                      [df, df.filter("vec_id in (1, 3)")],
                       id_col="vec_id", vec_col="embedding",
                       query_id_col="vec_id", query_vec_col="embedding",
-                      k=5, quantize=10000, method=method)
-            got[method] = sorted(map(tuple, out.collect()))
-        assert got["expr"] == got["pandas"]
+                      k=3, quantize=quantize)
+            got = {(r.query_id, r.corpus_id): (r.cosine, r.rank)
+                   for r in out.collect()}
+            assert got[(1, 1)] == (1.0, 1)
+            assert got[(1, 3)] == (None, 3)
+            assert [got[(3, c)][0] for c in (1, 2, 3)] == [None] * 3
 
     def test_numpy_paths_handle_empty_input(self, spark):
         """Zero-row inputs (and hence zero-row Arrow batches) must flow
@@ -872,8 +928,8 @@ class TestTextOps:
             [(1, "aa bb\naa bb\ncc dd\naa bb"), (2, "xx yy zz")],
             "doc_id long, text string",
         )
-        out = run("text.repetition", spark, [df], id_col="doc_id",
-                  text_col="text", top_ns=[2], dup_ns=[2]).collect()
+        out = run("text.repetition", spark, [df], text_col="text",
+                  top_ns=[2], dup_ns=[2]).collect()
         r = {x.doc_id: x for x in out}
         assert r[1].dup_line_frac == 0.5
         assert r[1].dup_line_char_frac == 0.5
@@ -1734,26 +1790,51 @@ class TestTextOps:
         assert got == expect
 
     def test_repetition_fold_matches_explode(self, spark):
-        # the zero-shuffle sorted-run fold (default) and the explode+
-        # groupBy implementation must agree exactly on a corpus with
-        # heavy, varied repetition (including empty-ish and tiny docs)
+        # the sorted-run fold must equal the docstring's definitions,
+        # computed here by exploding every doc's grams into a Counter,
+        # on a corpus with heavy, varied repetition (including
+        # empty-ish, tiny and multi-line docs)
         import random
+        import re
+        from collections import Counter
 
         rng = random.Random(7)
         vocab = [f"w{i}" for i in range(12)]
-        rows = [(i, " ".join(rng.choice(vocab)
-                             for _ in range(rng.randrange(0, 40))))
-                for i in range(60)]
-        rows += [(100, ""), (101, "solo"), (102, "a a a a a a")]
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        cfg = dict(id_col="doc_id", text_col="text",
-                   top_ns=[1, 2, 3], dup_ns=[2, 5])
-        a = run("text.repetition", spark, [df], impl="fold", **cfg)
-        b = run("text.repetition", spark, [df], impl="explode", **cfg)
-        cols = [c for c in a.columns if c.endswith("_frac")]
-        ra = {r.doc_id: tuple(r[c] for c in cols) for r in a.collect()}
-        rb = {r.doc_id: tuple(r[c] for c in cols) for r in b.collect()}
-        assert ra == rb
+        rows_ = [(i, " ".join(rng.choice(vocab)
+                              for _ in range(rng.randrange(0, 40))))
+                 for i in range(60)]
+        rows_ += [(100, ""), (101, "solo"), (102, "a a a a a a"),
+                  (103, "x y\nx y\nz\nx y"), (104, "\n\nA b\n")]
+        df = spark.createDataFrame(rows_, "doc_id long, text string")
+        top_ns, dup_ns = [1, 2, 3], [2, 5]
+        out = run("text.repetition", spark, [df], text_col="text",
+                  top_ns=top_ns, dup_ns=dup_ns)
+
+        def expect(text):
+            lines = text.split("\n")
+            chars = sum(map(len, lines))
+            got = {
+                "dup_line_frac":
+                    (len(lines) - len(set(lines))) / max(len(lines), 1),
+                "dup_line_char_frac":
+                    (chars - sum(map(len, set(lines)))) / max(chars, 1),
+            }
+            norm = re.sub(r"\s+", " ", text.strip(" ").lower())
+            words, den = norm.split(" "), max(len(norm), 1)
+            for n in sorted(set(top_ns) | set(dup_ns)):
+                grams = Counter(" ".join(words[i:i + n])
+                                for i in range(max(len(words) - n + 1, 1)))
+                mass = {g: c * len(g) for g, c in grams.items()}
+                if n in top_ns:
+                    got[f"top_{n}gram_char_frac"] = max(mass.values()) / den
+                if n in dup_ns:
+                    got[f"dup_{n}gram_char_frac"] = sum(
+                        m for g, m in mass.items() if grams[g] >= 2) / den
+            return got
+
+        cols = list(expect(""))
+        got = {r.doc_id: {c: r[c] for c in cols} for r in out.collect()}
+        assert got == {i: expect(t) for i, t in rows_}
 
 
 def _png_bytes(w: int, h: int) -> bytes:
@@ -3667,6 +3748,7 @@ class TestDedupCluster:
 
 class TestSimilarityPandasPath:
     def test_pandas_matches_expr_topk(self, spark):
+        # unquantized: the ranks match a float cosine reference
         import random
 
         rng = random.Random(5)
@@ -3675,12 +3757,13 @@ class TestSimilarityPandasPath:
         q = df.filter("vec_id < 4")
         cfg = dict(id_col="vec_id", vec_col="embedding",
                    query_id_col="vec_id", query_vec_col="embedding", k=5)
-        a = run("similarity.topk_bruteforce", spark, [df, q], **cfg)
-        b = run("similarity.topk_bruteforce", spark, [df, q],
-                method="pandas", **cfg)
-        ga = {(r.query_id, r.rank): r.corpus_id for r in a.collect()}
-        gb = {(r.query_id, r.rank): r.corpus_id for r in b.collect()}
-        assert ga == gb
+        out = run("similarity.topk_bruteforce", spark, [df, q], **cfg)
+        corpus = {r.vec_id: r.embedding for r in df.collect()}
+        expect = topk_reference(
+            corpus, {i: corpus[i] for i in range(4)}, k=5, quantize=None
+        )
+        got = {(r.query_id, r.rank): r.corpus_id for r in out.collect()}
+        assert got == {key: cid for key, (cid, _) in expect.items()}
 
 
 class TestTextClassify:
@@ -3883,7 +3966,6 @@ class TestSemanticDedup:
 
     def test_deterministic_and_matches_bruteforce_in_cluster(self, spark):
         import itertools
-        import math
 
         df = self._clustered(spark)
         cfg = dict(id_col="vec_id", vec_col="v", n_clusters=2,
@@ -3896,24 +3978,25 @@ class TestSemanticDedup:
         # brute-force within the operator's own clusters
         asg = {a.vec_id: a.cluster for a in r1["assignments"].collect()}
         rows = {r[0]: r[1] for r in self._clustered(spark).collect()}
-
-        def qcos(x, y):
-            qx = [math.floor(v * 10000 + 0.5) for v in x]
-            qy = [math.floor(v * 10000 + 0.5) for v in y]
-            d = sum(a * b for a, b in zip(qx, qy))
-            return d / (math.sqrt(sum(a * a for a in qx))
-                        * math.sqrt(sum(b * b for b in qy)))
-
         expect = {
             (a, b): qcos(rows[a], rows[b])
             for a, b in itertools.combinations(sorted(rows), 2)
             if asg[a] == asg[b] and qcos(rows[a], rows[b]) >= 0.9
         }
         assert got == expect
-        # the blocked-BLAS bucket verify (default) and the pair-join
-        # verify must be value-identical
-        rj = run("dedup.semantic", spark, [df], verify_impl="join", **cfg)
-        assert got == {(p.a, p.b): p.cosine for p in rj["pairs"].collect()}
+        # unquantized: the same numpy verify, within 1e-9 of the float
+        # cosine (BLAS summation order moves only the last ulps)
+        del cfg["quantize"]
+        ru = run("dedup.semantic", spark, [df], **cfg)
+        gotu = {(p.a, p.b): p.cosine for p in ru["pairs"].collect()}
+        asg = {a.vec_id: a.cluster for a in ru["assignments"].collect()}
+        expu = {
+            (a, b): qcos(rows[a], rows[b], None)
+            for a, b in itertools.combinations(sorted(rows), 2)
+            if asg[a] == asg[b] and qcos(rows[a], rows[b], None) >= 0.9
+        }
+        assert gotu.keys() == expu.keys() and expu
+        assert all(abs(gotu[k] - expu[k]) < 1e-9 for k in expu)
 
     def test_cluster_cap_guard(self, spark):
         df = self._clustered(spark)
@@ -3923,9 +4006,7 @@ class TestSemanticDedup:
             run("dedup.semantic", spark, [df], id_col="vec_id",
                 vec_col="v", n_clusters=1, threshold=0.9, cluster_cap=4)
 
-    def test_empty_input_and_bucket_requires_quantize(self, spark):
-        import pytest
-
+    def test_empty_input_returns_empty_ports(self, spark):
         empty = self._clustered(spark).filter("vec_id < 0")
         r = run("dedup.semantic", spark, [empty], id_col="vec_id",
                 vec_col="v", n_clusters=2, threshold=0.9, quantize=10000,
@@ -3933,15 +4014,11 @@ class TestSemanticDedup:
         assert r["out"].count() == 0
         assert r["pairs"].count() == 0
         assert r["assignments"].count() == 0
-        with pytest.raises(ValueError, match="requires `quantize`"):
-            run("dedup.semantic", spark, [self._clustered(spark)],
-                id_col="vec_id", vec_col="v", n_clusters=2,
-                threshold=0.9, verify_impl="bucket")
 
     def test_duplicate_ids_no_self_pairs(self, spark):
         # a duplicated id must not emit an (x, x) self-pair — the
         # survivor anti-join would read that as "drop id x entirely";
-        # bucket and join verifies must agree
+        # with and without quantize (the same `_cos_pairs` verify)
         rows = [
             (7, [1.0, 0.0, 0.0, 0.0]),
             (7, [1.0, 0.0, 0.0, 0.0]),
@@ -3952,7 +4029,8 @@ class TestSemanticDedup:
                    threshold=0.9, quantize=10000, centroid_order="md5",
                    return_pairs=True)
         rb = run("dedup.semantic", spark, [df], **cfg)
-        rj = run("dedup.semantic", spark, [df], verify_impl="join", **cfg)
+        del cfg["quantize"]
+        rj = run("dedup.semantic", spark, [df], **cfg)
         assert rb["pairs"].count() == 0 == rj["pairs"].count()
         assert sorted(x.vec_id for x in rb["out"].collect()) == [7, 7, 9]
         assert sorted(x.vec_id for x in rj["out"].collect()) == [7, 7, 9]
@@ -4130,13 +4208,6 @@ class TestProfileProperty:
             assert row["min_num"] is None and row["mean"] is None
 
 
-#: the only operator config keys allowed to pick an alternate
-#: implementation: (module, operator function, key). dedup.semantic's
-#: 'join' verify is the reference its tests check the bucket verify
-#: against. A new ``*_impl`` key needs a deliberate entry here.
-_IMPL_KEYS_ALLOWED = {("dedup.py", "dedup_semantic", "verify_impl")}
-
-
 def _package_trees(subdir=""):
     import ast
     from pathlib import Path
@@ -4148,10 +4219,32 @@ def _package_trees(subdir=""):
         yield path, ast.parse(path.read_text())
 
 
+def _config_keys(tree):
+    """String keys read as ``config.get("k")`` or ``config["k"]``
+    (``cfg`` too) anywhere in `tree`."""
+    import ast
+
+    for node in ast.walk(tree):
+        if (isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "get" and node.args):
+            holder, key = node.func.value, node.args[0]
+        elif isinstance(node, ast.Subscript):
+            holder, key = node.value, node.slice
+        else:
+            continue
+        if (isinstance(holder, ast.Name) and holder.id in ("config", "cfg")
+                and isinstance(key, ast.Constant)
+                and isinstance(key.value, str)):
+            yield key.value
+
+
 def test_no_new_alternate_implementation_keys():
-    """Every ``*_impl`` string key read under operators/ must be on the
-    allow-list: each alternate kernel behind a user-set flag is a
-    second implementation to keep in sync with the default."""
+    """No ``impl`` or ``*_impl`` string under operators/, and no
+    ``method`` key read by the vector operators: each alternate kernel
+    behind a user-set flag is a second implementation to keep in sync
+    with the default. (The ``method`` keys of ``sample`` and the fuzzy
+    lookup choose semantics, not kernels.)"""
     import ast
     import re
 
@@ -4161,10 +4254,13 @@ def test_no_new_alternate_implementation_keys():
             for node in ast.walk(top):
                 if (isinstance(node, ast.Constant)
                         and isinstance(node.value, str)
-                        and re.fullmatch(r"\w+_impl", node.value)):
+                        and re.fullmatch(r"(\w+_)?impl", node.value)):
                     found.add((path.name, getattr(top, "name", None),
                                node.value))
-    assert found == _IMPL_KEYS_ALLOWED
+        if path.name in ("similarity.py", "dedup.py"):
+            found |= {(path.name, k) for k in _config_keys(tree)
+                      if k == "method"}
+    assert not found, found
 
 
 #: the only operator config keys whose names mention ``broadcast``: the
@@ -4183,25 +4279,8 @@ def test_no_new_broadcast_config_keys():
     """Every config key read under operators/ (``config.get("k")`` or
     ``config["k"]``) whose name contains ``broadcast`` must be on the
     allow-list."""
-    import ast
-
-    found = set()
-    for _path, tree in _package_trees("operators"):
-        for node in ast.walk(tree):
-            if (isinstance(node, ast.Call)
-                    and isinstance(node.func, ast.Attribute)
-                    and node.func.attr == "get" and node.args):
-                holder, key = node.func.value, node.args[0]
-            elif isinstance(node, ast.Subscript):
-                holder, key = node.value, node.slice
-            else:
-                continue
-            if (isinstance(holder, ast.Name)
-                    and holder.id in ("config", "cfg")
-                    and isinstance(key, ast.Constant)
-                    and isinstance(key.value, str)
-                    and "broadcast" in key.value):
-                found.add(key.value)
+    found = {k for _path, tree in _package_trees("operators")
+             for k in _config_keys(tree) if "broadcast" in k}
     assert found <= _BROADCAST_KEYS_ALLOWED, found - _BROADCAST_KEYS_ALLOWED
 
 
@@ -4422,19 +4501,26 @@ def test_redact_and_decontaminate(spark):
     assert got[2] == (0, False)
 
 
+def _embedding_pairs_reference(emb, threshold, quantize):
+    import itertools
+
+    vecs = sorted((r.vec_id, r.embedding) for r in emb.collect())
+    pairs = {(a, b): qcos(va, vb, quantize)
+             for (a, va), (b, vb) in itertools.combinations(vecs, 2)}
+    return {k: c for k, c in pairs.items() if c is not None and c >= threshold}
+
+
 def test_embedding_bruteforce_pandas_matches_expr(spark):
-    """The vectorized matmul brute-force path must be value-identical to
-    the Catalyst expression path (same quantized integer arithmetic)."""
+    """The brute-force pairs are every pair at quantized cosine >= the
+    threshold, value-identical to the quantized cosine definition."""
     emb = spark.read.parquet(
         "/root/testdata/sf0.001/embeddings.parquet"
     ).filter("vec_id % 3 = 0")
-    common = dict(id_col="vec_id", vec_col="embedding", threshold=0.3,
-                  brute_force=True, quantize=10000, return_pairs=True)
-    expr = run("dedup.embedding", spark, [emb], **common)
-    pand = run("dedup.embedding", spark, [emb], method="pandas", **common)
-    e = {(r.a, r.b): r.cosine for r in expr["pairs"].collect()}
-    p = {(r.a, r.b): r.cosine for r in pand["pairs"].collect()}
-    assert e == p and len(e) > 0
+    out = run("dedup.embedding", spark, [emb], id_col="vec_id",
+              vec_col="embedding", threshold=0.3, brute_force=True,
+              quantize=10000, return_pairs=True)
+    got = {(r.a, r.b): r.cosine for r in out["pairs"].collect()}
+    assert got == _embedding_pairs_reference(emb, 0.3, 10000) and got
 
 
 def test_embedding_bruteforce_cap_guard(spark):
@@ -4449,29 +4535,27 @@ def test_embedding_bruteforce_cap_guard(spark):
     with pytest.raises(ValueError, match="LSH"):
         run("dedup.embedding", spark, [emb], id_col="vec_id",
             vec_col="embedding", brute_force=True, brute_force_cap=5)
-    # at/below the cap both brute-force methods still run
-    for method in ("expr", "pandas"):
-        out = run("dedup.embedding", spark, [emb], id_col="vec_id",
-                  vec_col="embedding", brute_force=True, brute_force_cap=10,
-                  method=method, threshold=0.99, return_pairs=True)
-        assert out["out"].count() <= 10
+    # at the cap brute force still runs
+    out = run("dedup.embedding", spark, [emb], id_col="vec_id",
+              vec_col="embedding", brute_force=True, brute_force_cap=10,
+              threshold=0.99, return_pairs=True)
+    assert out["out"].count() <= 10
 
 
 def test_embedding_bruteforce_unquantized_defaults_agree(spark):
-    """With `quantize` unset, pandas and expr brute-force paths must both
-    run UNQUANTIZED float cosine (the pandas path used to default to
-    10000 silently). Pair sets must match; cosines agree to float-sum ulp."""
+    """With `quantize` unset, brute force runs UNQUANTIZED float cosine
+    (it once defaulted to 10000 silently): the pairs are the float
+    reference's, cosines equal to float-sum ulp."""
     emb = spark.read.parquet(
         "/root/testdata/sf0.001/embeddings.parquet"
     ).filter("vec_id % 7 = 0")
-    common = dict(id_col="vec_id", vec_col="embedding", threshold=0.3,
-                  brute_force=True, return_pairs=True)
-    expr = run("dedup.embedding", spark, [emb], **common)
-    pand = run("dedup.embedding", spark, [emb], method="pandas", **common)
-    e = {(r.a, r.b): r.cosine for r in expr["pairs"].collect()}
-    p = {(r.a, r.b): r.cosine for r in pand["pairs"].collect()}
-    assert set(e) == set(p) and len(e) > 0
-    assert all(abs(e[k] - p[k]) < 1e-9 for k in e)
+    out = run("dedup.embedding", spark, [emb], id_col="vec_id",
+              vec_col="embedding", threshold=0.3, brute_force=True,
+              return_pairs=True)
+    got = {(r.a, r.b): r.cosine for r in out["pairs"].collect()}
+    expect = _embedding_pairs_reference(emb, 0.3, None)
+    assert set(got) == set(expect) and got
+    assert all(abs(got[k] - expect[k]) < 1e-9 for k in got)
 
 
 def test_percentile_multiple_values(spark):

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from ssis_to_pyspark_agent_spark.plans import Pipeline, Runner, run_pipeline
+from ssis_to_pyspark_agent_spark.plans import Pipeline, run_pipeline
 from ssis_to_pyspark_agent_spark.plans.spec import Step
 
 
@@ -73,11 +73,43 @@ def test_fanout_persist_and_unpersist(spark):
         .step("a", "filter", "src", predicate="[v] > 1")
         .step("b", "filter", "src", predicate="[v] < 5")
     )
-    r = Runner(spark)
-    res = r.run(p)
+    res = run_pipeline(spark, p)
     assert res.df("src").storageLevel.useMemory  # fan-out of 2 -> persisted
-    r.unpersist_all()
+    res.release_caches()
     assert not res.df("src").storageLevel.useMemory
+
+
+def test_fanout_persists_a_multicast_frame_once(spark, monkeypatch):
+    # multicast returns one frame on every port: the fan-out persist
+    # must cache it once (a second persist logs "Asked to cache already
+    # cached data" and double-books the run's cache ledger)
+    from pyspark import StorageLevel
+
+    cls = type(spark.range(1))  # pyspark.sql.DataFrame is only its base
+    orig = cls.persist
+    again = []
+
+    def persist(self, *a, **k):
+        if self.storageLevel != StorageLevel.NONE:
+            again.append(self)
+        return orig(self, *a, **k)
+
+    monkeypatch.setattr(cls, "persist", persist)
+    p = (
+        Pipeline("x")
+        .step("src", "source.dataframe",
+              df=spark.range(10).selectExpr("id", "'mc-once' AS tag"))
+        .step("mc", "multicast", "src", outputs=2)
+        .step("a", "filter", "mc.out1", predicate="[id] > 1")
+        .step("b", "filter", "mc.out2", predicate="[id] < 5")
+    )
+    res = run_pipeline(spark, p)
+    try:
+        assert res.df("a").count() == 8 and res.df("b").count() == 5
+        assert not again, f"{len(again)} frame(s) persisted twice"
+        assert len(res.context["_op_persists"]) == 1
+    finally:
+        res.release_caches()
 
 
 def test_sql_task_result_binding(spark):

@@ -132,8 +132,7 @@ def probe_ann(spark, n_vec=200_000, dim=64, n_q=100, k=10):
     cfg = {"id_col": "vec_id", "vec_col": "embedding",
            "query_id_col": "vec_id", "query_vec_col": "embedding", "k": k}
     for label, conf in (
-        ("bruteforce_expr", {**cfg}),
-        ("bruteforce_pandas", {**cfg, "method": "pandas"}),
+        ("bruteforce", cfg),
         ("lsh", {**cfg, "dim": dim, "lsh_tables": 8, "lsh_bits": 12}),
     ):
         op = "similarity.topk_lsh" if label == "lsh" else "similarity.topk_bruteforce"
@@ -627,8 +626,7 @@ def probe_repetition(spark, n_docs=2_000_000, words_per_doc=80):
     t0 = time.perf_counter()
     out = get_operator("text.repetition")(
         spark, [docs],
-        {"id_col": "doc_id", "text_col": "text",
-         "top_ns": [2], "dup_ns": [5]}, {},
+        {"text_col": "text", "top_ns": [2], "dup_ns": [5]}, {},
     )
     n = out.filter(F.col("dup_5gram_char_frac") > 0.2).count()
     dt = time.perf_counter() - t0
