@@ -2703,8 +2703,8 @@ def dedup_semantic(spark: SparkSession, inputs, config, context):
     Measured boundary-miss curve in PLANS.md (round 5).
 
     Scale plan: assignment is one numpy matmul per Arrow batch
-    (_ivf_assign_frame); the only shuffles move (id, vector) rows into
-    their cluster for the verify — blocked numpy cosine per cluster
+    (_ivf_assign_frame, with or without ``quantize``); the only
+    shuffles move (id, vector) rows into their cluster for the verify — blocked numpy cosine per cluster
     (`_cos_pairs`). Payload vectors shuffle ONCE, and at 100 TB the assigned
     corpus would be written partitioned by cluster and amortized.
     ``cluster_cap`` (default 200k) fails fast on a degenerate cluster
@@ -2719,7 +2719,6 @@ def dedup_semantic(spark: SparkSession, inputs, config, context):
     """
     from ssis_to_pyspark_agent_spark.operators.similarity import (
         _cos_pairs,
-        _cosine,
         _ivf_assign_frame,
         _kmeans_centroids,
         _vecnorm,
@@ -2754,8 +2753,8 @@ def dedup_semantic(spark: SparkSession, inputs, config, context):
                 spark, [], f"{id_col} {id_type}, cluster int"
             )
         return result if len(result) > 1 else df
-    # the quantized assignment is a numpy kernel: spread by bytes
-    base = _spread(spark, df, by_bytes=bool(quantize)).select(
+    # the assignment is a numpy kernel: spread by bytes
+    base = _spread(spark, df, by_bytes=True).select(
         F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
     )
     if len(inputs) > 1:
@@ -2778,9 +2777,10 @@ def dedup_semantic(spark: SparkSession, inputs, config, context):
         n_clusters = len(ic)
         cents = [[v / quantize for v in row] for row in ic]
     elif config.get("kmeans"):
+        # sampled from the RAW frame, like the hash sample below
         cent_rows = _kmeans_centroids(
-            base.withColumnRenamed("_id", "corpus_id")
-            .withColumnRenamed("_v", "_cv"),
+            df.select(F.col(id_col).alias("corpus_id"),
+                      F.col(vec_col).alias("_cv")),
             n_clusters,
             sample_n=config.get("kmeans_sample", 10_000),
             iters=config.get("kmeans_iters", 10),
@@ -2808,41 +2808,14 @@ def dedup_semantic(spark: SparkSession, inputs, config, context):
     # each vector into its TWO nearest clusters for the verify — a pair
     # straddling one boundary then still meets in the runner-up cluster
     # — at the cost of ~2x verify rows; pairs found in both shared
-    # clusters dedupe exactly (same quantized cosine either way).
-    # Assignments/keep-ranks stay on the PRIMARY centroid. Quantized
-    # path only (the expr path has no ranked-assignment kernel).
+    # clusters dedupe exactly. Assignments/keep-ranks stay on the
+    # PRIMARY centroid.
     nprobe = int(config.get("verify_nprobe", 1))
     if nprobe < 1:
         raise ValueError(f"verify_nprobe must be >= 1, got {nprobe}")
-    if nprobe > 1 and not quantize:
-        raise ValueError(
-            "dedup.semantic verify_nprobe > 1 requires `quantize` "
-            "(multi-centroid assignment rides the numpy kernel)"
-        )
-    if quantize:
-        assigned = _ivf_assign_frame(
-            base, "_id", "_v", cents, quantize, min(nprobe, len(cents))
-        ).withColumn("_cid", F.col("_cids")[0])
-    else:
-        cent_arr = F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("cid"),
-                    F.array(*[F.lit(float(x)) for x in c]).alias("v"),
-                )
-                for i, c in enumerate(cents)
-            ]
-        )
-        scored = F.transform(
-            cent_arr,
-            lambda s: F.struct(
-                (-_cosine(F.col("_v"), s["v"], None)).alias("neg"),
-                s["cid"].alias("cid"),
-            ),
-        )
-        assigned = base.withColumn(
-            "_cid", F.array_sort(scored)[0]["cid"]
-        )
+    assigned = _ivf_assign_frame(
+        base, "_id", "_v", cents, quantize, min(nprobe, len(cents))
+    ).withColumn("_cid", F.col("_cids")[0])
 
     # persist BEFORE the cap probe: the probe then materializes the
     # cache instead of burning a throwaway assignment pass
@@ -2884,9 +2857,10 @@ def dedup_semantic(spark: SparkSession, inputs, config, context):
         schema=f"a {id_type}, b {id_type}, cosine double, cluster int",
     )
     if nprobe > 1:
-        # a pair sharing BOTH of its nprobe clusters is found twice with
-        # the identical quantized cosine — collapse deterministically
-        # (min cluster tag) so ports and survivor math see each pair once
+        # a pair sharing BOTH of its nprobe clusters is found twice (the
+        # same cosine; unquantized, up to the last ulps) — collapse
+        # deterministically (min cosine and cluster tag) so ports and
+        # survivor math see each pair once
         pairs = pairs.groupBy("a", "b").agg(
             F.min("cosine").alias("cosine"), F.min("cluster").alias("cluster")
         )
@@ -2912,18 +2886,10 @@ def dedup_semantic(spark: SparkSession, inputs, config, context):
     else:
         # paper rule: within a duplicate pair, drop the row CLOSER to its
         # centroid (more typical); tie on centroid-cosine drops the
-        # larger id. Rank key is the quantized centroid cosine — exact
+        # larger id. Rank key is the primary-centroid cosine the
+        # assignment kernel emits (`_ccos`); with `quantize` it is exact
         # integer-derived arithmetic, so any engine agrees on the order.
-        cents_lit = F.array(
-            *[F.array(*[F.lit(float(x)) for x in c]) for c in cents]
-        )
-        rank = assigned.select(
-            F.col("_id"),
-            _cosine(
-                F.col("_v"), F.element_at(cents_lit, F.col("_cid") + 1),
-                quantize,
-            ).alias("_ccos"),
-        )
+        rank = assigned.select("_id", "_ccos")
         e = (
             pairs.join(rank.withColumnRenamed("_id", "a")
                        .withColumnRenamed("_ccos", "_ca"), "a")

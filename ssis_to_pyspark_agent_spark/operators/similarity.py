@@ -10,12 +10,11 @@ Approximate-nearest-neighbor over ``array<float>``:
   nearest of C centroids (one broadcast pass), queries probe the nprobe
   nearest centroid lists only.
 
-Every numpy cosine (these operators, dedup.embedding's brute force and
-dedup.semantic's cluster verify) is scored by one kernel: `_vecnorm`
-reads and quantizes the vectors, `_cos` finishes dot/(|a|*|b|) with the
-IEEE ops of the `_cosine` expression, which remains for the unquantized
-float paths and the oracle-side rank keys. The reference has no vector
-surface at all; its nearest concept is Fuzzy Lookup
+Every cosine (these operators, dedup.embedding and dedup.semantic) is
+scored by one numpy kernel, whatever `quantize` says: `_vecnorm` reads
+the vectors (and with `quantize` scales them to exact integers), `_cos`
+finishes dot/(|a|*|b|). A zero vector scores null. The reference has no
+vector surface at all; its nearest concept is Fuzzy Lookup
 (data_engineering_parser.py:1204-1207).
 """
 
@@ -24,59 +23,10 @@ from __future__ import annotations
 import math
 import random
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ssis_to_pyspark_agent_spark.operators import operator
-
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
-def _q(x: Column, q: int) -> Column:
-    return F.round(x.cast("double") * q, 0).cast("long")
-
-
-def _cosine(a: Column, b: Column, quantize: int | None = None) -> Column:
-    """Cosine similarity. With `quantize`, elements are scaled to integers
-    first so dot/norm sums are EXACT (bit-identical in any engine — the
-    oracle-comparable mode; also immune to accumulation-order effects).
-    Precision loss at q=10000 on unit-ish vectors is ~1e-4 relative."""
-    if quantize:
-        dot = F.aggregate(
-            F.zip_with(a, b, lambda x, y: _q(x, quantize) * _q(y, quantize)),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-        na = F.aggregate(
-            F.transform(a, lambda x: _q(x, quantize) * _q(x, quantize)),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-        nb = F.aggregate(
-            F.transform(b, lambda x: _q(x, quantize) * _q(x, quantize)),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-        return dot.cast("double") / (
-            F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double"))
-        )
-    return _dot(a, b) / (_norm(a) * _norm(b))
 
 
 def _hyperplanes(dim: int, n_tables: int, n_bits: int, seed: int) -> list[list[list[float]]]:
@@ -220,9 +170,9 @@ def topk_bruteforce(spark: SparkSession, inputs, config, context) -> DataFrame:
     dimension-sized by construction); the corpus streams through once in
     Arrow batches, each scored against the whole query matrix by one
     BLAS matmul (`_cos`) — measured ~2.4x a per-pair Catalyst cosine
-    fold at 50k x 64 x 50. With `quantize` the values are bit-identical
-    to the `_cosine` expression (oracle-exact). A zero vector scores
-    null and ranks last. Output: (query_id, corpus_id, cosine, rank)."""
+    fold at 50k x 64 x 50. With `quantize` the values are exact integer
+    arithmetic (oracle-exact). A zero vector scores null and ranks
+    last. Output: (query_id, corpus_id, cosine, rank)."""
     import numpy as np
     import pandas as pd
 
@@ -282,8 +232,6 @@ def topk_lsh(spark: SparkSession, inputs, config, context) -> DataFrame:
         # stay the recall knob (more tables = more chances to collide).
         # One count() of the corpus; see dedup.embedding for the measured
         # failure mode.
-        import math
-
         n_bits = min(18, max(8, math.ceil(math.log2(max(corpus.count(), 16) / 8))))
     seed = config.get("seed", 42)
     # hyperplanes='md5': engine-neutral integer planes + quantized vectors
@@ -333,20 +281,14 @@ def _pair_cosine_frame(
     quantize: int | None,
 ) -> DataFrame:
     """Project `keep` columns plus a rowwise `cosine` between two vector
-    columns. With `quantize`, runs as Arrow batches (a rowwise numpy
-    dot over `_vecnorm` outputs instead of an interpreted 3-fold
-    Catalyst expression per row) — value-identical to
-    `_cosine(a, b, quantize)`. Without quantize,
-    falls back to the expression (float fold order would differ in the
-    last ulp).
+    columns, as Arrow batches: a rowwise numpy dot over `_vecnorm`
+    outputs finished with `_cos`'s IEEE ops (a zero vector -> null).
+    With `quantize` the values are exact; without it only the last ulps
+    depend on the summation order.
 
     Candidate-verify stages are where ANN/dedup time actually goes at
     scale (candidates >> rows); measured 37s -> 11s on a 500k-vector IVF
-    probe scoring ~6M pairs."""
-    if not quantize:
-        return df.select(
-            *keep, _cosine(F.col(vec_a), F.col(vec_b), None).alias("cosine")
-        )
+    probe scoring ~6M pairs against an interpreted Catalyst fold."""
     import numpy as np
     import pandas as pd
 
@@ -375,9 +317,9 @@ def _pair_cosine_frame(
 def _half_up(m, quantize: int):
     """Scale and HALF_UP-round to int-valued float64 — matches Spark's
     F.round(double, 0) semantics (np.round would banker's-round ties the
-    other way). EVERY numpy kernel that claims value-identity with the
-    `_cosine(..., quantize)` expression must round through this one
-    helper — a divergent copy silently breaks the oracle guarantees."""
+    other way). EVERY numpy kernel that claims value-identity with an
+    oracle's quantized cosine must round through this one helper — a
+    divergent copy silently breaks the oracle guarantees."""
     import numpy as np
 
     m = np.asarray(m, dtype=np.float64) * quantize
@@ -412,10 +354,10 @@ def _vecnorm(col, quantize: int | None):
 
 def _cos(a, b):
     """|a| x |b| cosine matrix of `_vecnorm` outputs (one BLAS matmul).
-    The finish is dot / (sqrt(na) * sqrt(nb)), the IEEE ops of
-    `_cosine(..., quantize)`, so quantized values are bit-identical to
-    the expression. A zero vector scores NaN, which leaves Arrow as
-    null: it ranks last and passes no threshold."""
+    The finish is dot / (sqrt(na) * sqrt(nb)), so quantized values are
+    bit-identical to the same ops in SQL (what the oracles compute). A
+    zero vector scores NaN, which leaves Arrow as null: it ranks last
+    and passes no threshold."""
     import numpy as np
 
     (ma, na), (mb, nb) = a, b
@@ -449,7 +391,7 @@ def _cos_pairs(ids, a, all_ids, b, threshold: float):
 def _ivf_score_frame(
     c_assigned: DataFrame,
     q_rows: list,
-    quantize: int,
+    quantize: int | None,
     id_type: str,
     qid_type: str,
 ) -> DataFrame:
@@ -462,7 +404,7 @@ def _ivf_score_frame(
     transfer dominated (measured 47s -> ~4s on 6.3M candidate pairs).
 
     `q_rows`: collected (query_id, _qv, _cids array) rows. Scored by
-    `_cos`: values identical to `_cosine(..., quantize)`."""
+    `_cos`."""
     import numpy as np
     import pandas as pd
 
@@ -519,18 +461,19 @@ def _ivf_assign_frame(
     id_name: str,
     vec_name: str,
     cents,
-    quantize: int,
+    quantize: int | None,
     n: int,
 ) -> DataFrame:
-    """(id, vec, _cids: array<int>) — each row's top-`n` centroids by
-    quantized cosine, ties broken by ascending centroid id. Arrow-batched
-    numpy: one matmul per batch against the (C x dim) centroid matrix.
-
-    Scored by `_cos`, so the ranking equals the `_cosine(vec, cent,
-    quantize)` expression's; NaN (zero vector) sorts last in both
-    np.argsort and array_sort-on-negated struct. Replaces a per-row interpreted expression that re-quantized
-    the vector and recomputed its norm once PER CENTROID (measured 4.1s
-    -> 0.4s warm on 2k rows x 16 centroids, identical assignment)."""
+    """(id, vec, _cids: array<int>, _ccos: double) — each row's top-`n`
+    centroids by cosine, ties broken by ascending centroid id, and its
+    cosine to the first of them. Arrow-batched numpy: one matmul per
+    batch against the (C x dim) centroid matrix, scored by `_cos`. With
+    `quantize` the ranking equals an oracle's array_sort of (-quantized
+    cosine, cid). A zero vector scores NaN against every centroid (a
+    null `_ccos`) and keeps centroid order; a zero centroid ranks last.
+    Replaces a per-row interpreted expression that re-quantized the
+    vector and recomputed its norm once PER CENTROID (measured 4.1s ->
+    0.4s warm on 2k rows x 16 centroids, identical assignment)."""
     import numpy as np
     import pandas as pd
 
@@ -543,18 +486,21 @@ def _ivf_assign_frame(
             if not len(pdf):
                 yield pd.DataFrame(
                     {id_name: pdf[id_name], vec_name: pdf[vec_name],
-                     "_cids": []}
+                     "_cids": [], "_ccos": pd.Series(dtype="float64")}
                 )
                 continue
             cos = _cos(_vecnorm(pdf[vec_name], quantize), cm)
             order = np.argsort(-cos, axis=1, kind="stable")[:, :n]
             yield pd.DataFrame(
                 {id_name: pdf[id_name], vec_name: pdf[vec_name],
-                 "_cids": [row.astype("int32") for row in order]}
+                 "_cids": [row.astype("int32") for row in order],
+                 "_ccos": cos[np.arange(len(cos)), order[:, 0]]}
             )
 
     return df.select(id_name, vec_name).mapInPandas(
-        gen, schema=f"{id_name} {id_type}, {vec_name} {vec_type}, _cids array<int>"
+        gen,
+        schema=f"{id_name} {id_type}, {vec_name} {vec_type}, "
+        "_cids array<int>, _ccos double",
     )
 
 
@@ -566,10 +512,12 @@ def topk_ivf(spark: SparkSession, inputs, config, context) -> DataFrame:
     numpy on the driver — centroid count x dim is tiny; better-balanced
     lists => better recall at the same nprobe). Corpus rows index to their
     nearest centroid; queries scan only the `nprobe` nearest lists.
+    Assignment and scoring are the numpy kernels (`_ivf_assign_frame`,
+    `_ivf_score_frame`) with or without `quantize`.
 
-    The assignment join shuffles on centroid_id — at 100 TB, write the
-    assigned corpus partitioned by centroid_id once and amortize across
-    query batches."""
+    Corpus vectors are assigned and scored in one pass, never joined to
+    the queries — at 100 TB, write the assigned corpus partitioned by
+    centroid_id once and amortize across query batches."""
     from ssis_to_pyspark_agent_spark.operators.dedup import _spread
 
     corpus, queries = inputs[0], inputs[1]
@@ -577,16 +525,15 @@ def topk_ivf(spark: SparkSession, inputs, config, context) -> DataFrame:
     qv = config.get("query_vec_col", config["vec_col"])
     n_cent = config.get("centroids", 16)
     nprobe = config.get("nprobe", 4)
-    # quantized: the numpy assign/score kernels (exact integer cosine);
-    # unquantized: the float expression path below
     quantize = config.get("quantize")
 
     named = (F.col(config["id_col"]).alias("corpus_id"),
              F.col(config["vec_col"]).alias("_cv"))
-    c = _spread(spark, corpus, by_bytes=bool(quantize)).select(*named)
+    # the centroid samples read the unspread corpus: a top-n needs no
+    # shuffle, and the spread's rebalance would put one under it
     if config.get("kmeans"):
         cent_rows = _kmeans_centroids(
-            c, n_cent,
+            corpus.select(*named), n_cent,
             sample_n=config.get("kmeans_sample", 10_000),
             iters=config.get("kmeans_iters", 10),
             seed=config.get("seed", 42),
@@ -599,8 +546,6 @@ def topk_ivf(spark: SparkSession, inputs, config, context) -> DataFrame:
             key = F.md5(F.col("corpus_id").cast("string"))
         else:
             key = F.xxhash64(F.col("corpus_id").cast("string"))
-        # sampled from the unspread corpus: a top-n needs no shuffle, and
-        # the spread's rebalance would put one under it
         cent = (
             corpus.select(*named)
             .orderBy(key)
@@ -611,60 +556,22 @@ def topk_ivf(spark: SparkSession, inputs, config, context) -> DataFrame:
     q_named = queries.select(
         F.col(qid).alias("query_id"), F.col(qv).alias("_qv")
     )
-    if quantize:
-        cents = [list(r["_centv"]) for r in cent_rows]
-        c_assigned = _ivf_assign_frame(
-            c, "corpus_id", "_cv", cents, quantize, 1
-        ).withColumn("_cid", F.col("_cids")[0]).drop("_cids")
-        # the query batch is bounded by construction (same contract as
-        # topk_bruteforce): collect its probe lists and score corpus
-        # lists against per-list query matrices in one kernel — no
-        # per-pair vector join at all
-        q_rows = _ivf_assign_frame(
-            q_named, "query_id", "_qv", cents, quantize, nprobe
-        ).collect()
-        scored = _ivf_score_frame(
-            c_assigned, q_rows, quantize,
-            id_type=c_assigned.schema["corpus_id"].dataType.simpleString(),
-            qid_type=q_named.schema["query_id"].dataType.simpleString(),
-        )
-        return _topk(scored, "query_id", config.get("k", 10)).select(
-            "query_id", "corpus_id", "cosine", "rank"
-        )
-
-    cent_arr = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("cid"),
-                F.array(*[F.lit(float(x)) for x in r["_centv"]]).alias("v"),
-            )
-            for i, r in enumerate(cent_rows)
-        ]
-    )
-
-    def nearest(vec: Column, n: int) -> Column:
-        scored = F.transform(
-            cent_arr,
-            lambda s: F.struct(
-                (-_cosine(vec, s["v"])).alias("neg"),
-                s["cid"].alias("cid"),
-            ),
-        )
-        return F.slice(F.array_sort(scored), 1, n)
-
-    c_assigned = c.withColumn("_cid", nearest(F.col("_cv"), 1)[0]["cid"])
-    q = q_named.select(
-        "query_id",
-        "_qv",
-        F.explode(
-            F.transform(nearest(F.col("_qv"), nprobe), lambda s: s["cid"])
-        ).alias("_cid"),
-    )
-    scored = _pair_cosine_frame(
-        c_assigned.join(F.broadcast(q), "_cid")
-        .select("query_id", "corpus_id", "_cv", "_qv")
-        .dropDuplicates(["query_id", "corpus_id"]),
-        "_cv", "_qv", ["query_id", "corpus_id"], None,
+    cents = [list(r["_centv"]) for r in cent_rows]
+    c = _spread(spark, corpus, by_bytes=True).select(*named)
+    c_assigned = _ivf_assign_frame(
+        c, "corpus_id", "_cv", cents, quantize, 1
+    ).select("corpus_id", "_cv", F.col("_cids")[0].alias("_cid"))
+    # the query batch is bounded by construction (same contract as
+    # topk_bruteforce): collect its probe lists and score corpus lists
+    # against per-list query matrices in one kernel — no per-pair
+    # vector join at all
+    q_rows = _ivf_assign_frame(
+        q_named, "query_id", "_qv", cents, quantize, nprobe
+    ).collect()
+    scored = _ivf_score_frame(
+        c_assigned, q_rows, quantize,
+        id_type=c_assigned.schema["corpus_id"].dataType.simpleString(),
+        qid_type=q_named.schema["query_id"].dataType.simpleString(),
     )
     return _topk(scored, "query_id", config.get("k", 10)).select(
         "query_id", "corpus_id", "cosine", "rank"

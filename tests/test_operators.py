@@ -36,6 +36,35 @@ def qcos(x, y, quantize=10000):
     return d / (math.sqrt(na) * math.sqrt(nb))
 
 
+def _q(x, q: int):
+    return F.round(x.cast("double") * q, 0).cast("long")
+
+
+def _cosine(a, b, quantize: int):
+    """Quantized cosine as a Catalyst expression — what a SQL oracle
+    computes: elements scaled to integers first so dot/norm sums are
+    EXACT (bit-identical in any engine). The reference the numpy
+    kernels are checked against."""
+    dot = F.aggregate(
+        F.zip_with(a, b, lambda x, y: _q(x, quantize) * _q(y, quantize)),
+        F.lit(0).cast("long"),
+        lambda acc, v: acc + v,
+    )
+    na = F.aggregate(
+        F.transform(a, lambda x: _q(x, quantize) * _q(x, quantize)),
+        F.lit(0).cast("long"),
+        lambda acc, v: acc + v,
+    )
+    nb = F.aggregate(
+        F.transform(b, lambda x: _q(x, quantize) * _q(x, quantize)),
+        F.lit(0).cast("long"),
+        lambda acc, v: acc + v,
+    )
+    return dot.cast("double") / (
+        F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double"))
+    )
+
+
 def topk_reference(corpus, queries, k, quantize=10000):
     """{(query_id, rank): (corpus_id, cosine)} by `qcos`, ranked by
     cosine descending (null last), ties by ascending corpus id."""
@@ -672,23 +701,47 @@ class TestSimilarity:
                for r in out.collect()}
         assert got == expect
 
-    def test_bruteforce_zero_vector_scores_null_last(self, spark):
-        # an all-zero vector has no direction: in either quantize mode
-        # it scores null (no ANSI divide-by-zero error), ranks last as a
-        # corpus row, and gives a query nothing but nulls
+    def test_zero_vector_scores_null_in_every_operator(self, spark):
+        # an all-zero vector has no direction: in every vector operator
+        # and either quantize mode it scores null (no ANSI divide-by-zero
+        # error). In the top-k operators it ranks last as a corpus row
+        # and gives a query nothing but nulls; dedup.semantic pairs it
+        # with nothing.
         rows_ = [(1, [1.0, 0.0]), (2, [0.6, 0.8]), (3, [0.0, 0.0])]
         df = spark.createDataFrame(rows_, "vec_id long, embedding array<float>")
+        topk = {
+            "similarity.topk_bruteforce": {},
+            "similarity.topk_lsh": {},
+            "similarity.topk_ivf": dict(centroids=3, nprobe=3),
+        }
         for quantize in (None, 10000):
-            out = run("similarity.topk_bruteforce", spark,
-                      [df, df.filter("vec_id in (1, 3)")],
-                      id_col="vec_id", vec_col="embedding",
-                      query_id_col="vec_id", query_vec_col="embedding",
-                      k=3, quantize=quantize)
-            got = {(r.query_id, r.corpus_id): (r.cosine, r.rank)
-                   for r in out.collect()}
-            assert got[(1, 1)] == (1.0, 1)
-            assert got[(1, 3)] == (None, 3)
-            assert [got[(3, c)][0] for c in (1, 2, 3)] == [None] * 3
+            for op, extra in topk.items():
+                out = run(op, spark, [df, df.filter("vec_id in (1, 3)")],
+                          id_col="vec_id", vec_col="embedding",
+                          query_id_col="vec_id", query_vec_col="embedding",
+                          k=3, quantize=quantize, **extra)
+                got = {(r.query_id, r.corpus_id): (r.cosine, r.rank)
+                       for r in out.collect()}
+                case = (op, quantize)
+                assert got[(1, 1)] == (1.0, 1), case
+                # LSH scores only bucket collisions: the zero vector
+                # always collides with itself, the rest by chance
+                assert got[(3, 3)][0] is None, case
+                for (qi, ci), (cos, rank) in got.items():
+                    if 3 in (qi, ci):
+                        assert cos is None, case
+                    if ci == 3:  # null ranks after every scored row
+                        assert rank == max(
+                            r for (q2, _), (_, r) in got.items() if q2 == qi
+                        ), case
+                if op != "similarity.topk_lsh":
+                    assert got[(1, 3)] == (None, 3), case
+                    assert [got[(3, c)][0] for c in (1, 2, 3)] == [None] * 3
+            sem = run("dedup.semantic", spark, [df], id_col="vec_id",
+                      vec_col="embedding", n_clusters=1, threshold=0.5,
+                      quantize=quantize, return_pairs=True)
+            assert [(p.a, p.b) for p in sem["pairs"].collect()] == [(1, 2)]
+            assert sorted(r.vec_id for r in sem["out"].collect()) == [1, 3]
 
     def test_numpy_paths_handle_empty_input(self, spark):
         """Zero-row inputs (and hence zero-row Arrow batches) must flow
@@ -3897,7 +3950,8 @@ class TestSemanticDedup:
         """verify_nprobe=2 (round 5): a near-dup pair whose endpoints
         assign to DIFFERENT clusters is unscored at nprobe=1 (SemDeDup's
         documented recall boundary) and found via the runner-up cluster
-        at nprobe=2 — with the duplicate find collapsed exactly."""
+        at nprobe=2 — with the duplicate find collapsed exactly. With
+        and without `quantize` (one ranked-assignment kernel)."""
         import hashlib
 
         ids = sorted(
@@ -3913,20 +3967,22 @@ class TestSemanticDedup:
             (ob, [0.70, 0.72, 0.0, 0.0]),  # nearer cb; cos(oa,ob)~0.9994
         ]
         df = spark.createDataFrame(rows, "vec_id long, v array<double>")
-        common = dict(id_col="vec_id", vec_col="v", n_clusters=2,
-                      threshold=0.99, quantize=10000, centroid_order="md5",
-                      return_pairs=True)
-        p1 = {(r.a, r.b) for r in run(
-            "dedup.semantic", spark, [df], **common)["pairs"].collect()}
-        rows2 = run("dedup.semantic", spark, [df], verify_nprobe=2,
-                    **common)["pairs"].collect()
-        p2 = {(r.a, r.b) for r in rows2}
         key = (min(oa, ob), max(oa, ob))
-        assert key not in p1  # split across clusters: unscored by design
-        assert key in p2      # runner-up cluster catches it
-        assert len(rows2) == len(p2)  # duplicate finds collapsed
-        assert p1 <= p2
-        spark.catalog.clearCache()
+        for quantize in (10000, None):
+            common = dict(id_col="vec_id", vec_col="v", n_clusters=2,
+                          threshold=0.99, quantize=quantize,
+                          centroid_order="md5", return_pairs=True)
+            p1 = {(r.a, r.b) for r in run(
+                "dedup.semantic", spark, [df], **common)["pairs"].collect()}
+            rows2 = run("dedup.semantic", spark, [df], verify_nprobe=2,
+                        **common)["pairs"].collect()
+            p2 = {(r.a, r.b) for r in rows2}
+            # split across clusters: unscored by design at nprobe=1
+            assert key not in p1, quantize
+            assert key in p2, quantize  # runner-up cluster catches it
+            assert len(rows2) == len(p2)  # duplicate finds collapsed
+            assert p1 <= p2
+            spark.catalog.clearCache()
 
     def test_within_cluster_pairs_and_survivors(self, spark):
         df = self._clustered(spark)
@@ -4068,7 +4124,6 @@ class TestIvfKmeans:
         import random
 
         from ssis_to_pyspark_agent_spark.operators.similarity import (
-            _cosine,
             _ivf_assign_frame,
         )
 
@@ -4155,9 +4210,10 @@ class TestIvfKmeans:
         assert top1 == {0: 0, 1: 1}  # self found even probing 1 list
 
     def test_centroid_sample_takes_no_shuffle(self, spark, monkeypatch):
-        # the hash-sampled centroids are a top-n over the corpus: it must
-        # read the corpus as given, not through the spread (a rebalance
-        # here) that feeds the assignment kernel
+        # the centroid samples (hash order or the k-means sample) are a
+        # top-n over the corpus: they must read the corpus as given, not
+        # through the spread (a rebalance here) that feeds the
+        # assignment kernel — in topk_ivf and dedup.semantic alike
         import random
 
         rng = random.Random(12)
@@ -4166,24 +4222,36 @@ class TestIvfKmeans:
             data, "vec_id long, embedding array<float>"
         ).coalesce(1)  # narrower than the cores, so the corpus is spread
         q = df.filter("vec_id < 3")
-        plans = []
         frame = type(df)  # the session's concrete DataFrame class
         collect = frame.collect
+        plans = []
 
         def recording_collect(self):
             out = collect(self)
             plans.append(self._jdf.queryExecution().executedPlan().toString())
             return out
 
-        monkeypatch.setattr(frame, "collect", recording_collect)
-        run("similarity.topk_ivf", spark, [df, q], id_col="vec_id",
-            vec_col="embedding", query_id_col="vec_id",
-            query_vec_col="embedding", k=2, centroids=4, nprobe=2,
-            quantize=10000)
-        monkeypatch.undo()
-        samples = [p for p in plans if "TakeOrderedAndProject" in p]
-        assert len(samples) == 1, plans
-        assert "Exchange" not in samples[0], samples[0]
+        calls = {
+            "similarity.topk_ivf": lambda **kw: run(
+                "similarity.topk_ivf", spark, [df, q], id_col="vec_id",
+                vec_col="embedding", query_id_col="vec_id",
+                query_vec_col="embedding", k=2, centroids=4, nprobe=2,
+                quantize=10000, **kw),
+            "dedup.semantic": lambda **kw: run(
+                "dedup.semantic", spark, [df], id_col="vec_id",
+                vec_col="embedding", n_clusters=4, threshold=0.99,
+                quantize=10000, **kw),
+        }
+        for op, call in calls.items():
+            for kmeans in (False, True):
+                plans.clear()
+                monkeypatch.setattr(frame, "collect", recording_collect)
+                call(kmeans=kmeans)
+                monkeypatch.undo()
+                spark.catalog.clearCache()
+                samples = [p for p in plans if "TakeOrderedAndProject" in p]
+                assert len(samples) == 1, (op, kmeans, plans)
+                assert "Exchange" not in samples[0], (op, kmeans, samples[0])
 
 
 class TestProfileProperty:
@@ -4260,6 +4328,33 @@ def test_no_new_alternate_implementation_keys():
         if path.name in ("similarity.py", "dedup.py"):
             found |= {(path.name, k) for k in _config_keys(tree)
                       if k == "method"}
+    assert not found, found
+
+
+def test_one_cosine_path_whatever_quantize_says():
+    """No module under operators/ defines or calls a Catalyst cosine
+    (``_dot``, ``_norm``, ``_cosine``), and none passes ``_spread`` a
+    computed ``by_bytes``: every cosine is the numpy kernel, so nothing
+    may pick a second path (or a different spread) by ``quantize``."""
+    import ast
+
+    exprs = {"_dot", "_norm", "_cosine"}
+    found = set()
+    for path, tree in _package_trees("operators"):
+        for node in ast.walk(tree):
+            if isinstance(node, ast.FunctionDef) and node.name in exprs:
+                found.add((path.name, "def", node.name))
+            if not isinstance(node, ast.Call):
+                continue
+            name = getattr(node.func, "id", getattr(node.func, "attr", None))
+            if name in exprs:
+                found.add((path.name, "call", name))
+            if name == "_spread":
+                flags = node.args[2:] + [
+                    k.value for k in node.keywords if k.arg == "by_bytes"
+                ]
+                if any(not isinstance(f, ast.Constant) for f in flags):
+                    found.add((path.name, "by_bytes", node.lineno))
     assert not found, found
 
 
