@@ -61,7 +61,8 @@ def merge_upsert(spark: SparkSession, inputs, config, context) -> DataFrame:
         # SEMI target / updates ANTI target) puts the TARGET on the build
         # side, which at scale means shuffling the whole dimension twice —
         # measured 11.7s -> 6.8s on a 20M-row dim, zero SortMergeJoins in
-        # the final AQE plan (tools/scale_probe.py cdc).
+        # the final AQE plan (probe `cdc` of tools/scale_probe.py at
+        # commit e6f68f3).
         hits = (
             t.join(u, cond, "inner")
             .select(*[F.col(f"t.{k}") for k in keys], F.expr(wm).alias("_upd"))
@@ -144,7 +145,8 @@ def scd2(spark: SparkSession, inputs, config, context) -> DataFrame:
     # |upd| and persisted. Keeps the dimension strictly on the probe side
     # everywhere (the naive `upd ANTI cur` for brand-new keys builds a
     # hash table from the whole dimension — a full shuffle at scale;
-    # measured 11.4s -> 6.9s on a 20M-row dim, tools/scale_probe.py cdc).
+    # measured 11.4s -> 6.9s on a 20M-row dim, probe `cdc` of
+    # tools/scale_probe.py at commit e6f68f3).
     hits = (
         t.join(u, join_cond, "inner")
         .select(

@@ -754,9 +754,9 @@ def text_pack(spark: SparkSession, inputs, config, context) -> DataFrame:
     literal. Bucket skew from sparse/clustered ids affects only
     balance, never correctness — and when the phase-1 aggregate shows a
     bucket holding > 4/n_part of the rows, the operator automatically
-    re-buckets on exact-histogram quantiles (`rebalance`, default True;
-    256 fine buckets per partition, zoomed at most 6 levels) so
-    snowflake-style sparse ids still pack in parallel.
+    re-buckets on exact-histogram quantiles (256 fine buckets per
+    partition, zoomed at most 6 levels) so snowflake-style sparse ids
+    still pack in parallel.
 
     config: id_col, count_col (precomputed token count — chain
     text.token_count upstream), capacity, order_col (default id_col —
@@ -844,8 +844,7 @@ def text_pack(spark: SparkSession, inputs, config, context) -> DataFrame:
     total_rows = sum(n for n, _ in stats.values())
     max_rows = max((n for n, _ in stats.values()), default=0)
     if (
-        config.get("rebalance", True)
-        and n_part > 1
+        n_part > 1
         and mx > mn
         and total_rows > 0
         and max_rows * n_part > 4 * total_rows
@@ -1276,9 +1275,9 @@ def lm_score(spark: SparkSession, inputs, config, context) -> DataFrame:
     Measured fresh-session A/B at 2M docs on a noisy shared host, min
     of 8-9 alternating runs each: 104.2s -> 58.9s (1.77x; medians 129
     -> 118 under heavy steal), outputs bit-identical
-    (tools/lm_decomp.py). The surviving cost is the counts groupBy
-    (stream-sized partial agg, the exact-model floor) and the doc-side
-    explode+aggregate. With an extreme vocabulary (V < QGRID) or an
+    (tools/lm_decomp.py at commit e6f68f3). The surviving cost is the
+    counts groupBy (stream-sized partial agg, the exact-model floor) and
+    the doc-side explode+aggregate. With an extreme vocabulary (V < QGRID) or an
     all-boilerplate corpus the surviving table is genuinely large and
     AQE falls back to the SMJ plan — graceful, not wrong. With an
     external train corpus nothing is inferable from absence (and
@@ -1291,8 +1290,9 @@ def lm_score(spark: SparkSession, inputs, config, context) -> DataFrame:
     n=3 train=docs mins 254.5s vs 238.8s old, n=3 docs=10x train (the
     CCNet shape) 63.4s vs 56.5s old — because the stream explode +
     per-doc aggregate is the floor and the fused stats build re-shuffles
-    the gram-sized counts on the skewed _ctx; tools/lm_decomp.py
-    ext_old/ext_new keeps the harness (PLANS.md round-10).
+    the gram-sized counts on the skewed _ctx; probes ext_old/ext_new
+    of tools/lm_decomp.py at commit e6f68f3 keep the harness (PLANS.md
+    round-10).
     The plan is fully lazy (zero jobs at invocation): AQE broadcasts
     the pruned stats table at runtime from its post-shuffle size. A
     first-cut formulation hashed ctx and nxt separately per position on

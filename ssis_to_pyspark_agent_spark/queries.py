@@ -2336,45 +2336,26 @@ def _parquet_col_max(path: str, col: str):
         return None
 
 
-def _q44_funnel(spark: SparkSession, d0: DataFrame,
-                url_mod: int = 50, materialize: str = "persist",
-                checkpoint_dir: str | None = None) -> list[tuple]:
+def _q44_funnel(spark: SparkSession, d0: DataFrame) -> list[tuple]:
     """Run the curation cascade over ``d0`` (doc_id, text, source,
     ws_tokens) and return the funnel-report rows
-    [(kind, key, n_docs, n_toks), ...] — SINGLE-PASS per stage.
-    ``url_mod`` sets the synthetic url's path collision group size
-    (default 50 is the q44 fixture contract, mirrored by the oracle;
-    scale probes pass n_docs/4 so the url stage keeps a realistic
-    survivor fraction instead of collapsing the corpus).
+    [(kind, key, n_docs, n_toks), ...] — SINGLE-PASS per stage. The
+    synthetic url's path collision group size is 50, the q44 fixture
+    contract the oracle mirrors.
 
     The former standalone q81 re-derived each stage's full prefix per
     report leg — ~6 corpus passes; at 100 TB a funnel must cost one
-    pass per stage (round-5 verdict item 2). Two materialization modes
-    make that cost model EXPLICIT (round-7 verdict item 3):
-
-    - ``materialize='persist'`` (default, right for bench/fixture
-      scale): every stage frame is persisted and the per-stage
-      count/token aggregates read the caches in chain order (Spark's
-      cache manager substitutes a persisted subtree into every
-      downstream stage). Footprint is executor STORAGE memory/disk —
-      at 100 TB eviction silently re-derives upstream stages.
-    - ``materialize='checkpoint'``: every stage (including the landed
-      raw copy) is written to parquet under ``checkpoint_dir`` and read
-      back; each downstream stage and report scans the parquet, so the
-      footprint is cluster-storage-explicit, eviction-proof, and each
-      stage output survives for audit/restart — the shape a real
-      curation run uses. Costs one parquet write+read per stage.
-
-    Both modes scan the raw input exactly once (pinned by an
-    instrumented-input test counting rows leaving the raw source).
-    Report rows are tiny (6 stages + |sources|), collected eagerly;
-    every persist is released / the checkpoint scratch removed before
-    returning (NOTES invariant 13).
+    pass per stage (round-5 verdict item 2). Every stage frame is
+    persisted and the per-stage count/token aggregates read the caches
+    in chain order (Spark's cache manager substitutes a persisted
+    subtree into every downstream stage), so the raw input is scanned
+    exactly once (pinned by an instrumented-input test counting rows
+    leaving the raw source). The footprint is executor STORAGE
+    memory/disk — at 100 TB eviction silently re-derives upstream
+    stages. Report rows are tiny (6 stages + |sources|), collected
+    eagerly; every persist is released before returning (NOTES
+    invariant 13).
     """
-    if materialize not in ("persist", "checkpoint"):
-        raise ValueError(
-            f"materialize must be 'persist' or 'checkpoint', got "
-            f"{materialize!r}")
 
     def seg(tag: str, x: DataFrame, steps) -> DataFrame:
         p = Pipeline(f"q44_funnel_{tag}").step(
@@ -2388,7 +2369,7 @@ def _q44_funnel(spark: SparkSession, d0: DataFrame,
 
     stage_defs = [
         ("s1_url", [
-            ("derived_column", dict(columns={"url": _q44_url(url_mod)})),
+            ("derived_column", dict(columns={"url": _q44_url(50)})),
             ("dedup.url", dict(url_col="url", id_col="doc_id",
                                emit="flag")),
             ("filter", dict(predicate="[url_keep]")),
@@ -2411,21 +2392,10 @@ def _q44_funnel(spark: SparkSession, d0: DataFrame,
                                         budget_frac=0.6)),
         ]),
     ]
-    ckpt_root = None
-    if materialize == "checkpoint":
-        ckpt_root = checkpoint_dir or _scratch("q44_funnel_ckpt")
-
-    def landed(key: str, f: DataFrame) -> DataFrame:
-        if materialize == "persist":
-            return f.persist()
-        path = f"{ckpt_root}/{key}"
-        f.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
-
     keys = ["s0_raw"] + [k for k, _ in stage_defs]
-    frames = [landed("s0_raw", d0)]
+    frames = [d0.persist()]
     for key, steps in stage_defs:
-        frames.append(landed(key, seg(key, frames[-1], steps)))
+        frames.append(seg(key, frames[-1], steps).persist())
     rows: list[tuple] = []
 
     def report(f: DataFrame):
@@ -2454,15 +2424,8 @@ def _q44_funnel(spark: SparkSession, d0: DataFrame,
         ):
             rows.append(("by_source", src["source"], src["n"], src["tok"]))
     finally:
-        if materialize == "persist":
-            for f in frames:
-                f.unpersist()
-        elif checkpoint_dir is None:
-            # default scratch is this helper's footprint to clean; a
-            # caller-supplied dir is the caller's audit artifact
-            import shutil
-
-            shutil.rmtree(ckpt_root, ignore_errors=True)
+        for f in frames:
+            f.unpersist()
     return rows
 
 

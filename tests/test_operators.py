@@ -36,6 +36,18 @@ def qcos(x, y, quantize=10000):
     return d / (math.sqrt(na) * math.sqrt(nb))
 
 
+def _pack_reference(rows, cap):
+    """text.pack's docs rows by definition: order by id, each doc's
+    token offset is the running token count before it, and its chunk
+    range is where [offset, offset + count) falls at `cap` tokens per
+    chunk. Every count here is positive."""
+    out, acc = [], 0
+    for i, c in sorted(rows):
+        out.append((i, acc, acc // cap, (acc + c - 1) // cap))
+        acc += c
+    return out
+
+
 def _q(x, q: int):
     return F.round(x.cast("double") * q, 0).cast("long")
 
@@ -310,6 +322,22 @@ class TestMergeScd:
         closed = out.filter("NOT is_current").collect()
         assert len(closed) == 1 and closed[0].k == 1
         assert str(closed[0].effective_to).startswith("2024-01-01")
+
+    def test_scd1_overwrites_tracked_changes_only(self, spark):
+        dim = spark.createDataFrame(
+            [(1, "x", "n1"), (2, "y", "n2"), (3, "z", "n3")],
+            "k int, attr string, note string",
+        )
+        upd = spark.createDataFrame(
+            [(1, "X", "n1"), (2, "y", "N2"), (4, "w", "n4")],
+            "k int, attr string, note string",
+        )
+        out = run("scd1", spark, [dim, upd], keys=["k"], tracked=["attr"])
+        # 1: tracked attr changed -> overwritten; 2: only the untracked
+        # note changed -> kept as it was; 3: untouched; 4: new key
+        assert rows(out, "k", "attr", "note") == [
+            (1, "X", "n1"), (2, "y", "n2"), (3, "z", "n3"), (4, "w", "n4"),
+        ]
 
 
 class TestDedup:
@@ -1248,8 +1276,7 @@ class TestTextOps:
         # bucketing puts ~every row in ONE bucket — and the cluster is
         # far below one fine bucket's width, forcing the recursive
         # zoom. The rebalance must spread them (no bucket > 4/n_part of
-        # the rows) while leaving every offset identical to the
-        # unbalanced run.
+        # the rows) while every offset stays the global prefix sum.
         rows = [(i, (i * 7) % 20 + 1) for i in range(2990)] + [
             (10**15 - j * 10**13, 5) for j in range(10)
         ]
@@ -1258,17 +1285,12 @@ class TestTextOps:
         kw = dict(id_col="id", count_col="cnt", capacity=64,
                   partitions=n_part)
         ctx = {}
-        out_bal = sorted(
+        out = sorted(
             (r.id, r.tok_offset, r.first_chunk, r.last_chunk)
             for r in run("text.pack", spark, [df], _context=ctx,
                          **kw).collect()
         )
-        out_raw = sorted(
-            (r.id, r.tok_offset, r.first_chunk, r.last_chunk)
-            for r in run("text.pack", spark, [df], rebalance=False,
-                         **kw).collect()
-        )
-        assert out_bal == out_raw
+        assert out == _pack_reference(rows, 64)
         buckets = ctx["_pack_bucket_rows"]
         assert len(buckets) > 1
         assert max(buckets.values()) * n_part <= 4 * 3000
@@ -1309,24 +1331,19 @@ class TestTextOps:
     def test_pack_rebalance_multiple_clusters(self, spark):
         # several dense clusters overfull at once: the level-wise
         # planner must histogram ALL of them in one aggregate per level
-        # and still produce offsets identical to the unbalanced run
+        # and still produce the global prefix-sum offsets
         rows = []
         for c, start in enumerate([0, 10**14, 5 * 10**14]):
             rows += [(start + i, (i * 11) % 15 + 1) for i in range(1000)]
         df = spark.createDataFrame(rows, "id long, cnt int").repartition(8)
         kw = dict(id_col="id", count_col="cnt", capacity=64, partitions=12)
         ctx = {}
-        bal = sorted(
-            (r.id, r.tok_offset, r.first_chunk)
+        out = sorted(
+            (r.id, r.tok_offset, r.first_chunk, r.last_chunk)
             for r in run("text.pack", spark, [df], _context=ctx,
                          **kw).collect()
         )
-        raw = sorted(
-            (r.id, r.tok_offset, r.first_chunk)
-            for r in run("text.pack", spark, [df], rebalance=False,
-                         **kw).collect()
-        )
-        assert bal == raw
+        assert out == _pack_reference(rows, 64)
         buckets = ctx["_pack_bucket_rows"]
         assert max(buckets.values()) * 12 <= 4 * 3000
 
@@ -5292,59 +5309,3 @@ class TestQ44FunnelSinglePass:
         # and no persist leaked past the helper (NOTES invariant 13)
         persisted_after = len(spark.sparkContext._jsc.getPersistentRDDs())
         assert persisted_after == persisted_before
-
-    def test_funnel_checkpoint_mode(self, spark, tmp_path):
-        # round-7 verdict item 3: materialize='checkpoint' writes each
-        # stage to parquet and reads it back — identical report rows,
-        # still single-pass over raw, zero executor-storage footprint
-        # (no persists at all), and a caller-supplied dir keeps the
-        # stage outputs as audit artifacts
-        import os
-
-        from ssis_to_pyspark_agent_spark.queries import _q44_funnel
-
-        acc = spark.sparkContext.accumulator(0)
-
-        def count_rows(batches):
-            for pdf in batches:
-                acc.add(len(pdf))
-                yield pdf
-
-        text = ("the quick brown fox and the lazy dog walk to a park "
-                "in this fine town with some friends and we all like "
-                "to read the long document about many things ")
-        base = spark.createDataFrame(
-            [(i, text + str(i), f"src{i % 3}") for i in range(300)],
-            "doc_id long, text string, source string",
-        )
-        tok = F.size(F.filter(F.split(F.trim("text"), r"\s+"),
-                              lambda x: x != "")).cast("bigint")
-        plain = base.withColumn("ws_tokens", tok)
-        expected = sorted(_q44_funnel(spark, plain))  # persist mode
-        counted = base.mapInPandas(
-            count_rows, schema="doc_id long, text string, source string"
-        ).withColumn("ws_tokens", tok)
-        persisted_before = len(spark.sparkContext._jsc.getPersistentRDDs())
-        ckpt = str(tmp_path / "funnel_ckpt")
-        rows = _q44_funnel(spark, counted, materialize="checkpoint",
-                           checkpoint_dir=ckpt)
-        assert sorted(rows) == expected
-        assert acc.value == 300  # raw scanned once (landed to s0_raw)
-        assert len(spark.sparkContext._jsc.getPersistentRDDs()) == \
-            persisted_before  # checkpoint mode persists NOTHING
-        # caller-supplied dir: every stage survives as parquet for audit
-        stage_names = {"s0_raw", "s1_url", "s2_lang", "s3_quality",
-                       "s4_exact", "s5_temperature"}
-        assert stage_names <= set(os.listdir(ckpt))
-        n_s4 = spark.read.parquet(f"{ckpt}/s4_exact").count()
-        assert n_s4 == dict(
-            (k, n) for kind, k, n, _ in rows if kind == "stage"
-        )["s4_exact"]
-        # default scratch mode cleans up after itself
-        from ssis_to_pyspark_agent_spark.queries import _scratch
-        rows2 = _q44_funnel(spark, plain, materialize="checkpoint")
-        assert sorted(rows2) == expected
-        assert not os.path.exists(_scratch("q44_funnel_ckpt")) or \
-            not os.listdir(_scratch("q44_funnel_ckpt"))
-        with pytest.raises(ValueError, match="materialize"):
-            _q44_funnel(spark, plain, materialize="cache")

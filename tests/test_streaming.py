@@ -128,6 +128,34 @@ def test_dedup_within_watermark(spark):
     assert got.count() == n_users
 
 
+def test_stream_dedup_operator(spark, tmp_path):
+    """The registered stream.dedup step: a key seen again inside the
+    watermark is dropped, a distinct key survives."""
+    import datetime
+
+    from ssis_to_pyspark_agent_spark.plans import Pipeline, run_pipeline
+
+    t = datetime.datetime(2024, 1, 1, 12, 0)
+    m = datetime.timedelta(minutes=1)
+    src = str(tmp_path / "ev")
+    # two files, so two micro-batches: the repeat of "a" arrives after
+    # the first "a" is already held in the dedup state
+    for batch in ([("a", 1, t), ("b", 2, t + m)], [("a", 3, t + 5 * m)]):
+        spark.createDataFrame(
+            batch, "k string, seq int, ts timestamp"
+        ).coalesce(1).write.mode("append").parquet(src)
+    p = (
+        Pipeline("stream_dedup")
+        .step("src", "source.stream", path=src)
+        .step("dd", "stream.dedup", "src", keys=["k"], ts_col="ts",
+              watermark="10 minutes")
+        .step("out", "sink.memory_stream", "dd", table="t_stream_dedup",
+              output_mode="append")
+    )
+    got = run_pipeline(spark, p).df("out")
+    assert sorted((r.k, r.seq) for r in got.collect()) == [("a", 1), ("b", 2)]
+
+
 def test_stateful_apply_in_pandas_with_state(spark):
     """Custom stateful operator: running per-user event counter via
     applyInPandasWithState (the Script-Component-with-state analogue)."""
