@@ -459,121 +459,30 @@ def _keep_min_survivors(
     return df.join(dom, id_col, "left_anti")
 
 
-class _CCCheckpointer:
-    """Lineage cut for the iterative cc loops. Default (no dir):
-    ``localCheckpoint`` — fast, but the blocks live on executor-local
-    storage, so losing one executor mid-loop makes them irrecoverable
-    and the whole contraction restarts; fine on local[] and short loops.
-    With ``checkpoint_dir``: EVERY cut writes the frame to parquet under
-    the dir and reads it back — RELIABLE storage (HDFS/object store), so
-    an executor failure recomputes at most the current round instead of
-    killing the job (the same shape as the q44 funnel's
-    materialize='checkpoint').
+def _cut(df: DataFrame) -> DataFrame:
+    """Lineage cut for the iterative cc loops, so round N never replays
+    rounds 1..N-1. With a session checkpoint directory
+    (``SparkContext.setCheckpointDir``) it is Spark's reliable
+    ``checkpoint()``: the round lands on durable storage, so losing an
+    executor mid-loop recomputes at most the current round. Without one
+    it is ``localCheckpoint()``: executor-local blocks, fast, but an
+    executor loss restarts the loop. Spark writes each reliable cut
+    under ``<dir>/<application id>/rdd-<id>``, so concurrent calls never
+    share files; ``spark.cleaner.referenceTracking.cleanCheckpoints``
+    decides whether they are deleted.
 
-    Why there is no "write every N rounds, carry lineage in between"
-    spacing knob: each cc round references the previous round's frame
-    MORE THAN ONCE (lp twice — the neighbor join and the label merge;
-    star ~6x across the large/small passes), so a plan carried across k
-    uncut rounds grows GEOMETRICALLY (~2^k / ~6^k nodes) and every
-    round's convergence probe re-plans it — measured as a driver
-    heap OOM at k=3 on a 30-node chain, not a tail risk. Per-round
-    writes of a dup-volume-sized frame are the cheap part of a round
-    (two shuffles each) and keep the plan O(1).
-
-    ``finish(df)`` lands the final frame and prunes the per-round
-    scratch, so the steady-state footprint is one dup-volume-sized
-    dataset; the caller owns the directory itself.
-
-    The scratch is NAMESPACED PER INVOCATION — ``<dir>/cc_rounds/iNNNN``
-    with NNNN = max existing index + 1 — so two cc invocations sharing
-    one checkpoint_dir (natural: same config key on dedup.cluster and
-    sample.holdout in one plan) never clobber each other: the second
-    run's writes and pruning touch only its own subdir, while the first
-    run's returned frames keep lazily reading ``i0001/final`` (round-9
-    ADVICE item — previously the shared ``cc_rounds/final`` was
-    silently overwritten)."""
-
-    def __init__(self, spark: SparkSession | None, checkpoint_dir):
-        self.spark = spark
-        self.i = 0
-        self.root = None
-        if checkpoint_dir:
-            base = checkpoint_dir.rstrip("/") + "/cc_rounds"
-            from ssis_to_pyspark_agent_spark.fs import hadoop_fs
-
-            fs, hpath, broot = hadoop_fs(spark, base)
-            last = 0
-            if fs.exists(broot):
-                for st in fs.listStatus(broot):
-                    name = st.getPath().getName()
-                    if name.startswith("i") and name[1:].isdigit():
-                        last = max(last, int(name[1:]))
-            # CLAIM the namespace eagerly and atomically: list-then-
-            # pick-max+1 alone races (two concurrent invocations sharing
-            # the dir both see last=N before either writes — round-10
-            # self-review). createNewFile -> create(overwrite=False) is
-            # the atomic primitive; an existing claim (or a racing
-            # create's exception) advances to the next index.
-            for i in range(last + 1, last + 1002):
-                cand = f"{base}/i{i:04d}"
-                try:
-                    claimed = fs.createNewFile(hpath(cand + "/.claim"))
-                except Exception:
-                    claimed = False  # raced: someone else created it
-                if claimed:
-                    self.root = cand
-                    break
-            else:
-                raise IOError(
-                    f"could not claim a cc_rounds namespace under "
-                    f"{base} after 1001 attempts"
-                )
-
-    def cut(self, df: DataFrame) -> DataFrame:
-        self.i += 1
-        if self.root is None:
-            return df.localCheckpoint()
-        path = f"{self.root}/r{self.i:04d}"
-        df.write.mode("overwrite").parquet(path)
-        return self.spark.read.parquet(path)
-
-    def abort(self) -> None:
-        """Delete this invocation's entire scratch subdir — called on
-        the error paths (star non-convergence, a mid-loop error),
-        where ``finish`` never runs and repeated failed runs would
-        otherwise accumulate dup-volume-sized parquet dirs (round-9
-        ADVICE item). Only THIS invocation's namespace is touched."""
-        if self.root is None:
-            return
-        from ssis_to_pyspark_agent_spark.fs import hadoop_fs
-
-        fs, _, root = hadoop_fs(self.spark, self.root)
-        if fs.exists(root):
-            fs.delete(root, True)
-
-    def finish(self, df: DataFrame) -> DataFrame:
-        """Land the final frame in one ``final`` parquet dir and prune
-        every per-round file — the returned frame reads only the final
-        file, so the steady-state footprint is a single dup-volume-sized
-        dataset. No-op without a checkpoint_dir."""
-        if self.root is None:
-            return df
-        from ssis_to_pyspark_agent_spark.fs import hadoop_fs
-
-        path = f"{self.root}/final"
-        df.write.mode("overwrite").parquet(path)
-        out = self.spark.read.parquet(path)
-        fs, _, root = hadoop_fs(self.spark, self.root)
-        if fs.exists(root):
-            for st in fs.listStatus(root):
-                if st.isDirectory() and st.getPath().getName() != "final":
-                    fs.delete(st.getPath(), True)
-        return out
+    Every round cuts: each cc round references the previous round's
+    frame MORE THAN ONCE (lp twice — the neighbor join and the label
+    merge; star ~6x across the large/small passes), so a plan carried
+    across k uncut rounds grows GEOMETRICALLY (~2^k / ~6^k nodes) and
+    every round's convergence probe re-plans it — measured as a driver
+    heap OOM at k=3 on a 30-node chain."""
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint()
+    return df.localCheckpoint()
 
 
-def _star_components(
-    pairs: DataFrame, ckpt: _CCCheckpointer | None = None
-) -> DataFrame:
+def _star_components(pairs: DataFrame) -> DataFrame:
     """Alternating large-star / small-star contraction (Kiveris et al.
     2014, "Connected Components in MapReduce and Beyond" — the public
     MapReduce CC algorithm): returns (x, comp) for every node that
@@ -586,7 +495,7 @@ def _star_components(
     regardless of shape, so it is the deep-graph fallback of
     dedup.cluster / sample.holdout (`_propagate_labels`). Per round: two
     group-by-min shuffles over the dup-volume-sized edge set plus a
-    set-stability check; each round localCheckpoints so round N never
+    set-stability check; each round is cut (`_cut`) so round N never
     replays rounds 1..N-1. The round bound comes from the edge count the
     first probe already takes: a component has at most n_edges + 1
     nodes, so ``max(32, ceil(log2(n_edges + 1))**2)`` rounds cover it.
@@ -597,10 +506,8 @@ def _star_components(
     the star shape is verified structurally before returning rather
     than trusted.
     """
-    if ckpt is None:
-        ckpt = _CCCheckpointer(None, None)
     # canonical directed edges (h, l): h > l, no self-loops
-    e = ckpt.cut(
+    e = _cut(
         pairs.select(
             F.greatest("a", "b").alias("h"), F.least("a", "b").alias("l")
         )
@@ -633,7 +540,7 @@ def _star_components(
         # itself) to their minimum m
         smin = large.groupBy("h").agg(F.min("l").alias("m"))
         joined = large.join(smin, "h")
-        new_e = ckpt.cut(
+        new_e = _cut(
             joined.select("h", F.col("m").alias("l"))
             .unionByName(
                 joined.filter(F.col("l") != F.col("m")).select(
@@ -744,9 +651,7 @@ def _driver_cc_labels(spark, rows, id_field) -> DataFrame:
 
 
 def _propagate_labels(
-    pairs: DataFrame,
-    checkpoint_dir: str | None = None,
-    driver_cap: int = _DRIVER_CC_CAP,
+    pairs: DataFrame, driver_cap: int = _DRIVER_CC_CAP
 ) -> DataFrame:
     """Connected-component labels over a (a, b) pair list: returns
     (x, comp) for every node that APPEARS IN AN EDGE — dup-volume-sized,
@@ -760,14 +665,11 @@ def _propagate_labels(
     shuffle per round, and real dup graphs are shallow), then automatic
     fallback to star contraction if labels are still moving — so the
     operator NEVER fails or returns partial labels on a deep graph, and
-    never pays star's heavier rounds on a shallow one.
-    ``localCheckpoint`` cuts the lineage so round N doesn't replay
-    rounds 1..N-1; pass ``checkpoint_dir`` to cut onto RELIABLE parquet
-    instead — localCheckpoint blocks live on executor-local disk and die
-    with the executor, which at cluster scale restarts the whole loop
-    (round-8 verdict item 5). ``driver_cap`` is a test seam (0 disables
-    the driver route); operators always pass the default."""
-    if checkpoint_dir is None and driver_cap > 0:
+    never pays star's heavier rounds on a shallow one. Both loops cut
+    their lineage every round with `_cut`, which is durable when the
+    session has a checkpoint directory. ``driver_cap`` is a test seam
+    (0 disables the driver route); operators always pass the default."""
+    if driver_cap > 0:
         # r12 (guide §1.2): at real dup rates the pair graph is tiny
         # relative to the corpus, and the distributed loop's cost is
         # almost entirely per-round fixed overhead (lineage cuts +
@@ -775,34 +677,21 @@ def _propagate_labels(
         # for 256 pairs). Under a driver-bounded cap, collect the pairs
         # once and run exact union-find instead — same min-label
         # contract, zero rounds. The probe is limit(cap+1), never a
-        # count; above the cap (or with a checkpoint_dir, whose
-        # durable per-round artifacts are the point) the distributed
-        # path is untouched.
+        # count; above the cap the distributed path is untouched.
         head = pairs.select("a", "b").limit(driver_cap + 1).collect()
         if len(head) <= driver_cap:
             return _driver_cc_labels(
                 pairs.sparkSession, head, pairs.schema["a"]
             )
-    ckpt = _CCCheckpointer(pairs.sparkSession, checkpoint_dir)
-    # on ANY failure path (star non-convergence, a mid-loop error)
-    # finish() never runs — drop this invocation's round scratch before
-    # re-raising so repeated failed runs don't accumulate
-    # dup-volume-sized parquet dirs (round-9 ADVICE item)
-    try:
-        labels, converged = _lp_labels(pairs, _AUTO_LP_ROUNDS, ckpt)
-        if converged:
-            return ckpt.finish(labels)
-        # deep component: reroute to the diameter-independent algorithm,
-        # which bounds its own rounds from the edge count
-        return ckpt.finish(_star_components(pairs, ckpt))
-    except BaseException:
-        ckpt.abort()
-        raise
+    labels, converged = _lp_labels(pairs, _AUTO_LP_ROUNDS)
+    if converged:
+        return labels
+    # deep component: reroute to the diameter-independent algorithm,
+    # which bounds its own rounds from the edge count
+    return _star_components(pairs)
 
 
-def _lp_labels(
-    pairs: DataFrame, max_rounds: int, ckpt: _CCCheckpointer | None = None
-):
+def _lp_labels(pairs: DataFrame, max_rounds: int):
     """Min-label propagation: each round every node adopts the smallest
     label in its neighborhood; labels complete in <= diameter rounds.
     ``max_rounds`` bounds the UPDATING rounds — convergence can only be
@@ -812,15 +701,13 @@ def _lp_labels(
     the last allowed round read as "not converged", making the caller
     redo finished work in star contraction). Returns (labels,
     converged) — a non-converged run falls back to star contraction."""
-    if ckpt is None:
-        ckpt = _CCCheckpointer(None, None)
     edges = (
         pairs.select(F.col("a").alias("x"), F.col("b").alias("y"))
         .unionByName(pairs.select(F.col("b").alias("x"), F.col("a").alias("y")))
         .distinct()
         .persist()
     )
-    labels = ckpt.cut(
+    labels = _cut(
         edges.select("x").distinct().withColumn("comp", F.col("x"))
     )
 
@@ -832,7 +719,7 @@ def _lp_labels(
             .groupBy("x")
             .agg(F.min("comp").alias("ncomp"))
         )
-        updated = ckpt.cut(
+        updated = _cut(
             labels.join(neighbor_min, "x", "left")
             .select(
                 "x",
@@ -863,22 +750,13 @@ def dedup_cluster(spark: SparkSession, inputs, config, context):
     rounds — a chain-shaped dup graph can't outrun it, and a shallow
     graph never pays star's heavier rounds. Neither loop takes a round
     option: propagation runs 8 rounds, and star contraction bounds its
-    own rounds from the edge count; `localCheckpoint` cuts the lineage
-    so round N doesn't replay rounds 1..N-1.
-
-    ``checkpoint_dir``: cut each round onto RELIABLE parquet under this
-    directory instead of localCheckpoint (which writes executor-LOCAL
-    blocks — irrecoverable if an executor dies mid-loop, i.e. the whole
-    contraction restarts; at a 1000-executor run some executor loss is
-    routine). Every round writes — a spacing knob is structurally
-    impossible here because each round references the previous frame
-    multiple times, so carried lineage grows geometrically (see
-    _CCCheckpointer). Outputs land in
-    ``<checkpoint_dir>/cc_rounds/i<N>/final`` (N = per-invocation
-    counter, so the directory is safely SHAREABLE across invocations —
-    a second run never clobbers frames the first run still reads
-    lazily) and per-round scratch is pruned, on failure entirely;
-    remove the directory after consuming the outputs.
+    own rounds from the edge count. Each round cuts its lineage
+    (`_cut`) so round N doesn't replay rounds 1..N-1: onto Spark's
+    reliable checkpoint when the session has a checkpoint directory
+    (``SparkContext.setCheckpointDir`` — an executor lost mid-loop then
+    costs one round, not the loop), else ``localCheckpoint``. Where the
+    cuts live is a deployment setting of the session, not an option of
+    the step.
 
     Returns {'components': (id, component), 'out': one surviving row per
     component (min id), 'labels': the dup-volume propagated (x, comp)
@@ -897,15 +775,11 @@ def dedup_cluster(spark: SparkSession, inputs, config, context):
     ids_df, pairs = inputs[0], inputs[1]
     id_col = config["id_col"]
 
-    labels = _propagate_labels(
-        pairs, checkpoint_dir=config.get("checkpoint_dir")
-    )
+    labels = _propagate_labels(pairs)
 
     # Re-attach isolated nodes (comp = own id) with one left join; the
     # propagated label set is dup-volume-sized, so broadcast it.
-    propagated = labels.select(F.col("x").alias(id_col), "comp")
-    if config.get("broadcast_components", True):  # off for degenerate corpora
-        propagated = F.broadcast(propagated)
+    propagated = F.broadcast(labels.select(F.col("x").alias(id_col), "comp"))
     components = ids_df.select(id_col).join(
         propagated, id_col, "left"
     ).select(
@@ -1268,10 +1142,9 @@ def dedup_minhash(spark: SparkSession, inputs, config, context):
     # via broadcast — the arrays never shuffle. Assumption: candidates fit
     # the driver (bounded by true-dup volume x LSH precision); set
     # verify_broadcast=False for degenerate corpora.
+    verify_bc = config.get("verify_broadcast", True)
     sh = base.select("_id", "_sh")
-    cand_cached = cand  # pre-hint handle; the broadcast wrap below would
-    # make unpersist miss the cache entry (hint node != cached plan)
-    if config.get("verify_broadcast", True):
+    if verify_bc:
         cand_ids = (
             cand.select(F.col("a").alias("_id"))
             .unionByName(cand.select(F.col("b").alias("_id")))
@@ -1290,7 +1163,6 @@ def dedup_minhash(spark: SparkSession, inputs, config, context):
             F.col(id_col).alias("_id"),
             _shingles(F.col(text_col), k).alias("_sh"),
         )
-        cand = F.broadcast(cand)
         # sh feeds BOTH sides of the verify join; unpersisted, the plan
         # duplicates the whole subtree — the corpus-wide semi-probe, the
         # candidate shingle pass and the cand_ids distinct each run twice
@@ -1300,31 +1172,28 @@ def dedup_minhash(spark: SparkSession, inputs, config, context):
         # materialization below. NEVER persisted when verify_broadcast is
         # False — there sh is the corpus-sized shingle frame.
         sh = sh.persist()
+    # the hint wraps a new plan node, so `cand` itself stays the handle
+    # that unpersist() matches against the cache
     pairs = (
-        cand.join(sh.select(F.col("_id").alias("a"), F.col("_sh").alias("sha")), "a")
+        (F.broadcast(cand) if verify_bc else cand)
+        .join(sh.select(F.col("_id").alias("a"), F.col("_sh").alias("sha")), "a")
         .join(sh.select(F.col("_id").alias("b"), F.col("_sh").alias("shb")), "b")
         .withColumn("jaccard", _jaccard(F.col("sha"), F.col("shb")))
         .filter(F.col("jaccard") >= threshold)
         .select("a", "b", "jaccard")
         .persist()  # consumed by the survivor anti-join AND the pairs port
     )
-    if config.get("verify_broadcast", True):
-        # one action fills sh (both join sides read the cache) and pairs;
-        # sh is then releasable immediately instead of leaking per
-        # invocation, and the survivor anti-join's broadcast build below
-        # reads materialized pairs instead of re-running the verify
-        pairs.count()
+    # one action fills pairs (and sh, whose two join sides read the
+    # cache); materialized `pairs` then carries the result for both
+    # remaining consumers, so the candidate cache and sh are released
+    # here on either verify path instead of leaking per invocation
+    pairs.count()
+    if verify_bc:
         sh.unpersist()
-        # materialized `pairs` carries the result for BOTH remaining
-        # consumers (survivor anti-join, pairs port) — the candidate
-        # cache is dead weight from here (ADVICE r11: the incremental
-        # path already released it; this path leaked it per invocation)
-        cand_cached.unpersist()
+    cand.unpersist()
     # broadcast is safe exactly when verify_broadcast is: the dominated
     # set is a sub-projection of the candidate frame broadcast above
-    out = _keep_min_survivors(
-        df, id_col, pairs, broadcast=config.get("verify_broadcast", True)
-    )
+    out = _keep_min_survivors(df, id_col, pairs, broadcast=verify_bc)
     if config.get("return_pairs"):
         return {"out": out, "pairs": pairs}
     return out
@@ -1428,11 +1297,11 @@ def dedup_simhash(spark: SparkSession, inputs, config, context):
     return out
 
 
-#: dedup.ngram_jaccard prefix_order='auto' runs its skew probe only at
-#: or above this many docs (below it every order is fast; round 8 lowered
-#: it from 400k after the q31 sf1 rig ran 2x slower on 'hash').
+#: dedup.ngram_jaccard runs its prefix-order skew probe only at or above
+#: this many docs (below it every order is fast; round 8 lowered it from
+#: 400k after the q31 sf1 rig ran 2x slower on 'hash').
 _NGRAM_DF_MIN_DOCS = 20_000
-#: top-shingle document frequency (sampled) at which 'auto' picks the
+#: top-shingle document frequency (sampled) at which the probe picks the
 #: DF prefix order: uniform corpora measure ~1e-4, Zipf+boilerplate ~1.0.
 _NGRAM_HOT_DF = 0.01
 
@@ -1445,26 +1314,25 @@ def dedup_ngram_jaccard(spark: SparkSession, inputs, config, context):
     dedup.minhash for recall at scale; this variant is exact-verify with
     the lightest possible candidate stage.
 
-    ``prefix_order`` ('auto' default): 'df' re-orders each doc's prefix
-    by ascending corpus document frequency (classic AllPairs) — output
+    Candidates are prefix-filtered (PPJoin/AllPairs), and the prefix
+    order is chosen from the data: 'df' orders each doc's prefix by
+    ascending corpus document frequency (classic AllPairs) — output
     identical, one extra DF pass — and is the scale-safe order on
     Zipfian/boilerplate-heavy corpora, where hash-ordered prefixes
     admit hot shingles and each becomes a quadratic (block, token)
     enumeration key (measured 277s -> 94s at 1M skewed docs, PLANS.md).
-    'auto' probes corpus size + top-shingle document frequency off the
-    persisted shingle pass and picks 'df' only when the corpus is
-    non-tiny (>= 20k docs, `_NGRAM_DF_MIN_DOCS` — below it everything
-    is fast and the probe can't pay for itself) AND skewed (top shingle
-    in >= 1% of sampled docs, `_NGRAM_HOT_DF`; uniform corpora measure
-    the DF pass as a net loss at any size); explicit 'hash'/'df'
-    override it. Probe cost caveat: the probe counts and
-    samples the RAW INPUT, which is metadata-cheap only when that input
-    is a source scan — fed from an expensive uncached subplan (joins,
-    transforms), the count and the sample each re-run that subplan
-    before the main pass; persist the input first, or pass an explicit
-    'hash'/'df' to skip the probe entirely. The effective order is
-    recorded in ``context['_ngram_prefix_order']`` (and, inside a
-    pipeline, under ``_ngram_prefix_order:<step>`` — the bare key is
+    A probe of corpus size + top-shingle document frequency picks 'df'
+    only when the corpus is non-tiny (>= 20k docs, `_NGRAM_DF_MIN_DOCS`
+    — below it everything is fast and the probe can't pay for itself)
+    AND skewed (top shingle in >= 1% of sampled docs, `_NGRAM_HOT_DF`;
+    uniform corpora measure the DF pass as a net loss at any size),
+    else 'hash'. Probe cost caveat: the probe counts and samples the
+    RAW INPUT, which is metadata-cheap only when that input is a source
+    scan — fed from an expensive uncached subplan (joins, transforms),
+    the count and the sample each re-run that subplan before the main
+    pass; persist the input first. The chosen order is recorded in
+    ``context['_ngram_prefix_order']`` (and, inside a pipeline, under
+    ``_ngram_prefix_order:<step>`` — the bare key is
     last-writer-wins)."""
     df: DataFrame = inputs[0]
     id_col, text_col = config["id_col"], config["text_col"]
@@ -1530,7 +1398,6 @@ def dedup_ngram_jaccard(spark: SparkSession, inputs, config, context):
     # scalar comparison that runs in the candidate join, BEFORE any
     # intersection work
     blocked = blocked.withColumn("_n", F.size("_sh"))
-    join_keys = [F.col("l._block") == F.col("r._block")]
     # Canonical-block dedup: multi-probe blocking (adjacent length
     # buckets, n min-hashes) matches a pair once per SHARED block, so
     # the raw join emits duplicate (a, b, token) rows — accept a match
@@ -1541,174 +1408,161 @@ def dedup_ngram_jaccard(spark: SparkSession, inputs, config, context):
     canonical_block = F.col("l._block") == F.array_min(
         F.array_intersect(F.col("l._bs"), F.col("r._bs"))
     )
-    if config.get("prefix_filter", True):
-        # PPJoin/AllPairs prefix filtering (Bayardo et al. 2007, public):
-        # under ANY fixed total order of shingles, a pair with
-        # J(A,B) >= t must share at least one element among each side's
-        # first |X| - ceil(t*|X|) + 1 elements (else the overlap is
-        # provably below t*|X|). `_sh` is already hash-sorted, so the
-        # prefix is a slice; candidates then join on (block, prefix
-        # token) — an EQUI key that shrinks in-block candidate counts
-        # from occupancy^2 to shared-rare-token pairs. Exact-preserving:
-        # it can only remove pairs the verify would reject, so oracles
-        # need no mirror clause. The 1e-9 guard keeps a non-representable
-        # threshold (0.7*10 -> 7.000000000000001) from OVER-shortening
-        # the prefix, which would silently lose valid pairs.
-        plen = (
-            F.col("_n")
-            - F.ceil(F.col("_n") * F.lit(float(threshold)) - F.lit(1e-9))
-            + 1
-        ).cast("int")
-        prefix_order = config.get("prefix_order", "auto")
-        if prefix_order not in ("auto", "hash", "df"):
-            raise ValueError(
-                "prefix_order must be 'auto', 'hash' or 'df', "
-                f"got {prefix_order!r}"
-            )
-        if prefix_order == "auto":
-            # Default since round 5 (round-4 verdict: the scale-safe
-            # order must not be opt-in). The DF pass pays on skewed
-            # corpora and costs on small/uniform ones, so probe both
-            # cheaply:
-            #   1. count the docs on the RAW INPUT, not `base` — a
-            #     parquet-source count is metadata-cheap, and crucially
-            #     it leaves the shingle cache UNMATERIALIZED. Counting
-            #     `base` pre-fills the cache, whose accurate (big)
-            #     array-column stats then flip the candidate block join
-            #     off its broadcast strategy: measured 2x on the whole
-            #     pass at 50k x ~8KB docs (49-62s vs 25.7s, PLANS.md
-            #     r5) while the count itself was only 5s. (A
-            #     limit-probe on base was 3.8x worse still: CollectLimit
-            #     runs the shingle pass on few partitions serially and
-            #     leaves the cache partial.) Under _NGRAM_DF_MIN_DOCS the
-            #     probe (and the DF pass) can't pay for itself — tiny
-            #     corpora are fast either way: 'hash'. The floor was
-            #     400k through round 7, which silently forced 'hash' on
-            #     mid-size SKEWED corpora: the q31 sf1 rig (50k docs,
-            #     top shingle in 27% of docs) enumerated 49M candidate
-            #     pairs for 259 true ones under hash order — 2.0x slower
-            #     than 'df' (35s vs 18s warm, round 8). 20k is the new
-            #     floor: below it the whole pass is sub-second-to-few-
-            #     seconds at any skew; above it a skewed corpus's
-            #     quadratic term already dominates the probe's one
-            #     sample-sized job. (A mid-size corpus that probes and
-            #     still picks 'hash' pays only that probe — the
-            #     round-5 "DF net loss at 200k" measurement was the DF
-            #     PASS, not the probe, and the hot-df gate still keeps
-            #     the DF pass off uniform corpora of any size.)
-            #   2. else, estimate the hottest shingle's document
-            #      frequency on a deterministic md5 doc-sample; if the
-            #      top shingle reaches _NGRAM_HOT_DF of sampled docs,
-            #      hash-order prefixes would admit it into ~plen/|sh|
-            #      of all prefixes, each a quadratic (block, token)
-            #      enumeration key: 'df'. Uniform corpora measure
-            #      top-df ~1e-4, Zipf+boilerplate ~1.0 — the 0.01
-            #      default sits well between (q31's sf0.1 corpus: 0.005
-            #      -> 'hash'; its 10x rig: 0.27 -> 'df').
-            # Either choice yields the IDENTICAL pair set (the prefix
-            # bound holds under any fixed total order); only the plan
-            # changes, so oracles are unaffected.
-            n_docs = df.count()
-            # n_docs == 0 short-circuits regardless of the floor (a
-            # floor <= 0 would otherwise divide by zero in the sample
-            # fraction; the pair set is empty anyway)
-            if n_docs < _NGRAM_DF_MIN_DOCS or n_docs == 0:
-                prefix_order = "hash"
-            else:
-                frac = min(1.0, 200_000 / n_docs)
-                # the sample SHINGLES ITS OWN SLICE of the raw input
-                # (filter pushed to the scan) instead of riding `base`:
-                # reading the cache would materialize ALL of it before
-                # the main pass plans — the same stats hazard as (1) —
-                # and re-shingling ~200k sampled docs is cheaper than
-                # filling a corpus-sized array cache
-                samp = df
-                if frac < 1.0:
-                    samp = df.filter(
-                        _md5_60bit(F.col(id_col).cast("string"))
-                        < F.lit(int(frac * float(1 << 60)))
-                    )
-                top_df = (
-                    samp.select(F.explode(sh).alias("_t"))
-                    .groupBy("_t")
-                    .agg(F.count(F.lit(1)).alias("_c"))
-                    .agg(F.max("_c"))
-                    .collect()[0][0]
-                ) or 0
-                n_samp = max(frac * n_docs, 1.0)
-                prefix_order = (
-                    "df" if top_df / n_samp >= _NGRAM_HOT_DF else "hash"
-                )
-        # record the EFFECTIVE order (auto-chosen or explicit); bare key
-        # is last-writer-wins, so inside a pipeline the runner's
-        # `_current_step` also namespaces it — same pattern as the pack
-        # histogram telemetry
-        context["_ngram_prefix_order"] = prefix_order
-        step = context.get("_current_step")
-        if step:
-            context[f"_ngram_prefix_order:{step}"] = prefix_order
-        if prefix_order == "df":
-            # AllPairs frequency ordering (Bayardo et al. 2007): the
-            # prefix bound holds under ANY fixed total order, and
-            # ordering by ascending corpus document frequency puts the
-            # RAREST tokens in every prefix — under a Zipfian corpus
-            # the hash order (effectively random) lets mid-frequency
-            # tokens into prefixes, and each such token is a hot
-            # (block, token) join key enumerating occupancy^2
-            # candidates. Costs one corpus DF pass (explode + groupBy +
-            # join + per-doc row_number) — opt in when the corpus is
-            # skewed; on uniform corpora hash order is already rare.
-            from pyspark.sql import Window as _W
-
-            occ = base.select("_id", F.explode("_sh").alias("_t"))
-            # df >= 2 rows only — "absence implies df == 1", the same
-            # hapax inference text.ngram_novelty / lm_score use: on
-            # natural corpora most shingles are singletons, so the
-            # join-back shrinks from |distinct shingles| to |repeated
-            # shingles| (often 10x+) and the rank order is unchanged
-            # (coalesce restores the exact df=1 the dropped rows had)
-            dfreq = (
-                occ.groupBy("_t")
-                .agg(F.count(F.lit(1)).alias("_df"))
-                .filter(F.col("_df") >= 2)
-            )
-            rk = F.row_number().over(
-                _W.partitionBy("_id").orderBy("_df", "_t")
-            )
-            pref = (
-                occ.join(dfreq, "_t", "left")
-                .withColumn("_df", F.coalesce(F.col("_df"), F.lit(1)))
-                .join(
-                    base.select("_id", F.size("_sh").alias("_n")), "_id"
-                )
-                .withColumn("_rk", rk)
-                # same `plen` bound (incl. the 1e-9 epsilon guard) as the
-                # hash-order slice — one definition, two orders
-                .filter(F.col("_rk") <= plen)
-                # a df==1 prefix token can never equi-join another doc's
-                # prefix, and a TRUE pair's guaranteed shared prefix
-                # token has df >= 2 with its rank unchanged — dropping
-                # the singleton rows is exact-preserving and cuts the
-                # self-join input to the repeated-token rows
-                .filter(F.col("_df") >= 2)
-                .select("_id", F.col("_t").alias("_tok"), "_rk")
-            )
-            blocked = blocked.select("_id", "_n", "_bs", "_block").join(
-                pref, "_id"
-            )
-        else:
-            # posexplode, not explode: the 0-based prefix position IS the
-            # token's rank in the doc's full hash-sorted array (the slice
-            # starts at 1), and the rank feeds the suffix bound below
-            blocked = blocked.select(
-                "_id", "_n", "_bs", "_block",
-                F.posexplode(F.slice("_sh", F.lit(1), plen)).alias(
-                    "_pos", "_tok"
-                ),
-            ).withColumn("_rk", F.col("_pos") + 1).drop("_pos")
-        join_keys.append(F.col("l._tok") == F.col("r._tok"))
+    # PPJoin/AllPairs prefix filtering (Bayardo et al. 2007, public):
+    # under ANY fixed total order of shingles, a pair with
+    # J(A,B) >= t must share at least one element among each side's
+    # first |X| - ceil(t*|X|) + 1 elements (else the overlap is
+    # provably below t*|X|). `_sh` is already hash-sorted, so the
+    # prefix is a slice; candidates then join on (block, prefix
+    # token) — an EQUI key that shrinks in-block candidate counts
+    # from occupancy^2 to shared-rare-token pairs. Exact-preserving:
+    # it can only remove pairs the verify would reject, so oracles
+    # need no mirror clause. The 1e-9 guard keeps a non-representable
+    # threshold (0.7*10 -> 7.000000000000001) from OVER-shortening
+    # the prefix, which would silently lose valid pairs.
+    plen = (
+        F.col("_n")
+        - F.ceil(F.col("_n") * F.lit(float(threshold)) - F.lit(1e-9))
+        + 1
+    ).cast("int")
+    # The prefix order is chosen from the data (the scale-safe order
+    # must not be opt-in). The DF pass pays on skewed corpora and
+    # costs on small/uniform ones, so probe both cheaply:
+    #   1. count the docs on the RAW INPUT, not `base` — a
+    #     parquet-source count is metadata-cheap, and crucially
+    #     it leaves the shingle cache UNMATERIALIZED. Counting
+    #     `base` pre-fills the cache, whose accurate (big)
+    #     array-column stats then flip the candidate block join
+    #     off its broadcast strategy: measured 2x on the whole
+    #     pass at 50k x ~8KB docs (49-62s vs 25.7s, PLANS.md
+    #     r5) while the count itself was only 5s. (A
+    #     limit-probe on base was 3.8x worse still: CollectLimit
+    #     runs the shingle pass on few partitions serially and
+    #     leaves the cache partial.) Under _NGRAM_DF_MIN_DOCS the
+    #     probe (and the DF pass) can't pay for itself — tiny
+    #     corpora are fast either way: 'hash'. The floor was
+    #     400k through round 7, which silently forced 'hash' on
+    #     mid-size SKEWED corpora: the q31 sf1 rig (50k docs,
+    #     top shingle in 27% of docs) enumerated 49M candidate
+    #     pairs for 259 true ones under hash order — 2.0x slower
+    #     than 'df' (35s vs 18s warm, round 8). 20k is the new
+    #     floor: below it the whole pass is sub-second-to-few-
+    #     seconds at any skew; above it a skewed corpus's
+    #     quadratic term already dominates the probe's one
+    #     sample-sized job. (A mid-size corpus that probes and
+    #     still picks 'hash' pays only that probe — the
+    #     round-5 "DF net loss at 200k" measurement was the DF
+    #     PASS, not the probe, and the hot-df gate still keeps
+    #     the DF pass off uniform corpora of any size.)
+    #   2. else, estimate the hottest shingle's document
+    #      frequency on a deterministic md5 doc-sample; if the
+    #      top shingle reaches _NGRAM_HOT_DF of sampled docs,
+    #      hash-order prefixes would admit it into ~plen/|sh|
+    #      of all prefixes, each a quadratic (block, token)
+    #      enumeration key: 'df'. Uniform corpora measure
+    #      top-df ~1e-4, Zipf+boilerplate ~1.0 — the 0.01
+    #      default sits well between (q31's sf0.1 corpus: 0.005
+    #      -> 'hash'; its 10x rig: 0.27 -> 'df').
+    # Either choice yields the IDENTICAL pair set (the prefix
+    # bound holds under any fixed total order); only the plan
+    # changes, so oracles are unaffected.
+    n_docs = df.count()
+    # n_docs == 0 short-circuits regardless of the floor (a
+    # floor <= 0 would otherwise divide by zero in the sample
+    # fraction; the pair set is empty anyway)
+    if n_docs < _NGRAM_DF_MIN_DOCS or n_docs == 0:
+        prefix_order = "hash"
     else:
-        blocked = blocked.select("_id", "_n", "_bs", "_block")
+        frac = min(1.0, 200_000 / n_docs)
+        # the sample SHINGLES ITS OWN SLICE of the raw input
+        # (filter pushed to the scan) instead of riding `base`:
+        # reading the cache would materialize ALL of it before
+        # the main pass plans — the same stats hazard as (1) —
+        # and re-shingling ~200k sampled docs is cheaper than
+        # filling a corpus-sized array cache
+        samp = df
+        if frac < 1.0:
+            samp = df.filter(
+                _md5_60bit(F.col(id_col).cast("string"))
+                < F.lit(int(frac * float(1 << 60)))
+            )
+        top_df = (
+            samp.select(F.explode(sh).alias("_t"))
+            .groupBy("_t")
+            .agg(F.count(F.lit(1)).alias("_c"))
+            .agg(F.max("_c"))
+            .collect()[0][0]
+        ) or 0
+        n_samp = max(frac * n_docs, 1.0)
+        prefix_order = (
+            "df" if top_df / n_samp >= _NGRAM_HOT_DF else "hash"
+        )
+    # record the chosen order; the bare key is last-writer-wins, so
+    # inside a pipeline the runner's `_current_step` also namespaces
+    # it — same pattern as the pack histogram telemetry
+    context["_ngram_prefix_order"] = prefix_order
+    step = context.get("_current_step")
+    if step:
+        context[f"_ngram_prefix_order:{step}"] = prefix_order
+    if prefix_order == "df":
+        # AllPairs frequency ordering (Bayardo et al. 2007): the
+        # prefix bound holds under ANY fixed total order, and
+        # ordering by ascending corpus document frequency puts the
+        # RAREST tokens in every prefix — under a Zipfian corpus
+        # the hash order (effectively random) lets mid-frequency
+        # tokens into prefixes, and each such token is a hot
+        # (block, token) join key enumerating occupancy^2
+        # candidates. Costs one corpus DF pass (explode + groupBy +
+        # join + per-doc row_number) — opt in when the corpus is
+        # skewed; on uniform corpora hash order is already rare.
+        from pyspark.sql import Window as _W
+
+        occ = base.select("_id", F.explode("_sh").alias("_t"))
+        # df >= 2 rows only — "absence implies df == 1", the same
+        # hapax inference text.ngram_novelty / lm_score use: on
+        # natural corpora most shingles are singletons, so the
+        # join-back shrinks from |distinct shingles| to |repeated
+        # shingles| (often 10x+) and the rank order is unchanged
+        # (coalesce restores the exact df=1 the dropped rows had)
+        dfreq = (
+            occ.groupBy("_t")
+            .agg(F.count(F.lit(1)).alias("_df"))
+            .filter(F.col("_df") >= 2)
+        )
+        rk = F.row_number().over(
+            _W.partitionBy("_id").orderBy("_df", "_t")
+        )
+        pref = (
+            occ.join(dfreq, "_t", "left")
+            .withColumn("_df", F.coalesce(F.col("_df"), F.lit(1)))
+            .join(
+                base.select("_id", F.size("_sh").alias("_n")), "_id"
+            )
+            .withColumn("_rk", rk)
+            # same `plen` bound (incl. the 1e-9 epsilon guard) as the
+            # hash-order slice — one definition, two orders
+            .filter(F.col("_rk") <= plen)
+            # a df==1 prefix token can never equi-join another doc's
+            # prefix, and a TRUE pair's guaranteed shared prefix
+            # token has df >= 2 with its rank unchanged — dropping
+            # the singleton rows is exact-preserving and cuts the
+            # self-join input to the repeated-token rows
+            .filter(F.col("_df") >= 2)
+            .select("_id", F.col("_t").alias("_tok"), "_rk")
+        )
+        blocked = blocked.select("_id", "_n", "_bs", "_block").join(
+            pref, "_id"
+        )
+    else:
+        # posexplode, not explode: the 0-based prefix position IS the
+        # token's rank in the doc's full hash-sorted array (the slice
+        # starts at 1), and the rank feeds the suffix bound below
+        blocked = blocked.select(
+            "_id", "_n", "_bs", "_block",
+            F.posexplode(F.slice("_sh", F.lit(1), plen)).alias(
+                "_pos", "_tok"
+            ),
+        ).withColumn("_rk", F.col("_pos") + 1).drop("_pos")
     l, r = blocked.alias("l"), blocked.alias("r")
     # Exact-preserving prefilter: J(A,B) <= min|A|,|B| / max|A|,|B|, so a
     # pair whose distinct-shingle counts are too lopsided can never reach
@@ -1725,77 +1579,67 @@ def dedup_ngram_jaccard(spark: SparkSession, inputs, config, context):
     # block (usually 2), so intersecting before dedup would do the O(|A|)
     # work twice per pair. The verify then joins each side's hashed
     # shingle array back in — shuffling |docs| arrays, never |pairs|.
-    cond = join_keys[0]
-    for k in join_keys[1:]:
-        cond = cond & k
     joined = l.join(
         r,
-        cond & canonical_block & (F.col("l._id") < F.col("r._id")) & size_ok,
+        (F.col("l._block") == F.col("r._block"))
+        & (F.col("l._tok") == F.col("r._tok"))
+        & canonical_block & (F.col("l._id") < F.col("r._id")) & size_ok,
     )
-    if config.get("prefix_filter", True):
-        # Suffix bound (the positional/suffix-filtering idea of PPJoin,
-        # Xiao et al. 2008 — public): aggregate the shared-prefix-token
-        # rows per pair instead of dropDuplicates. With both shingle
-        # arrays sorted by ONE global total order (hash value, or
-        # (df, token) for prefix_order='df'), let s_c be the largest of
-        # the c shared prefix tokens, at ranks (ma, mb). Every OTHER
-        # common token u sits in at least one side's suffix, so its
-        # rank there exceeds that side's prefix end >= that side's rank
-        # of s_c — i.e. u > s_c in the global order, hence u appears
-        # after s_c in BOTH sorted arrays. Therefore
-        #   |A ∩ B| <= c + min(|A| - ma, |B| - mb),
-        # and J >= t needs |A ∩ B| >= t/(1+t) * (|A|+|B|). Pairs whose
-        # bound falls short can only be verify-rejects — dropping them
-        # is exact-preserving (oracles need no mirror clause; epsilon
-        # as in plen). It matters most at low thresholds, where the
-        # prefix alone is weak (t=0.5 keeps half of each doc as
-        # prefix): measured on the 150k-doc 30x rig at t=0.5, verify
-        # input 198M -> 79M pairs and raw join output 409M -> 305M
-        # (canonical_block), q31's dd stage 160 -> 128s, pair set
-        # identical (297). The per-pair groupBy replaces the old
-        # dropDuplicates at the same shuffle cost, so the bound's cut
-        # is pure win. (A per-row POSITIONAL filter — min-rank variant,
-        # provably keeps each true pair's minimal shared token — was
-        # measured too: it halves pre-shuffle rows but its distinct
-        # candidates are 114M vs this bound's 79M, and the two filters
-        # don't compose exactly; rejected.) The count(*) per-token
-        # aggregation is valid because canonical_block makes
-        # (a, b, token) rows unique; a user block_exprs list that
-        # yields duplicate block values would only inflate c, which
-        # LOOSENS the bound — still exact-preserving.
-        alpha = (
-            F.lit(float(threshold) / (1.0 + float(threshold)))
-            * (F.col("_na") + F.col("_nb"))
-            - F.lit(1e-9)
+    # Suffix bound (the positional/suffix-filtering idea of PPJoin,
+    # Xiao et al. 2008 — public): aggregate the shared-prefix-token
+    # rows per pair rather than deduplicating them. With both shingle
+    # arrays sorted by ONE global total order (hash value, or
+    # (df, token) for the 'df' order), let s_c be the largest of
+    # the c shared prefix tokens, at ranks (ma, mb). Every OTHER
+    # common token u sits in at least one side's suffix, so its
+    # rank there exceeds that side's prefix end >= that side's rank
+    # of s_c — i.e. u > s_c in the global order, hence u appears
+    # after s_c in BOTH sorted arrays. Therefore
+    #   |A ∩ B| <= c + min(|A| - ma, |B| - mb),
+    # and J >= t needs |A ∩ B| >= t/(1+t) * (|A|+|B|). Pairs whose
+    # bound falls short can only be verify-rejects — dropping them
+    # is exact-preserving (oracles need no mirror clause; epsilon
+    # as in plen). It matters most at low thresholds, where the
+    # prefix alone is weak (t=0.5 keeps half of each doc as
+    # prefix): measured on the 150k-doc 30x rig at t=0.5, verify
+    # input 198M -> 79M pairs and raw join output 409M -> 305M
+    # (canonical_block), q31's dd stage 160 -> 128s, pair set
+    # identical (297). The per-pair groupBy costs the same shuffle
+    # as a dropDuplicates, so the bound's cut is pure win. (A per-row POSITIONAL filter — min-rank variant,
+    # provably keeps each true pair's minimal shared token — was
+    # measured too: it halves pre-shuffle rows but its distinct
+    # candidates are 114M vs this bound's 79M, and the two filters
+    # don't compose exactly; rejected.) The count(*) per-token
+    # aggregation is valid because canonical_block makes
+    # (a, b, token) rows unique; a user block_exprs list that
+    # yields duplicate block values would only inflate c, which
+    # LOOSENS the bound — still exact-preserving.
+    alpha = (
+        F.lit(float(threshold) / (1.0 + float(threshold)))
+        * (F.col("_na") + F.col("_nb"))
+        - F.lit(1e-9)
+    )
+    cand = (
+        joined.select(
+            F.col("l._id").alias("a"), F.col("r._id").alias("b"),
+            F.col("l._n").alias("_na"), F.col("r._n").alias("_nb"),
+            F.col("l._rk").alias("_ra"), F.col("r._rk").alias("_rb"),
         )
-        cand = (
-            joined.select(
-                F.col("l._id").alias("a"), F.col("r._id").alias("b"),
-                F.col("l._n").alias("_na"), F.col("r._n").alias("_nb"),
-                F.col("l._rk").alias("_ra"), F.col("r._rk").alias("_rb"),
-            )
-            .groupBy("a", "b", "_na", "_nb")
-            .agg(
-                F.count(F.lit(1)).alias("_c"),
-                F.max("_ra").alias("_ma"),
-                F.max("_rb").alias("_mb"),
-            )
-            .filter(
-                F.col("_c")
-                + F.least(
-                    F.col("_na") - F.col("_ma"), F.col("_nb") - F.col("_mb")
-                )
-                >= alpha
-            )
-            .select("a", "b")
+        .groupBy("a", "b", "_na", "_nb")
+        .agg(
+            F.count(F.lit(1)).alias("_c"),
+            F.max("_ra").alias("_ma"),
+            F.max("_rb").alias("_mb"),
         )
-    else:
-        cand = (
-            joined.select(
-                F.col("l._id").alias("a"), F.col("r._id").alias("b")
+        .filter(
+            F.col("_c")
+            + F.least(
+                F.col("_na") - F.col("_ma"), F.col("_nb") - F.col("_mb")
             )
-            .dropDuplicates(["a", "b"])
+            >= alpha
         )
+        .select("a", "b")
+    )
     fp = base.select("_id", "_sh")
     pairs = (
         cand.join(fp.select(F.col("_id").alias("a"), F.col("_sh").alias("sa")), "a")

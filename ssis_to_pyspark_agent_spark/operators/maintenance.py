@@ -61,17 +61,17 @@ def vacuum(spark: SparkSession, inputs, config, context) -> DataFrame:
     """Age-guarded cleanup of the scratch this engine's own machinery
     accumulates next to live datasets: failed-swap move-asides
     (``<ds>._<label>_old`` — after a rollback failure the original
-    data LIVES there, hence the age guard and dry-run default), rewrite
-    temps (``<ds>._*_tmp``), and consumed cc checkpoint scratch
-    (``cc_rounds``, opt-in — the returned frames of a recent
-    dedup.cluster/sample.holdout run still read it lazily).
+    data LIVES there, hence the age guard and dry-run default) and
+    rewrite temps (``<ds>._*_tmp``). Any other directory name, e.g. a
+    consumed streaming checkpoint, is cleaned only when ``patterns``
+    names it.
 
     config:
       path             — directory to scan (never itself a candidate)
       patterns         — fnmatch list matched against BASENAMES;
                          default ['*._*_old', '*._*_tmp'] (the engine's
-                         own swap scratch; streaming checkpoints and
-                         cc_rounds are live state — opt in explicitly)
+                         own swap scratch; streaming checkpoints are
+                         live state — opt in explicitly)
       older_than_hours — age guard on the Hadoop modification time
                          (default 24). Meaningful for the engine's own
                          scratch BECAUSE fs.move_aside re-stamps each
@@ -94,7 +94,7 @@ def vacuum(spark: SparkSession, inputs, config, context) -> DataFrame:
 
     Reference has no counterpart (SSIS leaves file hygiene to
     maintenance plans) — NEW per SURVEY §2.12's lakehouse-maintenance
-    family, closing the loop its own compact/checkpoint scratch opens.
+    family, closing the loop its own compact/rewrite scratch opens.
     """
     import fnmatch
     import time as _time

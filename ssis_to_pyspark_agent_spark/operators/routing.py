@@ -143,7 +143,9 @@ def sample_holdout(spark: SparkSession, inputs, config, context):
     else min-label propagation with automatic fallback to
     diameter-independent star contraction on a deep graph — never
     partial labels, which would silently break the no-straddle
-    guarantee.
+    guarantee. Their per-round lineage cuts are durable when the
+    session has a checkpoint directory (``SparkContext.setCheckpointDir``),
+    else ``localCheckpoint``.
     Output ports: 'out' (df + comp + side), 'train', 'test'.
 
     Scale plan: min-label propagation runs only over nodes that appear
@@ -170,18 +172,12 @@ def sample_holdout(spark: SparkSession, inputs, config, context):
     side_col = config.get("side_col", "side")
     comp_col = config.get("comp_col", "comp")
 
-    if config.get("labels_input"):
-        prop = second  # dedup.cluster's 'labels' port: (x, comp)
-    else:
-        prop = _propagate_labels(
-            second,
-            # reliable per-round checkpoints for cluster-scale runs —
-            # same contract as dedup.cluster's checkpoint_dir
-            checkpoint_dir=config.get("checkpoint_dir"),
-        )
-    lbl = prop.select(F.col("x").alias(id_col), F.col("comp").alias("_hc"))
-    if config.get("broadcast_components", True):  # off for degenerate pair sets
-        lbl = F.broadcast(lbl)
+    # with labels_input the second input is dedup.cluster's 'labels'
+    # port, (x, comp)
+    prop = second if config.get("labels_input") else _propagate_labels(second)
+    lbl = F.broadcast(
+        prop.select(F.col("x").alias(id_col), F.col("comp").alias("_hc"))
+    )
     comp = F.coalesce(F.col("_hc"), F.col(id_col))
     thr = int(frac * float(1 << 60))
     side = F.when(

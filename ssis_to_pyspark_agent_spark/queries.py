@@ -1147,7 +1147,7 @@ _SHINGLE_SQL = """
       FROM documents),
     sh AS (SELECT doc_id, n_chars, {_SHINGLE_SQL} AS shingles FROM docs),
     -- AllPairs prefix-filtered candidates (Bayardo et al. 2007, the
-    -- SAME recall-complete bound the engine's prefix_filter tests pin:
+    -- SAME recall-complete bound the engine's prefix-filter tests pin:
     -- under any fixed total order, J(A,B) >= t implies the first
     -- |X| - ceil(t*|X|) + 1 elements of A and of B share a token) —
     -- ordered by ascending document frequency so boilerplate shingles

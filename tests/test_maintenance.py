@@ -278,9 +278,9 @@ class TestVacuum:
         assert os.path.exists(fresh) and os.path.exists(live)
 
     def test_cc_rounds_opt_in_and_depth(self, spark, tmp_path):
-        # cc scratch sits at <checkpoint_dir>/cc_rounds — one level down
-        # from a warehouse root; default patterns must NOT touch it,
-        # explicit opt-in at max_depth 2 must
+        # a consumed checkpoint directory one level down from a
+        # warehouse root (named cc_rounds here); default patterns must
+        # NOT touch it, explicit opt-in at max_depth 2 must
         import time
 
         ck = tmp_path / "job1" / "cc_rounds"

@@ -387,6 +387,24 @@ class TestDedup:
         assert bc_anti and all("BroadcastHashJoin" in ln for ln in bc_anti)
         assert any("LeftAnti" in ln for ln in plans[False].splitlines())
 
+    def test_minhash_releases_candidates_either_verify_mode(self, spark):
+        """The candidate cache `_bucket_pairs` hands back is released on
+        both verify paths: after the output is collected, verify
+        broadcast on and off leave the same number of persisted RDDs
+        (only the verified pairs)."""
+        df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+        jsc = spark.sparkContext._jsc
+        left = {}
+        for bc in (True, False):
+            spark.catalog.clearCache()
+            out = run("dedup.minhash", spark, [df], id_col="doc_id",
+                      text_col="text", threshold=0.7, num_hashes=128,
+                      bands=16, verify_broadcast=bc)
+            out.collect()
+            left[bc] = jsc.getPersistentRDDs().size()
+        spark.catalog.clearCache()
+        assert left[True] == left[False], left
+
     def test_minhash_pairs_match_exact_jaccard(self, spark):
         """Checked against every (a < b) whose word-3-shingle sets have
         Jaccard >= 0.7, computed here over all pairs of the driver's
@@ -801,50 +819,77 @@ class TestSimilarity:
 
     def test_ngram_prefix_filter_preserves_pairs(self, spark):
         """PPJoin prefix filtering must be exact-preserving: the verified
-        pair set with prefix_filter on equals the set with it off, on the
-        driver's documents at two thresholds (including the 0.7 ulp trap:
-        ceil(0.7*10) in float is 8 without the epsilon guard)."""
-        docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        for thr in (0.5, 0.7):
-            got = {}
-            for pf in (True, False):
-                out = run(
-                    "dedup.ngram_jaccard", spark, [docs],
-                    id_col="doc_id", text_col="text", shingle_k=3,
-                    threshold=thr, return_pairs=True, prefix_filter=pf,
-                    block_exprs=["floor(n_chars / 16)",
-                                 "floor(n_chars / 16) + 1"],
-                )
-                got[pf] = sorted(map(tuple, out["pairs"].collect()))
-                spark.catalog.clearCache()
-            assert got[True] == got[False] and got[True]
+        pair set equals every blocked (a < b) whose word-3-shingle sets
+        have Jaccard >= t, computed here over all pairs of the driver's
+        documents, at two thresholds (including the 0.7 ulp trap:
+        ceil(0.7*10) in float is 8 without the epsilon guard). Two docs
+        share a block when their ``floor(n_chars / 16)`` differ by at
+        most 1."""
+        from itertools import combinations
 
-    def test_ngram_prefix_order_df_preserves_pairs(self, spark):
-        """AllPairs frequency ordering of the prefix (prefix_order='df',
-        the Zipf-skew lever) must emit the identical verified pair set —
-        the prefix bound holds under any fixed total order."""
+        from ssis_to_pyspark_agent_spark.operators.dedup import _shingles
+
         docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        got = {}
-        for order in ("hash", "df"):
+        sh, bucket = {}, {}
+        for r in docs.select("doc_id", "n_chars", _shingles(
+                F.col("text"), 3).alias("sh")).collect():
+            sh[r.doc_id], bucket[r.doc_id] = set(r.sh), r.n_chars // 16
+        for thr in (0.5, 0.7):
+            want = {}
+            for a, b in combinations(sorted(sh), 2):
+                if abs(bucket[a] - bucket[b]) > 1:
+                    continue
+                inter = len(sh[a] & sh[b])
+                j = inter / (len(sh[a]) + len(sh[b]) - inter)
+                if j >= thr:
+                    want[(a, b)] = j
             out = run(
                 "dedup.ngram_jaccard", spark, [docs],
                 id_col="doc_id", text_col="text", shingle_k=3,
-                threshold=0.5, return_pairs=True, prefix_order=order,
+                threshold=thr, return_pairs=True,
                 block_exprs=["floor(n_chars / 16)",
                              "floor(n_chars / 16) + 1"],
             )
-            got[order] = sorted(map(tuple, out["pairs"].collect()))
+            got = {(r.a, r.b): r.jaccard for r in out["pairs"].collect()}
             spark.catalog.clearCache()
+            assert want and got.keys() == want.keys(), thr
+            assert all(abs(got[p] - want[p]) < 1e-12 for p in want), thr
+
+    def test_ngram_prefix_order_df_preserves_pairs(self, spark, monkeypatch):
+        """AllPairs frequency ordering of the prefix (the 'df' order,
+        the Zipf-skew lever) must emit the identical verified pair set —
+        the prefix bound holds under any fixed total order. Each order
+        is forced through the probe's thresholds: a doc floor no corpus
+        reaches gives 'hash'; a zero floor and a zero hot-df threshold
+        give 'df'."""
+        from ssis_to_pyspark_agent_spark.operators import dedup
+
+        docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+        force = {"hash": {"_NGRAM_DF_MIN_DOCS": 10**12},
+                 "df": {"_NGRAM_DF_MIN_DOCS": 0, "_NGRAM_HOT_DF": 0.0}}
+
+        def pairs_under(order, **config):
+            ctx = {}
+            with monkeypatch.context() as m:
+                for name, value in force[order].items():
+                    m.setattr(dedup, name, value)
+                out = run(
+                    "dedup.ngram_jaccard", spark, [docs], _context=ctx,
+                    id_col="doc_id", text_col="text", shingle_k=3,
+                    threshold=0.5, return_pairs=True, **config,
+                )
+                got = sorted(map(tuple, out["pairs"].collect()))
+            spark.catalog.clearCache()
+            assert ctx["_ngram_prefix_order"] == order
+            return got
+
+        got = {order: pairs_under(
+            order, block_exprs=["floor(n_chars / 16)",
+                                "floor(n_chars / 16) + 1"])
+            for order in ("hash", "df")}
         assert got["hash"] == got["df"] and got["hash"] and got["hash"]
         # and in the default min-hash blocking mode too
-        for order in ("hash", "df"):
-            out = run(
-                "dedup.ngram_jaccard", spark, [docs],
-                id_col="doc_id", text_col="text", shingle_k=3,
-                threshold=0.5, return_pairs=True, prefix_order=order,
-            )
-            got[order] = sorted(map(tuple, out["pairs"].collect()))
-            spark.catalog.clearCache()
+        got = {order: pairs_under(order) for order in ("hash", "df")}
         assert got["hash"] == got["df"] and got["hash"]
 
     def test_ngram_prefix_order_auto_selects(self, spark, monkeypatch):
@@ -870,9 +915,12 @@ class TestSimilarity:
         auto_pairs = sorted(map(tuple, out["pairs"].collect()))
         assert ctx["_ngram_prefix_order"] == "df"
         spark.catalog.clearCache()
-        exp = run("dedup.ngram_jaccard", spark, [skew],
+        # the default doc floor (20k) forces 'hash' on these 300 docs
+        ctx_hash = {}
+        exp = run("dedup.ngram_jaccard", spark, [skew], _context=ctx_hash,
                   id_col="doc_id", text_col="text", shingle_k=3,
-                  threshold=0.5, return_pairs=True, prefix_order="hash")
+                  threshold=0.5, return_pairs=True)
+        assert ctx_hash["_ngram_prefix_order"] == "hash"
         assert auto_pairs == sorted(map(tuple, exp["pairs"].collect()))
         spark.catalog.clearCache()
         # uniform: all-distinct shingles -> top df is 1 doc out of 300
@@ -3387,131 +3435,48 @@ class TestSampleModes:
         ]
         assert_local_scan(lbl_null)
 
-    def test_cluster_checkpoint_dir_identical(self, spark, tmp_path):
-        """checkpoint_dir cuts the cc loops onto RELIABLE parquet
-        (round-8 verdict item 5): components must be IDENTICAL to the
-        default path, scratch must be pruned to the one 'final'
-        dataset, and the default behavior must write nothing. A spliced
-        30-node chain makes propagation reroute to star contraction, so
-        both kernels cut onto the directory."""
+    def test_cluster_session_checkpoint_dir_identical(self, spark, tmp_path):
+        """With a session checkpoint directory the cc loops cut onto
+        Spark's reliable checkpoint instead of localCheckpoint: labels
+        must be IDENTICAL to the localCheckpoint run, and the cuts must
+        land under that directory. A spliced 30-node chain makes
+        propagation reroute to star contraction, so both kernels cut;
+        driver_cap=0 keeps the graph off the driver route."""
         import os
         import random
+
+        from ssis_to_pyspark_agent_spark.operators.dedup import (
+            _propagate_labels,
+        )
 
         rng = random.Random(11)
         n = 300
         edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(220)]
         edges = [(a, b) for a, b in edges if a != b]
         edges += [(1000 + i, 1001 + i) for i in range(30)]
-        docs = spark.createDataFrame(
-            [(i,) for i in range(n)] + [(1000 + i,) for i in range(31)],
-            "id long")
         pairs = spark.createDataFrame(edges, "a long, b long")
-        base = run("dedup.cluster", spark, [docs, pairs], id_col="id")
-        want = sorted((r.id, r.comp) for r in base["components"].collect())
-        d = str(tmp_path / "ck")
-        out = run("dedup.cluster", spark, [docs, pairs], id_col="id",
-                  checkpoint_dir=d)
-        got = sorted((r.id, r.comp) for r in out["components"].collect())
-        assert got == want
-        # scratch pruned: the invocation namespace holds exactly the
-        # final dataset + its atomic claim marker (r9 ADVICE: scratch
-        # is per-invocation; r10 self-review: claimed eagerly via
-        # createNewFile so concurrent invocations can't pick the same
-        # index)
-        assert os.listdir(os.path.join(d, "cc_rounds")) == ["i0001"]
-        # ignore the local ChecksumFileSystem's .crc sidecars
-        assert sorted(
-            n for n in os.listdir(os.path.join(d, "cc_rounds", "i0001"))
-            if not n.endswith(".crc")
-        ) == [".claim", "final"]
-        # default path never touches a checkpoint directory
-        assert not os.path.exists(str(tmp_path / "never"))
-
-    def test_cluster_checkpoint_dir_shared_invocations(self, spark, tmp_path):
-        """Two cc invocations sharing ONE checkpoint_dir (natural: same
-        config key across a plan) must not clobber each other — the
-        second run writes its own i0002 namespace while the FIRST run's
-        returned frames, collected only afterwards, still lazily read
-        i0001/final with the right components (round-9 ADVICE item:
-        previously the shared cc_rounds/final was overwritten and the
-        first frame silently yielded the second graph's labels)."""
-        import os
-
-        d = str(tmp_path / "shared")
-        docs1 = spark.createDataFrame([(i,) for i in range(6)], "id long")
-        pairs1 = spark.createDataFrame(
-            [(0, 1), (1, 2), (3, 4)], "a long, b long")
-        first = run("dedup.cluster", spark, [docs1, pairs1], id_col="id",
-                    checkpoint_dir=d)
-        # second invocation, same dir, DIFFERENT graph — collect it first
-        docs2 = spark.createDataFrame([(i,) for i in range(4)], "id long")
-        pairs2 = spark.createDataFrame([(2, 3)], "a long, b long")
-        second = run("dedup.cluster", spark, [docs2, pairs2], id_col="id",
-                     checkpoint_dir=d)
-        assert sorted((r.id, r.comp)
-                      for r in second["components"].collect()) == \
-            [(0, 0), (1, 1), (2, 2), (3, 2)]
-        # NOW collect the first run's lazy frames: must still be graph 1
-        assert sorted((r.id, r.comp)
-                      for r in first["components"].collect()) == \
-            [(0, 0), (1, 0), (2, 0), (3, 3), (4, 3), (5, 5)]
-        assert sorted(os.listdir(os.path.join(d, "cc_rounds"))) == \
-            ["i0001", "i0002"]
-
-    def test_cc_failure_prunes_checkpoint_scratch(
-        self, spark, tmp_path, monkeypatch
-    ):
-        """When the cc loop FAILS (star contraction raising here, after
-        propagation has written its round cuts), finish() never runs —
-        the invocation's round scratch must be deleted before the raise,
-        so repeated failed runs don't accumulate dup-volume-sized
-        parquet dirs (round-9 ADVICE item). Only the failed
-        invocation's namespace goes; a prior successful one stays."""
-        import os
-
-        from ssis_to_pyspark_agent_spark.operators import dedup
-
-        d = str(tmp_path / "failck")
-        docs = spark.createDataFrame([(i,) for i in range(12)], "id long")
-        ok_pairs = spark.createDataFrame([(0, 1)], "a long, b long")
-        kept = run("dedup.cluster", spark, [docs, ok_pairs], id_col="id",
-                   checkpoint_dir=d)
-        kept["components"].collect()
-
-        def fail(*_a, **_k):
-            raise ValueError("star contraction did not converge")
-
-        monkeypatch.setattr(dedup, "_star_components", fail)
-        # diameter 11 > the 8 propagation rounds: reroutes to star
-        chain = spark.createDataFrame(
-            [(i, i + 1) for i in range(11)], "a long, b long")
-        with pytest.raises(ValueError, match="did not converge"):
-            run("dedup.cluster", spark, [docs, chain], id_col="id",
-                checkpoint_dir=d)
-        # i0002 (the failed run) pruned entirely; i0001 intact
-        assert sorted(os.listdir(os.path.join(d, "cc_rounds"))) == ["i0001"]
-
-    def test_cc_namespace_claimed_eagerly(self, spark, tmp_path):
-        """The iNNNN namespace is CLAIMED at construction via an atomic
-        createNewFile — two checkpointers built back-to-back (before
-        either writes a round) must land on different subdirs, and a
-        stray claim file alone (a racing invocation that hasn't written
-        rounds yet) must push the next index along."""
-        import os
-
-        from ssis_to_pyspark_agent_spark.operators.dedup import (
-            _CCCheckpointer,
+        sc = spark.sparkContext
+        assert sc.getCheckpointDir() is None
+        want = sorted(
+            (r.x, r.comp)
+            for r in _propagate_labels(pairs, driver_cap=0).collect()
         )
-
-        d = str(tmp_path / "race")
-        a = _CCCheckpointer(spark, d)
-        b = _CCCheckpointer(spark, d)
-        assert a.root != b.root
-        assert sorted(os.listdir(os.path.join(d, "cc_rounds"))) == \
-            ["i0001", "i0002"]
-        # a third sees both claims even though neither wrote rounds
-        c = _CCCheckpointer(spark, d)
-        assert c.root.endswith("i0003")
+        d = str(tmp_path / "ck")
+        sc.setCheckpointDir(d)
+        try:
+            got = sorted(
+                (r.x, r.comp)
+                for r in _propagate_labels(pairs, driver_cap=0).collect()
+            )
+        finally:
+            # no later test may run with the directory set
+            getattr(sc._jsc.sc(), "checkpointDir_$eq")(
+                spark._jvm.scala.Option.empty())
+        assert sc.getCheckpointDir() is None
+        assert got == want
+        assert any("rdd-" in dirs_or_file
+                   for _root, dirs, files in os.walk(d)
+                   for dirs_or_file in dirs + files)
 
     def test_balanced_empty_quota_dict_raises(self, spark):
         # quota={} with no default_quota caps nothing — a config error,
@@ -4348,6 +4313,20 @@ def test_no_new_alternate_implementation_keys():
     assert not found, found
 
 
+#: config keys deleted together with the code paths they selected: the
+#: session's checkpoint directory decides where the cc loops cut, and the
+#: prefix filter and its order are chosen by dedup.ngram_jaccard itself.
+_DELETED_KEYS = {"checkpoint_dir", "prefix_filter", "prefix_order"}
+
+
+def test_no_deleted_option_keys():
+    """No module under operators/ reads a deleted option as a config key
+    (``config.get("k")`` or ``config["k"]``)."""
+    found = {(path.name, k) for path, tree in _package_trees("operators")
+             for k in _config_keys(tree) if k in _DELETED_KEYS}
+    assert not found, found
+
+
 def test_one_cosine_path_whatever_quantize_says():
     """No module under operators/ defines or calls a Catalyst cosine
     (``_dot``, ``_norm``, ``_cosine``), and none passes ``_spread`` a
@@ -4376,12 +4355,10 @@ def test_one_cosine_path_whatever_quantize_says():
 
 
 #: the only operator config keys whose names mention ``broadcast``: the
-#: explicit side hint of join/range_join, and the three switches that
+#: explicit side hint of join/range_join, and the two switches that
 #: turn a broadcast OFF for inputs too large to ship to every executor.
 #: A hint AQE already places at runtime needs no key.
-_BROADCAST_KEYS_ALLOWED = {
-    "broadcast", "verify_broadcast", "broadcast_components", "broadcast_batch",
-}
+_BROADCAST_KEYS_ALLOWED = {"broadcast", "verify_broadcast", "broadcast_batch"}
 
 #: the only environment variables the package reads: deployment settings.
 _ENV_VARS_ALLOWED = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"}

@@ -84,3 +84,12 @@ def test_pair_summary_higher_is_better():
     assert s["change"] == {"median": 112.5, "q1": 103.75, "q3": 125.0}
     assert s["delta_pct"] == pytest.approx(-250 / 115)
     assert s["change_won"] == 2 and s["pairs"] == 4
+
+
+def test_job_groups_never_repeat_in_a_session():
+    # a reused group id would add an earlier run's jobs (the warm run of
+    # `trace`, the base-data runs of `growth`) to a later run's count
+    m = _measure()
+    ids = [m.fresh_group(label) for label in ("act", "act", "q#0", "q#0")]
+    assert len(set(ids)) == len(ids)
+    assert [i.split("@")[0] for i in ids] == ["act", "act", "q#0", "q#0"]

@@ -38,6 +38,7 @@ benchmark's generated input tables unless given a directory.
 from __future__ import annotations
 
 import argparse
+import itertools
 import json
 import os
 import statistics
@@ -60,6 +61,13 @@ GROWTH_ALERT = 2.0
 DF_ACTIONS = ("count", "collect", "first", "head", "take", "toPandas",
               "localCheckpoint", "checkpoint", "foreach", "foreachPartition")
 WRITER_ACTIONS = ("save", "parquet", "saveAsTable", "csv", "json")
+#: the status tracker returns every job a session ever ran under a group
+#: id, so each measured run gets an id no earlier run in the session used
+_GROUP_SEQ = itertools.count()
+
+
+def fresh_group(label: str) -> str:
+    return f"{label}@{next(_GROUP_SEQ)}"
 
 
 # ---------------------------------------------------------------------------
@@ -105,8 +113,9 @@ def group_jobs(sc, group: str) -> tuple[int, int]:
     return len(jobs), tasks
 
 
-def timed_run(spark, fn, sf_dir: str, group: str) -> dict:
+def timed_run(spark, fn, sf_dir: str, label: str) -> dict:
     sc = spark.sparkContext
+    group = fresh_group(label)
     sc._jvm.System.gc()
     sc.setJobGroup(group, group)
     before = harness.host_snapshot(spark)
@@ -200,7 +209,7 @@ def trace(spark, name: str, sf_dir: str) -> dict:
         def run(self, *a, **kw):
             if depth[0]:
                 return orig(self, *a, **kw)
-            gid = f"act{len(events)}"
+            gid = fresh_group("act")
             sc.setJobGroup(gid, f"{meth} @ {_caller()}")
             depth[0] += 1
             t0 = time.perf_counter()
