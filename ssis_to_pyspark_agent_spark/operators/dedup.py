@@ -1661,6 +1661,10 @@ def dedup_ngram_jaccard(spark: SparkSession, inputs, config, context):
     return out
 
 
+#: dedup.embedding's auto-sized LSH uses at most this many tables
+_EMBED_MAX_TABLES = 8
+
+
 @operator("dedup.embedding")
 def dedup_embedding(spark: SparkSession, inputs, config, context):
     """Embedding-cosine near-dedup: drop rows whose embedding has cosine
@@ -1723,10 +1727,10 @@ def dedup_embedding(spark: SparkSession, inputs, config, context):
 
     from ssis_to_pyspark_agent_spark.operators.similarity import (
         _bucket_frame,
+        _lsh_keys,
         _pair_cosine_frame,
     )
 
-    dim = config.get("dim") or len(base.select("_v").first()["_v"])
     n_bits, n_tables = config.get("lsh_bits"), config.get("lsh_tables")
     if n_bits is None or n_tables is None:
         # Auto-size to the corpus: fixed bits are a silent recall/cost
@@ -1747,18 +1751,18 @@ def dedup_embedding(spark: SparkSession, inputs, config, context):
         pt = p ** auto_bits
         auto_tables = (
             1 if pt >= 1.0
-            else min(config.get("max_tables", 8),
+            else min(_EMBED_MAX_TABLES,
                      max(1, math.ceil(math.log(0.05) / math.log(1 - pt))))
         )
         n_bits = n_bits if n_bits is not None else auto_bits
         n_tables = n_tables if n_tables is not None else auto_tables
     base = base.persist()  # bucket explode + vector verify both read it
     bucketed = _bucket_frame(
-        base, "_id", "_v", dim, n_tables, n_bits, config.get("seed", 42)
+        base, "_id", "_v", _lsh_keys(n_tables, n_bits, config.get("seed", 42))
     )
     # returned persisted and counted (bucketed is uncached, so
     # `_bucket_pairs` auto-persists); released after the verify
-    ids = _bucket_pairs(bucketed, ["_table", "_bucket"], _BUCKET_CAP)
+    ids = _bucket_pairs(bucketed, ["_key"], _BUCKET_CAP)
     cand = ids.join(
         base.select(F.col("_id").alias("a"), F.col("_v").alias("va")), "a"
     ).join(base.select(F.col("_id").alias("b"), F.col("_v").alias("vb")), "b")
@@ -2622,15 +2626,12 @@ def dedup_semantic(spark: SparkSession, inputs, config, context):
         cents = [[v / quantize for v in row] for row in ic]
     elif config.get("kmeans"):
         # sampled from the RAW frame, like the hash sample below
-        cent_rows = _kmeans_centroids(
+        cents = _kmeans_centroids(
             df.select(F.col(id_col).alias("corpus_id"),
                       F.col(vec_col).alias("_cv")),
             n_clusters,
-            sample_n=config.get("kmeans_sample", 10_000),
-            iters=config.get("kmeans_iters", 10),
             seed=config.get("seed", 42),
         )
-        cents = [list(r["_centv"]) for r in cent_rows]
     else:
         if config.get("centroid_order") == "md5":
             key = F.md5(F.col("_id").cast("string"))

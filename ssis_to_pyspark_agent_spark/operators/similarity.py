@@ -1,14 +1,20 @@
 """Similarity search over embedding columns (SURVEY §2.12 — NEW).
 
-Approximate-nearest-neighbor over ``array<float>``:
-- ``similarity.topk_bruteforce`` — exact cosine top-k (collect the query
-  batch, one pass over the corpus, per-group heap via window). The
-  baseline and the verifier for the approximate paths.
-- ``similarity.topk_lsh`` — random-hyperplane LSH buckets (the scale path:
-  probes only matching buckets; recall tuned by tables x bits).
-- ``similarity.topk_ivf`` — IVF-style coarse quantizer: corpus assigned to
-  nearest of C centroids (one broadcast pass), queries probe the nprobe
-  nearest centroid lists only.
+Nearest-neighbour top-k over ``array<float>``, three operators on one
+body (`_probe_topk`) and one scoring kernel (`_probe_score_frame`).
+The query batch is collected; each operator only supplies a *key
+function* that gives every corpus row and every query integer keys,
+and a corpus row is scored exactly against the queries sharing one of
+its keys:
+- ``similarity.topk_bruteforce`` — one key for everything: exact cosine
+  top-k, the baseline and the verifier for the approximate paths.
+- ``similarity.topk_lsh`` — random-hyperplane LSH: one key per (table,
+  bucket), so a row meets the queries it collides with in any table
+  (recall tuned by tables x bits).
+- ``similarity.topk_ivf`` — IVF-style coarse quantizer: a row's key is
+  its nearest of C centroids, a query's keys its ``nprobe`` nearest.
+
+Corpus vectors cross Arrow once and are never joined to the queries.
 
 Every cosine (these operators, dedup.embedding and dedup.semantic) is
 scored by one numpy kernel, whatever `quantize` says: `_vecnorm` reads
@@ -30,8 +36,8 @@ from ssis_to_pyspark_agent_spark.operators import operator
 
 
 def _hyperplanes(dim: int, n_tables: int, n_bits: int, seed: int) -> list[list[list[float]]]:
-    """Deterministic random hyperplanes (driver-side constants, broadcast
-    into the plan as literals — tiny: tables*bits*dim floats)."""
+    """Deterministic random hyperplanes (tiny: tables*bits*dim floats;
+    the same on every task for the same seed)."""
     rng = random.Random(seed)
     return [
         [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_bits)]
@@ -58,88 +64,82 @@ def _md5_int_planes(dim: int, n_tables: int, n_bits: int, seed: int) -> list[lis
     ]
 
 
-def _bucket_frame(
-    df: DataFrame,
-    id_name: str,
-    vec_name: str,
-    dim: int,
-    n_tables: int,
-    n_bits: int,
-    seed: int,
-    keep_vec: bool = False,
-    planes: list | None = None,
-    quantize: int | None = None,
-) -> DataFrame:
-    """Exploded LSH bucket rows (id[, vec], _table, _bucket) via one BLAS
-    matmul per Arrow batch: (batch x dim) @ (dim x tables*bits) -> sign
-    bits (dot >= 0, NaN -> 0) -> bucket ids. The one hyperplane-bucket
-    kernel: a Catalyst formulation (tables*bits zip_with/aggregate dot
-    folds per row, each allocating an intermediate array) measured
-    4.8s -> 0.8s at 200k x dim64 x 8x10 against this one. With integer
-    `planes` + `quantize` the dots are exact integer arithmetic
-    (oracle-reproducible)."""
+def _lsh_keys(n_tables: int, n_bits: int, seed: int, md5_quantize: int | None = None):
+    """The LSH key function: an (n x dim) vector matrix -> (n x n_tables)
+    int64 keys ``bucket + (t << n_bits)``, one key naming one (table,
+    bucket). One BLAS matmul per call: (n x dim) @ (dim x tables*bits)
+    -> sign bits (dot >= 0, NaN -> 0) -> bucket ids. A Catalyst
+    formulation (tables*bits zip_with/aggregate dot folds per row)
+    measured 4.8s -> 0.8s at 200k x dim64 x 8x10 against this one.
+
+    The seeded hyperplanes are built from the matrix width on first use
+    (deterministic, so every task builds the same). With `md5_quantize`
+    they are `_md5_int_planes` against `_half_up`-quantized vectors:
+    int-valued float64 products stay < 2^53, so the matmul is exact
+    integer arithmetic in any order (oracle-reproducible)."""
+    import numpy as np
+
+    proj: dict[int, object] = {}
+    pow2 = np.int64(1) << np.arange(n_bits, dtype=np.int64)
+    table = np.arange(n_tables, dtype=np.int64) << n_bits
+
+    def keys(m):
+        dim = m.shape[1]
+        if dim not in proj:
+            planes = (_md5_int_planes if md5_quantize else _hyperplanes)(
+                dim, n_tables, n_bits, seed
+            )
+            proj[dim] = np.asarray(planes, dtype=np.float64).reshape(-1, dim).T
+        if md5_quantize:
+            m = _half_up(m, md5_quantize)
+        signs = ((m @ proj[dim]) >= 0).reshape(len(m), n_tables, n_bits)
+        return (signs * pow2).sum(axis=2) + table
+
+    return keys
+
+
+def _bucket_frame(df: DataFrame, id_name: str, vec_name: str, keys) -> DataFrame:
+    """(id, _key) rows, one per LSH table: `keys` (an `_lsh_keys`
+    function) over each Arrow batch of vectors."""
     import numpy as np
     import pandas as pd
 
-    if planes is None:
-        planes = _hyperplanes(dim, n_tables, n_bits, seed)
-    proj = np.array(
-        [
-            [planes[t][j][d] for d in range(dim)]
-            for t in range(n_tables)
-            for j in range(n_bits)
-        ],
-        dtype=np.float64,
-    ).T  # dim x (tables*bits)
-    pow2 = np.array([1 << j for j in range(n_bits)], dtype=np.int64)
     id_type = df.schema[id_name].dataType.simpleString()
-    vec_type = df.schema[vec_name].dataType.simpleString()
-    schema = (
-        f"{id_name} {id_type}, "
-        + (f"{vec_name} {vec_type}, " if keep_vec else "")
-        + "_table int, _bucket long"
-    )
 
     def gen(batches):
         for pdf in batches:
-            if not len(pdf):
-                continue
-            v = _vecmat(pdf[vec_name])
-            if quantize:
-                v = _half_up(v, quantize)
-            # int-valued float64 products stay < 2^53 -> the matmul is
-            # exact integer arithmetic in any order (oracle-identical)
-            signs = ((v @ proj) >= 0).reshape(len(pdf), n_tables, n_bits)
-            buckets = (signs.astype(np.int64) * pow2).sum(axis=2)
-            data = {id_name: np.repeat(pdf[id_name].values, n_tables)}
-            if keep_vec:
-                data[vec_name] = np.repeat(pdf[vec_name].values, n_tables)
-            data["_table"] = np.tile(
-                np.arange(n_tables, dtype=np.int32), len(pdf)
-            )
-            data["_bucket"] = buckets.ravel()
-            yield pd.DataFrame(data)
+            if len(pdf):
+                k = keys(_vecmat(pdf[vec_name]))
+                yield pd.DataFrame({
+                    id_name: np.repeat(pdf[id_name].values, k.shape[1]),
+                    "_key": k.ravel(),
+                })
 
-    return df.select(id_name, vec_name).mapInPandas(gen, schema=schema)
+    return df.select(id_name, vec_name).mapInPandas(
+        gen, schema=f"{id_name} {id_type}, _key long"
+    )
 
 
-def _kmeans_centroids(
-    c: DataFrame, n_cent: int, sample_n: int, iters: int, seed: int
-) -> list[dict]:
+#: k-means: Lloyd's iterations (early stop) over a hash-sample of rows
+_KMEANS_ITERS = 10
+_KMEANS_SAMPLE = 10_000
+
+
+def _kmeans_centroids(c: DataFrame, n_cent: int, seed: int) -> list[list[float]]:
     """Lloyd's k-means on a seeded hash-sample of the corpus, driver-side
-    numpy (sample_n x dim floats — a few MB). Deterministic: hash-ordered
+    numpy (sample x dim floats — a few MB). Deterministic: hash-ordered
     sample, hash-ordered init, fixed iteration count with early stop."""
     import numpy as np
 
     sample = (
         c.orderBy(F.xxhash64(F.col("corpus_id").cast("string"), F.lit(seed)))
-        .limit(sample_n)
+        .limit(_KMEANS_SAMPLE)
         .select("_cv")
         .collect()
     )
     x = np.array([list(r["_cv"]) for r in sample], dtype=np.float64)
     cent = x[:n_cent].copy()  # init = first n hash-ordered sample rows
-    for _ in range(iters):
+    for _ in range(_KMEANS_ITERS):
         d = ((x[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
         assign = d.argmin(axis=1)
         new = np.array(
@@ -151,7 +151,7 @@ def _kmeans_centroids(
         if np.allclose(new, cent):
             break
         cent = new
-    return [{"_centv": row.tolist()} for row in cent]
+    return cent.tolist()
 
 
 def _topk(scored: DataFrame, query_id: str, k: int) -> DataFrame:
@@ -163,114 +163,140 @@ def _topk(scored: DataFrame, query_id: str, k: int) -> DataFrame:
     )
 
 
-@operator("similarity.topk_bruteforce")
-def topk_bruteforce(spark: SparkSession, inputs, config, context) -> DataFrame:
-    """inputs: [corpus, queries]; config: id_col, vec_col, query_id_col,
-    query_vec_col, k, quantize. The query batch is collected (it is
-    dimension-sized by construction); the corpus streams through once in
-    Arrow batches, each scored against the whole query matrix by one
-    BLAS matmul (`_cos`) — measured ~2.4x a per-pair Catalyst cosine
-    fold at 50k x 64 x 50. With `quantize` the values are exact integer
-    arithmetic (oracle-exact). A zero vector scores null and ranks
-    last. Output: (query_id, corpus_id, cosine, rank)."""
+def _probe_score_frame(
+    c: DataFrame, keys, q_ids, probes: dict, quantize: int | None, qid_type: str
+) -> DataFrame:
+    """(query_id, corpus_id, cosine) of every corpus row against the
+    queries sharing one of its keys, in one `mapInPandas` pass over
+    (corpus_id, _cv): each batch is read once, `keys(m)` gives its
+    (n x m) int64 keys, and the rows of each key that has queries are
+    scored against that key's query matrix by `_cos` (one BLAS matmul).
+    `probes`: key -> (query positions in `q_ids`, `_vecnorm` of those
+    queries). With m > 1 keys a row can meet one query under several;
+    a corpus row lives in exactly one batch, so dropping the repeated
+    (query, row) pairs there drops them everywhere.
+
+    Corpus vectors cross Arrow once and the (bounded) query batch rides
+    into the kernel: a candidate join that carried both vectors on
+    every pair row measured 47s -> ~4s on 6.3M IVF candidate pairs."""
     import numpy as np
     import pandas as pd
+
+    probe_keys = np.fromiter(probes, dtype=np.int64, count=len(probes))
+
+    def gen(batches):
+        for pdf in batches:
+            if not probes or not len(pdf):
+                continue
+            m = _vecmat(pdf["_cv"])
+            k = keys(m)
+            ma, na = _vecnorm(m, quantize)
+            flat = k.ravel()
+            hit = np.nonzero(np.isin(flat, probe_keys))[0]
+            hit = hit[np.argsort(flat[hit], kind="stable")]
+            uniq, start = np.unique(flat[hit], return_index=True)
+            rs, qs, cs = [], [], []
+            for key, rows in zip(uniq, np.split(hit // k.shape[1], start[1:])):
+                pos, qm = probes[int(key)]
+                rs.append(np.repeat(rows, len(pos)))
+                qs.append(np.tile(pos, len(rows)))
+                cs.append(_cos((ma[rows], na[rows]), qm).ravel())
+            if not rs:
+                continue
+            r, q, cos = (np.concatenate(x) for x in (rs, qs, cs))
+            if k.shape[1] > 1:
+                _, first = np.unique(r * len(q_ids) + q, return_index=True)
+                r, q, cos = r[first], q[first], cos[first]
+            yield pd.DataFrame({
+                "query_id": q_ids[q],
+                "corpus_id": pdf["corpus_id"].to_numpy()[r],
+                "cosine": cos,
+            })
+
+    id_type = c.schema["corpus_id"].dataType.simpleString()
+    return c.mapInPandas(
+        gen, schema=f"query_id {qid_type}, corpus_id {id_type}, cosine double"
+    )
+
+
+def _probe_topk(spark: SparkSession, inputs, config, keys, q_keys=None) -> DataFrame:
+    """The one body of the top-k operators. inputs: [corpus, queries];
+    config: id_col, vec_col, query_id_col, query_vec_col, k, quantize.
+    The corpus is spread for the numpy kernel; the query batch is
+    collected (it is dimension-sized by construction) and keyed on the
+    driver by `q_keys` (default `keys`); `_probe_score_frame` scores,
+    `_topk` ranks by (cosine desc, corpus_id). Output: (query_id,
+    corpus_id, cosine, rank)."""
+    import numpy as np
 
     from ssis_to_pyspark_agent_spark.operators.dedup import _spread
 
     corpus, queries = inputs[0], inputs[1]
-    qid = config.get("query_id_col", "query_id")
-    qv = config.get("query_vec_col", config["vec_col"])
-    quant = config.get("quantize")
+    quantize = config.get("quantize")
     c = _spread(spark, corpus, by_bytes=True).select(
         F.col(config["id_col"]).alias("corpus_id"), F.col(config["vec_col"]).alias("_cv")
     )
-    q = queries.select(F.col(qid).alias("query_id"), F.col(qv).alias("_qv"))
+    q = queries.select(
+        F.col(config.get("query_id_col", "query_id")).alias("query_id"),
+        F.col(config.get("query_vec_col", config["vec_col"])).alias("_qv"),
+    )
     q_rows = q.collect()
     q_ids = np.asarray([r.query_id for r in q_rows])
-    qm = _vecnorm([r._qv for r in q_rows], quant) if q_rows else None
-
-    def score(batches):
-        for pdf in batches:
-            if qm is None or not len(pdf):
-                continue
-            yield pd.DataFrame(
-                {
-                    "corpus_id": np.repeat(pdf["corpus_id"].values, len(q_ids)),
-                    "query_id": np.tile(q_ids, len(pdf)),
-                    "cosine": _cos(_vecnorm(pdf["_cv"], quant), qm).ravel(),
-                }
-            )
-
-    types = {f.name: f.dataType.simpleString() for f in (*c.schema, *q.schema)}
-    scored = c.mapInPandas(
-        score,
-        schema=f"corpus_id {types['corpus_id']}, query_id {types['query_id']}, "
-        "cosine double",
+    probes = {}
+    if q_rows:
+        qm = _vecmat([r._qv for r in q_rows])
+        qk = (q_keys or keys)(qm)
+        for key in np.unique(qk):
+            pos = np.nonzero((qk == key).any(axis=1))[0]
+            probes[int(key)] = (pos, _vecnorm(qm[pos], quantize))
+    scored = _probe_score_frame(
+        c, keys, q_ids, probes, quantize, q.schema["query_id"].dataType.simpleString()
     )
     return _topk(scored, "query_id", config.get("k", 10)).select(
         "query_id", "corpus_id", "cosine", "rank"
     )
 
 
+def _one_key(m):
+    """Brute force's key function: every row shares key 0."""
+    import numpy as np
+
+    return np.zeros((len(m), 1), dtype=np.int64)
+
+
+@operator("similarity.topk_bruteforce")
+def topk_bruteforce(spark: SparkSession, inputs, config, context) -> DataFrame:
+    """Exact cosine top-k: every corpus row scored against the whole
+    query matrix (one key), one BLAS matmul per Arrow batch — measured
+    ~2.4x a per-pair Catalyst cosine fold at 50k x 64 x 50. With
+    `quantize` the values are exact integer arithmetic (oracle-exact).
+    A zero vector scores null and ranks last."""
+    return _probe_topk(spark, inputs, config, _one_key)
+
+
 @operator("similarity.topk_lsh")
 def topk_lsh(spark: SparkSession, inputs, config, context) -> DataFrame:
-    """LSH-bucketed ANN: corpus and queries hashed with the same seeded
-    hyperplanes; candidates = bucket collisions in any table; exact cosine
-    re-rank of candidates only."""
-    corpus, queries = inputs[0], inputs[1]
-    qid = config.get("query_id_col", "query_id")
-    qv = config.get("query_vec_col", config["vec_col"])
-    dim = config.get("dim") or len(corpus.select(config["vec_col"]).first()[0])
+    """LSH-bucketed ANN: corpus and queries keyed by the same seeded
+    hyperplanes (`_lsh_keys`); candidates = bucket collisions in any
+    table, scored by exact cosine."""
     n_tables = config.get("lsh_tables", 8)
     n_bits = config.get("lsh_bits")
     if n_bits is None:
         # Auto-size bucket granularity to the corpus (~8 rows/bucket):
         # fixed bit-widths are a silent cost/recall trap — too few bits
-        # puts hundreds of rows per bucket (candidate explosion +
-        # bucket_cap truncation), too many splits true neighbors. Tables
-        # stay the recall knob (more tables = more chances to collide).
-        # One count() of the corpus; see dedup.embedding for the measured
-        # failure mode.
-        n_bits = min(18, max(8, math.ceil(math.log2(max(corpus.count(), 16) / 8))))
-    seed = config.get("seed", 42)
+        # puts hundreds of rows per bucket (candidate explosion), too
+        # many splits true neighbors. Tables stay the recall knob (more
+        # tables = more chances to collide). One count() of the corpus;
+        # see dedup.embedding for the measured failure mode.
+        n_bits = min(18, max(8, math.ceil(math.log2(max(inputs[0].count(), 16) / 8))))
     # hyperplanes='md5': engine-neutral integer planes + quantized vectors
     # -> bucket assignment reproducible in plain SQL (exact oracle for the
     # whole approximate pipeline, not just the re-rank)
-    if config.get("hyperplanes") == "md5":
-        planes = _md5_int_planes(dim, n_tables, n_bits, seed)
-        plane_quant = config.get("quantize", 10000)
-    else:
-        planes, plane_quant = None, None
-
-    from ssis_to_pyspark_agent_spark.operators.dedup import _spread
-
-    c_named = _spread(spark, corpus, by_bytes=True).select(
-        F.col(config["id_col"]).alias("corpus_id"),
-        F.col(config["vec_col"]).alias("_cv"),
+    md5_quantize = (
+        config.get("quantize", 10000) if config.get("hyperplanes") == "md5" else None
     )
-    q_named = queries.select(
-        F.col(qid).alias("query_id"), F.col(qv).alias("_qv")
-    )
-    c = _bucket_frame(
-        c_named, "corpus_id", "_cv", dim, n_tables, n_bits, seed,
-        keep_vec=True, planes=planes, quantize=plane_quant,
-    )
-    q = _bucket_frame(
-        q_named, "query_id", "_qv", dim, n_tables, n_bits, seed,
-        keep_vec=True, planes=planes, quantize=plane_quant,
-    )
-    cand = (
-        c.join(F.broadcast(q), ["_table", "_bucket"])
-        .select("query_id", "corpus_id", "_cv", "_qv")
-        .dropDuplicates(["query_id", "corpus_id"])
-    )
-    scored = _pair_cosine_frame(
-        cand, "_cv", "_qv", ["query_id", "corpus_id"], config.get("quantize")
-    )
-    return _topk(scored, "query_id", config.get("k", 10)).select(
-        "query_id", "corpus_id", "cosine", "rank"
-    )
+    keys = _lsh_keys(n_tables, n_bits, config.get("seed", 42), md5_quantize)
+    return _probe_topk(spark, inputs, config, keys)
 
 
 def _pair_cosine_frame(
@@ -284,7 +310,7 @@ def _pair_cosine_frame(
     columns, as Arrow batches: a rowwise numpy dot over `_vecnorm`
     outputs finished with `_cos`'s IEEE ops (a zero vector -> null).
     With `quantize` the values are exact; without it only the last ulps
-    depend on the summation order.
+    depend on the summation order. Scores dedup.embedding's LSH verify.
 
     Candidate-verify stages are where ANN/dedup time actually goes at
     scale (candidates >> rows); measured 37s -> 11s on a 500k-vector IVF
@@ -328,11 +354,14 @@ def _half_up(m, quantize: int):
 
 def _vecmat(col) -> "object":
     """Vector cells (a pandas Series of Arrow list cells, or collected
-    lists) -> (n, dim) float64 matrix. Arrow cells arrive as numpy
-    arrays — np.stack avoids the per-element Python list conversion
-    (the measured bottleneck on multi-million-row scoring batches)."""
+    lists) -> (n, dim) float64 matrix; a matrix passes through. Arrow
+    cells arrive as numpy arrays — np.stack avoids the per-element
+    Python list conversion (the measured bottleneck on multi-million-row
+    scoring batches)."""
     import numpy as np
 
+    if getattr(col, "ndim", 1) == 2:
+        return np.asarray(col, dtype=np.float64)
     try:
         return np.stack(list(col)).astype(np.float64)
     except ValueError:  # ragged / object cells — slow path
@@ -388,72 +417,18 @@ def _cos_pairs(ids, a, all_ids, b, threshold: float):
     return pd.concat(outs, ignore_index=True)
 
 
-def _ivf_score_frame(
-    c_assigned: DataFrame,
-    q_rows: list,
-    quantize: int | None,
-    id_type: str,
-    qid_type: str,
-) -> DataFrame:
-    """Score every assigned corpus row against the queries probing its
-    list, WITHOUT materializing per-pair vectors: the per-list query
-    matrices (bounded — a query batch is small by construction, the
-    same contract as topk_bruteforce) ride into the kernel as a plain
-    dict; corpus vectors cross Arrow exactly once and each batch-group
-    is one BLAS matmul. Replaces a candidate join whose per-pair vector
-    transfer dominated (measured 47s -> ~4s on 6.3M candidate pairs).
-
-    `q_rows`: collected (query_id, _qv, _cids array) rows. Scored by
-    `_cos`."""
+def _centroid_rank(m, cents, quantize: int | None, n: int):
+    """(rows x n) ids of each row's top-`n` centroids by cosine, ties
+    broken by ascending centroid id (a stable argsort of -cos), and the
+    (rows x C) cosine matrix, scored by `_cos`. With `quantize` the
+    ranking equals an oracle's array_sort of (-quantized cosine, cid).
+    A zero vector scores NaN against every centroid and keeps centroid
+    order; a zero centroid scores NaN and ranks last (argmax would pick
+    it)."""
     import numpy as np
-    import pandas as pd
 
-    qmap: dict[int, list] = {}
-    for r in q_rows:
-        for cid in r["_cids"]:
-            qmap.setdefault(int(cid), []).append(r)
-    packed = {
-        cid: (np.asarray([r["query_id"] for r in rows]),
-              _vecnorm([r["_qv"] for r in rows], quantize))
-        for cid, rows in qmap.items()
-    }
-
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    {"query_id": pd.Series(dtype="object"),
-                     "corpus_id": pdf["corpus_id"],
-                     "cosine": pd.Series(dtype="float64")}
-                )
-                continue
-            v, vnorm = _vecnorm(pdf["_cv"], quantize)
-            ids = pdf["corpus_id"].to_numpy()
-            cids = pdf["_cid"].to_numpy()
-            outs = []
-            for cid in np.unique(cids):
-                hit = packed.get(int(cid))
-                if hit is None:
-                    continue
-                qids, qm = hit
-                idx = np.nonzero(cids == cid)[0]
-                cos = _cos((v[idx], vnorm[idx]), qm)
-                outs.append(pd.DataFrame({
-                    "query_id": np.tile(qids, len(idx)),
-                    "corpus_id": np.repeat(ids[idx], len(qids)),
-                    "cosine": cos.ravel(),
-                }))
-            yield (
-                pd.concat(outs, ignore_index=True)
-                if outs
-                else pd.DataFrame({"query_id": [], "corpus_id": [],
-                                   "cosine": pd.Series(dtype="float64")})
-            )
-
-    return c_assigned.mapInPandas(
-        gen,
-        schema=f"query_id {qid_type}, corpus_id {id_type}, cosine double",
-    )
+    cos = _cos(_vecnorm(m, quantize), _vecnorm(cents, quantize))
+    return np.argsort(-cos, axis=1, kind="stable")[:, :n], cos
 
 
 def _ivf_assign_frame(
@@ -465,19 +440,14 @@ def _ivf_assign_frame(
     n: int,
 ) -> DataFrame:
     """(id, vec, _cids: array<int>, _ccos: double) — each row's top-`n`
-    centroids by cosine, ties broken by ascending centroid id, and its
-    cosine to the first of them. Arrow-batched numpy: one matmul per
-    batch against the (C x dim) centroid matrix, scored by `_cos`. With
-    `quantize` the ranking equals an oracle's array_sort of (-quantized
-    cosine, cid). A zero vector scores NaN against every centroid (a
-    null `_ccos`) and keeps centroid order; a zero centroid ranks last.
-    Replaces a per-row interpreted expression that re-quantized the
-    vector and recomputed its norm once PER CENTROID (measured 4.1s ->
-    0.4s warm on 2k rows x 16 centroids, identical assignment)."""
+    centroids (`_centroid_rank`) and its cosine to the first of them
+    (null for a zero vector), one matmul per Arrow batch. Replaces a
+    per-row interpreted expression that re-quantized the vector and
+    recomputed its norm once PER CENTROID (measured 4.1s -> 0.4s warm
+    on 2k rows x 16 centroids, identical assignment)."""
     import numpy as np
     import pandas as pd
 
-    cm = _vecnorm(cents, quantize)
     id_type = df.schema[id_name].dataType.simpleString()
     vec_type = df.schema[vec_name].dataType.simpleString()
 
@@ -489,8 +459,7 @@ def _ivf_assign_frame(
                      "_cids": [], "_ccos": pd.Series(dtype="float64")}
                 )
                 continue
-            cos = _cos(_vecnorm(pdf[vec_name], quantize), cm)
-            order = np.argsort(-cos, axis=1, kind="stable")[:, :n]
+            order, cos = _centroid_rank(pdf[vec_name], cents, quantize, n)
             yield pd.DataFrame(
                 {id_name: pdf[id_name], vec_name: pdf[vec_name],
                  "_cids": [row.astype("int32") for row in order],
@@ -510,34 +479,23 @@ def topk_ivf(spark: SparkSession, inputs, config, context) -> DataFrame:
     hash-sample of the corpus (default: one-pass, seed-stable) or a real
     k-means (`kmeans=True`: Lloyd's iterations on a seeded corpus sample,
     numpy on the driver — centroid count x dim is tiny; better-balanced
-    lists => better recall at the same nprobe). Corpus rows index to their
-    nearest centroid; queries scan only the `nprobe` nearest lists.
-    Assignment and scoring are the numpy kernels (`_ivf_assign_frame`,
-    `_ivf_score_frame`) with or without `quantize`.
+    lists => better recall at the same nprobe). A corpus row's key is its
+    nearest centroid, a query's keys its `nprobe` nearest
+    (`_centroid_rank`), so queries scan only the lists they probe.
 
-    Corpus vectors are assigned and scored in one pass, never joined to
-    the queries — at 100 TB, write the assigned corpus partitioned by
-    centroid_id once and amortize across query batches."""
-    from ssis_to_pyspark_agent_spark.operators.dedup import _spread
-
-    corpus, queries = inputs[0], inputs[1]
-    qid = config.get("query_id_col", "query_id")
-    qv = config.get("query_vec_col", config["vec_col"])
+    At 100 TB, write the corpus partitioned by centroid once and
+    amortize across query batches."""
+    corpus = inputs[0]
     n_cent = config.get("centroids", 16)
     nprobe = config.get("nprobe", 4)
     quantize = config.get("quantize")
-
-    named = (F.col(config["id_col"]).alias("corpus_id"),
-             F.col(config["vec_col"]).alias("_cv"))
+    named = corpus.select(
+        F.col(config["id_col"]).alias("corpus_id"), F.col(config["vec_col"]).alias("_cv")
+    )
     # the centroid samples read the unspread corpus: a top-n needs no
     # shuffle, and the spread's rebalance would put one under it
     if config.get("kmeans"):
-        cent_rows = _kmeans_centroids(
-            corpus.select(*named), n_cent,
-            sample_n=config.get("kmeans_sample", 10_000),
-            iters=config.get("kmeans_iters", 10),
-            seed=config.get("seed", 42),
-        )
+        cents = _kmeans_centroids(named, n_cent, seed=config.get("seed", 42))
     else:
         # deterministic sample of n_cent rows as centroids. Order key:
         # xxhash64 (default) or md5 hex string (engine-neutral — the same
@@ -546,33 +504,13 @@ def topk_ivf(spark: SparkSession, inputs, config, context) -> DataFrame:
             key = F.md5(F.col("corpus_id").cast("string"))
         else:
             key = F.xxhash64(F.col("corpus_id").cast("string"))
-        cent = (
-            corpus.select(*named)
-            .orderBy(key)
-            .limit(n_cent)
-            .select(F.col("_cv").alias("_centv"))
-        )
-        cent_rows = cent.collect()  # n_cent rows of dim floats: driver-safe
-    q_named = queries.select(
-        F.col(qid).alias("query_id"), F.col(qv).alias("_qv")
-    )
-    cents = [list(r["_centv"]) for r in cent_rows]
-    c = _spread(spark, corpus, by_bytes=True).select(*named)
-    c_assigned = _ivf_assign_frame(
-        c, "corpus_id", "_cv", cents, quantize, 1
-    ).select("corpus_id", "_cv", F.col("_cids")[0].alias("_cid"))
-    # the query batch is bounded by construction (same contract as
-    # topk_bruteforce): collect its probe lists and score corpus lists
-    # against per-list query matrices in one kernel — no per-pair
-    # vector join at all
-    q_rows = _ivf_assign_frame(
-        q_named, "query_id", "_qv", cents, quantize, nprobe
-    ).collect()
-    scored = _ivf_score_frame(
-        c_assigned, q_rows, quantize,
-        id_type=c_assigned.schema["corpus_id"].dataType.simpleString(),
-        qid_type=q_named.schema["query_id"].dataType.simpleString(),
-    )
-    return _topk(scored, "query_id", config.get("k", 10)).select(
-        "query_id", "corpus_id", "cosine", "rank"
-    )
+        # n_cent rows of dim floats: driver-safe
+        cents = [list(r._cv) for r in named.orderBy(key).limit(n_cent).collect()]
+
+    if not cents:  # an empty corpus has no lists to probe
+        return _probe_topk(spark, inputs, config, _one_key)
+
+    def rank(n):
+        return lambda m: _centroid_rank(m, cents, quantize, n)[0]
+
+    return _probe_topk(spark, inputs, config, rank(1), rank(nprobe))

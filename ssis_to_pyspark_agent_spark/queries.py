@@ -1753,7 +1753,7 @@ def q37(spark: SparkSession, sf_dir: str) -> DataFrame:
         .step("lsh", "similarity.topk_lsh", ["embeddings", "qs"],
               id_col="vec_id", vec_col="embedding",
               query_id_col="vec_id", query_vec_col="embedding",
-              k=5, dim=64, lsh_tables=8, lsh_bits=8,
+              k=5, lsh_tables=8, lsh_bits=8,
               hyperplanes="md5", quantize=10000)
         .step("lsh_t", "derived_column", "lsh", columns={"method": '"lsh"'})
         .step("ivf", "similarity.topk_ivf", ["embeddings", "qs"],

@@ -799,9 +799,18 @@ class TestSimilarity:
         sh = run("dedup.simhash", spark, [docs], id_col="doc_id",
                  text_col="text", return_pairs=True)
         ed = run("dedup.embedding", spark, [vecs], id_col="vec_id",
-                 vec_col="embedding", dim=8, return_pairs=True)
+                 vec_col="embedding", return_pairs=True)
         for out in (mh, sh, ed):
             assert out["pairs"].count() == 0 and out["out"].count() == 0
+        # top-k: an empty corpus or an empty query batch ranks nothing
+        one = spark.createDataFrame([(1, [1.0, 0.0])], vecs.schema)
+        for op in ("similarity.topk_bruteforce", "similarity.topk_lsh",
+                   "similarity.topk_ivf"):
+            for corpus, queries in ((vecs, one), (one, vecs)):
+                out = run(op, spark, [corpus, queries], id_col="vec_id",
+                          vec_col="embedding", query_id_col="vec_id",
+                          query_vec_col="embedding", k=3)
+                assert out.count() == 0, op
 
     def test_embedding_lsh_pairs_subset_of_bruteforce(self, spark):
         """Hyperplane-LSH candidates verified with exact quantized cosine
@@ -1019,11 +1028,85 @@ class TestSimilarity:
         lsh = run("similarity.topk_lsh", spark, [df, q],
                   id_col="vec_id", vec_col="embedding",
                   query_id_col="vec_id", query_vec_col="embedding",
-                  k=1, dim=16, lsh_tables=8, lsh_bits=4)
+                  k=1, lsh_tables=8, lsh_bits=4)
         bf1 = {r.query_id: r.corpus_id for r in bf.collect()}
         lsh1 = {r.query_id: r.corpus_id for r in lsh.collect()}
         # self always collides with itself -> top-1 must match exactly
         assert bf1 == lsh1
+
+    def test_lsh_float_planes_match_reference(self, spark):
+        """Default float hyperplanes, no `quantize`: the candidates are
+        the rows colliding with the query in any table under
+        `_hyperplanes` (seed 42), scored by the float cosine and ranked
+        by (-cosine, id) — each corpus ROW once, so a duplicated id
+        whose two rows both collide ranks twice."""
+        import math
+        import random
+
+        from ssis_to_pyspark_agent_spark.operators.similarity import (
+            _hyperplanes,
+        )
+
+        rng = random.Random(13)
+        dim, tables, bits, k = 8, 3, 3, 5
+        rows_ = [(i, [rng.gauss(0, 1) for _ in range(dim)]) for i in range(60)]
+        # a second row under id 7: a near-copy of row 7's vector
+        rows_.append((7, [x + 1e-3 * rng.gauss(0, 1) for x in rows_[7][1]]))
+        schema = "vec_id long, embedding array<double>"
+        df = spark.createDataFrame(rows_, schema)
+        query_ids = (0, 3, 7)
+        qs = spark.createDataFrame([rows_[i] for i in query_ids], schema)
+        out = run("similarity.topk_lsh", spark, [df, qs],
+                  id_col="vec_id", vec_col="embedding",
+                  query_id_col="vec_id", query_vec_col="embedding",
+                  k=k, lsh_tables=tables, lsh_bits=bits)
+
+        planes = _hyperplanes(dim, tables, bits, 42)
+
+        def sig(v):
+            return [tuple(sum(a * b for a, b in zip(v, p)) >= 0 for p in t)
+                    for t in planes]
+
+        def cos(a, b):
+            dot = sum(x * y for x, y in zip(a, b))
+            return dot / (math.sqrt(sum(x * x for x in a))
+                          * math.sqrt(sum(y * y for y in b)))
+
+        ref = []
+        for qi in query_ids:
+            qv = rows_[qi][1]
+            cand = [(cos(v, qv), i) for i, v in rows_
+                    if any(a == b for a, b in zip(sig(v), sig(qv)))]
+            cand.sort(key=lambda c: (-c[0], c[1]))
+            ref += [(qi, i, c, r + 1) for r, (c, i) in enumerate(cand[:k])]
+        got = sorted(map(tuple, out.collect()))
+        ref.sort()
+        assert [g[:2] + g[3:] for g in got] == [r[:2] + r[3:] for r in ref]
+        assert all(abs(g[2] - r[2]) < 1e-12 for g, r in zip(got, ref))
+        # both id-7 rows collide with query 7 and rank first and second
+        assert sorted(g[3] for g in got if g[:2] == (7, 7)) == [1, 2]
+
+    def test_topk_plans_hold_one_corpus_map_and_no_join(self, spark):
+        """Every top-k operator scores in one Python map over the corpus
+        (`_probe_score_frame`) with the query batch inside the kernel:
+        no candidate join, no second map."""
+        import random
+
+        rng = random.Random(14)
+        rows_ = [(i, [rng.gauss(0, 1) for _ in range(8)]) for i in range(100)]
+        df = spark.createDataFrame(rows_, "vec_id long, embedding array<float>")
+        cfg = dict(id_col="vec_id", vec_col="embedding",
+                   query_id_col="vec_id", query_vec_col="embedding", k=3)
+        for op, extra in {
+            "similarity.topk_bruteforce": {},
+            "similarity.topk_lsh": dict(lsh_tables=4, lsh_bits=3),
+            "similarity.topk_ivf": dict(centroids=4, nprobe=2),
+        }.items():
+            out = run(op, spark, [df, df.filter("vec_id < 3")], **cfg, **extra)
+            assert out.count() == 9, op
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert plan.count("MapInPandas") == 1, (op, plan)
+            assert "Join" not in plan, (op, plan)
 
 
 class TestTextOps:
@@ -4091,7 +4174,7 @@ class TestIvfKmeans:
                    query_id_col="vec_id", query_vec_col="embedding", k=3)
         bf = run("similarity.topk_bruteforce", spark, [df, q], **cfg)
         ivf = run("similarity.topk_ivf", spark, [df, q], centroids=4,
-                  nprobe=4, kmeans=True, kmeans_sample=200, **cfg)
+                  nprobe=4, kmeans=True, **cfg)
         gb = {(r.query_id, r.rank): r.corpus_id for r in bf.collect()}
         gi = {(r.query_id, r.rank): r.corpus_id for r in ivf.collect()}
         assert gb == gi  # full probe == exact
@@ -4187,7 +4270,7 @@ class TestIvfKmeans:
         cfg = dict(id_col="vec_id", vec_col="embedding",
                    query_id_col="vec_id", query_vec_col="embedding", k=1)
         ivf = run("similarity.topk_ivf", spark, [df, q], centroids=2,
-                  nprobe=1, kmeans=True, kmeans_sample=100, **cfg)
+                  nprobe=1, kmeans=True, **cfg)
         top1 = {r.query_id: r.corpus_id for r in ivf.collect()}
         assert top1 == {0: 0, 1: 1}  # self found even probing 1 list
 
@@ -4316,7 +4399,10 @@ def test_no_new_alternate_implementation_keys():
 #: config keys deleted together with the code paths they selected: the
 #: session's checkpoint directory decides where the cc loops cut, and the
 #: prefix filter and its order are chosen by dedup.ngram_jaccard itself.
-_DELETED_KEYS = {"checkpoint_dir", "prefix_filter", "prefix_order"}
+#: The k-means iteration count and sample size and dedup.embedding's
+#: table bound are private constants.
+_DELETED_KEYS = {"checkpoint_dir", "prefix_filter", "prefix_order",
+                 "kmeans_iters", "kmeans_sample", "max_tables"}
 
 
 def test_no_deleted_option_keys():
@@ -4331,19 +4417,24 @@ def test_one_cosine_path_whatever_quantize_says():
     """No module under operators/ defines or calls a Catalyst cosine
     (``_dot``, ``_norm``, ``_cosine``), and none passes ``_spread`` a
     computed ``by_bytes``: every cosine is the numpy kernel, so nothing
-    may pick a second path (or a different spread) by ``quantize``."""
+    may pick a second path (or a different spread) by ``quantize``.
+    The top-k operators score through ``_probe_score_frame`` only: no
+    module defines ``_ivf_score_frame``, and only dedup.embedding's
+    verify (dedup.py) calls the per-pair ``_pair_cosine_frame``."""
     import ast
 
     exprs = {"_dot", "_norm", "_cosine"}
     found = set()
     for path, tree in _package_trees("operators"):
         for node in ast.walk(tree):
-            if isinstance(node, ast.FunctionDef) and node.name in exprs:
+            if (isinstance(node, ast.FunctionDef)
+                    and node.name in exprs | {"_ivf_score_frame"}):
                 found.add((path.name, "def", node.name))
             if not isinstance(node, ast.Call):
                 continue
             name = getattr(node.func, "id", getattr(node.func, "attr", None))
-            if name in exprs:
+            if name in exprs or (name == "_pair_cosine_frame"
+                                 and path.name != "dedup.py"):
                 found.add((path.name, "call", name))
             if name == "_spread":
                 flags = node.args[2:] + [
