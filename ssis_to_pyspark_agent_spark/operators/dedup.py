@@ -419,15 +419,14 @@ def _signature_bands(
     """The shared MinHash stage 1+2 (dedup.minhash AND
     dedup.minhash_incremental — ONE definition so seed handling cannot
     drift between them): shingle + per-shingle xxhash64, then the
-    numpy band-hash frame (`_numpy_band_frame`). Returns
-    (base, band_frame); base carries (_id, _sh, _hs)."""
+    numpy band-hash frame (`_numpy_band_frame`) over (_id, _sh, _hs)."""
     base = src.select(
         F.col(id_col).alias("_id"),
         _shingles(F.col(text_col), k).alias("_sh"),
     ).withColumn(
         "_hs", F.transform(F.col("_sh"), lambda s: F.xxhash64(s, F.lit(seed)))
     )
-    return base, _numpy_band_frame(base, bands, rows, seed)
+    return _numpy_band_frame(base, bands, rows, seed)
 
 
 def _dominated_ids(pairs: DataFrame, id_col: str) -> DataFrame:
@@ -438,25 +437,61 @@ def _dominated_ids(pairs: DataFrame, id_col: str) -> DataFrame:
 
 
 def _keep_min_survivors(
-    df: DataFrame, id_col: str, pairs: DataFrame, broadcast: bool = False
+    df: DataFrame, id_col: str, pairs: DataFrame
 ) -> DataFrame:
     """Drop every row that has a near-duplicate with a smaller id.
-    One anti-join against the dominated set.
+    One anti-join against the dominated set, with no hint. When `pairs`
+    comes in persisted and counted (as `_jaccard_verify` returns it),
+    the planner sizes the dominated set from the filled cache: under
+    the broadcast threshold the anti-join is planned as a broadcast
+    join from the start and the corpus side never shuffles; over it
+    the join shuffles."""
+    return df.join(_dominated_ids(pairs, id_col), id_col, "left_anti")
 
-    ``broadcast=True`` hints the dominated set onto every executor so the
-    anti-join never shuffles the corpus side (the initial plan otherwise
-    stages a full SortMergeJoin exchange of the payload — at 100 TB a
-    corpus-wide shuffle of the text column just to drop duplicates; AQE
-    can only downgrade it to a local read AFTER the shuffle files are
-    written). Callers may only pass True under an assumption they already
-    make: the candidate/pairs frame fits the driver (minhash's
-    ``verify_broadcast``); the dominated set is a projection of its `b`
-    column, so it is strictly smaller than what those callers broadcast
-    during verification."""
-    dom = _dominated_ids(pairs, id_col)
-    if broadcast:
-        dom = F.broadcast(dom)
-    return df.join(dom, id_col, "left_anti")
+
+def _jaccard_verify(
+    cand: DataFrame, sources: list[DataFrame], id_col: str, text_col: str,
+    k: int, threshold: float,
+) -> DataFrame:
+    """Exact-Jaccard verify of candidate pairs (a, b): the (a, b,
+    jaccard) rows at or over `threshold`, persisted and counted.
+
+    `cand` must come in persisted AND filled: the planner then chooses
+    each join below from the cache's measured size (a broadcast for a
+    small candidate set, a shuffle join for a degenerate one) instead
+    of estimating it. Each source is semi-filtered by candidate id
+    BEFORE shingling — Catalyst does not hoist the semi-join above the
+    shingle Project on its own, so spelling it out makes the re-shingle
+    O(|candidates|) instead of O(corpus). The shingle frame feeds both
+    sides of the verify; unpersisted, each side would re-run the semi
+    probes and shingle passes. One action fills `pairs` (and `sh`);
+    both `sh` and `cand` are released here, since materialized `pairs`
+    carries the result for every later consumer."""
+    ids = (
+        cand.select(F.col("a").alias(id_col))
+        .unionByName(cand.select(F.col("b").alias(id_col)))
+        .distinct()
+    )
+    sh = None
+    for src in sources:
+        part = src.join(ids, id_col, "left_semi").select(
+            F.col(id_col).alias("_id"),
+            _shingles(F.col(text_col), k).alias("_sh"),
+        )
+        sh = part if sh is None else sh.unionByName(part)
+    sh = sh.persist()
+    pairs = (
+        cand.join(sh.select(F.col("_id").alias("a"), F.col("_sh").alias("sha")), "a")
+        .join(sh.select(F.col("_id").alias("b"), F.col("_sh").alias("shb")), "b")
+        .withColumn("jaccard", _jaccard(F.col("sha"), F.col("shb")))
+        .filter(F.col("jaccard") >= threshold)
+        .select("a", "b", "jaccard")
+        .persist()
+    )
+    pairs.count()
+    sh.unpersist()
+    cand.unpersist()
+    return pairs
 
 
 def _cut(df: DataFrame) -> DataFrame:
@@ -1095,9 +1130,14 @@ def dedup_minhash(spark: SparkSession, inputs, config, context):
     2. Band explode carries only (_id, band, band_hash) — 3 small columns
        through the one shuffle; shingle arrays do NOT ride the explode.
     3. Self-join on (band, hash), distinct candidate pairs.
-    4. Exact-Jaccard verify joins the (persisted) shingle arrays back in by
-       id — 2 slim joins on candidates only.
+    4. Exact-Jaccard verify (`_jaccard_verify`): a candidate-pruned
+       re-shingle joins back in by id — 2 slim joins on candidates only.
     5. Survivors = anti-join of dominated ids.
+
+    No join carries a broadcast hint: the candidate and pairs frames are
+    filled caches when the joins are planned, so Spark's size threshold
+    (``spark.sql.autoBroadcastJoinThreshold``) broadcasts a small
+    candidate set and shuffles a degenerate one.
     """
     df: DataFrame = inputs[0]
     id_col, text_col = config["id_col"], config["text_col"]
@@ -1120,9 +1160,7 @@ def dedup_minhash(spark: SparkSession, inputs, config, context):
     # Signature compute is CPU-bound: spread it across the cluster even when
     # the input is a handful of parquet splits.
     src = _spread(spark, df)
-    base, band_frame = _signature_bands(
-        src, id_col, text_col, k, bands, rows, seed
-    )
+    band_frame = _signature_bands(src, id_col, text_col, k, bands, rows, seed)
     banded = band_frame.select(
         "_id", F.posexplode("_bh").alias("_band", "_bh")
     )
@@ -1132,68 +1170,13 @@ def dedup_minhash(spark: SparkSession, inputs, config, context):
     # full shuffles + sort of the banded table (measured 52s -> seconds at
     # 8M banded rows). _BUCKET_CAP guards the quadratic blowup of a
     # degenerate hot bucket (boilerplate-heavy corpora).
-    # The candidate set is consumed by cand_ids, the broadcast, the
-    # verify join and the survivor anti-join; `_bucket_pairs` returns it
-    # persisted and counted (banded is uncached, so it auto-persists),
-    # and this operator owns and releases that cache.
+    # `_bucket_pairs` returns the candidate set persisted and counted
+    # (banded is uncached, so it auto-persists) — the filled cache the
+    # verify needs; the verify releases it.
     cand = _bucket_pairs(banded, ["_band", "_bh"], _BUCKET_CAP)
-
-    # Verification joins the shingle arrays to the (small) candidate set
-    # via broadcast — the arrays never shuffle. Assumption: candidates fit
-    # the driver (bounded by true-dup volume x LSH precision); set
-    # verify_broadcast=False for degenerate corpora.
-    verify_bc = config.get("verify_broadcast", True)
-    sh = base.select("_id", "_sh")
-    if verify_bc:
-        cand_ids = (
-            cand.select(F.col("a").alias("_id"))
-            .unionByName(cand.select(F.col("b").alias("_id")))
-            .distinct()
-        )
-        # semi-filter the RAW source by candidate id BEFORE shingling.
-        # Catalyst will not hoist the semi-join above the shingle
-        # Project on its own (verified in the physical plan), so
-        # spelling it out is the difference between an O(|candidates|)
-        # and an O(corpus) recompute.
-        pruned = src.join(
-            F.broadcast(cand_ids.select(F.col("_id").alias(id_col))),
-            id_col, "left_semi",
-        )
-        sh = pruned.select(
-            F.col(id_col).alias("_id"),
-            _shingles(F.col(text_col), k).alias("_sh"),
-        )
-        # sh feeds BOTH sides of the verify join; unpersisted, the plan
-        # duplicates the whole subtree — the corpus-wide semi-probe, the
-        # candidate shingle pass and the cand_ids distinct each run twice
-        # (r11 plan audit: two identical Exchange+semi-join subtrees, one
-        # per side). Candidate-sized by the same verify_broadcast
-        # assumption, so caching it is bounded; released after the pairs
-        # materialization below. NEVER persisted when verify_broadcast is
-        # False — there sh is the corpus-sized shingle frame.
-        sh = sh.persist()
-    # the hint wraps a new plan node, so `cand` itself stays the handle
-    # that unpersist() matches against the cache
-    pairs = (
-        (F.broadcast(cand) if verify_bc else cand)
-        .join(sh.select(F.col("_id").alias("a"), F.col("_sh").alias("sha")), "a")
-        .join(sh.select(F.col("_id").alias("b"), F.col("_sh").alias("shb")), "b")
-        .withColumn("jaccard", _jaccard(F.col("sha"), F.col("shb")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-        .persist()  # consumed by the survivor anti-join AND the pairs port
-    )
-    # one action fills pairs (and sh, whose two join sides read the
-    # cache); materialized `pairs` then carries the result for both
-    # remaining consumers, so the candidate cache and sh are released
-    # here on either verify path instead of leaking per invocation
-    pairs.count()
-    if verify_bc:
-        sh.unpersist()
-    cand.unpersist()
-    # broadcast is safe exactly when verify_broadcast is: the dominated
-    # set is a sub-projection of the candidate frame broadcast above
-    out = _keep_min_survivors(df, id_col, pairs, broadcast=verify_bc)
+    # consumed by the survivor anti-join AND the pairs port
+    pairs = _jaccard_verify(cand, [src], id_col, text_col, k, threshold)
+    out = _keep_min_survivors(df, id_col, pairs)
     if config.get("return_pairs"):
         return {"out": out, "pairs": pairs}
     return out
@@ -1304,6 +1287,9 @@ _NGRAM_DF_MIN_DOCS = 20_000
 #: top-shingle document frequency (sampled) at which the probe picks the
 #: DF prefix order: uniform corpora measure ~1e-4, Zipf+boilerplate ~1.0.
 _NGRAM_HOT_DF = 0.01
+#: without ``block_exprs``, dedup.ngram_jaccard blocks each doc on its
+#: this-many smallest shingle hashes.
+_NGRAM_BLOCKS = 2
 
 
 @operator("dedup.ngram_jaccard")
@@ -1333,12 +1319,16 @@ def dedup_ngram_jaccard(spark: SparkSession, inputs, config, context):
     pass; persist the input first. The chosen order is recorded in
     ``context['_ngram_prefix_order']`` (and, inside a pipeline, under
     ``_ngram_prefix_order:<step>`` — the bare key is
-    last-writer-wins)."""
+    last-writer-wins).
+
+    Blocking: each doc blocks on its `_NGRAM_BLOCKS` smallest shingle
+    hashes, or, with ``block_exprs``, on each listed SQL expression
+    (multi-probe length buckets; column blocking as e.g.
+    ``["xxhash64(lang, source)"]``)."""
     df: DataFrame = inputs[0]
     id_col, text_col = config["id_col"], config["text_col"]
     k = config.get("shingle_k", 3)
     threshold = config.get("threshold", 0.8)
-    n_blocks = config.get("blocks", 2)  # use the n smallest shingle hashes
 
     # the shingle+hash+sort pass below is materialized by the persist and
     # is pure CPU — spread a narrow input across the cluster first or a
@@ -1372,22 +1362,9 @@ def dedup_ngram_jaccard(spark: SparkSession, inputs, config, context):
             "_id", "_sh", F.col("_blocks").alias("_bs"),
             F.explode("_blocks").alias("_block"),
         )
-    elif block_by := config.get("block_by"):
-        # engine-neutral blocking on declared columns (e.g. lang+source):
-        # semantics are then fully SQL-expressible for the oracle
-        base = src.select(
-            F.col(id_col).alias("_id"),
-            sh.alias("_sh"),
-            F.concat_ws("\x1f", *[F.col(c).cast("string") for c in block_by]).alias(
-                "_block"
-            ),
-        )
-        blocked = base.select(
-            "_id", "_sh", F.array("_block").alias("_bs"), "_block"
-        )
     else:
         base = src.select(F.col(id_col).alias("_id"), sh.alias("_sh")).withColumn(
-            "_mins", F.slice(F.col("_sh"), 1, n_blocks)
+            "_mins", F.slice(F.col("_sh"), 1, _NGRAM_BLOCKS)
         )
         blocked = base.select(
             "_id", "_sh", F.col("_mins").alias("_bs"),
@@ -1781,9 +1758,9 @@ def dedup_embedding(spark: SparkSession, inputs, config, context):
     return out
 
 
-#: dedup.spans 'auto' goes eager (persist + count the dup-gram set and
-#: the per-doc aggregate) only at or above this many input docs (see
-#: the size-gate comment in the operator).
+#: dedup.spans goes eager (persist + count the dup-gram set and the
+#: per-doc aggregate) only at or above this many input docs (see the
+#: size-gate comment in the operator).
 _SPANS_EAGER_MIN_DOCS = 200_000
 #: row bound under which eager dedup.spans broadcasts the dup-gram set
 #: and the per-doc aggregate explicitly.
@@ -1941,19 +1918,11 @@ def dedup_spans(spark: SparkSession, inputs, config, context):
     # where the old fully-lazy shape let the query's single action
     # share the document scan across all its legs and AQE handle the
     # (tiny) exchanges (q30 sf0.1: 1.45s lazy vs ~4.8s always-eager).
-    # 'auto' probes the RAW input count (metadata-cheap on a parquet
-    # scan; invariant 18) and stays lazy under _SPANS_EAGER_MIN_DOCS —
-    # at that size the gram exchange is seconds at worst, and AQE's
+    # The gate counts the RAW input (metadata-cheap on a parquet scan;
+    # invariant 18) and stays lazy under _SPANS_EAGER_MIN_DOCS — at
+    # that size the gram exchange is seconds at worst, and AQE's
     # runtime stats still broadcast the small sides.
-    eager = config.get("eager", "auto")
-    if eager not in ("auto", True, False):
-        # loud, like the funnel's materialize: a stringly 'false' must
-        # not select eager
-        raise ValueError(
-            f"dedup.spans: eager must be 'auto', True or False, got "
-            f"{eager!r}")
-    if eager == "auto":
-        eager = df.count() >= _SPANS_EAGER_MIN_DOCS
+    eager = df.count() >= _SPANS_EAGER_MIN_DOCS
     if eager:
         dup_grams = dup_grams.persist()
         dup_probe = (
@@ -2081,6 +2050,11 @@ def dedup_spans(spark: SparkSession, inputs, config, context):
     return out
 
 
+#: dedup.minhash_incremental keeps at most this many candidates per
+#: batch doc (the lowest partner ids).
+_CAND_CAP = 1000
+
+
 @operator("dedup.minhash_incremental")
 def dedup_minhash_incremental(spark: SparkSession, inputs, config, context):
     """Incremental MinHash/LSH dedup of a NEW BATCH against an existing
@@ -2102,21 +2076,21 @@ def dedup_minhash_incremental(spark: SparkSession, inputs, config, context):
     batch (test-pinned) — incremental runs compose into exactly the
     one-shot result.
 
-    Plan: batch bands broadcast into the history band join by default
-    (`broadcast_batch=True`) — the 100 TB history table STREAMS through
-    the probe side with no shuffle; within-batch candidates reuse the
-    one-shuffle bucket-groupBy path. The broadcast assumes the batch is
-    ingest-sized: when using the BOOTSTRAP idiom (the whole corpus as
-    the "batch" against an empty history, to build the initial band
-    store) pass `broadcast_batch=False` — broadcasting a corpus-sized
-    band table is exactly what the design avoids. Candidate pairs (ids only) are the
-    only other shuffle; shingle arrays join back candidate-pruned, as in
-    dedup.minhash. Two caps guard degenerate boilerplate buckets: the
-    batch band table is capped at 200 rows per (band, hash)
-    BEFORE the cross join (so join output is linear in history, never a
-    bucket cross product), and `cand_cap` bounds surviving candidates
-    per batch doc (a window over the candidate frame only — history is
-    never shuffled).
+    Plan: the batch band table is persisted and filled (by the bucket
+    probe) before the history band join is planned, so an ingest-sized
+    batch is broadcast by Spark's size threshold and the 100 TB history
+    table STREAMS through the probe side with no shuffle, while a
+    corpus-sized batch (the BOOTSTRAP idiom: the whole corpus as the
+    "batch" against an empty history, to build the initial band store)
+    gets a shuffle join. Within-batch candidates reuse the one-shuffle
+    bucket-groupBy path. Candidate pairs (ids only) are the only other
+    shuffle; the candidate frame is counted, then verified by the same
+    `_jaccard_verify` as dedup.minhash. Two caps guard degenerate
+    boilerplate buckets: the batch band table is capped at 200 rows per
+    (band, hash) BEFORE the cross join (so join output is linear in
+    history, never a bucket cross product), and `_CAND_CAP` bounds
+    surviving candidates per batch doc (a window over the candidate
+    frame only — history is never shuffled).
 
     Ports: out (surviving batch rows), pairs (a=keeper, b=dropped-side
     candidate, jaccard) when return_pairs, bands (the batch band table,
@@ -2138,10 +2112,9 @@ def dedup_minhash_incremental(spark: SparkSession, inputs, config, context):
         bands = _auto_bands(num_hashes, threshold)
     rows = num_hashes // bands
     seed = config.get("seed", 42)
-    cand_cap = config.get("cand_cap", 1000)
 
     def band_rows(src: DataFrame) -> DataFrame:
-        _, bf = _signature_bands(src, id_col, text_col, k, bands, rows, seed)
+        bf = _signature_bands(src, id_col, text_col, k, bands, rows, seed)
         return bf.select("_id", F.posexplode("_bh").alias("_band", "_bh"))
 
     b_banded = band_rows(_spread(spark, batch)).persist()
@@ -2153,8 +2126,9 @@ def dedup_minhash_incremental(spark: SparkSession, inputs, config, context):
 
     # within-batch candidates: one bucket-groupBy shuffle (a < b)
     cand_bb = _bucket_pairs(b_banded, ["_band", "_bh"], _BUCKET_CAP)
-    # cross candidates: history streams against the (broadcast) batch
-    # band table — zero shuffle of history when the batch is small.
+    # cross candidates: history streams against the batch band table —
+    # zero shuffle of history when the batch is under the broadcast
+    # threshold.
     # Cap the BATCH side per (band, hash) BEFORE the join: a degenerate
     # shared band value (boilerplate / empty docs on both sides) would
     # otherwise materialize |h_bucket| x |b_bucket| join rows before any
@@ -2169,76 +2143,28 @@ def dedup_minhash_incremental(spark: SparkSession, inputs, config, context):
         .drop("_rn")
         .select(F.col("_id").alias("b"), "_band", "_bh")
     )
-    if config.get("broadcast_batch", True):
-        bb = F.broadcast(bb)
     cand_bh = (
         h_banded.select(F.col("_id").alias("a"), "_band", "_bh")
         .join(bb, ["_band", "_bh"])
         .select("a", "b")
         .dropDuplicates(["a", "b"])
     )
-    cand = cand_bb.unionByName(cand_bh)
-    if cand_cap:
-        wc = Window.partitionBy("b").orderBy("a")
-        cand = (
-            cand.withColumn("_rn", F.row_number().over(wc))
-            .filter(F.col("_rn") <= cand_cap)
-            .drop("_rn")
-        )
-    # persisted, but NOT eagerly counted: pairs.count() below is the
-    # first action and materializes this cache as a side effect — an
-    # extra count here would re-run the whole candidate pipeline once
-    cand = cand.persist()
-
-    # verify: candidate-pruned re-shingle from BOTH raw sides, then the
-    # exact Jaccard — arrays never shuffle; candidates broadcast by
-    # default (bounded by true-dup volume x LSH precision), with the
-    # same verify_broadcast=False hatch as dedup.minhash for degenerate
-    # boilerplate-heavy corpora where even the capped candidate set is
-    # too big for the driver
-    verify_bc = config.get("verify_broadcast", True)
-    cand_ids = (
-        cand.select(F.col("a").alias("_id"))
-        .unionByName(cand.select(F.col("b").alias("_id")))
-        .distinct()
-    )
-    if verify_bc:
-        cand_ids = F.broadcast(cand_ids)
-
-    def pruned_shingles(src: DataFrame) -> DataFrame:
-        keep = src.join(
-            cand_ids.select(F.col("_id").alias(id_col)),
-            id_col, "left_semi",
-        )
-        return keep.select(
-            F.col(id_col).alias("_id"), _shingles(F.col(text_col), k).alias("_sh")
-        )
-
-    sh = pruned_shingles(batch).unionByName(pruned_shingles(history))
-    if verify_bc:
-        # joined on both sides below: unpersisted, the batch+history
-        # semi-probes and shingle passes run TWICE each (one duplicated
-        # subtree per side — r11 plan audit). Candidate-sized under the
-        # verify_bc assumption; filled by pairs.count(), released right
-        # after.
-        sh = sh.persist()
-    pairs = (
-        (F.broadcast(cand) if verify_bc else cand)
-        .join(sh.select(F.col("_id").alias("a"), F.col("_sh").alias("sha")), "a")
-        .join(sh.select(F.col("_id").alias("b"), F.col("_sh").alias("shb")), "b")
-        .withColumn("jaccard", _jaccard(F.col("sha"), F.col("shb")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
+    wc = Window.partitionBy("b").orderBy("a")
+    cand = (
+        cand_bb.unionByName(cand_bh)
+        .withColumn("_rn", F.row_number().over(wc))
+        .filter(F.col("_rn") <= _CAND_CAP)
+        .drop("_rn")
         .persist()
     )
-    pairs.count()
-    if verify_bc:
-        sh.unpersist()
-    cand.unpersist()
-
-    # same contract as dedup.minhash: dominated ⊂ the verify-broadcast
-    # candidate frame, so the hint is exactly as bounded as verify_bc
-    out = _keep_min_survivors(batch, id_col, pairs, broadcast=verify_bc)
+    # filled before the verify is planned (one job; the batch bands
+    # are already cached): the verify's joins are then sized from the
+    # cache, not from an estimate of the union above
+    cand.count()
+    pairs = _jaccard_verify(
+        cand, [batch, history], id_col, text_col, k, threshold
+    )
+    out = _keep_min_survivors(batch, id_col, pairs)
     result = {"out": out}
     if config.get("return_pairs"):
         result["pairs"] = pairs
@@ -2331,8 +2257,8 @@ def write_band_store(
 
     Layout: partitioned by ``_band`` — bounded directory count (= the
     LSH band count, 4-64), so appends stay cheap and a band-selective
-    read prunes; the probe join broadcasts the batch side, so the store
-    only ever streams. Schema is validated (and pruned to the contract
+    read prunes; Spark broadcasts an ingest-sized batch side of the
+    probe join, so the store only ever streams. Schema is validated (and pruned to the contract
     columns) on write; a store written with different minhash params
     (num_hashes/bands/seed/shingle_k) is NOT interchangeable — pass
     ``params`` (any subset of those keys) and the store keeps a
@@ -2534,9 +2460,9 @@ def dedup_semantic(spark: SparkSession, inputs, config, context):
                             smaller id than) it.
 
     Centroids: ``kmeans=True`` runs Lloyd's on a seeded driver sample
-    (real path); default is the deterministic hash-sample shared with
-    similarity.topk_ivf — ``centroid_order='md5'`` + ``quantize`` makes
-    assignment, pair cosines, and the keep rule exact integer-derived
+    (real path); default is the md5-ordered sample shared with
+    similarity.topk_ivf (`_sample_centroids`) — with ``quantize`` the
+    assignment, pair cosines, and the keep rule are exact integer-derived
     arithmetic any SQL engine reproduces (the q38/q40 oracle idiom).
     A SECOND input, when wired, is a precomputed (cluster, dim, val)
     centroid frame — cluster.kmeans' 'centroids' port — for the
@@ -2569,6 +2495,7 @@ def dedup_semantic(spark: SparkSession, inputs, config, context):
         _cos_pairs,
         _ivf_assign_frame,
         _kmeans_centroids,
+        _sample_centroids,
         _vecnorm,
     )
 
@@ -2625,7 +2552,7 @@ def dedup_semantic(spark: SparkSession, inputs, config, context):
         n_clusters = len(ic)
         cents = [[v / quantize for v in row] for row in ic]
     elif config.get("kmeans"):
-        # sampled from the RAW frame, like the hash sample below
+        # sampled from the RAW frame, like the md5 sample below
         cents = _kmeans_centroids(
             df.select(F.col(id_col).alias("corpus_id"),
                       F.col(vec_col).alias("_cv")),
@@ -2633,20 +2560,10 @@ def dedup_semantic(spark: SparkSession, inputs, config, context):
             seed=config.get("seed", 42),
         )
     else:
-        if config.get("centroid_order") == "md5":
-            key = F.md5(F.col("_id").cast("string"))
-        else:
-            key = F.xxhash64(F.col("_id").cast("string"))
-        # TakeOrdered over the RAW frame, not `base`: the hash order is
-        # partitioning-independent, so the chosen rows are identical,
-        # and the collect skips materializing the _spread repartition
-        # exchange (r12 trace: 66 tasks -> a 2-task TakeOrdered)
-        cents = [
-            list(r["_v"])
-            for r in df.select(
-                F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
-            ).orderBy(key).limit(n_clusters).collect()
-        ]
+        # sampled from the RAW frame, not `base`: the collect then skips
+        # materializing the _spread repartition exchange (r12 trace: 66
+        # tasks -> a 2-task TakeOrdered)
+        cents = _sample_centroids(df, id_col, vec_col, n_clusters)
 
     # verify_nprobe: SemDeDup never scores a near-dup pair split across
     # clusters (the paper's accepted recall boundary). nprobe=2 ships

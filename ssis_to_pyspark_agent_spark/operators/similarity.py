@@ -154,6 +154,20 @@ def _kmeans_centroids(c: DataFrame, n_cent: int, seed: int) -> list[list[float]]
     return cent.tolist()
 
 
+def _sample_centroids(
+    df: DataFrame, id_col: str, vec_col: str, n: int
+) -> list[list[float]]:
+    """The vectors of the `n` rows of `df` first in md5(id) order — the
+    default centroids of similarity.topk_ivf and dedup.semantic.
+    Deterministic and partitioning-independent, and the same
+    ``ORDER BY md5(CAST(id AS VARCHAR))`` picks them in any SQL oracle.
+    One TakeOrdered over `df` (pass the raw frame: it needs no
+    shuffle); n rows of dim floats are driver-safe."""
+    key = F.md5(F.col(id_col).cast("string"))
+    return [list(r[vec_col])
+            for r in df.select(id_col, vec_col).orderBy(key).limit(n).collect()]
+
+
 def _topk(scored: DataFrame, query_id: str, k: int) -> DataFrame:
     w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc("corpus_id"))
     return (
@@ -476,10 +490,11 @@ def _ivf_assign_frame(
 @operator("similarity.topk_ivf")
 def topk_ivf(spark: SparkSession, inputs, config, context) -> DataFrame:
     """IVF coarse quantization. Centroids come from either a deterministic
-    hash-sample of the corpus (default: one-pass, seed-stable) or a real
-    k-means (`kmeans=True`: Lloyd's iterations on a seeded corpus sample,
-    numpy on the driver — centroid count x dim is tiny; better-balanced
-    lists => better recall at the same nprobe). A corpus row's key is its
+    md5-ordered sample of the corpus (default: one pass, engine-neutral,
+    `_sample_centroids`) or a real k-means (`kmeans=True`: Lloyd's
+    iterations on a seeded corpus sample, numpy on the driver — centroid
+    count x dim is tiny; better-balanced lists => better recall at the
+    same nprobe). A corpus row's key is its
     nearest centroid, a query's keys its `nprobe` nearest
     (`_centroid_rank`), so queries scan only the lists they probe.
 
@@ -497,15 +512,7 @@ def topk_ivf(spark: SparkSession, inputs, config, context) -> DataFrame:
     if config.get("kmeans"):
         cents = _kmeans_centroids(named, n_cent, seed=config.get("seed", 42))
     else:
-        # deterministic sample of n_cent rows as centroids. Order key:
-        # xxhash64 (default) or md5 hex string (engine-neutral — the same
-        # ORDER BY md5(CAST(id AS VARCHAR)) works in any SQL oracle).
-        if config.get("centroid_order") == "md5":
-            key = F.md5(F.col("corpus_id").cast("string"))
-        else:
-            key = F.xxhash64(F.col("corpus_id").cast("string"))
-        # n_cent rows of dim floats: driver-safe
-        cents = [list(r._cv) for r in named.orderBy(key).limit(n_cent).collect()]
+        cents = _sample_centroids(named, "corpus_id", "_cv", n_cent)
 
     if not cents:  # an empty corpus has no lists to probe
         return _probe_topk(spark, inputs, config, _one_key)

@@ -1759,8 +1759,7 @@ def q37(spark: SparkSession, sf_dir: str) -> DataFrame:
         .step("ivf", "similarity.topk_ivf", ["embeddings", "qs"],
               id_col="vec_id", vec_col="embedding",
               query_id_col="vec_id", query_vec_col="embedding",
-              k=5, centroids=16, nprobe=4,
-              centroid_order="md5", quantize=10000)
+              k=5, centroids=16, nprobe=4, quantize=10000)
         .step("ivf_t", "derived_column", "ivf", columns={"method": '"ivf"'})
         .step("u", "union_all", ["brute_t", "lsh_t", "ivf_t"])
         .step("prj", "select", "u",
@@ -1853,14 +1852,12 @@ def q40(spark: SparkSession, sf_dir: str) -> DataFrame:
               quantize=10000, return_pairs=True)
         .step("sem", "dedup.semantic", "sub", id_col="vec_id",
               vec_col="embedding", threshold=0.35, n_clusters=4,
-              centroid_order="md5", quantize=10000, return_pairs=True,
-              keep="far_centroid")
+              quantize=10000, return_pairs=True, keep="far_centroid")
         # round 5: the verify_nprobe=2 boundary mitigation as its own
         # oracle-backed leg (top-2 centroid assignment re-derived in SQL)
         .step("sem2", "dedup.semantic", "sub", id_col="vec_id",
               vec_col="embedding", threshold=0.35, n_clusters=4,
-              centroid_order="md5", quantize=10000, return_pairs=True,
-              verify_nprobe=2)
+              quantize=10000, return_pairs=True, verify_nprobe=2)
     )
     r = run_pipeline(spark, p)
     pair = r.df("dd.pairs").select(

@@ -363,47 +363,79 @@ class TestDedup:
         assert (1, 2) in pairs
         assert sorted(r.doc_id for r in out["out"].collect()) == [1, 3]
 
-    def test_minhash_survivor_antijoin_broadcast(self, spark):
-        """round 11: with verify_broadcast=True (default) the survivor
-        anti-join must broadcast the dominated-id set — the corpus side
-        must NOT stage a SortMergeJoin exchange (at 100 TB that is a
-        full shuffle of the text payload just to drop duplicates).
-        verify_broadcast=False keeps the distributed anti-join, and both
-        modes must return identical survivors."""
+    def test_minhash_joins_follow_size(self, spark):
+        """No MinHash join carries a hint: the candidate and pairs frames
+        are filled caches when the joins are planned, so Spark's size
+        threshold decides from measured sizes. At sf0.001 both operators
+        plan the verify joins on a and b, the candidate-id semi-join and
+        the survivor anti-join (and the incremental batch-band join) as
+        broadcast joins — the anti-join already in the plan built before
+        the output's action, so the corpus side never stages a shuffle.
+        With ``spark.sql.autoBroadcastJoinThreshold=-1`` every one of
+        them shuffles, and survivors and pairs are identical."""
+        import re
+
         df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        got, plans = {}, {}
-        for bc in (True, False):
-            out = run("dedup.minhash", spark, [df], id_col="doc_id",
-                      text_col="text", threshold=0.7, num_hashes=128,
-                      bands=16, verify_broadcast=bc)
-            plans[bc] = out._jdf.queryExecution().executedPlan().toString()
-            got[bc] = sorted(r.doc_id for r in out.collect())
-            spark.catalog.clearCache()
-        assert got[True] == got[False] and got[True]
-        # the guarantee is one-sided: with the contract ON the broadcast
-        # must be unconditional (never left to size estimates); with it
-        # OFF the planner remains free to pick any strategy
-        bc_anti = [ln for ln in plans[True].splitlines() if "LeftAnti" in ln]
-        assert bc_anti and all("BroadcastHashJoin" in ln for ln in bc_anti)
-        assert any("LeftAnti" in ln for ln in plans[False].splitlines())
+        cfg = dict(id_col="doc_id", text_col="text", threshold=0.7,
+                   num_hashes=128, bands=16, return_pairs=True)
+        legs = {"dedup.minhash": [df],
+                "dedup.minhash_incremental": [df.filter("doc_id >= 250"),
+                                              df.filter("doc_id < 250")]}
+        join = re.compile(r"(\w+Join) \[([^\]]*)\], \[[^\]]*\], (\w+)")
+
+        def plan(d):
+            return d._jdf.queryExecution().executedPlan().toString()
+
+        got, kinds = {}, {}
+        try:
+            for thr in (None, "-1"):
+                if thr:
+                    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
+                for op, ins in legs.items():
+                    r = run(op, spark, ins, **cfg)
+                    plans = plan(r["out"]) + plan(r["pairs"])
+                    got[thr, op] = (
+                        sorted(x.doc_id for x in r["out"].collect()),
+                        sorted(map(tuple, r["pairs"].collect())))
+                    kinds[thr, op] = {
+                        (re.sub(r"#\d+L?", "", m[2]), m[3]): m[1]
+                        for m in join.finditer(plans)}
+                    spark.catalog.clearCache()
+        finally:
+            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+        for op in legs:
+            assert got[None, op] == got["-1", op] and got[None, op][1], op
+            want = {("a", "Inner"), ("b", "Inner"), ("doc_id", "LeftSemi"),
+                    ("doc_id", "LeftAnti")}
+            if op == "dedup.minhash_incremental":
+                want.add(("_band, _bh", "Inner"))
+            assert set(kinds[None, op]) == set(kinds["-1", op]) == want, op
+            assert set(kinds[None, op].values()) == {"BroadcastHashJoin"}, op
+            assert "BroadcastHashJoin" not in kinds["-1", op].values(), op
 
     def test_minhash_releases_candidates_either_verify_mode(self, spark):
-        """The candidate cache `_bucket_pairs` hands back is released on
-        both verify paths: after the output is collected, verify
-        broadcast on and off leave the same number of persisted RDDs
-        (only the verified pairs)."""
+        """The candidate cache `_bucket_pairs` hands back is released
+        whether Spark plans the verify as broadcast or as shuffle joins:
+        after the output is collected, the default threshold and
+        ``autoBroadcastJoinThreshold=-1`` leave the same number of
+        persisted RDDs (only the verified pairs)."""
         df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         jsc = spark.sparkContext._jsc
         left = {}
-        for bc in (True, False):
-            spark.catalog.clearCache()
-            out = run("dedup.minhash", spark, [df], id_col="doc_id",
-                      text_col="text", threshold=0.7, num_hashes=128,
-                      bands=16, verify_broadcast=bc)
-            out.collect()
-            left[bc] = jsc.getPersistentRDDs().size()
+        try:
+            for thr in (None, "-1"):
+                if thr:
+                    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
+                spark.catalog.clearCache()
+                out = run("dedup.minhash", spark, [df], id_col="doc_id",
+                          text_col="text", threshold=0.7, num_hashes=128,
+                          bands=16)
+                out.collect()
+                left[thr] = jsc.getPersistentRDDs().size()
+        finally:
+            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         spark.catalog.clearCache()
-        assert left[True] == left[False], left
+        assert left[None] == left["-1"] == 1, left
 
     def test_minhash_pairs_match_exact_jaccard(self, spark):
         """Checked against every (a < b) whose word-3-shingle sets have
@@ -489,8 +521,7 @@ class TestDedup:
         cfg = dict(id_col="doc_id", text_col="text", threshold=0.7,
                    num_hashes=128, bands=16)
         hb = run("dedup.minhash_incremental", spark,
-                 [hist, hist.limit(0)], return_bands=True,
-                 broadcast_batch=False, **cfg)["bands"]
+                 [hist, hist.limit(0)], return_bands=True, **cfg)["bands"]
         on_fly = run("dedup.minhash_incremental", spark, [batch, hist],
                      **cfg)
         pre = run("dedup.minhash_incremental", spark, [batch, hist, hb],
@@ -515,8 +546,7 @@ class TestDedup:
         cfg = dict(id_col="doc_id", text_col="text", threshold=0.7,
                    num_hashes=128, bands=16)
         hb = run("dedup.minhash_incremental", spark,
-                 [hist, hist.limit(0)], return_bands=True,
-                 broadcast_batch=False, **cfg)["bands"]
+                 [hist, hist.limit(0)], return_bands=True, **cfg)["bands"]
         path = str(tmp_path / "band_store")
         write_band_store(hb, path)
         store = read_band_store(spark, path)
@@ -555,7 +585,7 @@ class TestDedup:
                    num_hashes=128, bands=16)
         hb = run("dedup.minhash_incremental", spark,
                  [df.limit(50), df.limit(0)], return_bands=True,
-                 broadcast_batch=False, **cfg)["bands"].persist()
+                 **cfg)["bands"].persist()
         params = dict(num_hashes=128, bands=16, seed=42, shingle_k=3)
         path = str(tmp_path / "store")
         write_band_store(hb, path, params=params)
@@ -617,7 +647,7 @@ class TestDedup:
                    num_hashes=128, bands=16)
         hb = run("dedup.minhash_incremental", spark,
                  [df.limit(120), df.limit(0)], return_bands=True,
-                 broadcast_batch=False, **cfg)["bands"].persist()
+                 **cfg)["bands"].persist()
         params = dict(num_hashes=128, bands=16, seed=42, shingle_k=3)
         path = str(tmp_path / "store")
 
@@ -1197,32 +1227,33 @@ class TestTextOps:
         assert (out[4].n_dup_spans, out[4].dup_tokens) == (0, 0)
         assert out[4].text_clean == "u v"
 
-    def test_dedup_spans_eager_lazy_identical(self, spark):
+    def test_dedup_spans_eager_lazy_identical(self, spark, monkeypatch):
         # the eager (persist+count+broadcast, the 2M-doc plan) and lazy
-        # (single-action, AQE-decided — what 'auto' picks under
-        # _SPANS_EAGER_MIN_DOCS) paths must be output-identical; 'auto' on a
+        # (single-action, AQE-decided) paths must be output-identical; a
         # small corpus must take the lazy path (no persists leaked:
-        # eager mode leaves its bounded agg persisted, lazy leaves none)
+        # eager mode leaves its bounded agg persisted, lazy leaves none).
+        # Eager is forced by dropping the size gate to zero docs.
+        from ssis_to_pyspark_agent_spark.operators import dedup
+
         df = spark.createDataFrame(
             [(i, f"a b c d x{i} y{i} z{i}") for i in range(50)]
             + [(100, "a b c d q r")],
             "doc_id long, text string",
         )
         cfg = dict(id_col="doc_id", text_col="text", n=3, emit_clean=True)
-        rows_lazy = sorted(map(tuple, run(
-            "dedup.spans", spark, [df], eager=False, **cfg).collect()))
         persisted_before = len(spark.sparkContext._jsc.getPersistentRDDs())
-        rows_auto = sorted(map(tuple, run(
+        rows_lazy = sorted(map(tuple, run(
             "dedup.spans", spark, [df], **cfg).collect()))
         assert len(spark.sparkContext._jsc.getPersistentRDDs()) == \
-            persisted_before  # auto picked lazy — nothing persisted
-        rows_eager = sorted(map(tuple, run(
-            "dedup.spans", spark, [df], eager=True, **cfg).collect()))
-        assert rows_lazy == rows_auto == rows_eager
+            persisted_before  # the size gate picked lazy — nothing persisted
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "_SPANS_EAGER_MIN_DOCS", 0)
+            rows_eager = sorted(map(tuple, run(
+                "dedup.spans", spark, [df], **cfg).collect()))
+        assert len(spark.sparkContext._jsc.getPersistentRDDs()) > \
+            persisted_before  # eager ran: its agg is persisted
+        assert rows_lazy == rows_eager
         assert any(r[2] > 0 for r in rows_lazy)  # the dup actually fired
-        # stringly-typed 'false' must fail loudly, not select eager
-        with pytest.raises(ValueError, match="eager"):
-            run("dedup.spans", spark, [df], eager="false", **cfg)
         spark.catalog.clearCache()
 
     def test_dedup_spans_scope_and_adjacency(self, spark):
@@ -3956,7 +3987,7 @@ class TestTextClassify:
 class TestSemanticDedup:
     def _clustered(self, spark):
         # two well-separated directions. Ids 27 and 6 are the md5-hex-
-        # smallest (centroid_order='md5' picks them as the centroids,
+        # smallest (the md5-ordered sample picks them as the centroids,
         # one per direction); 1~=0 and 11~=10 are planted near-dups; 2
         # and 12 are distinct members of the same clusters.
         rows = [
@@ -3982,7 +4013,7 @@ class TestSemanticDedup:
             before = jsc.getPersistentRDDs().size()
             out = run("dedup.semantic", spark, [df], id_col="vec_id",
                       vec_col="v", n_clusters=2, threshold=0.99,
-                      quantize=10000, centroid_order="md5", keep=keep)
+                      quantize=10000, keep=keep)
             out.count()
             assert jsc.getPersistentRDDs().size() - before <= 1, keep
         spark.catalog.clearCache()
@@ -4036,7 +4067,7 @@ class TestSemanticDedup:
         for quantize in (10000, None):
             common = dict(id_col="vec_id", vec_col="v", n_clusters=2,
                           threshold=0.99, quantize=quantize,
-                          centroid_order="md5", return_pairs=True)
+                          return_pairs=True)
             p1 = {(r.a, r.b) for r in run(
                 "dedup.semantic", spark, [df], **common)["pairs"].collect()}
             rows2 = run("dedup.semantic", spark, [df], verify_nprobe=2,
@@ -4053,8 +4084,7 @@ class TestSemanticDedup:
         df = self._clustered(spark)
         r = run("dedup.semantic", spark, [df], id_col="vec_id", vec_col="v",
                 n_clusters=2, threshold=0.99, quantize=10000,
-                centroid_order="md5", return_pairs=True,
-                return_assignments=True)
+                return_pairs=True, return_assignments=True)
         pairs = {(p.a, p.b) for p in r["pairs"].collect()}
         assert pairs == {(0, 1), (10, 11)}
         assert {x.vec_id for x in r["out"].collect()} == {0, 2, 6, 10, 12, 27}
@@ -4076,8 +4106,7 @@ class TestSemanticDedup:
         ]
         df = spark.createDataFrame(rows, "vec_id long, v array<double>")
         cfg = dict(id_col="vec_id", vec_col="v", n_clusters=1,
-                   threshold=0.98, quantize=10000, centroid_order="md5",
-                   return_pairs=True)
+                   threshold=0.98, quantize=10000, return_pairs=True)
         r = run("dedup.semantic", spark, [df], keep="far_centroid", **cfg)
         assert {(p.a, p.b) for p in r["pairs"].collect()} == {(0, 1)}
         # 0 is closer to the centroid -> dropped; 1 survives
@@ -4090,8 +4119,8 @@ class TestSemanticDedup:
 
         df = self._clustered(spark)
         cfg = dict(id_col="vec_id", vec_col="v", n_clusters=2,
-                   threshold=0.9, quantize=10000, centroid_order="md5",
-                   return_pairs=True, return_assignments=True)
+                   threshold=0.9, quantize=10000, return_pairs=True,
+                   return_assignments=True)
         r1 = run("dedup.semantic", spark, [df], **cfg)
         got = {(p.a, p.b): p.cosine for p in r1["pairs"].collect()}
         r2 = run("dedup.semantic", spark, [df], **cfg)
@@ -4147,8 +4176,7 @@ class TestSemanticDedup:
         ]
         df = spark.createDataFrame(rows, "vec_id long, v array<double>")
         cfg = dict(id_col="vec_id", vec_col="v", n_clusters=1,
-                   threshold=0.9, quantize=10000, centroid_order="md5",
-                   return_pairs=True)
+                   threshold=0.9, quantize=10000, return_pairs=True)
         rb = run("dedup.semantic", spark, [df], **cfg)
         del cfg["quantize"]
         rj = run("dedup.semantic", spark, [df], **cfg)
@@ -4232,7 +4260,7 @@ class TestIvfKmeans:
         ivf = run("similarity.topk_ivf", spark, [df, q], id_col="vec_id",
                   vec_col="embedding", query_id_col="vec_id",
                   query_vec_col="embedding", k=4, centroids=8, nprobe=3,
-                  centroid_order="md5", quantize=10000)
+                  quantize=10000)
         pairs = spark.createDataFrame(
             [(qi, ci) for qi in range(6) for ci in want
              if want[ci][0] in want[qi]],
@@ -4397,20 +4425,54 @@ def test_no_new_alternate_implementation_keys():
 
 
 #: config keys deleted together with the code paths they selected: the
-#: session's checkpoint directory decides where the cc loops cut, and the
-#: prefix filter and its order are chosen by dedup.ngram_jaccard itself.
-#: The k-means iteration count and sample size and dedup.embedding's
-#: table bound are private constants.
+#: session's checkpoint directory decides where the cc loops cut, the
+#: prefix filter and its order are chosen by dedup.ngram_jaccard itself,
+#: Spark's size threshold plans the MinHash verify and batch-band joins,
+#: ``block_exprs`` expresses column blocking, and the centroid sample is
+#: md5-ordered. The k-means iteration count and sample size,
+#: dedup.embedding's table bound, the incremental candidate cap and the
+#: n-gram block count are private constants.
 _DELETED_KEYS = {"checkpoint_dir", "prefix_filter", "prefix_order",
-                 "kmeans_iters", "kmeans_sample", "max_tables"}
+                 "kmeans_iters", "kmeans_sample", "max_tables",
+                 "verify_broadcast", "broadcast_batch", "cand_cap",
+                 "block_by", "blocks", "centroid_order"}
 
 
 def test_no_deleted_option_keys():
     """No module under operators/ reads a deleted option as a config key
-    (``config.get("k")`` or ``config["k"]``)."""
-    found = {(path.name, k) for path, tree in _package_trees("operators")
-             for k in _config_keys(tree) if k in _DELETED_KEYS}
+    (``config.get("k")`` or ``config["k"]``), and dedup.py reads no
+    ``eager``: dedup.spans goes eager by input size alone (row_count and
+    incremental_load keep their own ``eager``)."""
+    found = set()
+    for path, tree in _package_trees("operators"):
+        deleted = _DELETED_KEYS | ({"eager"} if path.name == "dedup.py"
+                                   else set())
+        found |= {(path.name, k) for k in _config_keys(tree) if k in deleted}
     assert not found, found
+
+
+def test_minhash_verify_is_one_unhinted_helper():
+    """Both MinHash operators verify through `_jaccard_verify`, and
+    neither they, the helper nor `_keep_min_survivors` (which takes no
+    ``broadcast`` parameter) calls ``broadcast``: Spark's size threshold
+    plans those joins."""
+    import ast
+
+    funcs = {n.name: n for path, tree in _package_trees("operators")
+             if path.name == "dedup.py"
+             for n in tree.body if isinstance(n, ast.FunctionDef)}
+    assert [a.arg for a in funcs["_keep_min_survivors"].args.args] == [
+        "df", "id_col", "pairs"]
+
+    def calls(name):
+        return {getattr(c.func, "attr", getattr(c.func, "id", None))
+                for c in ast.walk(funcs[name]) if isinstance(c, ast.Call)}
+
+    for op in ("dedup_minhash", "dedup_minhash_incremental"):
+        assert "_jaccard_verify" in calls(op), op
+    for name in ("dedup_minhash", "dedup_minhash_incremental",
+                 "_jaccard_verify", "_keep_min_survivors"):
+        assert "broadcast" not in calls(name), name
 
 
 def test_one_cosine_path_whatever_quantize_says():
@@ -4445,11 +4507,10 @@ def test_one_cosine_path_whatever_quantize_says():
     assert not found, found
 
 
-#: the only operator config keys whose names mention ``broadcast``: the
-#: explicit side hint of join/range_join, and the two switches that
-#: turn a broadcast OFF for inputs too large to ship to every executor.
-#: A hint AQE already places at runtime needs no key.
-_BROADCAST_KEYS_ALLOWED = {"broadcast", "verify_broadcast", "broadcast_batch"}
+#: the only operator config key whose name mentions ``broadcast``: the
+#: explicit side hint of join/range_join. A join Spark's size threshold
+#: already plans needs no key.
+_BROADCAST_KEYS_ALLOWED = {"broadcast"}
 
 #: the only environment variables the package reads: deployment settings.
 _ENV_VARS_ALLOWED = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"}

@@ -297,8 +297,7 @@ class TestNewOpPlanShapes:
         r = get_operator("dedup.semantic")(
             spark, [vecs],
             {"id_col": "vec_id", "vec_col": "embedding", "threshold": 0.9,
-             "n_clusters": 4, "quantize": 10000, "centroid_order": "md5",
-             "return_pairs": True}, {},
+             "n_clusters": 4, "quantize": 10000, "return_pairs": True}, {},
         )
         p = plan_of(r["pairs"])
         assert "FlatMapGroupsInPandas" in p
